@@ -1,4 +1,6 @@
 package graft
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
 
 /** Benchmark entrypoint: times every registered query at
@@ -12,6 +14,10 @@ import org.apache.spark.sql.SparkSession
   * ABSOLUTE LAST stdout line is a short summary (total + top-10 slowest
   * queries, < 500 chars) that always fits the tail window. Both lines print
   * AFTER `spark.stop()` so no executor shutdown logging can interleave.
+  *
+  * A query that throws in either measured pass has no honest time: it is
+  * left out of `queries` and `total` and named in the `failed` list both
+  * lines carry.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
@@ -36,7 +42,7 @@ object Bench {
       if (tiny != sfDir && new java.io.File(tiny).isDirectory) tiny else sfDir
     }
     SparkEntry.queries.foreach { case (_, fn) =>
-      try { fn(spark, warmDir).count() } catch { case _: Throwable => () }
+      try { fn(spark, warmDir).count() } catch { case NonFatal(_) => () }
     }
     // Measured loop runs TWICE and reports the per-query MINIMUM: on a
     // shared box, transient host load lands on whichever pass it hits,
@@ -49,23 +55,27 @@ object Bench {
     val passes = (1 to 2).map { _ =>
       SparkEntry.queries.map { case (name, fn) =>
         val t0 = System.nanoTime()
-        try { fn(spark, sfDir).count() } catch { case _: Throwable => -1L }
-        name -> (System.nanoTime() - t0) / 1e9
+        name -> (try {
+          fn(spark, sfDir).count()
+          Some((System.nanoTime() - t0) / 1e9)
+        } catch { case NonFatal(_) => None })
       }
     }
-    val results = passes.head.map { case (name, _) =>
-      name -> passes.map(_(name)).min
-    }
+    val failed = passes.head.keys.filter(n => passes.exists(_(n).isEmpty))
+      .toSeq.sorted
+    val results = passes.head.keys.filterNot(failed.contains)
+      .map(n => n -> passes.map(_(n).get).min).toMap
+    val failedJson = failed.map(n => s""""$n"""").mkString("[", ",", "]")
     def sec(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
     val qs = results.map { case (k, v) => s""""$k":${sec(v)}""" }
       .mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.sum else 0.0
     val json =
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"sf":"$sfDir"}"""
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","queries":$qs,"sf":"$sfDir","failed":$failedJson}"""
     try {
       val w = new java.io.PrintWriter("BENCH_LOCAL.json")
       try w.println(json) finally w.close()
-    } catch { case _: Throwable => () }
+    } catch { case NonFatal(_) => () }
     Tables.invalidate(spark) // drop cached plans with the stopped session
     spark.stop()
     println(json) // full per-query map: useful when the whole log is kept
@@ -74,6 +84,6 @@ object Bench {
     val top = results.toSeq.sortBy(-_._2).take(10)
       .map { case (k, v) => s""""$k":${sec(v)}""" }.mkString("{", ",", "}")
     println(
-      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"queries":$top,"sf":"$sfDir"}""")
+      s"""{"metric":"total","value":${sec(total)},"unit":"sec","n":${results.size},"queries":$top,"sf":"$sfDir","failed":$failedJson}""")
   }
 }

@@ -175,6 +175,11 @@ object Snapshots {
   // (checkpoints re-carry them), so pruning metadata chains the same
   // way. Fully backward compatible: a manifest without the `#delta`
   // header is full, and mixed histories resolve per-manifest.
+  // [[casChange]] is the ONLY writer of delta and checkpoint manifests:
+  // every commit on top of a base (append, DML, DV verbs, maintenance,
+  // metadata-only DDL) names its removed/added files and new vectors
+  // there, and it alone decides delta vs checkpoint and carries the
+  // surviving files' `#dv`/`#stats` lines into a checkpoint.
 
   /** Max delta-chain depth before a commit writes a full checkpoint. */
   private val CheckpointInterval = 8
@@ -1333,12 +1338,15 @@ object Snapshots {
         }
       }.toMap
 
-  /** Constraint + property headers a commit at base `v` must carry —
-    * the one spelling every commit path shares, so a new carried
-    * metadata kind is added HERE, not at seventeen call sites. */
+  /** Tombstone, bloom, constraint and property headers a commit at
+    * base `v` must carry — the one spelling the [[casChange]] callers
+    * share, so a new carried metadata kind is added HERE, not at every
+    * call site. */
   private def carriedMeta(fs: FileSystem, root: HPath, v: Int,
       propsDelta: Map[String, String] = Map.empty): Seq[String] =
-    constraintHeader(constraintsOf(fs, root, v)) ++
+    droppedHeader(droppedOf(fs, root, v)) ++
+      bloomHeader(bloomConfigOf(fs, root, v)) ++
+      constraintHeader(constraintsOf(fs, root, v)) ++
       propsHeader(propsOf(fs, root, v) ++ propsDelta)
 
   /** The table properties pinned at `version` (default: latest). */
@@ -1938,31 +1946,11 @@ object Snapshots {
         require(dup == 0L,
           s"merge source has duplicate key tuples on $keys — " +
             "MERGE semantics would be non-deterministic")
-        val csPinned = enforceConstraintsAt(spark, dir, fs, root, v, src)
+        enforceConstraintsAt(spark, dir, fs, root, v, src)
         // the source's key footprint prunes which files can hold a
         // matched row — identical machinery to [[merge]]
         val srcKeys = src.select(keys.map(col): _*).na.drop(keys).distinct()
-        val footprint: Option[Column] =
-          if (keys.lengthCompare(1) == 0) {
-            val vals = srcKeys.limit(MergeInSetLimit + 1).collect()
-              .map(_.get(0))
-            if (vals.isEmpty) None
-            else if (vals.length <= MergeInSetLimit)
-              Some(col(keys.head).isin(vals.toIndexedSeq: _*))
-            else {
-              val r = src.agg(min(col(keys.head)), max(col(keys.head)))
-                .head()
-              Some(col(keys.head).between(lit(r.get(0)), lit(r.get(1))))
-            }
-          } else {
-            val aggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-            val r = src.na.drop(keys).agg(aggs.head, aggs.tail: _*).head()
-            if (r.isNullAt(0)) None
-            else Some(keys.zipWithIndex.map { case (k, i) =>
-              col(k).between(lit(r.get(2 * i)), lit(r.get(2 * i + 1)))
-            }.reduce(_ && _))
-          }
-        val (mayMatch, _) = footprint match {
+        val (mayMatch, _) = keyFootprint(srcKeys, keys) match {
           case None => (Nil, readManifest(fs, root, v))
           case Some(pred) => pruneFiles(spark, dir, pred, v)
         }
@@ -1976,77 +1964,24 @@ object Snapshots {
         require(hits.length <= maxPositions,
           s"mergeLight into $dir matches more than $maxPositions table " +
             "rows — use merge (copy-on-write) for bulk upserts")
-        val byPhys: Map[String, Array[Long]] = hits
-          .map(r => (r.getString(0), r.getLong(1)))
-          .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2) }
-        val refByPhys = physicalPaths(fs, root, mayMatch)
-          .map(_.swap).toMap
-        val oldDv = dvFor(fs, root, v)
-        val stats = statsFor(fs, root, v)
         val basePinned = schemaOf(fs, root, v)
         val bloomCfg = bloomConfigOf(fs, root, v)
         val staged = stage(src, fs, root,
           basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
             .getOrElse(Map.empty), bloomCfg, declaredAt = v)
-        var dropWhole = List.empty[String]
-        var newLines = List.empty[String]
-        var dvFiles = 0
-        var dvIdx = 0
-        byPhys.foreach { case (p, fresh) =>
-          val file = refByPhys.getOrElse(p, throw new IllegalStateException(
-            s"mergeLight into $dir: scanned path $p maps to no " +
-              "manifest ref — path qualification drift; report this"))
-          val old = oldDv.get(file)
-            .map { case (side, _) => readDvSidecar(fs, root, side) }
-            .getOrElse(Array.empty[Long])
-          val merged = (old ++ fresh).distinct.sorted
-          val originalRows =
-            stats.get(file).flatMap(_.headOption.map(_._2.rows))
-          if (originalRows.contains(merged.length.toLong)) dropWhole ::= file
-          else {
-            // the vector rides in the staged commit's own dir
-            val side = s"${staged.files.head.substring(0,
-              staged.files.head.lastIndexOf('/'))}/_dv.$dvIdx." +
-              s"${baseNameOf(file)}.bin"
-            dvIdx += 1
-            writeDvSidecar(fs, root, side, merged)
-            newLines ::= s"#dv\t$file\t$side\t${merged.length}"
-            dvFiles += 1
-          }
-        }
-        val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-        val droppedSet = droppedOf(fs, root, v)
-        val next = v + 1
-        val won =
-          if (depthOf(fs, root, v) + 1 <= CheckpointInterval)
-            casManifest(fs, root, next, staged.files,
-              s"#delta\t$v\t${depthOf(fs, root, v) + 1}" +:
-                schemaHeader(pinnedSchema) +:
-                (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-                  constraintHeader(csPinned) ++
-                  propsHeader(propsOf(fs, root, v) ++ idDelta) ++
-                  opHeader("merge-light") ++ dmlKeysHeader(keys) ++
-                  dropWhole.map(f => s"#remove\t$f") ++ newLines ++
-                  staged.stats))
-          else {
-            val keptFiles = readManifest(fs, root, v)
-              .filterNot(dropWhole.toSet)
-            val dvAll = (oldDv ++ newLines.map { l =>
-              val f = l.split('\t'); f(1) -> (f(2), f(3).toLong)
-            }) -- dropWhole
-            casManifest(fs, root, next, keptFiles ++ staged.files,
-              schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-                bloomHeader(bloomCfg) ++ constraintHeader(csPinned) ++
-                propsHeader(propsOf(fs, root, v) ++ idDelta) ++
-                opHeader("merge-light") ++ dmlKeysHeader(keys) ++
-                dvLines(dvAll, keptFiles.toSet) ++
-                statsLines(fs, root, v, keptFiles.toSet) ++ staged.stats))
-          }
-        if (!won)
+        // the vectors ride in the staged commit's own dir
+        val (dropWhole, newDv) = foldPositions(fs, root, v,
+          s"mergeLight into $dir", hits, mayMatch,
+          staged.files.head.take(staged.files.head.lastIndexOf('/')))
+        if (!casChange(fs, root, v,
+            basePinned.getOrElse(allNullable(staged.schema)),
+            carriedMeta(fs, root, v, idDelta) ++ opHeader("merge-light") ++
+              dmlKeysHeader(keys),
+            dropWhole, staged.files, staged.stats, newDv))
           throw new java.util.ConcurrentModificationException(
             s"mergeLight into $dir@v$v lost the commit race — a writer " +
-              s"landed v$next first; re-read and re-merge")
-        LightMergeResult(next, dvFiles, dropWhole.size,
+              s"landed v${v + 1} first; re-read and re-merge")
+        LightMergeResult(v + 1, newDv.size, dropWhole.size,
           staged.files.length, hits.length.toLong)
         } finally src.unpersist()
     }
@@ -2586,26 +2521,12 @@ object Snapshots {
       dropped: Set[String], bloom: Option[BloomConfig],
       cs: Map[String, String], props: Map[String, String],
       op: String): Int = {
-    val next = base + 1
-    val d = depthOf(fs, root, base) + 1
-    val won =
-      if (d <= CheckpointInterval)
-        casManifest(fs, root, next, Nil,
-          s"#delta\t$base\t$d" +: schemaHeader(schema) +:
-            (droppedHeader(dropped) ++ bloomHeader(bloom) ++
-              constraintHeader(cs) ++ propsHeader(props) ++ opHeader(op)))
-      else {
-        val files = readManifest(fs, root, base)
-        casManifest(fs, root, next, files,
-          schemaHeader(schema) +: (droppedHeader(dropped) ++
-            bloomHeader(bloom) ++ constraintHeader(cs) ++
-            propsHeader(props) ++ opHeader(op) ++
-            statsLines(fs, root, base, files.toSet)))
-      }
-    if (!won)
+    if (!casChange(fs, root, base, schema, droppedHeader(dropped) ++
+        bloomHeader(bloom) ++ constraintHeader(cs) ++ propsHeader(props) ++
+        opHeader(op)))
       throw new java.util.ConcurrentModificationException(
         s"DDL on $dir@v$base lost the commit race")
-    next
+    base + 1
   }
 
   /** The schema a version's manifest pins (absent for manifests written
@@ -2771,6 +2692,47 @@ object Snapshots {
       out.writeLong(positions.length.toLong)
       positions.foreach(out.writeLong)
     } finally out.close()
+  }
+
+  /** Fold freshly matched row positions — `hits` rows of (qualified
+    * file path, original row index) from [[scanWithMeta]] over
+    * `mayMatch` — into version `base`'s vectors, the shared core of
+    * the light DML verbs. Per file the new positions union with its
+    * current vector; a file whose every ORIGINAL row (as recorded at
+    * stage time) is now deleted drops whole, the rest get a fresh
+    * sidecar under `sideDir`. Sidecar names are index-prefixed:
+    * basenames may legitimately repeat across a converted layout's
+    * partition dirs, and the name only needs uniqueness within the
+    * commit dir. Returns (files dropped whole, file → new vector),
+    * ready for [[casChange]]. */
+  private def foldPositions(fs: FileSystem, root: HPath, base: Int,
+      what: String, hits: Array[Row], mayMatch: Seq[String],
+      sideDir: String): (Seq[String], Map[String, (String, Long)]) = {
+    val refByPhys = physicalPaths(fs, root, mayMatch).map(_.swap).toMap
+    val oldDv = dvFor(fs, root, base)
+    val stats = statsFor(fs, root, base)
+    fs.mkdirs(new HPath(root, sideDir))
+    var dvIdx = 0
+    val folded = hits.map(r => (r.getString(0), r.getLong(1)))
+      .groupBy(_._1).toSeq.map { case (p, xs) =>
+        val file = refByPhys.getOrElse(p, throw new IllegalStateException(
+          s"$what: scanned path $p maps to no manifest ref — path " +
+            "qualification drift; report this"))
+        val old = oldDv.get(file)
+          .map { case (side, _) => readDvSidecar(fs, root, side) }
+          .getOrElse(Array.empty[Long])
+        val merged = (old ++ xs.map(_._2)).distinct.sorted
+        if (stats.get(file).flatMap(_.headOption.map(_._2.rows))
+            .contains(merged.length.toLong)) Left(file)
+        else {
+          val side = s"$sideDir/_dv.$dvIdx.${baseNameOf(file)}.bin"
+          dvIdx += 1
+          writeDvSidecar(fs, root, side, merged)
+          Right(file -> (side, merged.length.toLong))
+        }
+      }
+    (folded.collect { case Left(f) => f },
+      folded.collect { case Right(dv) => dv }.toMap)
   }
 
   private def readDvSidecar(fs: FileSystem, root: HPath,
@@ -3018,76 +2980,17 @@ object Snapshots {
     if (hits.isEmpty)
       return LightDeleteResult(base, 0, 0,
         untouched.size + mayMatch.size, 0L)
-    val byPhys: Map[String, Array[Long]] = hits
-      .map(r => (r.getString(0), r.getLong(1)))
-      .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2) }
-    val refByPhys = physicalPaths(fs, root, mayMatch)
-      .map(_.swap).toMap
-    val oldDv = dvFor(fs, root, base)
-    val stats = statsFor(fs, root, base)
-    val commitId = java.util.UUID.randomUUID.toString
-    val rel = s"$DataDir/$commitId"
-    fs.mkdirs(new HPath(root, rel))
-    var dropWhole = List.empty[String]
-    var newLines = List.empty[String]
-    var dvFiles = 0
-    var dvIdx = 0
-    byPhys.foreach { case (p, fresh) =>
-      val file = refByPhys.getOrElse(p, throw new IllegalStateException(
-        s"deleteWhereLight on $dir: scanned path $p maps to no " +
-          "manifest ref — path qualification drift; report this"))
-      val old = oldDv.get(file)
-        .map { case (side, _) => readDvSidecar(fs, root, side) }
-        .getOrElse(Array.empty[Long])
-      val merged = (old ++ fresh).distinct.sorted
-      // rows recorded at stage time count ORIGINAL rows — a full cover
-      // means no live row remains and the file leaves the manifest
-      val originalRows = stats.get(file).flatMap(_.headOption.map(_._2.rows))
-      if (originalRows.contains(merged.length.toLong)) dropWhole ::= file
-      else {
-        // index-prefixed: basenames may legitimately repeat across a
-        // converted layout's partition dirs; the sidecar name is
-        // opaque, it only needs uniqueness within this commit dir
-        val side = s"$rel/_dv.$dvIdx.${baseNameOf(file)}.bin"
-        dvIdx += 1
-        writeDvSidecar(fs, root, side, merged)
-        newLines ::= s"#dv\t$file\t$side\t${merged.length}"
-        dvFiles += 1
-      }
-    }
-    val pinnedSchema = schemaOf(fs, root, base)
-      .getOrElse(allNullable(read(spark, dir, base).schema))
-    val droppedSet = droppedOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val next = base + 1
-    val won =
-      if (depthOf(fs, root, base) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, Nil,
-          s"#delta\t$base\t${depthOf(fs, root, base) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, base) ++
-              opHeader("delete-light") ++
-              dropWhole.map(f => s"#remove\t$f") ++ newLines))
-      else {
-        val keptFiles = readManifest(fs, root, base)
-          .filterNot(dropWhole.toSet)
-        val dvAll = (oldDv ++ newLines.map { l =>
-          val f = l.split('\t'); f(1) -> (f(2), f(3).toLong)
-        }) -- dropWhole
-        casManifest(fs, root, next, keptFiles,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, base) ++
-            opHeader("delete-light") ++
-            dvLines(dvAll, keptFiles.toSet) ++
-            statsLines(fs, root, base, keptFiles.toSet)))
-      }
-    if (!won)
+    val (dropWhole, newDv) = foldPositions(fs, root, base,
+      s"deleteWhereLight on $dir", hits, mayMatch,
+      s"$DataDir/${java.util.UUID.randomUUID}")
+    if (!casChange(fs, root, base, schemaOf(fs, root, base)
+          .getOrElse(allNullable(read(spark, dir, base).schema)),
+        carriedMeta(fs, root, base) ++ opHeader("delete-light"),
+        removed = dropWhole, newDv = newDv))
       throw new java.util.ConcurrentModificationException(
         s"deleteWhereLight on $dir@v$base lost the commit race — a " +
-          s"writer landed v$next first; re-read and re-delete")
-    LightDeleteResult(next, dvFiles, dropWhole.size, untouched.size,
+          s"writer landed v${base + 1} first; re-read and re-delete")
+    LightDeleteResult(base + 1, newDv.size, dropWhole.size, untouched.size,
       hits.length.toLong)
   }
 
@@ -3164,77 +3067,23 @@ object Snapshots {
           }
         }: _*))
       enforceConstraintsAt(spark, dir, fs, root, base, updated)
-      val byPhys: Map[String, Array[Long]] = hits
-        .map(r => (r.getString(0), r.getLong(1)))
-        .groupBy(_._1).map { case (b, xs) => b -> xs.map(_._2) }
-      val refByPhys = physicalPaths(fs, root, mayMatch)
-        .map(_.swap).toMap
-      val oldDv = dvFor(fs, root, base)
-      val stats = statsFor(fs, root, base)
       val basePinned = schemaOf(fs, root, base)
       val bloomCfg = bloomConfigOf(fs, root, base)
       val staged = stage(updated, fs, root,
         basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
           .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-      val commitId = java.util.UUID.randomUUID.toString
-      val rel = s"$DataDir/$commitId"
-      fs.mkdirs(new HPath(root, rel))
-      var dropWhole = List.empty[String]
-      var newLines = List.empty[String]
-      var dvFiles = 0
-      var dvIdx = 0
-      byPhys.foreach { case (p, fresh) =>
-        val file = refByPhys.getOrElse(p, throw new IllegalStateException(
-          s"updateWhereLight on $dir: scanned path $p maps to no " +
-            "manifest ref — path qualification drift; report this"))
-        val old = oldDv.get(file)
-          .map { case (side, _) => readDvSidecar(fs, root, side) }
-          .getOrElse(Array.empty[Long])
-        val merged = (old ++ fresh).distinct.sorted
-        val originalRows =
-          stats.get(file).flatMap(_.headOption.map(_._2.rows))
-        if (originalRows.contains(merged.length.toLong)) dropWhole ::= file
-        else {
-          val side = s"$rel/_dv.$dvIdx.${baseNameOf(file)}.bin"
-          dvIdx += 1
-          writeDvSidecar(fs, root, side, merged)
-          newLines ::= s"#dv\t$file\t$side\t${merged.length}"
-          dvFiles += 1
-        }
-      }
-      val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-      val droppedSet = droppedOf(fs, root, base)
-      val next = base + 1
-      val won =
-        if (depthOf(fs, root, base) + 1 <= CheckpointInterval)
-          casManifest(fs, root, next, staged.files,
-            s"#delta\t$base\t${depthOf(fs, root, base) + 1}" +:
-              schemaHeader(pinnedSchema) +:
-              (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-                carriedMeta(fs, root, base) ++
-                opHeader("update-light") ++
-                dropWhole.map(f => s"#remove\t$f") ++ newLines ++
-                staged.stats))
-        else {
-          val keptFiles = readManifest(fs, root, base)
-            .filterNot(dropWhole.toSet)
-          val dvAll = (oldDv ++ newLines.map { l =>
-            val f = l.split('\t'); f(1) -> (f(2), f(3).toLong)
-          }) -- dropWhole
-          casManifest(fs, root, next, keptFiles ++ staged.files,
-            schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-              bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, base) ++
-              opHeader("update-light") ++
-              dvLines(dvAll, keptFiles.toSet) ++
-              statsLines(fs, root, base, keptFiles.toSet) ++ staged.stats))
-        }
-      if (!won)
+      val (dropWhole, newDv) = foldPositions(fs, root, base,
+        s"updateWhereLight on $dir", hits, mayMatch,
+        s"$DataDir/${java.util.UUID.randomUUID}")
+      if (!casChange(fs, root, base,
+          basePinned.getOrElse(allNullable(staged.schema)),
+          carriedMeta(fs, root, base) ++ opHeader("update-light"),
+          dropWhole, staged.files, staged.stats, newDv))
         throw new java.util.ConcurrentModificationException(
           s"updateWhereLight on $dir@v$base lost the commit race — a " +
-            s"writer landed v$next first; re-read and re-update")
-      LightUpdateResult(next, dvFiles, dropWhole.size, untouched.size,
-        hits.length.toLong)
+            s"writer landed v${base + 1} first; re-read and re-update")
+      LightUpdateResult(base + 1, newDv.size, dropWhole.size,
+        untouched.size, hits.length.toLong)
     } finally matched.unpersist(blocking = false)
   }
 
@@ -3712,6 +3561,36 @@ object Snapshots {
       ((requires ++ body).mkString("\n") + "\n").getBytes("UTF-8"))
   }
 
+  /** CAS version `base + 1` as `base` minus `removed` plus `added` —
+    * the ONE writer of delta and checkpoint manifests, so the choice
+    * between them lives here alone. `header` is everything between
+    * the pinned schema and the file-level lines (tombstones, bloom,
+    * constraints, props, op, …); `newDv` holds the vectors this
+    * commit (re)writes for files it keeps. Within the depth bound the
+    * commit is a DELTA (`#delta` + `#remove` + the new `#dv` lines +
+    * the added files' stats); past it a CHECKPOINT lists every
+    * surviving file with its chain-resolved vector and stats lines.
+    * True iff this writer won the version. */
+  private def casChange(fs: FileSystem, root: HPath, base: Int,
+      schema: StructType, header: Seq[String], removed: Seq[String] = Nil,
+      added: Seq[String] = Nil, addedStats: Seq[String] = Nil,
+      newDv: Map[String, (String, Long)] = Map.empty): Boolean = {
+    val depth = depthOf(fs, root, base) + 1
+    if (depth <= CheckpointInterval)
+      casManifest(fs, root, base + 1, added,
+        s"$DeltaPrefix$base\t$depth" +: schemaHeader(schema) +: (header ++
+          removed.map(RemovePrefix + _) ++ dvLines(newDv, newDv.keySet) ++
+          addedStats))
+    else {
+      val gone = removed.toSet
+      val kept = readManifest(fs, root, base).filterNot(gone)
+      casManifest(fs, root, base + 1, kept ++ added,
+        schemaHeader(schema) +: (header ++
+          dvLines(dvFor(fs, root, base) ++ newDv, kept.toSet) ++
+          statsLines(fs, root, base, kept.toSet) ++ addedStats))
+    }
+  }
+
   /** Publish `body` at `target` through the scheme's commit CAS —
     * exclusive-create semantics for NON-manifest metadata documents
     * (the view catalog's definition files): true iff THIS call
@@ -3807,32 +3686,15 @@ object Snapshots {
             .getOrElse(allNullable(read(spark, dir, base.get).schema)),
           staged.schema, dir, dropped)
       val next = base.getOrElse(0) + 1
-      val baseDepth = deltaHeader(baseLines).map(_._2).getOrElse(0)
       val committed =
-        if (carryBase && base.nonEmpty &&
-          baseDepth + 1 <= CheckpointInterval) {
-          // DELTA append: this commit's metadata is O(batch) — the
-          // staged files and their stats only, chained on the base
-          val d = baseDepth + 1
-          casManifest(fs, root, next, staged.files,
-            s"#delta\t${base.get}\t$d" +: schemaHeader(pinned) +:
-              (droppedHeader(dropped) ++ bloomHeader(bloomCfg) ++
-                constraintHeader(cs) ++ propsHeader(props) ++ hdr ++
-                staged.stats))
-        } else if (carryBase && base.nonEmpty) {
-          // CHECKPOINT: the chain hit its depth bound — write a full
-          // manifest so any version resolves in ≤ interval+1 opens.
-          // Stats ride in the manifest they describe: carried files
-          // keep their (chain-resolved) lines, staged files add theirs
-          val carried = readManifest(fs, root, base.get)
-          val carriedStats = statsLines(fs, root, base.get, carried.toSet)
-          casManifest(fs, root, next, carried ++ staged.files,
-            schemaHeader(pinned) +: (droppedHeader(dropped) ++
-              bloomHeader(bloomCfg) ++ constraintHeader(cs) ++
-              propsHeader(props) ++ hdr ++
-              dvLines(dvFor(fs, root, base.get), carried.toSet) ++
-              carriedStats ++ staged.stats))
-        } else {
+        if (carryBase && base.nonEmpty)
+          // an append on the base: O(batch) metadata as a delta, or
+          // the depth-bound checkpoint ([[casChange]])
+          casChange(fs, root, base.get, pinned,
+            droppedHeader(dropped) ++ bloomHeader(bloomCfg) ++
+              constraintHeader(cs) ++ propsHeader(props) ++ hdr,
+            added = staged.files, addedStats = staged.stats)
+        else {
           // first commit / overwrite: full manifest of the staged
           // files; a fresh lineage has no tombstones and carries no
           // base metadata — but an EXPLICIT propsDelta still lands
@@ -4098,9 +3960,7 @@ object Snapshots {
     }
     val won = casManifest(fs, root, next, staged.files,
       schemaHeader(pinnedSchema) +:
-        (droppedHeader(droppedOf(fs, root, base)) ++
-          bloomHeader(bloomCfg) ++
-          carriedMeta(fs, root, base, propsDelta) ++
+        (carriedMeta(fs, root, base, propsDelta) ++
           opHeader(op) ++ staged.stats))
     if (!won) throw new java.util.ConcurrentModificationException(
       s"$op of $dir@v$base lost the commit race")
@@ -4342,7 +4202,7 @@ object Snapshots {
     val base = if (expectedVersion >= 0) expectedVersion
     else currentVersion(spark, dir).getOrElse(
       throw new java.util.NoSuchElementException(s"nothing to optimize in $dir"))
-    val (mayMatch, untouched) = pruneFiles(spark, dir, pred, base)
+    val (mayMatch, _) = pruneFiles(spark, dir, pred, base)
     if (mayMatch.isEmpty) return base
     val basePinned = schemaOf(fs, root, base)
     val bloomCfg = bloomConfigOf(fs, root, base)
@@ -4350,32 +4210,15 @@ object Snapshots {
     val staged = stage(Layout.cluster(rows, cols, bits, numFiles), fs, root,
       basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
-    val next = base + 1
-    val won =
-      if (depthOf(fs, root, base) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$base\t${depthOf(fs, root, base) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, base) ++
-              opHeader("optimize-where") ++
-              mayMatch.map(f => s"#remove\t$f") ++ staged.stats))
-      else
-        casManifest(fs, root, next, untouched ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, base) ++
-            opHeader("optimize-where") ++
-            dvLines(dvFor(fs, root, base), untouched.toSet) ++
-            statsLines(fs, root, base, untouched.toSet) ++ staged.stats))
-    if (!won)
+    if (!casChange(fs, root, base,
+        basePinned.getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, base) ++ opHeader("optimize-where"),
+        mayMatch, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(
         s"optimizeWhere on $dir@v$base lost the commit race — a writer " +
-          s"landed v$next first; re-run maintenance when the table is " +
-          "quiescent")
-    maybeReanalyze(spark, dir, next)
+          s"landed v${base + 1} first; re-run maintenance when the table " +
+          "is quiescent")
+    maybeReanalyze(spark, dir, base + 1)
   }
 
   /** Manifest property naming the version whose files are already
@@ -4428,13 +4271,12 @@ object Snapshots {
     }
     // runt consolidation: clustered files below minFileBytes join
     // the rewrite so tiny debt sweeps cannot accrete mini-layouts
-    val (untouched, fresh) =
-      if (minFileBytes <= 0L) (untouched0, fresh0)
+    val fresh =
+      if (minFileBytes <= 0L) fresh0
       else {
         val sz = sizesFor(fs, root, base)
-        val (runts, big) = untouched0.partition(f =>
+        fresh0 ++ untouched0.filter(f =>
           sz.getOrElse(f, Long.MaxValue) < minFileBytes)
-        (big, fresh0 ++ runts)
       }
     if (fresh.isEmpty) return base // debt-free: no commit
     val basePinned = schemaOf(fs, root, base)
@@ -4444,28 +4286,16 @@ object Snapshots {
       root, basePinned.map(s =>
         s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
     val next = base + 1
     // the marker advances to THIS commit: its file set (carried old
     // layout + the files just clustered) is clustered by definition
-    val hdr = constraintHeader(constraintsOf(fs, root, base)) ++
-      propsHeader(props + (OptimizeThroughProp -> next.toString)) ++
-      opHeader("optimize-incremental")
-    val won =
-      if (depthOf(fs, root, base) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$base\t${depthOf(fs, root, base) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++ hdr ++
-              fresh.map(f => s"#remove\t$f") ++ staged.stats))
-      else
-        casManifest(fs, root, next, untouched ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++ hdr ++
-            dvLines(dvFor(fs, root, base), untouched.toSet) ++
-            statsLines(fs, root, base, untouched.toSet) ++ staged.stats))
-    if (!won)
+    if (!casChange(fs, root, base,
+        basePinned.getOrElse(allNullable(staged.schema)),
+        droppedHeader(droppedOf(fs, root, base)) ++ bloomHeader(bloomCfg) ++
+          constraintHeader(constraintsOf(fs, root, base)) ++
+          propsHeader(props + (OptimizeThroughProp -> next.toString)) ++
+          opHeader("optimize-incremental"),
+        fresh, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(
         s"optimizeIncremental on $dir@v$base lost the commit race — " +
           "re-run maintenance when the table is quiescent")
@@ -4555,9 +4385,7 @@ object Snapshots {
     val next = base + 1
     if (!casManifest(fs, root, next, staged.files,
       schemaHeader(baseSchema.getOrElse(allNullable(staged.schema))) +:
-        (droppedHeader(droppedOf(fs, root, base)) ++
-          bloomHeader(bloomConfigOf(fs, root, base)) ++
-          carriedMeta(fs, root, base) ++
+        (carriedMeta(fs, root, base) ++
           bucketSpecHeader(BucketSpec(buckets, keys, sortCols, rel)) ++
           opHeader("optimize-bucketed") ++ staged.stats)))
       throw new java.util.ConcurrentModificationException(
@@ -4629,9 +4457,7 @@ object Snapshots {
     val next = base + 1
     if (!casManifest(fs, root, next, staged.files,
       schemaHeader(baseSchema.getOrElse(allNullable(staged.schema))) +:
-        (droppedHeader(droppedOf(fs, root, base)) ++
-          bloomHeader(bloomConfigOf(fs, root, base)) ++
-          carriedMeta(fs, root, base) ++
+        (carriedMeta(fs, root, base) ++
           opHeader(op) ++ staged.stats)))
       throw new java.util.ConcurrentModificationException(
         s"rewrite of $dir@v$base lost the commit race — a writer landed " +
@@ -5401,7 +5227,7 @@ object Snapshots {
         }
         // CHECK constraints: the rewrite keeps table rows (already
         // valid) and adds source rows — only the source needs proof
-        val csPinned = enforceConstraintsAt(spark, dir, fs, root, v, src)
+        enforceConstraintsAt(spark, dir, fs, root, v, src)
         // ALL keys the mutation names — upsert keys plus tombstones:
         // both retire their matching table rows from the rewrite
         val mutKeys = tombstones match {
@@ -5417,27 +5243,7 @@ object Snapshots {
         // the mutation's key footprint as a prune predicate: table
         // rows that can match some named key all satisfy it (sound
         // superset; see scaladoc)
-        val footprint: Option[Column] =
-          if (keys.lengthCompare(1) == 0) {
-            val vals = mutKeys.select(keys.head).na.drop()
-              .distinct().limit(MergeInSetLimit + 1).collect().map(_.get(0))
-            if (vals.isEmpty) None
-            else if (vals.length <= MergeInSetLimit)
-              Some(col(keys.head).isin(vals.toIndexedSeq: _*))
-            else {
-              val r = mutKeys.agg(min(col(keys.head)), max(col(keys.head)))
-                .head()
-              Some(col(keys.head).between(lit(r.get(0)), lit(r.get(1))))
-            }
-          } else {
-            val aggs = keys.flatMap(k => Seq(min(col(k)), max(col(k))))
-            val r = mutKeys.na.drop(keys).agg(aggs.head, aggs.tail: _*)
-              .head()
-            if (r.isNullAt(0)) None // no fully-non-null key named
-            else Some(keys.zipWithIndex.map { case (k, i) =>
-              col(k).between(lit(r.get(2 * i)), lit(r.get(2 * i + 1)))
-            }.reduce(_ && _))
-          }
+        val footprint = keyFootprint(mutKeys.na.drop(keys).distinct(), keys)
         val (touched, untouched) = footprint match {
           case None => (Nil, readManifest(fs, root, v)) // nothing matches
           case Some(pred) => pruneFiles(spark, dir, pred, v)
@@ -5481,46 +5287,20 @@ object Snapshots {
         // write, which fits any gap. Unsafe interlopers (DML,
         // overlapping appends, DDL) still fall back to the loud
         // ConcurrentModificationException → full recompute.
+        // the touched files become #remove lines and the untouched
+        // carry IMPLICITLY through the base — a narrow merge into a
+        // million-file table writes O(touched) manifest lines
         val committed = commitWithRebase(spark, fs, root, dir, v,
             footprint, opName,
             allowRebase = expectedVersion < 0) { b =>
-          val next = b + 1
-          // delta commit when the chain allows: the touched files
-          // become #remove lines and the untouched carry IMPLICITLY
-          // through the base — a narrow merge into a million-file
-          // table writes O(touched) manifest lines, not O(table)
-          if (depthOf(fs, root, b) + 1 <= CheckpointInterval)
-            casManifest(fs, root, next, staged.files,
-              s"#delta\t$b\t${depthOf(fs, root, b) + 1}" +:
-                schemaHeader(pinnedSchema) +:
-                (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-                  constraintHeader(csPinned) ++
-                  propsHeader(propsOf(fs, root, b) ++ idDelta ++
-                    propsDelta) ++
-                  opHeader(opName) ++
-                  dmlKeysHeader(keys) ++ header ++
-                  touched.map(f => s"#remove\t$f") ++ staged.stats))
-          else {
-            val untouchedNow = readManifest(fs, root, b)
-              .filterNot(touched.toSet)
-            casManifest(fs, root, next, untouchedNow ++ staged.files,
-              schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-                bloomHeader(bloomCfg) ++ constraintHeader(csPinned) ++
-                propsHeader(propsOf(fs, root, b) ++ idDelta ++
-                  propsDelta) ++
-                opHeader(opName) ++ dmlKeysHeader(keys) ++ header ++
-                dvLines(dvFor(fs, root, b), untouchedNow.toSet) ++
-                statsLines(fs, root, b, untouchedNow.toSet) ++
-                staged.stats))
-          }
+          casChange(fs, root, b, pinnedSchema,
+            carriedMeta(fs, root, b, idDelta ++ propsDelta) ++
+              opHeader(opName) ++ dmlKeysHeader(keys) ++ header,
+            touched, staged.files, staged.stats)
         }
         MergeResult(committed, rewrittenFiles = staged.files.length,
           untouchedFiles =
-            if (committed == v + 1) untouched.length
-            else {
-              val t = touched.toSet
-              readManifest(fs, root, committed - 1).count(!t(_))
-            })
+            untouchedAfter(fs, root, v, committed, touched, untouched))
         } finally {
           src.unpersist()
           if (pinnedMut != null) pinnedMut.unpersist()
@@ -5640,38 +5420,15 @@ object Snapshots {
     val staged = stage(rewritten, fs, root,
       basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
     val committed = commitWithRebase(spark, fs, root, dir, base,
         footprint, "deleteMatching", allowRebase) { b =>
-      val next = b + 1
-      if (depthOf(fs, root, b) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$b\t${depthOf(fs, root, b) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, b) ++
-              opHeader("merge-delete") ++
-              touched.map(f => s"#remove\t$f") ++ staged.stats))
-      else {
-        val untouchedNow = readManifest(fs, root, b)
-          .filterNot(touched.toSet)
-        casManifest(fs, root, next, untouchedNow ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, b) ++
-            opHeader("merge-delete") ++
-            dvLines(dvFor(fs, root, b), untouchedNow.toSet) ++
-            statsLines(fs, root, b, untouchedNow.toSet) ++ staged.stats))
-      }
+      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, b) ++ opHeader("merge-delete"),
+        touched, staged.files, staged.stats)
     }
     DeleteResult(committed, rewrittenFiles = staged.files.length,
       droppedFiles = 0, untouchedFiles =
-        if (committed == base + 1) untouched.length
-        else {
-          val t = touched.toSet
-          readManifest(fs, root, committed - 1).count(!t(_))
-        })
+        untouchedAfter(fs, root, base, committed, touched, untouched))
   }
 
   /** Copy-on-write DELETE — rows satisfying `pred` are removed as ONE
@@ -5765,42 +5522,18 @@ object Snapshots {
     val staged = stage(rewrittenRows, fs, root,
       basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
-    val next = base + 1
-    // delta commit when the chain allows (see merge): rewritten and
-    // dropped-whole files are removes, untouched carry through the base
+    // rewritten and dropped-whole files are removes, untouched carry
+    // through the base (see merge)
     val committed = commitWithRebase(spark, fs, root, dir, base,
         Some(pred), "deleteWhere",
         allowRebase = expectedVersion < 0) { b =>
-      val next = b + 1
-      if (depthOf(fs, root, b) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$b\t${depthOf(fs, root, b) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, b) ++
-              opHeader("delete") ++
-              mayMatch.map(f => s"#remove\t$f") ++ staged.stats))
-      else {
-        val untouchedNow = readManifest(fs, root, b)
-          .filterNot(mayMatch.toSet)
-        casManifest(fs, root, next, untouchedNow ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, b) ++
-            opHeader("delete") ++
-            dvLines(dvFor(fs, root, b), untouchedNow.toSet) ++
-            statsLines(fs, root, b, untouchedNow.toSet) ++ staged.stats))
-      }
+      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, b) ++ opHeader("delete"),
+        mayMatch, staged.files, staged.stats)
     }
     DeleteResult(committed, rewrittenFiles = staged.files.length,
       droppedFiles = dropWhole.length, untouchedFiles =
-        if (committed == base + 1) untouched.length
-        else {
-          val t = mayMatch.toSet
-          readManifest(fs, root, committed - 1).count(!t(_))
-        })
+        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
   }
 
   /** What a [[replaceWhere]] did: `stagedFiles` covers both the
@@ -5920,40 +5653,16 @@ object Snapshots {
       stagedSurvivors.map(_.files).getOrElse(Nil) ++ stagedLoad.files,
       stagedSurvivors.map(_.stats).getOrElse(Nil) ++ stagedLoad.stats,
       stagedLoad.schema)
-    val pinnedSchema = basePinned.getOrElse(allNullable(table.schema))
-    val droppedSet = droppedOf(fs, root, base)
-    val next = base + 1
     val committed = commitWithRebase(spark, fs, root, dir, base,
         Some(pred), "replaceWhere",
         allowRebase = expectedVersion < 0) { b =>
-      val nx = b + 1
-      if (depthOf(fs, root, b) + 1 <= CheckpointInterval)
-        casManifest(fs, root, nx, staged.files,
-          s"#delta\t$b\t${depthOf(fs, root, b) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, b, idDelta) ++
-              opHeader("replace-where") ++
-              mayMatch.map(f => s"#remove\t$f") ++ staged.stats))
-      else {
-        val untouchedNow = readManifest(fs, root, b)
-          .filterNot(mayMatch.toSet)
-        casManifest(fs, root, nx, untouchedNow ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, b, idDelta) ++
-            opHeader("replace-where") ++
-            dvLines(dvFor(fs, root, b), untouchedNow.toSet) ++
-            statsLines(fs, root, b, untouchedNow.toSet) ++ staged.stats))
-      }
+      casChange(fs, root, b, basePinned.getOrElse(allNullable(table.schema)),
+        carriedMeta(fs, root, b, idDelta) ++ opHeader("replace-where"),
+        mayMatch, staged.files, staged.stats)
     }
     ReplaceResult(committed, stagedFiles = staged.files.length,
       droppedFiles = dropWhole.length, untouchedFiles =
-        if (committed == base + 1) untouched.length
-        else {
-          val t = mayMatch.toSet
-          readManifest(fs, root, committed - 1).count(!t(_))
-        })
+        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
   }
 
   final case class UpdateResult(version: Int, rewrittenFiles: Int,
@@ -6036,39 +5745,27 @@ object Snapshots {
     val staged = stage(rewrittenRows, fs, root,
       basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
     val committed = commitWithRebase(spark, fs, root, dir, base,
         Some(footprint), "update", allowRebase) { b =>
-      val next = b + 1
-      if (depthOf(fs, root, b) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$b\t${depthOf(fs, root, b) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, b) ++
-              opHeader("update") ++
-              mayMatch.map(f => s"#remove\t$f") ++ staged.stats))
-      else {
-        val untouchedNow = readManifest(fs, root, b)
-          .filterNot(mayMatch.toSet)
-        casManifest(fs, root, next, untouchedNow ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++
-            carriedMeta(fs, root, b) ++
-            opHeader("update") ++
-            dvLines(dvFor(fs, root, b), untouchedNow.toSet) ++
-            statsLines(fs, root, b, untouchedNow.toSet) ++ staged.stats))
-      }
+      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, b) ++ opHeader("update"),
+        mayMatch, staged.files, staged.stats)
     }
     UpdateResult(committed, rewrittenFiles = staged.files.length,
       untouchedFiles =
-        if (committed == base + 1) untouched.length
-        else {
-          val t = mayMatch.toSet
-          readManifest(fs, root, committed - 1).count(!t(_))
-        })
+        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
   }
+
+  /** Files a keyed/predicate DML commit carried by name: `untouched`
+    * when it landed on its own base, else the rebased tip's files
+    * minus the `removed` ones (interlopers' adds carried too). */
+  private def untouchedAfter(fs: FileSystem, root: HPath, base: Int,
+      committed: Int, removed: Seq[String], untouched: Seq[String]): Int =
+    if (committed == base + 1) untouched.length
+    else {
+      val gone = removed.toSet
+      readManifest(fs, root, committed - 1).count(!gone(_))
+    }
 
   /** Copy-on-write KEY-FRAME update — the UPDATE twin of
     * [[deleteMatching]] and the executor of the CDC "apply these
@@ -6210,8 +5907,6 @@ object Snapshots {
         s"were vacuumed (first: ${missing.headOption.getOrElse("")})")
     val header =
       schemaOf(fs, root, version).map(schemaHeader).toSeq ++
-        droppedHeader(droppedOf(fs, root, version)) ++
-        bloomHeader(bloomConfigOf(fs, root, version)) ++
         carriedMeta(fs, root, version) ++
         opHeader("restore") ++
         dvLines(dvFor(fs, root, version), files.toSet) ++
@@ -6919,8 +6614,6 @@ object Snapshots {
       }
     }
     val header = schemaOf(sfs, sroot, v).map(schemaHeader).toSeq ++
-      droppedHeader(droppedOf(sfs, sroot, v)) ++
-      bloomHeader(bloomConfigOf(sfs, sroot, v)) ++
       carriedMeta(sfs, sroot, v) ++
       opHeader("clone") ++ meta
     val (dfs, droot) = fsFor(spark, dstDir)
@@ -6970,7 +6663,6 @@ object Snapshots {
     }
     if (target.isEmpty) return DvFoldResult(base, 0, 0, files.size)
     val folded = target.keys.toSeq.sorted
-    val untouched = files.filterNot(target.keySet)
     val basePinned = schemaOf(fs, root, base)
     val bloomCfg = bloomConfigOf(fs, root, base)
     // the read applies the vectors — the rewrite IS the fold
@@ -6978,30 +6670,15 @@ object Snapshots {
     val staged = stage(rewritten, fs, root,
       basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
         .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
-    val droppedSet = droppedOf(fs, root, base)
-    val next = base + 1
-    val won =
-      if (depthOf(fs, root, base) + 1 <= CheckpointInterval)
-        casManifest(fs, root, next, staged.files,
-          s"#delta\t$base\t${depthOf(fs, root, base) + 1}" +:
-            schemaHeader(pinnedSchema) +:
-            (droppedHeader(droppedSet) ++ bloomHeader(bloomCfg) ++
-              carriedMeta(fs, root, base) ++ opHeader("dv-fold") ++
-              folded.map(f => s"#remove\t$f") ++ staged.stats))
-      else
-        casManifest(fs, root, next, untouched ++ staged.files,
-          schemaHeader(pinnedSchema) +: (droppedHeader(droppedSet) ++
-            bloomHeader(bloomCfg) ++ carriedMeta(fs, root, base) ++
-            opHeader("dv-fold") ++
-            dvLines(dvFor(fs, root, base), untouched.toSet) ++
-            statsLines(fs, root, base, untouched.toSet) ++ staged.stats))
-    if (!won)
+    if (!casChange(fs, root, base,
+        basePinned.getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, base) ++ opHeader("dv-fold"),
+        folded, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(
         s"foldDeletionVectors on $dir@v$base lost the commit race — " +
           "re-run maintenance when the table is quiescent")
-    DvFoldResult(next, folded.size, target.values.map(_._2).sum,
-      untouched.size)
+    DvFoldResult(base + 1, folded.size, target.values.map(_._2).sum,
+      files.size - folded.size)
   }
 
   /** What one [[maintain]] pass did. */
@@ -7908,6 +7585,15 @@ object Snapshots {
     import scala.jdk.CollectionConverters._
     val blocks = md.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
+    // a LEGACY-rebased writer stored hybrid-Julian days/micros, which
+    // every read rebases to proleptic Gregorian — the raw footer
+    // bounds are not the values a scan sees, so a datetime column
+    // with values gets no stats line (fail-open); row counts, other
+    // columns and all-NULL lines are unaffected
+    val legacyDatetime = md.getFileMetaData.getKeyValueMetaData
+      .containsKey("org.apache.spark.legacyDateTime")
+    def boundsUnreadable(dt: DataType): Boolean = legacyDatetime &&
+      (dt == DateType || dt == TimestampType || dt == TimestampNTZType)
     val lines = want.flatMap { case (name, dt) =>
       if (rows == 0L)
         Some(s"#stats\t$rel\t0\t${enc(name)}\t0\tnull\tnull")
@@ -7942,7 +7628,8 @@ object Snapshots {
               val live = chunks.zip(sts).filter { case (c, s) =>
                 s.getNumNulls < c.getValueCount
               }.map(_._2)
-              if (live.exists(!_.hasNonNullValue)) None
+              if (live.exists(!_.hasNonNullValue) || boundsUnreadable(dt))
+                None
               else footerMinMax(dt, chunks.head, live, sessionTz).map {
                 case (mn, mx) =>
                   s"#stats\t$rel\t$rows\t${enc(name)}\t$nulls\t" +

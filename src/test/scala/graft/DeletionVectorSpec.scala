@@ -200,6 +200,35 @@ class DeletionVectorSpec extends SparkSpec {
     assert(got == want)
   }
 
+  test("metadata-only commits past the checkpoint keep deletion vectors") {
+    // v1 append, v2 vector, v3..v11 metadata-only: v10 is the forced
+    // full checkpoint, which must carry the vector of every file it
+    // keeps — else the deleted rows come back there
+    val metaCommits: Seq[(String, (String, Int) => Int)] = Seq(
+      ("setProperty", (root: String, i: Int) =>
+        Snapshots.setProperty(spark, root, "note", s"n$i")),
+      ("addColumn", (root: String, i: Int) =>
+        Snapshots.addColumn(spark, root, s"c$i",
+          org.apache.spark.sql.types.LongType)),
+      ("setConstraint", (root: String, i: Int) =>
+        Snapshots.setConstraint(spark, root, s"k_nonneg_$i", "k >= 0")))
+    metaCommits.foreach { case (verb, commit) =>
+      val root = freshRoot()
+      Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v"),
+        root)
+      Snapshots.deleteWhereLight(spark, root, col("k") < 10L)
+      assert(Snapshots.read(spark, root).count() == 90L, verb)
+      (1 to 9).foreach { i =>
+        commit(root, i)
+        val v = Snapshots.currentVersion(spark, root).get
+        assert(Snapshots.read(spark, root).count() == 90L,
+          s"$verb: row count at v$v")
+        assert(Snapshots.read(spark, root).filter(col("k") < 10L).count() ==
+          0L, s"$verb: deleted rows resurrected at v$v")
+      }
+    }
+  }
+
   test("bulk guard: beyond maxPositions the light path refuses") {
     val root = freshRoot()
     Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v"),

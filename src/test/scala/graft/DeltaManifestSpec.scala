@@ -110,6 +110,86 @@ class DeltaManifestSpec extends SparkSpec {
     assert(Snapshots.read(spark, root, mr.version).count() == 300)
   }
 
+  test("every base+1 verb reads exactly on both sides of the checkpoint") {
+    type Rows = Seq[(Long, Double)]
+    def rows(xs: (Long, Double)*) = xs.toDF("k", "v")
+    val verbs: Seq[(String, String => Any, Rows => Rows)] = Seq(
+      ("append", r => Snapshots.append(rows((1000L, 1.0)), r),
+        _ :+ ((1000L, 1.0))),
+      ("merge", r => Snapshots.merge(spark, r,
+          rows((5L, 50.0), (2000L, 2.0)), Seq("k")),
+        b => b.filterNot(_._1 == 5L) ++ Seq((5L, 50.0), (2000L, 2.0))),
+      ("deleteWhere", r => Snapshots.deleteWhere(spark, r, $"k" % 10L === 3L),
+        _.filterNot(_._1 % 10 == 3)),
+      ("updateWhere", r => Snapshots.updateWhere(spark, r, $"k" < 20L,
+          Seq("v" -> lit(-1.0))),
+        _.map { case (k, v) => (k, if (k < 20L) -1.0 else v) }),
+      ("replaceWhere", r => Snapshots.replaceWhere(spark, r, $"k" >= 90L,
+          rows((90L, 9.0), (95L, 9.5))),
+        _.filterNot(_._1 >= 90L) ++ Seq((90L, 9.0), (95L, 9.5))),
+      ("deleteMatching", r => Snapshots.deleteMatching(spark, r,
+          Seq(7L, 8L).toDF("k"), Seq("k")),
+        _.filterNot(x => x._1 == 7L || x._1 == 8L)),
+      ("deleteWhereLight",
+        r => Snapshots.deleteWhereLight(spark, r, $"k" === 30L),
+        _.filterNot(_._1 == 30L)),
+      ("updateWhereLight", r => Snapshots.updateWhereLight(spark, r,
+          $"k" === 40L, Seq("v" -> lit(-4.0))),
+        _.map { case (k, v) => (k, if (k == 40L) -4.0 else v) }),
+      ("mergeLight", r => Snapshots.mergeLight(spark, r,
+          rows((50L, 5.0), (3000L, 3.0)), Seq("k")),
+        b => b.filterNot(_._1 == 50L) ++ Seq((50L, 5.0), (3000L, 3.0))),
+      ("setProperty", r => Snapshots.setProperty(spark, r, "x", "y"),
+        identity),
+      ("optimizeWhere", r => Snapshots.optimizeWhere(spark, r, $"k" < 50L,
+          Seq("k"), numFiles = 1),
+        identity),
+      ("foldDeletionVectors", r => Snapshots.foldDeletionVectors(spark, r,
+          maxDeletedFraction = 0.01),
+        identity))
+    // two templates: v2 (delta depth 1) and v9 (depth 8, so the next
+    // commit is the checkpoint); both carry a vector from v2
+    def template(depth: Int): String = {
+      val root = freshRoot()
+      Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v")
+        .repartitionByRange(4, $"k"), root)
+      Snapshots.deleteWhereLight(spark, root, $"k" === 1L)
+      (2 to depth).foreach(i =>
+        Snapshots.setProperty(spark, root, "pad", i.toString))
+      root
+    }
+    val dvAtV2 = (root: String) => manifestBody(root, 2)
+      .filter(_.startsWith("#dv\t")).map(_.split('\t')(1))
+    Seq(1 -> false, 8 -> true).foreach { case (depth, checkpoint) =>
+      val tmpl = template(depth)
+      verbs.foreach { case (verb, run, applied) =>
+        val root = freshRoot()
+        val (fs, src) = fsOf(tmpl)
+        org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new HPath(root),
+          false, spark.sparkContext.hadoopConfiguration)
+        val base = Snapshots.currentVersion(spark, root).get
+        val before = Snapshots.read(spark, root, base).as[(Long, Double)]
+          .collect().toSeq
+        run(root)
+        val v = Snapshots.currentVersion(spark, root).get
+        val what = s"$verb at depth ${depth + 1}"
+        assert(v == base + 1, what)
+        assert(isDelta(root, v) == !checkpoint, what)
+        assert(Snapshots.read(spark, root, v).as[(Long, Double)].collect()
+          .toSeq.sorted == applied(before).sorted, what)
+        if (checkpoint) {
+          val body = manifestBody(root, v)
+          val listed = body.filterNot(_.startsWith("#")).toSet
+          val dvFiles = body.filter(_.startsWith("#dv\t"))
+            .map(_.split('\t')(1))
+          assert(dvFiles.forall(listed), s"$what: #dv for a removed file")
+          dvAtV2(root).filter(listed).foreach(f =>
+            assert(dvFiles.contains(f), s"$what: surviving $f lost its #dv"))
+        }
+      }
+    }
+  }
+
   test("changesSince spans delta and checkpoint boundaries") {
     val root = freshRoot()
     (1 to 12).foreach { i =>
