@@ -1569,30 +1569,42 @@ object Snapshots {
       d.withColumn(f.name, expr(e).cast(f.dataType))
     }
 
-  /** Refuse UPDATE assignments that target a generated or identity
-    * column — the former derives from its base columns
-    * ([[regenerate]] recomputes it after the assignments land); the
-    * latter is system-assigned and an UPDATE could silently forge a
-    * duplicate. */
-  private def refuseGeneratedAssignment(schema: StructType,
-      assigned: Iterable[String], dir: String): Unit = {
-    val gens = generatedOf(schema)
-    val ids = identityOf(schema)
-    if (gens.nonEmpty || ids.nonEmpty) {
-      val names = assigned.map(_.toLowerCase).toSet
-      gens.foreach { case (f, e) =>
-        require(!names.contains(f.name.toLowerCase),
-          s"UPDATE target '${f.name}' of $dir is GENERATED ALWAYS AS " +
-            s"($e) — it derives from its base columns; assign those " +
-            "instead and the column recomputes")
-      }
-      ids.foreach { case (f, _) =>
-        require(!names.contains(f.name.toLowerCase),
-          s"UPDATE target '${f.name}' of $dir is an IDENTITY column — " +
-            "its values are system-assigned and immutable")
-      }
+  /** An UPDATE's validated assignments, keyed by the table's column
+    * casing: at least one, each naming an existing top-level column
+    * (UPDATE never evolves schema), none targeting a generated column
+    * (it derives from its base columns — [[regenerate]] recomputes it
+    * after the assignments land) or an identity column
+    * (system-assigned; an UPDATE could silently forge a duplicate). */
+  private def assignedOf(dir: String, cols: StructType,
+      assignments: Seq[(String, Column)]): Map[String, Column] = {
+    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
+    val assigned = assignments.map { case (c, v) =>
+      cols.fields.find(_.name.equalsIgnoreCase(c)).getOrElse(
+        throw new IllegalArgumentException(s"UPDATE target '$c' is not a " +
+          s"column of $dir: ${cols.fieldNames.toSeq}")).name -> v
+    }.toMap
+    generatedOf(cols).foreach { case (f, e) =>
+      require(!assigned.contains(f.name),
+        s"UPDATE target '${f.name}' of $dir is GENERATED ALWAYS AS " +
+          s"($e) — it derives from its base columns; assign those " +
+          "instead and the column recomputes")
     }
+    identityOf(cols).foreach { case (f, _) =>
+      require(!assigned.contains(f.name),
+        s"UPDATE target '${f.name}' of $dir is an IDENTITY column — " +
+          "its values are system-assigned and immutable")
+    }
+    assigned
   }
+
+  /** The UPDATE row images of `in`: where `hit` holds, the assignments
+    * apply (each cast to its column's declared type); elsewhere values
+    * pass through byte-identical. Generated columns then recompute. */
+  private def assign(cols: StructType, assigned: Map[String, Column],
+      hit: Column)(in: DataFrame): DataFrame =
+    regenerate(cols, in.select(cols.fields.toSeq.map(f =>
+      assigned.get(f.name).fold(col(f.name))(v =>
+        when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name))): _*))
 
   // ---- IDENTITY columns ----------------------------------------------
 
@@ -1901,91 +1913,21 @@ object Snapshots {
   def mergeLight(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], expectedVersion: Int = -1,
       maxPositions: Int = 1000000): LightMergeResult =
-    if (expectedVersion >= 0)
-      lightMergeInternal(spark, dir, source, keys, expectedVersion,
-        maxPositions)
-    else retryOnRace("mergeLight into " + dir)(
-      lightMergeInternal(spark, dir, source, keys, -1, maxPositions))
-
-  private def lightMergeInternal(spark: SparkSession, dir: String,
-      source: DataFrame, keys: Seq[String], expectedVersion: Int,
-      maxPositions: Int): LightMergeResult = {
-    require(keys.nonEmpty, "merge needs at least one key column")
-    val base = if (expectedVersion >= 0) Some(expectedVersion)
-    else currentVersion(spark, dir)
-    val (fs, root) = fsFor(spark, dir)
-    base match {
+    dml(spark, dir, expectedVersion, "mergeLight") {
       case None => // empty table: the plain first append
         val r = merge(spark, dir, source, keys)
         LightMergeResult(r.version, 0, 0, r.rewrittenFiles, 0L)
-      case Some(v) =>
-        val table = read(spark, dir, v)
-        require(table.columns.sorted.sameElements(source.columns.sorted),
-          s"merge source columns ${source.columns.toSeq} != table " +
-            s"columns ${table.columns.toSeq}")
-        // pinned per CAS attempt (the Delta materialize-source
-        // rule): the dup probe, constraint probes, footprint, the
-        // position semi-join and the staged append must all see ONE
-        // row set of a possibly-nondeterministic source — srcKeys
-        // derives from the pin, so its two executions agree too
-        // (see [[pinKeys]]). Generated columns materialize first.
-        val src = pinKeys(materializeGeneratedAt(fs, root, Some(v),
-          source.select(table.columns.map(source.col).toSeq: _*)))
-        try {
-        schemaOf(fs, root, v).foreach(s =>
-          refuseNullIdentity(s, src, dir, "mergeLight"))
-        // same mark-advance-past-explicit-ids contract as [[merge]]
-        val idDelta = schemaOf(fs, root, v)
-          .map(s => identityMarkAdvance(s, propsOf(fs, root, v), src))
-          .getOrElse(Map.empty[String, String])
-        keys.foreach(k => require(src.columns.contains(k),
-          s"merge key '$k' is not a column: ${src.columns.toSeq}"))
-        val dup = src.na.drop(keys).groupBy(keys.map(col): _*)
-          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-          .limit(1).count()
-        require(dup == 0L,
-          s"merge source has duplicate key tuples on $keys — " +
-            "MERGE semantics would be non-deterministic")
-        enforceConstraintsAt(spark, dir, fs, root, v, src)
-        // the source's key footprint prunes which files can hold a
-        // matched row — identical machinery to [[merge]]
-        val srcKeys = src.select(keys.map(col): _*).na.drop(keys).distinct()
-        val (mayMatch, _) = keyFootprint(srcKeys, keys) match {
-          case None => (Nil, readManifest(fs, root, v))
-          case Some(pred) => pruneFiles(spark, dir, pred, v)
-        }
+      case Some(at) => classifyMerge(at, source, keys, "mergeLight",
+          evolvable = false) { m =>
         // matched LIVE rows, named by (qualified file path, row index)
-        val hits =
-          if (mayMatch.isEmpty) Array.empty[org.apache.spark.sql.Row]
-          else scanWithMeta(spark, fs, root, v, v, mayMatch)
-            .join(srcKeys, keys, "left_semi")
-            .select(col(GfCol), col(GposCol))
-            .limit(maxPositions + 1).collect()
-        require(hits.length <= maxPositions,
-          s"mergeLight into $dir matches more than $maxPositions table " +
-            "rows — use merge (copy-on-write) for bulk upserts")
-        val basePinned = schemaOf(fs, root, v)
-        val bloomCfg = bloomConfigOf(fs, root, v)
-        val staged = stage(src, fs, root,
-          basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-            .getOrElse(Map.empty), bloomCfg, declaredAt = v)
-        // the vectors ride in the staged commit's own dir
-        val (dropWhole, newDv) = foldPositions(fs, root, v,
-          s"mergeLight into $dir", hits, mayMatch,
-          staged.files.head.take(staged.files.head.lastIndexOf('/')))
-        if (!casChange(fs, root, v,
-            basePinned.getOrElse(allNullable(staged.schema)),
-            carriedMeta(fs, root, v, idDelta) ++ opHeader("merge-light") ++
-              dmlKeysHeader(keys),
-            dropWhole, staged.files, staged.stats, newDv))
-          throw new java.util.ConcurrentModificationException(
-            s"mergeLight into $dir@v$v lost the commit race — a writer " +
-              s"landed v${v + 1} first; re-read and re-merge")
-        LightMergeResult(v + 1, newDv.size, dropWhole.size,
-          staged.files.length, hits.length.toLong)
-        } finally src.unpersist()
+        val d = applyDv(at, "mergeLight", maxPositions, m.mayMatch,
+          "merge-light", dmlKeysHeader(keys), m.idDelta)(
+          _.join(m.mutKeys.na.drop(m.keys).distinct(), m.keys, "left_semi"))(
+          _ => Some(m.src))
+        LightMergeResult(d.version, d.dvFiles, d.dropped, d.staged,
+          d.positions)
+      }
     }
-  }
 
   /** Early, readable refusal of name resurrection — the same rules
     * [[evolveSchema]] enforces at commit time, checked before any file
@@ -2952,47 +2894,14 @@ object Snapshots {
   def deleteWhereLight(spark: SparkSession, dir: String, pred: Column,
       expectedVersion: Int = -1,
       maxPositions: Int = 1000000): LightDeleteResult =
-    if (expectedVersion >= 0)
-      lightDeleteInternal(spark, dir, pred, expectedVersion, maxPositions)
-    else retryOnRace("deleteWhereLight on " + dir)(
-      lightDeleteInternal(spark, dir, pred, -1, maxPositions))
-
-  private def lightDeleteInternal(spark: SparkSession, dir: String,
-      pred: Column, expectedVersion: Int,
-      maxPositions: Int): LightDeleteResult = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to delete in $dir"))
-    val (mayMatch, untouched) = pruneFiles(spark, dir, pred, base)
-    if (mayMatch.isEmpty)
-      return LightDeleteResult(base, 0, 0, untouched.size, 0L)
-    // TRUE-predicate rows among rows still live under the current DVs,
-    // named by (qualified file path, original row index)
-    val hits = scanWithMeta(spark, fs, root, base, base, mayMatch)
-      .filter(coalesce(pred, lit(false)))
-      .select(col(GfCol), col(GposCol))
-      .limit(maxPositions + 1).collect()
-    require(hits.length <= maxPositions,
-      s"deleteWhereLight on $dir matches more than $maxPositions rows — " +
-        "use deleteWhere (copy-on-write) for bulk deletes")
-    if (hits.isEmpty)
-      return LightDeleteResult(base, 0, 0,
-        untouched.size + mayMatch.size, 0L)
-    val (dropWhole, newDv) = foldPositions(fs, root, base,
-      s"deleteWhereLight on $dir", hits, mayMatch,
-      s"$DataDir/${java.util.UUID.randomUUID}")
-    if (!casChange(fs, root, base, schemaOf(fs, root, base)
-          .getOrElse(allNullable(read(spark, dir, base).schema)),
-        carriedMeta(fs, root, base) ++ opHeader("delete-light"),
-        removed = dropWhole, newDv = newDv))
-      throw new java.util.ConcurrentModificationException(
-        s"deleteWhereLight on $dir@v$base lost the commit race — a " +
-          s"writer landed v${base + 1} first; re-read and re-delete")
-    LightDeleteResult(base + 1, newDv.size, dropWhole.size, untouched.size,
-      hits.length.toLong)
-  }
+    dmlOn(spark, dir, expectedVersion, "delete") { at =>
+      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      val d = applyDv(at, "deleteWhereLight", maxPositions, mayMatch,
+        "delete-light")(_.filter(isTrue(pred)))(_ => None)
+      LightDeleteResult(d.version, d.dvFiles, d.dropped,
+        untouched.size + (if (d.version > at.v) 0 else mayMatch.size),
+        d.positions)
+    }
 
   final case class LightUpdateResult(version: Int, dvFiles: Int,
     droppedFiles: Int, untouchedFiles: Int, updatedRows: Long)
@@ -3016,76 +2925,24 @@ object Snapshots {
   def updateWhereLight(spark: SparkSession, dir: String, pred: Column,
       assignments: Seq[(String, Column)], expectedVersion: Int = -1,
       maxPositions: Int = 1000000): LightUpdateResult =
-    if (expectedVersion >= 0)
-      lightUpdateInternal(spark, dir, pred, assignments, expectedVersion,
-        maxPositions)
-    else retryOnRace("updateWhereLight on " + dir)(
-      lightUpdateInternal(spark, dir, pred, assignments, -1, maxPositions))
-
-  private def lightUpdateInternal(spark: SparkSession, dir: String,
-      pred: Column, assignments: Seq[(String, Column)],
-      expectedVersion: Int, maxPositions: Int): LightUpdateResult = {
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to update in $dir"))
-    val cols = read(spark, dir, base).schema
-    val byName = cols.fields.map(f => f.name.toLowerCase -> f).toMap
-    assignments.foreach { case (c, _) =>
-      require(byName.contains(c.toLowerCase),
-        s"UPDATE target '$c' is not a column of $dir: " +
-          s"${cols.fieldNames.toSeq}")
+    dmlOn(spark, dir, expectedVersion, "update") { at =>
+      val cols = at.table.schema
+      val assigned = assignedOf(dir, cols, assignments)
+      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      // the matched rows feed TWO consumers — the position collect and
+      // the updated-image staging — so they are pinned once
+      val d = applyDv(at, "updateWhereLight", maxPositions, mayMatch,
+          "update-light", persist = true)(_.filter(isTrue(pred))) {
+        _.map { matched =>
+          val updated = assign(cols, assigned, lit(true))(matched)
+          enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, updated)
+          updated
+        }
+      }
+      LightUpdateResult(d.version, d.dvFiles, d.dropped,
+        untouched.size + (if (d.version > at.v) 0 else mayMatch.size),
+        d.positions)
     }
-    val assigned = assignments.map { case (c, v) =>
-      byName(c.toLowerCase).name -> v
-    }.toMap
-    refuseGeneratedAssignment(cols, assigned.keys, dir)
-    val (mayMatch, untouched) = pruneFiles(spark, dir, pred, base)
-    if (mayMatch.isEmpty)
-      return LightUpdateResult(base, 0, 0, untouched.size, 0L)
-    // matched rows feed TWO consumers — the position collect and the
-    // updated-image staging — pin them once
-    val matched = scanWithMeta(spark, fs, root, base, base, mayMatch)
-      .filter(coalesce(pred, lit(false))).persist()
-    try {
-      val hits = matched.select(col(GfCol), col(GposCol))
-        .limit(maxPositions + 1).collect()
-      require(hits.length <= maxPositions,
-        s"updateWhereLight on $dir matches more than $maxPositions rows " +
-          "— use updateWhere (copy-on-write) for bulk updates")
-      if (hits.isEmpty)
-        return LightUpdateResult(base, 0, 0,
-          untouched.size + mayMatch.size, 0L)
-      // the updated row images (every matched row, pred already TRUE)
-      val updated = regenerate(cols,
-        matched.select(cols.fields.toSeq.map { f =>
-          assigned.get(f.name) match {
-            case Some(v) => v.cast(f.dataType).as(f.name)
-            case None => col(f.name)
-          }
-        }: _*))
-      enforceConstraintsAt(spark, dir, fs, root, base, updated)
-      val basePinned = schemaOf(fs, root, base)
-      val bloomCfg = bloomConfigOf(fs, root, base)
-      val staged = stage(updated, fs, root,
-        basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-          .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-      val (dropWhole, newDv) = foldPositions(fs, root, base,
-        s"updateWhereLight on $dir", hits, mayMatch,
-        s"$DataDir/${java.util.UUID.randomUUID}")
-      if (!casChange(fs, root, base,
-          basePinned.getOrElse(allNullable(staged.schema)),
-          carriedMeta(fs, root, base) ++ opHeader("update-light"),
-          dropWhole, staged.files, staged.stats, newDv))
-        throw new java.util.ConcurrentModificationException(
-          s"updateWhereLight on $dir@v$base lost the commit race — a " +
-            s"writer landed v${base + 1} first; re-read and re-update")
-      LightUpdateResult(base + 1, newDv.size, dropWhole.size,
-        untouched.size, hits.length.toLong)
-    } finally matched.unpersist(blocking = false)
-  }
 
   /** A staged-but-uncommitted commit: the data files' root-relative
     * paths plus their encoded per-file column-stats manifest lines and
@@ -3942,12 +3799,9 @@ object Snapshots {
       fs: FileSystem, root: HPath, base: Int, frame: DataFrame,
       op: String, propsExpect: Map[String, Option[String]] = Map.empty,
       propsDelta: Map[String, String] = Map.empty): Int = {
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val staged = stage(frame, fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val pinnedSchema = basePinned.getOrElse(allNullable(staged.schema))
+    val staged = stageAt(fs, root, base, frame)
+    val pinnedSchema =
+      schemaOf(fs, root, base).getOrElse(allNullable(staged.schema))
     val next = base + 1
     // identity marks were read at `base`, and this commit CASes at
     // base+1 — a racing writer fails the CAS, so the CAS itself is
@@ -4204,14 +4058,10 @@ object Snapshots {
       throw new java.util.NoSuchElementException(s"nothing to optimize in $dir"))
     val (mayMatch, _) = pruneFiles(spark, dir, pred, base)
     if (mayMatch.isEmpty) return base
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val rows = readFilesAs(spark, fs, root, base, mayMatch)
-    val staged = stage(Layout.cluster(rows, cols, bits, numFiles), fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
+    val staged = stageAt(fs, root, base, Layout.cluster(
+      readFilesAs(spark, fs, root, base, mayMatch), cols, bits, numFiles))
     if (!casChange(fs, root, base,
-        basePinned.getOrElse(allNullable(staged.schema)),
+        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
         carriedMeta(fs, root, base) ++ opHeader("optimize-where"),
         mayMatch, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(
@@ -4279,21 +4129,15 @@ object Snapshots {
           sz.getOrElse(f, Long.MaxValue) < minFileBytes)
       }
     if (fresh.isEmpty) return base // debt-free: no commit
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val rows = readFilesAs(spark, fs, root, base, fresh)
-    val staged = stage(Layout.cluster(rows, cols, bits, numFiles), fs,
-      root, basePinned.map(s =>
-        s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
+    val staged = stageAt(fs, root, base, Layout.cluster(
+      readFilesAs(spark, fs, root, base, fresh), cols, bits, numFiles))
     val next = base + 1
     // the marker advances to THIS commit: its file set (carried old
     // layout + the files just clustered) is clustered by definition
     if (!casChange(fs, root, base,
-        basePinned.getOrElse(allNullable(staged.schema)),
-        droppedHeader(droppedOf(fs, root, base)) ++ bloomHeader(bloomCfg) ++
-          constraintHeader(constraintsOf(fs, root, base)) ++
-          propsHeader(props + (OptimizeThroughProp -> next.toString)) ++
+        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
+        carriedMeta(fs, root, base,
+          Map(OptimizeThroughProp -> next.toString)) ++
           opHeader("optimize-incremental"),
         fresh, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(
@@ -4449,14 +4293,11 @@ object Snapshots {
     // (column mapping included — the new files write the SAME physical
     // names, so cross-version reads like diff stay era-uniform) and
     // carries its tombstones
-    val baseSchema = schemaOf(fs, root, base)
-    val phys = baseSchema.map(s =>
-      s.fields.map(f => f.name -> physOf(f)).toMap).getOrElse(Map.empty)
-    val staged = stage(transform(read(spark, dir, base)), fs, root, phys,
-      bloomConfigOf(fs, root, base), declaredAt = base)
+    val staged = stageAt(fs, root, base, transform(read(spark, dir, base)))
     val next = base + 1
     if (!casManifest(fs, root, next, staged.files,
-      schemaHeader(baseSchema.getOrElse(allNullable(staged.schema))) +:
+      schemaHeader(schemaOf(fs, root, base)
+        .getOrElse(allNullable(staged.schema))) +:
         (carriedMeta(fs, root, base) ++
           opHeader(op) ++ staged.stats)))
       throw new java.util.ConcurrentModificationException(
@@ -4503,8 +4344,10 @@ object Snapshots {
     * exactly the table's columns (any order). Concurrency: with an
     * `expectedVersion` OCC token, a lost CAS race throws — the caller
     * pinned a version and gets told its inspection is stale. UNPINNED
-    * (the default), a lost race RETRIES the whole merge against the
-    * new current version (up to 10 attempts, like [[append]]): the
+    * (the default), a lost race first REBASES the staged result when
+    * every interloper is provably invisible to it, else RETRIES the
+    * whole merge against the new current version ([[retryOnRace]]:
+    * backoff with jitter, giving up after 20 straight losses): the
     * merge is a function of (table, source), so re-running it on top
     * of the racing commit is exactly serializing after it — nothing of
     * either writer is dropped. A content-identical rewrite cannot say
@@ -4512,10 +4355,7 @@ object Snapshots {
     * Merging into an empty table is the plain first append. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], expectedVersion: Int = -1): MergeResult =
-    if (expectedVersion >= 0)
-      mergeInternal(spark, dir, source, keys, expectedVersion, Nil)
-    else retryOnRace("merge into " + dir)(
-      mergeInternal(spark, dir, source, keys, -1, Nil))
+    mergeCow(spark, dir, source, keys, expectedVersion, "merge")
 
   /** [[merge]] + [[deleteMatching]] as ONE atomic commit — the general
     * SQL MERGE's executor: table rows whose `keys` tuple appears in
@@ -4531,11 +4371,8 @@ object Snapshots {
   def mergeMixed(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], tombstones: DataFrame,
       expectedVersion: Int = -1): MergeResult =
-    if (expectedVersion >= 0)
-      mergeInternal(spark, dir, source, keys, expectedVersion, Nil,
-        Some(tombstones))
-    else retryOnRace("mergeMixed into " + dir)(
-      mergeInternal(spark, dir, source, keys, -1, Nil, Some(tombstones)))
+    mergeCow(spark, dir, source, keys, expectedVersion, "mergeMixed",
+      tombstones = Some(tombstones))
 
   /** APPLY CHANGES INTO — net a CDC batch to its latest state per key
     * and apply it as ONE atomic commit (the DLT/Flink "upsert
@@ -4639,7 +4476,7 @@ object Snapshots {
       }
       // a tie at equal (key tuple, sequence, op) would net below by
       // an ARBITRARY row_number pick, and the netted frame is then
-      // promised unique to mergeInternal (keysProvedUnique = true),
+      // promised unique to the merge (keysProvedUnique = true),
       // skipping its duplicate-key refusal — so a duplicate-keyed
       // source would silently keep one row per key and drop the rest.
       // replicate's first sync manufactures exactly this tie (every
@@ -4673,12 +4510,9 @@ object Snapshots {
         .select(dataCols.map(col): _*)
       val tombstones = latest.filter(col(opCol) === "delete")
         .select(keys.map(col): _*)
-      if (expectedVersion >= 0)
-        mergeInternal(spark, dir, upserts, keys, expectedVersion, Nil,
-          Some(tombstones), propsDelta, keysProvedUnique = true)
-      else retryOnRace("applyChanges into " + dir)(
-        mergeInternal(spark, dir, upserts, keys, -1, Nil,
-          Some(tombstones), propsDelta, keysProvedUnique = true))
+      mergeCow(spark, dir, upserts, keys, expectedVersion, "applyChanges",
+        tombstones = Some(tombstones), propsDelta = propsDelta,
+        keysProvedUnique = true)
     } finally live.unpersist()
   }
 
@@ -5076,36 +4910,41 @@ object Snapshots {
     })
   }
 
-  /** The keyed/predicate DML commit loop WITH REBASE, shared by the
-    * copy-on-write verbs (merge family, deleteMatching, DELETE,
-    * UPDATE, REPLACE WHERE): run `attempt(base)` (one CAS at
-    * `base + 1` with headers derived from `base`); on a lost race,
+  /** The keyed/predicate DML commit loop WITH REBASE under the
+    * copy-on-write apply ([[applyCow]]): run `attempt(base)` (one CAS
+    * at `base + 1` with headers derived from `base`); on a lost race,
     * move the base to the tip and retry — at metadata cost — when
     * [[rebaseSafe]] proves every interloper invisible to the staged
     * result under `footprint`, else surface the loud
     * ConcurrentModificationException that sends the caller to the
     * full recompute. Returns the committed version.
     *
-    * `allowRebase` MUST be false for version-PINNED commits
-    * (`expectedVersion >= 0`): the pin is the CALLER's promise that
-    * its own derived state (SQL classification joins, inspection
-    * reads) still describes the table — [[rebaseSafe]] only proves
-    * the interlopers invisible to THIS mutation's footprint, not to
-    * whatever else the caller read, so a pinned loss must surface for
-    * the caller's own retry discipline. */
-  private def commitWithRebase(spark: SparkSession, fs: FileSystem,
-      root: HPath, dir: String, startBase: Int, footprint: Option[Column],
-      what: String, allowRebase: Boolean)(attempt: Int => Boolean): Int = {
-    var base = startBase
+    * This is the OCC fairness fix for the starvation mode
+    * [[retryOnRace]] documents: a slow recompute among fast appenders
+    * used to lose EVERY race (each attempt outlasted the competitors'
+    * inter-commit gap); with rebase the loser's next attempt is one
+    * manifest write, which fits any gap. Unsafe interlopers (DML,
+    * overlapping appends, DDL) still fall back to the full recompute.
+    *
+    * Only UNPINNED attempts rebase: a pin (`expectedVersion >= 0`) is
+    * the CALLER's promise that its own derived state (SQL
+    * classification joins, inspection reads) still describes the
+    * table — [[rebaseSafe]] only proves the interlopers invisible to
+    * THIS mutation's footprint, not to whatever else the caller read,
+    * so a pinned loss must surface for the caller's own retry
+    * discipline. */
+  private def commitWithRebase(at: At, footprint: Option[Column],
+      what: String)(attempt: Int => Boolean): Int = {
+    var base = at.v
     var rebases = 0
     while (true) {
       if (attempt(base)) return base + 1
       rebases += 1
-      val tip = currentVersion(spark, dir).getOrElse(base)
-      if (!allowRebase || rebases > 8 ||
-          !rebaseSafe(spark, fs, root, dir, base, tip, footprint))
+      val tip = currentVersion(at.spark, at.dir).getOrElse(base)
+      if (!at.unpinned || rebases > 8 ||
+          !rebaseSafe(at.spark, at.fs, at.root, at.dir, base, tip, footprint))
         throw new java.util.ConcurrentModificationException(
-          s"$what on $dir@v$base lost the commit race — a writer " +
+          s"$what on ${at.dir}@v$base lost the commit race — a writer " +
             s"landed v${base + 1} first and its changes may overlap " +
             "this mutation; re-read and re-run")
       base = tip
@@ -5113,199 +4952,361 @@ object Snapshots {
     throw new IllegalStateException(s"unreachable: $what")
   }
 
-  private def mergeInternal(spark: SparkSession, dir: String,
-      source: DataFrame, keys: Seq[String], expectedVersion: Int,
-      header: Seq[String],
-      tombstones: Option[DataFrame] = None,
+  // ---- the DML core ---------------------------------------------------
+  //
+  // Every row-changing verb runs entry → classify → apply:
+  //   - [[dml]] resolves the base version and owns the retry dispatch;
+  //   - one classify step per kind names the files the change may
+  //     touch vs carries by name, the matched-row test and (update,
+  //     merge) the new row images: the stats prune plus [[isTrue]] for
+  //     predicates ([[classifyDelete]], [[assign]] for updates),
+  //     [[classifyKeys]] for key frames, [[classifyMerge]] for merges;
+  //   - [[applyCow]] commits a staged rewrite ([[stageAt]]) with
+  //     rebase, [[applyDv]] records the matched rows' positions as
+  //     deletion vectors. A copy-on-write verb and its `*Light` twin
+  //     share everything but the apply.
+
+  /** One DML attempt's base: version `v` of `dir`. `unpinned` when the
+    * caller gave no `expectedVersion` — the only case a lost race may
+    * rebase ([[commitWithRebase]]) or retry ([[retryOnRace]]). */
+  private final case class At(spark: SparkSession, dir: String, v: Int,
+      unpinned: Boolean) {
+    val (fs, root) = fsFor(spark, dir)
+    lazy val table: DataFrame = read(spark, dir, v)
+    def pinned: Option[StructType] = schemaOf(fs, root, v)
+    def scan(files: Seq[String]): DataFrame =
+      readFilesAs(spark, fs, root, v, files)
+  }
+
+  /** The one DML entry: run `body` on the base — the pinned
+    * `expectedVersion`, else the current version (None: nothing
+    * committed yet). Pinned, a lost race throws: the caller pinned a
+    * version and gets told its inspection is stale. Unpinned,
+    * [[retryOnRace]] re-runs `body` on the new tip — the change is a
+    * function of (table, inputs), so re-running it on top of the racing
+    * commit is exactly serializing after it. */
+  private def dml[A](spark: SparkSession, dir: String, expectedVersion: Int,
+      verb: String)(body: Option[At] => A): A = {
+    def attempt(): A = body(
+      (if (expectedVersion >= 0) Some(expectedVersion)
+      else currentVersion(spark, dir))
+        .map(At(spark, dir, _, unpinned = expectedVersion < 0)))
+    if (expectedVersion >= 0) attempt()
+    else retryOnRace(s"$verb on $dir")(attempt())
+  }
+
+  /** [[dml]] for the verbs that need a committed base. */
+  private def dmlOn[A](spark: SparkSession, dir: String, expectedVersion: Int,
+      verb: String)(body: At => A): A =
+    dml(spark, dir, expectedVersion, verb)(_.map(body).getOrElse(
+      throw new java.util.NoSuchElementException(s"nothing to $verb in $dir")))
+
+  /** The matched-row test of every predicate verb: rows where `pred` IS
+    * TRUE (SQL DELETE/UPDATE semantics — a NULL predicate never
+    * matches). */
+  private def isTrue(pred: Column): Column = coalesce(pred, lit(false))
+
+  /** Stage `df` as a commit on version `base`: the base's column
+    * mapping, bloom config and declared stats columns. */
+  private def stageAt(fs: FileSystem, root: HPath, base: Int,
+      df: DataFrame): Staged =
+    stage(df, fs, root, schemaOf(fs, root, base)
+      .map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
+      .getOrElse(Map.empty), bloomConfigOf(fs, root, base), declaredAt = base)
+
+  /** Copy-on-write apply: CAS `at` minus `removed` plus `staged` (the
+    * touched files' surviving rows and the new ones) through
+    * [[commitWithRebase]]; returns (committed version, files carried by
+    * name). The removed files become `#remove` lines and the untouched
+    * carry IMPLICITLY through the base — a narrow change to a
+    * million-file table writes O(touched) manifest lines. `schema`
+    * overrides the pinned schema (an evolving merge); `delta` lands in
+    * the table properties, `extra` after the op header. */
+  private def applyCow(at: At, op: String, footprint: Option[Column],
+      removed: Seq[String], untouched: Seq[String], staged: Staged,
+      schema: Option[StructType] = None,
+      delta: Map[String, String] = Map.empty,
+      extra: Seq[String] = Nil): (Int, Int) = {
+    val pinned =
+      schema.getOrElse(at.pinned.getOrElse(allNullable(staged.schema)))
+    val committed = commitWithRebase(at, footprint, op) { b =>
+      casChange(at.fs, at.root, b, pinned,
+        carriedMeta(at.fs, at.root, b, delta) ++ opHeader(op) ++ extra,
+        removed, staged.files, staged.stats)
+    }
+    (committed, untouchedAfter(at.fs, at.root, at.v, committed, removed,
+      untouched))
+  }
+
+  /** What [[applyDv]] did: the version after it (the base when nothing
+    * committed), positions newly deleted, files dropped whole, files
+    * given a vector, and files staged. */
+  private final case class DvApplied(version: Int, positions: Long,
+    dropped: Int, dvFiles: Int, staged: Int)
+
+  /** Deletion-vector apply, shared by the light verbs: scan `mayMatch`
+    * with row positions, keep the matched rows (`matchedIn`) and collect
+    * their positions under the `maxPositions` bulk guard. Then, when a
+    * row matched or `images` has rows to land regardless, stage the
+    * images, fold the positions into the base's vectors
+    * ([[foldPositions]] — the sidecars ride in the staged commit's dir)
+    * and CAS; a lost race raises the usual
+    * ConcurrentModificationException. `images` sees the matched rows
+    * only when some matched; `persist` pins them when it re-reads
+    * them. */
+  private def applyDv(at: At, what: String, maxPositions: Int,
+      mayMatch: Seq[String], op: String, header: Seq[String] = Nil,
+      delta: Map[String, String] = Map.empty, persist: Boolean = false)(
+      matchedIn: DataFrame => DataFrame)(
+      images: Option[DataFrame] => Option[DataFrame]): DvApplied = {
+    import at.{dir, fs, root, v}
+    require(maxPositions >= 0,
+      s"$what: maxPositions must be >= 0, got $maxPositions")
+    val matched = if (mayMatch.isEmpty) None else Some {
+      val m = matchedIn(scanWithMeta(at.spark, fs, root, v, v, mayMatch))
+      if (persist) m.persist() else m
+    }
+    try {
+      // one row past the cap proves a refusal; past Int.MaxValue there
+      // is no such row to ask for
+      val hits = matched.fold(Array.empty[Row])(_
+        .select(col(GfCol), col(GposCol))
+        .limit(maxPositions + (if (maxPositions < Int.MaxValue) 1 else 0))
+        .collect())
+      require(hits.length <= maxPositions,
+        s"$what on $dir matches more than $maxPositions table rows — use " +
+          s"${what.stripSuffix("Light")} (copy-on-write) for bulk changes")
+      val staged = images(matched.filter(_ => hits.nonEmpty))
+        .map(stageAt(fs, root, v, _))
+      if (hits.isEmpty && staged.isEmpty) DvApplied(v, 0L, 0, 0, 0)
+      else {
+        val (dropped, newDv) = foldPositions(fs, root, v, s"$what on $dir",
+          hits, mayMatch, staged.flatMap(_.files.headOption)
+            .fold(s"$DataDir/${java.util.UUID.randomUUID}")(f =>
+              f.take(f.lastIndexOf('/'))))
+        if (!casChange(fs, root, v,
+            at.pinned.getOrElse(allNullable(
+              staged.fold(at.table.schema)(_.schema))),
+            carriedMeta(fs, root, v, delta) ++ opHeader(op) ++ header,
+            dropped, staged.fold(Seq.empty[String])(_.files),
+            staged.fold(Seq.empty[String])(_.stats), newDv))
+          throw new java.util.ConcurrentModificationException(
+            s"$what on $dir@v$v lost the commit race — a writer landed " +
+              s"v${v + 1} first; re-read and re-run")
+        DvApplied(v + 1, hits.length.toLong, dropped.size, newDv.size,
+          staged.fold(0)(_.files.length))
+      }
+    } finally if (persist) matched.foreach(_.unpersist(blocking = false))
+  }
+
+  /** `keys` spelled as in `cols` — the one key rule of every keyed
+    * verb, applied to the table and to the source/key frame alike:
+    * each key must name a column, case-insensitively like Spark's own
+    * resolution. */
+  private def keyCols(what: String, cols: Seq[String],
+      keys: Seq[String]): Seq[String] = {
+    require(keys.nonEmpty, s"$what needs at least one key column")
+    keys.map(k => cols.find(_.equalsIgnoreCase(k)).getOrElse(
+      throw new IllegalArgumentException(
+        s"$what key '$k' is not a column: $cols")))
+  }
+
+  /** What a keyed classify yields: `src` (a merge's aligned, pinned
+    * source; a key frame's pinned key rows), the keys in the table's
+    * casing, `mutKeys` (every key the change names — upserts plus
+    * tombstones), the key footprint ([[keyFootprint]]), the files it
+    * may match vs carries untouched, and a merge's identity-mark
+    * advance and schema evolution. */
+  private final case class Keyed(src: DataFrame, keys: Seq[String],
+    mutKeys: DataFrame, footprint: Option[Column], mayMatch: Seq[String],
+    untouched: Seq[String], idDelta: Map[String, String] = Map.empty,
+    evolve: Boolean = false)
+
+  /** Keyed-merge classify, shared by [[merge]], [[mergeMixed]],
+    * [[mergeLight]], [[idempotentMerge]] and [[applyChanges]]: align
+    * the source to the table, pin it, prove it (identity, key-unique,
+    * CHECK constraints — the table rows a merge keeps are already
+    * valid, only the source needs proof), and prune by the footprint
+    * of every key it names.
+    *
+    * Opt-in writer-side schema evolution (`evolvable` verbs, the Delta
+    * mergeSchema/autoMerge knob `spark.graft.write.mergeSchema`): EXTRA
+    * source columns evolve the schema additively in the SAME commit as
+    * the data ([[evolveSchema]] — type conflicts and name resurrections
+    * still refuse loudly); table columns the source LACKS are written
+    * as what an omitted column reads everywhere else — the column
+    * DEFAULT when pinned, NULL otherwise ([[missingColumnReads]]).
+    * NOTE the replace-by-key contract: a matched row is replaced by its
+    * source row ENTIRELY, so a lacking column reads default/NULL on
+    * replaced rows too — callers that want SQL MERGE's per-column
+    * `UPDATE SET` use the SQL surface.
+    *
+    * The source is pinned per attempt (the Delta materialize-source
+    * rule): the dup probe, constraint probes, key footprint, the
+    * retiring join and the staged rows are INDEPENDENT executions of
+    * its plan — a nondeterministic source must yield ONE row set across
+    * all of them ([[pinKeys]]). Generated columns materialize first.
+    * Callers whose construction PROVES key uniqueness (applyChanges
+    * nets to row_number()=1 per key) skip the dup probe, one full job
+    * over the pinned source. */
+  private def classifyMerge[A](at: At, source: DataFrame, keys: Seq[String],
+      what: String, evolvable: Boolean, tombstones: Option[DataFrame] = None,
+      keysProvedUnique: Boolean = false)(apply: Keyed => A): A = {
+    import at.{dir, fs, root, spark, table, v}
+    val canon = keyCols(what, table.columns.toSeq, keys)
+    val dead = tombstones.map(t =>
+      t.select(keyCols("tombstone", t.columns.toSeq, keys).map(col): _*)
+        .toDF(canon: _*))
+    val evolve = evolvable && spark.conf.getOption(
+      "spark.graft.write.mergeSchema").exists(_.toBoolean)
+    if (!evolve)
+      require(table.columns.sorted.sameElements(source.columns.sorted),
+        s"merge source columns ${source.columns.toSeq} != table " +
+          s"columns ${table.columns.toSeq}" + (if (!evolvable) "" else
+            " — set spark.graft.write.mergeSchema=true to evolve additively"))
+    val aligned =
+      if (!evolve) source.select(table.columns.map(source.col).toSeq: _*)
+      else {
+        val bySrcLower = source.schema.fields
+          .map(f => f.name.toLowerCase -> f).toMap
+        val tblLower = table.columns.map(_.toLowerCase).toSet
+        val shared = table.schema.fields.toSeq.map { f =>
+          bySrcLower.get(f.name.toLowerCase) match {
+            case Some(sf) =>
+              // refuse type drift BEFORE any data stages — the union
+              // would otherwise silently coerce
+              require(sf.dataType == f.dataType,
+                s"schema conflict on column '${f.name}' of $dir: " +
+                  s"table has ${f.dataType.sql}, merge source has " +
+                  s"${sf.dataType.sql} — type changes require an " +
+                  "explicit overwrite")
+              source.col(sf.name).as(f.name)
+            // a hard NULL here would make MERGE-inserted rows diverge
+            // from the same row written by any other path
+            case None => missingColumnReads(f).as(f.name)
+          }
+        }
+        source.select(shared ++ source.schema.fields.toSeq
+          .filterNot(f => tblLower.contains(f.name.toLowerCase))
+          .map(f => source.col(f.name)): _*)
+      }
+    val src = pinKeys(materializeGeneratedAt(fs, root, Some(v), aligned))
+    var pinnedMut: Option[DataFrame] = None
+    try {
+      at.pinned.foreach(s => refuseNullIdentity(s, src, dir, what))
+      // explicit identity values the source introduces push the mark
+      // in the SAME commit — the next INSERT must not re-issue them
+      // (CAS at v+1 guards the advance)
+      val idDelta = at.pinned
+        .map(s => identityMarkAdvance(s, propsOf(fs, root, v), src))
+        .getOrElse(Map.empty[String, String])
+      if (!keysProvedUnique) {
+        val dup = src.na.drop(canon).groupBy(canon.map(col): _*)
+          .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
+          .limit(1).count()
+        require(dup == 0L,
+          s"merge source has duplicate key tuples on $keys — " +
+            "MERGE semantics would be non-deterministic")
+      }
+      enforceConstraintsAt(spark, dir, fs, root, v, src)
+      // the tombstone side is pinned too: it feeds both the footprint
+      // probes and the retiring join
+      pinnedMut = dead.map(d => pinKeys(src.select(canon.map(col): _*)
+        .unionByName(d).na.drop(canon).distinct()))
+      val mutKeys = pinnedMut.getOrElse(src.select(canon.map(col): _*))
+      val (fp, mayMatch, untouched) =
+        keyFootprint(at, mutKeys.na.drop(canon).distinct(), canon)
+      apply(Keyed(src, canon, mutKeys, fp, mayMatch, untouched, idDelta,
+        evolve))
+    } finally {
+      src.unpersist()
+      pinnedMut.foreach(_.unpersist())
+    }
+  }
+
+  /** Key-frame classify, shared by [[deleteMatching]] and
+    * [[updateMatching]]: the frame's distinct non-NULL key tuples are
+    * pinned ONCE, above the retry loop — the footprint probes, the DML
+    * join and every lost-CAS retry are INDEPENDENT executions of its
+    * plan, and a nondeterministic frame (rand()-gated subquery,
+    * sample()) could otherwise yield a footprint that misses files the
+    * join matches, silently keeping their rows ([[pinKeys]]). Each
+    * attempt renames the pinned keys to the table's casing (metadata
+    * only) and prunes by their footprint. */
+  private def classifyKeys[A](spark: SparkSession, dir: String,
+      frame: DataFrame, keys: Seq[String], expectedVersion: Int, what: String,
+      verb: String)(body: (At, Keyed) => A): A = {
+    val pinned = pinKeys(frame.select(keyCols(what, frame.columns.toSeq,
+      keys).map(col): _*).na.drop().distinct())
+    try dmlOn(spark, dir, expectedVersion, verb) { at =>
+      val canon = keyCols(what,
+        at.pinned.fold(at.table.columns.toSeq)(_.fieldNames.toSeq), keys)
+      val src = pinned.toDF(canon: _*)
+      val (fp, mayMatch, untouched) = keyFootprint(at, src, canon)
+      body(at, Keyed(src, canon, src, fp, mayMatch, untouched))
+    } finally pinned.unpersist()
+  }
+
+  /** The copy-on-write merge family's executor: [[classifyMerge]],
+    * then the touched files' rows minus every named key, plus the
+    * source, staged and committed with rebase. */
+  private def mergeCow(spark: SparkSession, dir: String, source: DataFrame,
+      keys: Seq[String], expectedVersion: Int, verb: String,
+      header: Seq[String] = Nil, tombstones: Option[DataFrame] = None,
       propsDelta: Map[String, String] = Map.empty,
       keysProvedUnique: Boolean = false): MergeResult = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    val base = if (expectedVersion >= 0) Some(expectedVersion)
-    else currentVersion(spark, dir)
-    base match {
+    dml(spark, dir, expectedVersion, verb) {
       case None =>
-        // empty table: tombstones have nothing to delete, the merge
-        // is the first append
+        // empty table: tombstones have nothing to delete, the merge is
+        // the first append
         val (fs, root) = fsFor(spark, dir)
         MergeResult(
           commitLoop(fs, root, spark, dir, stage(source, fs, root),
             carryBase = true, op = "merge", header = header,
             propsDelta = propsDelta),
           rewrittenFiles = 0, untouchedFiles = 0)
-      case Some(v) =>
-        val (fs, root) = fsFor(spark, dir)
-        val table = read(spark, dir, v)
-        // opt-in writer-side schema evolution (the Delta
-        // mergeSchema/autoMerge knob): EXTRA source columns evolve
-        // the schema additively in the SAME commit as the data
-        // ([[evolveSchema]] — type conflicts and name resurrections
-        // still refuse loudly); table columns the source LACKS are
-        // written as what an omitted column reads everywhere else —
-        // the column DEFAULT when pinned, NULL otherwise
-        // ([[missingColumnReads]]). NOTE the replace-by-key contract:
-        // a matched row is replaced by its source row ENTIRELY, so a
-        // lacking column reads default/NULL on replaced rows too —
-        // callers that want SQL MERGE's per-column `UPDATE SET` use
-        // the SQL surface.
-        val autoMerge = spark.conf.getOption(
-          "spark.graft.write.mergeSchema").exists(_.toBoolean)
-        if (!autoMerge)
-          require(table.columns.sorted.sameElements(source.columns.sorted),
-            s"merge source columns ${source.columns.toSeq} != table " +
-              s"columns ${table.columns.toSeq} — set " +
-              "spark.graft.write.mergeSchema=true to evolve additively")
-        val srcAligned =
-          if (!autoMerge)
-            source.select(table.columns.map(source.col).toSeq: _*)
-          else {
-            val bySrcLower = source.schema.fields
-              .map(f => f.name.toLowerCase -> f).toMap
-            val tblLower = table.columns.map(_.toLowerCase).toSet
-            val shared = table.schema.fields.toSeq.map { f =>
-              bySrcLower.get(f.name.toLowerCase) match {
-                case Some(sf) =>
-                  // refuse type drift BEFORE any data stages — the
-                  // union below would otherwise silently coerce
-                  require(sf.dataType == f.dataType,
-                    s"schema conflict on column '${f.name}' of $dir: " +
-                      s"table has ${f.dataType.sql}, merge source has " +
-                      s"${sf.dataType.sql} — type changes require an " +
-                      "explicit overwrite")
-                  source.col(sf.name).as(f.name)
-                case None =>
-                  // fill what an OMITTED column reads everywhere
-                  // else (INSERT, append): the column DEFAULT when
-                  // pinned, NULL otherwise — a hard NULL here would
-                  // make MERGE-inserted rows diverge from the same
-                  // row written by any other path
-                  missingColumnReads(f).as(f.name)
-              }
-            }
-            val extra = source.schema.fields.toSeq
-              .filterNot(f => tblLower.contains(f.name.toLowerCase))
-              .map(f => source.col(f.name))
-            source.select(shared ++ extra: _*)
-          }
-        // pinned per CAS attempt (the Delta materialize-source
-        // rule): the dup probe, constraint probes, key footprint,
-        // the retiring anti-join and the staged union are
-        // INDEPENDENT executions of this plan — a nondeterministic
-        // source must yield ONE row set across all of them
-        // (see [[pinKeys]]). Generated columns materialize first —
-        // the filled/aligned source is what stages.
-        val src = pinKeys(
-          materializeGeneratedAt(fs, root, Some(v), srcAligned))
-        var pinnedMut: DataFrame = null
-        try {
-        schemaOf(fs, root, v).foreach(s =>
-          refuseNullIdentity(s, src, dir, "merge"))
-        // explicit identity values the source introduces push the
-        // mark in the SAME commit — the next INSERT must not re-issue
-        // them (CAS at v+1 guards the advance)
-        val idDelta = schemaOf(fs, root, v)
-          .map(s => identityMarkAdvance(s, propsOf(fs, root, v), src))
-          .getOrElse(Map.empty[String, String])
-        // case-INSENSITIVE, like Spark's own column resolution: the
-        // evolving path re-aliases shared columns to the TABLE's
-        // casing, and a caller-cased key must keep working either way
-        keys.foreach(k => require(
-          src.columns.exists(_.equalsIgnoreCase(k)),
-          s"merge key '$k' is not a column: ${src.columns.toSeq}"))
-        tombstones.foreach(t => keys.foreach(k =>
-          require(t.columns.contains(k),
-            s"tombstone key '$k' is not a column: ${t.columns.toSeq}")))
-        // the probe is one full job over the pinned source — callers
-        // whose construction PROVES key uniqueness (applyChanges nets
-        // to row_number()=1 per key) skip it
-        if (!keysProvedUnique) {
-          val dup = src.na.drop(keys).groupBy(keys.map(col): _*)
-            .agg(count(lit(1)).as("__n")).filter(col("__n") > 1L)
-            .limit(1).count()
-          require(dup == 0L,
-            s"merge source has duplicate key tuples on $keys — " +
-              "MERGE semantics would be non-deterministic")
-        }
-        // CHECK constraints: the rewrite keeps table rows (already
-        // valid) and adds source rows — only the source needs proof
-        enforceConstraintsAt(spark, dir, fs, root, v, src)
-        // ALL keys the mutation names — upsert keys plus tombstones:
-        // both retire their matching table rows from the rewrite
-        val mutKeys = tombstones match {
-          case None => src.select(keys.map(col): _*)
-          case Some(t) =>
-            // the tombstone side is pinned too: mutKeys feeds both
-            // the footprint probes and the retiring anti-join
-            pinnedMut = pinKeys(src.select(keys.map(col): _*)
-              .unionByName(t.select(keys.map(col): _*))
-              .na.drop(keys).distinct())
-            pinnedMut
-        }
-        // the mutation's key footprint as a prune predicate: table
-        // rows that can match some named key all satisfy it (sound
-        // superset; see scaladoc)
-        val footprint = keyFootprint(mutKeys.na.drop(keys).distinct(), keys)
-        val (touched, untouched) = footprint match {
-          case None => (Nil, readManifest(fs, root, v)) // nothing matches
-          case Some(pred) => pruneFiles(spark, dir, pred, v)
-        }
-        val touchedRows =
-          if (touched.isEmpty) table.limit(0)
-          else readFilesAs(spark, fs, root, v, touched)
-        val rewritten = touchedRows
-          .join(mutKeys, keys, "left_anti")
-          // evolving merges append the NEW columns after the table's
-          // (rewritten table rows read NULL there, like pre-evolution
-          // files do) — exactly evolveSchema's shape
-          .unionByName(src, allowMissingColumns = autoMerge)
-        val basePinned = schemaOf(fs, root, v)
-        val bloomCfg = bloomConfigOf(fs, root, v)
-        val staged = stage(rewritten, fs, root,
-          basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-            .getOrElse(Map.empty), bloomCfg, declaredAt = v)
-        val droppedSet = droppedOf(fs, root, v)
-        val pinnedSchema =
-          if (autoMerge)
-            // schema + data land as ONE commit: the staged frame's
-            // schema (physicals attached by stage) evolves the base's
-            // pinned schema additively, conflicts throw pre-commit
-            evolveSchema(basePinned.getOrElse(allNullable(table.schema)),
-              staged.schema, dir, droppedSet)
-          else basePinned.getOrElse(allNullable(staged.schema))
-        val opName = if (tombstones.isDefined) "merge-mixed" else "merge"
-        // COMMIT WITH REBASE: a lost CAS does not immediately force
-        // the full recompute — when every interloper commit in
-        // (base, tip] is a pure stats-disjoint append (proven by
-        // [[rebaseSafe]]: adds only, no DV/schema/constraint/property
-        // drift, and every added file DISPROVEN by this merge's key
-        // footprint), the already-staged result is byte-identical to
-        // what a serial merge at the tip would stage, so it re-CASes
-        // on the new base at metadata cost. This is the OCC fairness
-        // fix for the starvation mode retryOnRace documents: a slow
-        // merge recompute among fast appenders used to lose EVERY
-        // race (each attempt outlasted the competitors' inter-commit
-        // gap); with rebase the loser's next attempt is one manifest
-        // write, which fits any gap. Unsafe interlopers (DML,
-        // overlapping appends, DDL) still fall back to the loud
-        // ConcurrentModificationException → full recompute.
-        // the touched files become #remove lines and the untouched
-        // carry IMPLICITLY through the base — a narrow merge into a
-        // million-file table writes O(touched) manifest lines
-        val committed = commitWithRebase(spark, fs, root, dir, v,
-            footprint, opName,
-            allowRebase = expectedVersion < 0) { b =>
-          casChange(fs, root, b, pinnedSchema,
-            carriedMeta(fs, root, b, idDelta ++ propsDelta) ++
-              opHeader(opName) ++ dmlKeysHeader(keys) ++ header,
-            touched, staged.files, staged.stats)
-        }
-        MergeResult(committed, rewrittenFiles = staged.files.length,
-          untouchedFiles =
-            untouchedAfter(fs, root, v, committed, touched, untouched))
-        } finally {
-          src.unpersist()
-          if (pinnedMut != null) pinnedMut.unpersist()
-        }
+      case Some(at) => classifyMerge(at, source, keys, "merge",
+          evolvable = true, tombstones, keysProvedUnique) { m =>
+        // evolving merges append the NEW columns after the table's
+        // (rewritten table rows read NULL there, like pre-evolution
+        // files do) — exactly evolveSchema's shape
+        val staged = stageAt(at.fs, at.root, at.v,
+          (if (m.mayMatch.isEmpty) at.table.limit(0) else at.scan(m.mayMatch))
+            .join(m.mutKeys, m.keys, "left_anti")
+            .unionByName(m.src, allowMissingColumns = m.evolve))
+        // schema + data land as ONE commit: the staged frame's schema
+        // evolves the base's pinned schema additively
+        val evolved = if (!m.evolve) None else Some(evolveSchema(
+          at.pinned.getOrElse(allNullable(at.table.schema)), staged.schema,
+          dir, droppedOf(at.fs, at.root, at.v)))
+        val (v, carried) = applyCow(at,
+          if (tombstones.isDefined) "merge-mixed" else "merge", m.footprint,
+          m.mayMatch, m.untouched, staged, evolved, m.idDelta ++ propsDelta,
+          dmlKeysHeader(keys) ++ header)
+        MergeResult(v, rewrittenFiles = staged.files.length,
+          untouchedFiles = carried)
+      }
     }
+  }
+
+  /** Predicate-delete classify of the copy-on-write verbs
+    * ([[deleteWhere]], [[replaceWhere]]): may-match vs untouched files
+    * with the `!pred` survivor set from ONE stats pass; of the
+    * may-match files, those where NO row can survive drop whole
+    * (interval disproof of `!pred` plus the null-free guard —
+    * fail-open keeps files in the rewrite set). Returns (may-match,
+    * untouched, dropped whole, the rewrite set's surviving rows). */
+  private def classifyDelete(at: At, pred: Column)
+      : (Seq[String], Seq[String], Seq[String], Option[DataFrame]) = {
+    val (mayMatch, untouched, survivors) =
+      pruneBoth(at.spark, at.dir, pred, at.v)
+    val (maySurvive, dropWhole) = splitDropWholeWith(at.spark, at.dir,
+      at.fs, at.root, pred, at.v, mayMatch, survivors,
+      statsFor(at.fs, at.root, at.v))
+    (mayMatch, untouched, dropWhole,
+      if (maySurvive.isEmpty) None
+      else Some(at.scan(maySurvive).filter(!isTrue(pred))))
   }
 
   /** File counts of a [[deleteWhere]]: `rewrittenFiles` had surviving
@@ -5330,35 +5331,31 @@ object Snapshots {
     * calls retry a lost CAS race like [[deleteWhere]]. */
   def deleteMatching(spark: SparkSession, dir: String,
       tombstones: DataFrame, keys: Seq[String],
-      expectedVersion: Int = -1): DeleteResult = {
-    require(keys.nonEmpty, "deleteMatching needs at least one key column")
-    keys.foreach(k => require(tombstones.columns.contains(k),
-      s"tombstone key '$k' is not a column: ${tombstones.columns.toSeq}"))
-    // pin the key frame ABOVE the retry loop: [[keyFootprint]]
-    // (limit-collect or min/max agg), the anti-join, and every
-    // lost-CAS retry are INDEPENDENT executions of this plan — a
-    // nondeterministic tombstone frame (rand()-gated subquery,
-    // sample()) could otherwise yield a footprint that misses files
-    // the join matches, silently keeping their rows. See [[pinKeys]].
-    val src = pinKeys(
-      tombstones.select(keys.map(col): _*).na.drop(keys).distinct())
-    try {
-      if (expectedVersion >= 0)
-        deleteMatchingInternal(spark, dir, src, keys, expectedVersion)
-      else retryOnRace("deleteMatching on " + dir)(
-        deleteMatchingInternal(spark, dir, src, keys, -1))
-    } finally src.unpersist()
-  }
+      expectedVersion: Int = -1): DeleteResult =
+    classifyKeys(spark, dir, tombstones, keys, expectedVersion,
+        "deleteMatching", "delete") { (at, k) =>
+      if (k.mayMatch.isEmpty) // nothing can match: no commit
+        DeleteResult(at.v, 0, 0, k.untouched.length)
+      else {
+        val staged = stageAt(at.fs, at.root, at.v,
+          at.scan(k.mayMatch).join(k.src, k.keys, "left_anti"))
+        val (v, carried) = applyCow(at, "merge-delete", k.footprint,
+          k.mayMatch, k.untouched, staged)
+        DeleteResult(v, rewrittenFiles = staged.files.length,
+          droppedFiles = 0, untouchedFiles = carried)
+      }
+    }
 
   /** The sound-superset key footprint shared by every key-addressed
-    * DML verb (merge / deleteMatching / updateMatching): an in-set
-    * predicate for few keys, per-column min/max ranges otherwise —
-    * every table row that can match some named key satisfies it.
+    * DML verb (the merge family / deleteMatching / updateMatching): an
+    * in-set predicate for few keys, per-column min/max ranges otherwise
+    * — every table row that can match some named key satisfies it.
     * `src` must already be key-projected, NULL-dropped and distinct.
-    * `None` = no fully-non-null key was named (nothing can match). */
-  private def keyFootprint(src: DataFrame,
-      keys: Seq[String]): Option[Column] =
-    if (keys.lengthCompare(1) == 0) {
+    * Returns the footprint (`None` = no fully-non-null key was named:
+    * nothing can match) and `at`'s files it may match vs the rest. */
+  private def keyFootprint(at: At, src: DataFrame, keys: Seq[String])
+      : (Option[Column], Seq[String], Seq[String]) = {
+    val fp = if (keys.lengthCompare(1) == 0) {
       val vals = src.limit(MergeInSetLimit + 1).collect().map(_.get(0))
       if (vals.isEmpty) None
       else if (vals.length <= MergeInSetLimit)
@@ -5375,19 +5372,10 @@ object Snapshots {
         col(k).between(lit(r.get(2 * i)), lit(r.get(2 * i + 1)))
       }.reduce(_ && _))
     }
-
-  /** `src` is already key-projected, NULL-dropped, distinct and
-    * PINNED by the caller ([[pinKeys]]). */
-  private def deleteMatchingInternal(spark: SparkSession, dir: String,
-      src: DataFrame, keys: Seq[String],
-      expectedVersion: Int): DeleteResult = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to delete in $dir"))
-    deleteMatchingPinned(spark, dir, src, keys, base, fs, root,
-      allowRebase = expectedVersion < 0)
+    val (mayMatch, untouched) = fp.fold(
+      (Seq.empty[String], readManifest(at.fs, at.root, at.v)))(
+      pruneFiles(at.spark, at.dir, _, at.v))
+    (fp, mayMatch, untouched)
   }
 
   /** Fully materialize `frame` in the block cache so every later read
@@ -5400,35 +5388,6 @@ object Snapshots {
     val pinned = frame.persist()
     pinned.count()
     pinned
-  }
-
-  private def deleteMatchingPinned(spark: SparkSession, dir: String,
-      src: DataFrame, keys: Seq[String], base: Int,
-      fs: FileSystem, root: HPath,
-      allowRebase: Boolean = true): DeleteResult = {
-    val footprint: Option[Column] = keyFootprint(src, keys)
-    val (touched, untouched) = footprint match {
-      case None => (Nil, readManifest(fs, root, base))
-      case Some(pred) => pruneFiles(spark, dir, pred, base)
-    }
-    if (touched.isEmpty) // nothing can match: no commit
-      return DeleteResult(base, 0, 0, untouched.length)
-    val rewritten = readFilesAs(spark, fs, root, base, touched)
-      .join(src, keys, "left_anti")
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val staged = stage(rewritten, fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val committed = commitWithRebase(spark, fs, root, dir, base,
-        footprint, "deleteMatching", allowRebase) { b =>
-      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, b) ++ opHeader("merge-delete"),
-        touched, staged.files, staged.stats)
-    }
-    DeleteResult(committed, rewrittenFiles = staged.files.length,
-      droppedFiles = 0, untouchedFiles =
-        untouchedAfter(fs, root, base, committed, touched, untouched))
   }
 
   /** Copy-on-write DELETE — rows satisfying `pred` are removed as ONE
@@ -5457,9 +5416,16 @@ object Snapshots {
     * after the racing commit. */
   def deleteWhere(spark: SparkSession, dir: String, pred: Column,
       expectedVersion: Int = -1): DeleteResult =
-    if (expectedVersion >= 0) deleteInternal(spark, dir, pred, expectedVersion)
-    else retryOnRace("deleteWhere on " + dir)(
-      deleteInternal(spark, dir, pred, -1))
+    dmlOn(spark, dir, expectedVersion, "delete") { at =>
+      val (mayMatch, untouched, dropWhole, survivors) =
+        classifyDelete(at, pred)
+      val staged = stageAt(at.fs, at.root, at.v,
+        survivors.getOrElse(at.table.limit(0)))
+      val (v, carried) = applyCow(at, "delete", Some(pred), mayMatch,
+        untouched, staged)
+      DeleteResult(v, rewrittenFiles = staged.files.length,
+        droppedFiles = dropWhole.length, untouchedFiles = carried)
+    }
 
   /** Of `mayMatch` files, those provably holding NO surviving row
     * under a SQL DELETE of `pred`: `survivors` (the files `!pred` may
@@ -5495,46 +5461,6 @@ object Snapshots {
       }
       mayMatch.partition(f => survivors.contains(f) || !nullFree(f))
     }
-
-  private def deleteInternal(spark: SparkSession, dir: String, pred: Column,
-      expectedVersion: Int): DeleteResult = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to delete in $dir"))
-    // may-match vs provably-no-match (no-match files carry), with
-    // the !pred survivor set from the SAME stats pass; of the
-    // may-match files, those where NO row can SURVIVE drop whole
-    // (interval disproof of !pred plus the null-free guard) —
-    // fail-open keeps files in the rewrite set
-    val (mayMatch, untouched, survivors) =
-      pruneBoth(spark, dir, pred, base)
-    val (maySurvive, dropWhole) = splitDropWholeWith(spark, dir, fs,
-      root, pred, base, mayMatch, survivors, statsFor(fs, root, base))
-    val rewrittenRows =
-      if (maySurvive.isEmpty) read(spark, dir, base).limit(0)
-      else readFilesAs(spark, fs, root, base, maySurvive)
-        // SQL DELETE keeps NULL-predicate rows: survive = NOT TRUE(pred)
-        .filter(!coalesce(pred, lit(false)))
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val staged = stage(rewrittenRows, fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    // rewritten and dropped-whole files are removes, untouched carry
-    // through the base (see merge)
-    val committed = commitWithRebase(spark, fs, root, dir, base,
-        Some(pred), "deleteWhere",
-        allowRebase = expectedVersion < 0) { b =>
-      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, b) ++ opHeader("delete"),
-        mayMatch, staged.files, staged.stats)
-    }
-    DeleteResult(committed, rewrittenFiles = staged.files.length,
-      droppedFiles = dropWhole.length, untouchedFiles =
-        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
-  }
 
   /** What a [[replaceWhere]] did: `stagedFiles` covers both the
     * rewritten survivors and the incoming rows (staged together as one
@@ -5572,98 +5498,69 @@ object Snapshots {
     * version (the replace is a function of (table, pred, data)). */
   def replaceWhere(spark: SparkSession, dir: String, pred: Column,
       data: DataFrame, expectedVersion: Int = -1): ReplaceResult =
-    if (expectedVersion >= 0)
-      replaceInternal(spark, dir, pred, data, expectedVersion)
-    else retryOnRace("replaceWhere on " + dir)(
-      replaceInternal(spark, dir, pred, data, -1))
-
-  private def replaceInternal(spark: SparkSession, dir: String,
-      pred: Column, data: DataFrame,
-      expectedVersion: Int): ReplaceResult = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
+    dml(spark, dir, expectedVersion, "replace") { base =>
+      val at = base.getOrElse(throw new java.util.NoSuchElementException(
         s"nothing to replace in $dir — the first load of a table is a " +
           "plain append/overwrite"))
-    val table = read(spark, dir, base)
-    require(table.columns.sorted.sameElements(data.columns.sorted),
-      s"replaceWhere data columns ${data.columns.toSeq} != table " +
-        s"columns ${table.columns.toSeq}")
-    val aligned = materializeGeneratedAt(fs, root, Some(base),
-      data.select(table.columns.map(data.col).toSeq: _*))
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val physMap = basePinned
-      .map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-      .getOrElse(Map.empty)
-    // stage the load FIRST, validate the STAGED BYTES: the incoming
-    // plan executes exactly once, so a non-deterministic source
-    // cannot pass validation with one sample and commit another (and
-    // a large backfill is not computed three times over). A failed
-    // check deletes the staged files and commits nothing.
-    val stagedLoad = stage(aligned, fs, root, physMap, bloomCfg,
-      declaredAt = base)
-    def dropStaged(): Unit = stagedLoad.files
-      .map(f => f.take(f.lastIndexOf('/'))).distinct
-      .foreach(rel => fs.delete(new HPath(root, rel), true))
-    val physToLogical = table.schema.fields
-      .map(f => physOf(f) -> f.name).toMap
-    val loadBack =
-      if (stagedLoad.files.isEmpty) table.limit(0)
-      else {
-        val raw = spark.read.parquet(
-          stagedLoad.files.map(f => new HPath(root, f).toString): _*)
-        raw.select(raw.columns.toSeq.map(c =>
-          col(c).as(physToLogical.getOrElse(c, c))): _*)
+      import at.{fs, root, table}
+      require(table.columns.sorted.sameElements(data.columns.sorted),
+        s"replaceWhere data columns ${data.columns.toSeq} != table " +
+          s"columns ${table.columns.toSeq}")
+      // stage the load FIRST, validate the STAGED BYTES: the incoming
+      // plan executes exactly once, so a non-deterministic source
+      // cannot pass validation with one sample and commit another (and
+      // a large backfill is not computed three times over). A failed
+      // check deletes the staged files and commits nothing.
+      val stagedLoad = stageAt(fs, root, at.v, materializeGeneratedAt(fs,
+        root, Some(at.v), data.select(table.columns.map(data.col).toSeq: _*)))
+      val physToLogical = table.schema.fields
+        .map(f => physOf(f) -> f.name).toMap
+      val loadBack =
+        if (stagedLoad.files.isEmpty) table.limit(0)
+        else {
+          val raw = spark.read.parquet(
+            stagedLoad.files.map(f => new HPath(root, f).toString): _*)
+          raw.select(raw.columns.toSeq.map(c =>
+            col(c).as(physToLogical.getOrElse(c, c))): _*)
+        }
+      try {
+        // scope containment: a row outside `pred` would survive the
+        // next reload of its own scope — the silent drift this op
+        // prevents
+        val outOfScope = loadBack.filter(!isTrue(pred)).take(1)
+        if (outOfScope.nonEmpty) throw new IllegalArgumentException(
+          s"replaceWhere into $dir: incoming row does not satisfy the " +
+            s"replace predicate (${outOfScope.head}) — every inserted " +
+            "row must be inside the replaced scope; widen the predicate " +
+            "or filter the load")
+        // a scoped replace re-loads rows that conceptually EXIST — they
+        // carry their ids; fresh rows belong in the INSERT/append verbs
+        // (which assign). Validated on the STAGED BYTES like the checks
+        // above, keeping the stage-once discipline.
+        at.pinned.foreach(s => refuseNullIdentity(s, loadBack, dir,
+          "replaceWhere"))
+        enforceConstraintsAt(spark, dir, fs, root, at.v, loadBack)
+      } catch { case NonFatal(t) =>
+        stagedLoad.files.map(f => f.take(f.lastIndexOf('/'))).distinct
+          .foreach(rel => fs.delete(new HPath(root, rel), true))
+        throw t
       }
-    try {
-      // scope containment: a row outside `pred` would survive the
-      // next reload of its own scope — the silent drift this op
-      // prevents
-      val outOfScope = loadBack.filter(!coalesce(pred, lit(false))).take(1)
-      if (outOfScope.nonEmpty) throw new IllegalArgumentException(
-        s"replaceWhere into $dir: incoming row does not satisfy the " +
-          s"replace predicate (${outOfScope.head}) — every inserted " +
-          "row must be inside the replaced scope; widen the predicate " +
-          "or filter the load")
-      // a scoped replace re-loads rows that conceptually EXIST — they
-      // carry their ids; fresh rows belong in the INSERT/append verbs
-      // (which assign). Validated on the STAGED BYTES like the checks
-      // above, keeping the stage-once discipline.
-      basePinned.foreach(s => refuseNullIdentity(s, loadBack, dir,
-        "replaceWhere"))
-      enforceConstraintsAt(spark, dir, fs, root, base, loadBack)
-    } catch { case NonFatal(t) => dropStaged(); throw t }
-    // explicit identity values the load introduces push the mark in
-    // the SAME commit (usually a no-op — re-loaded rows sit below it)
-    val idDelta = basePinned
-      .map(s => identityMarkAdvance(s, propsOf(fs, root, base), loadBack))
-      .getOrElse(Map.empty[String, String])
-    val (mayMatch, untouched, survivors) =
-      pruneBoth(spark, dir, pred, base)
-    val (maySurvive, dropWhole) = splitDropWholeWith(spark, dir, fs,
-      root, pred, base, mayMatch, survivors, statsFor(fs, root, base))
-    val stagedSurvivors =
-      if (maySurvive.isEmpty) None
-      else Some(stage(readFilesAs(spark, fs, root, base, maySurvive)
-        .filter(!coalesce(pred, lit(false))), fs, root, physMap,
-        bloomCfg, declaredAt = base))
-    val staged = Staged(
-      stagedSurvivors.map(_.files).getOrElse(Nil) ++ stagedLoad.files,
-      stagedSurvivors.map(_.stats).getOrElse(Nil) ++ stagedLoad.stats,
-      stagedLoad.schema)
-    val committed = commitWithRebase(spark, fs, root, dir, base,
-        Some(pred), "replaceWhere",
-        allowRebase = expectedVersion < 0) { b =>
-      casChange(fs, root, b, basePinned.getOrElse(allNullable(table.schema)),
-        carriedMeta(fs, root, b, idDelta) ++ opHeader("replace-where"),
-        mayMatch, staged.files, staged.stats)
+      // explicit identity values the load introduces push the mark in
+      // the SAME commit (usually a no-op — re-loaded rows sit below it)
+      val idDelta = at.pinned
+        .map(s => identityMarkAdvance(s, propsOf(fs, root, at.v), loadBack))
+        .getOrElse(Map.empty[String, String])
+      val (mayMatch, untouched, dropWhole, survivors) =
+        classifyDelete(at, pred)
+      val staged = survivors.map(stageAt(fs, root, at.v, _)).fold(stagedLoad)(
+        s => Staged(s.files ++ stagedLoad.files, s.stats ++ stagedLoad.stats,
+          stagedLoad.schema))
+      val (v, carried) = applyCow(at, "replace-where", Some(pred), mayMatch,
+        untouched, staged, Some(at.pinned.getOrElse(allNullable(table.schema))),
+        idDelta)
+      ReplaceResult(v, stagedFiles = staged.files.length,
+        droppedFiles = dropWhole.length, untouchedFiles = carried)
     }
-    ReplaceResult(committed, stagedFiles = staged.files.length,
-      droppedFiles = dropWhole.length, untouchedFiles =
-        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
-  }
 
   final case class UpdateResult(version: Int, rewrittenFiles: Int,
     untouchedFiles: Int)
@@ -5685,76 +5582,23 @@ object Snapshots {
   def updateWhere(spark: SparkSession, dir: String, pred: Column,
       assignments: Seq[(String, Column)],
       expectedVersion: Int = -1): UpdateResult =
-    if (expectedVersion >= 0)
-      updateInternal(spark, dir, pred, assignments, expectedVersion)
-    else retryOnRace("updateWhere on " + dir)(
-      updateInternal(spark, dir, pred, assignments, -1))
-
-  private def updateInternal(spark: SparkSession, dir: String, pred: Column,
-      assignments: Seq[(String, Column)],
-      expectedVersion: Int): UpdateResult = {
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to update in $dir"))
-    val cols = read(spark, dir, base).schema
-    val byName = cols.fields.map(f => f.name.toLowerCase -> f).toMap
-    assignments.foreach { case (c, _) =>
-      require(byName.contains(c.toLowerCase),
-        s"UPDATE target '$c' is not a column of $dir: " +
-          s"${cols.fieldNames.toSeq}")
+    dmlOn(spark, dir, expectedVersion, "update") { at =>
+      val cols = at.table.schema
+      val assigned = assignedOf(dir, cols, assignments)
+      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      if (mayMatch.isEmpty) UpdateResult(at.v, 0, untouched.length)
+      else {
+        val rows = assign(cols, assigned, isTrue(pred))(at.scan(mayMatch))
+        // updated values are NEW data: they must prove the table's CHECK
+        // constraints before the commit, exactly like an append's rows
+        enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, rows)
+        val staged = stageAt(at.fs, at.root, at.v, rows)
+        val (v, carried) = applyCow(at, "update", Some(pred), mayMatch,
+          untouched, staged)
+        UpdateResult(v, rewrittenFiles = staged.files.length,
+          untouchedFiles = carried)
+      }
     }
-    val assigned = assignments.map { case (c, v) =>
-      byName(c.toLowerCase).name -> v
-    }.toMap
-    refuseGeneratedAssignment(cols, assigned.keys, dir)
-    val (mayMatch, untouched) = pruneFiles(spark, dir, pred, base)
-    if (mayMatch.isEmpty)
-      return UpdateResult(base, 0, untouched.length)
-    val hit = coalesce(pred, lit(false))
-    val rewrittenRows = {
-      val in = readFilesAs(spark, fs, root, base, mayMatch)
-      regenerate(cols, in.select(cols.fields.toSeq.map { f =>
-        assigned.get(f.name) match {
-          case Some(v) =>
-            when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*))
-    }
-    commitUpdateRewrite(spark, dir, fs, root, base, mayMatch, untouched,
-      rewrittenRows, footprint = pred,
-      allowRebase = expectedVersion < 0)
-  }
-
-  /** The shared tail of every copy-on-write UPDATE ([[updateWhere]] /
-    * [[updateMatching]]): constraint-check the rewritten rows, stage
-    * them, and CAS the commit (op `update`, delta manifest when the
-    * chain allows). */
-  private def commitUpdateRewrite(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, base: Int, mayMatch: Seq[String],
-      untouched: Seq[String], rewrittenRows: DataFrame,
-      footprint: Column, allowRebase: Boolean): UpdateResult = {
-    // updated values are NEW data: they must prove the table's CHECK
-    // constraints before the commit, exactly like an append's rows
-    enforceConstraintsAt(spark, dir, fs, root, base, rewrittenRows)
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
-    val staged = stage(rewrittenRows, fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
-    val committed = commitWithRebase(spark, fs, root, dir, base,
-        Some(footprint), "update", allowRebase) { b =>
-      casChange(fs, root, b, basePinned.getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, b) ++ opHeader("update"),
-        mayMatch, staged.files, staged.stats)
-    }
-    UpdateResult(committed, rewrittenFiles = staged.files.length,
-      untouchedFiles =
-        untouchedAfter(fs, root, base, committed, mayMatch, untouched))
-  }
 
   /** Files a keyed/predicate DML commit carried by name: `untouched`
     * when it landed on its own base, else the rebased tip's files
@@ -5782,94 +5626,34 @@ object Snapshots {
   def updateMatching(spark: SparkSession, dir: String,
       matchKeys: DataFrame, keys: Seq[String],
       assignments: Seq[(String, Column)],
-      expectedVersion: Int = -1): UpdateResult = {
-    require(keys.nonEmpty, "updateMatching needs at least one key column")
-    require(assignments.nonEmpty, "UPDATE needs at least one assignment")
-    keys.foreach(k => require(matchKeys.columns.contains(k),
-      s"match key '$k' is not a column: ${matchKeys.columns.toSeq}"))
-    // pinned ABOVE the retry loop, same reason as [[deleteMatching]]:
-    // the footprint probes, the update join and every lost-CAS retry
-    // must see the SAME rows of a possibly-nondeterministic key
-    // frame (see [[pinKeys]])
-    val src = pinKeys(
-      matchKeys.select(keys.map(col): _*).na.drop(keys).distinct())
-    try {
-      if (expectedVersion >= 0)
-        updateMatchingInternal(spark, dir, src, keys, assignments,
-          expectedVersion)
-      else retryOnRace("updateMatching on " + dir)(
-        updateMatchingInternal(spark, dir, src, keys, assignments,
-          -1))
-    } finally src.unpersist()
-  }
-
-  /** `matchKeys` is already key-projected, NULL-dropped, distinct
-    * and PINNED by the caller ([[pinKeys]]), in the CALLER's key
-    * spelling (canonicalized here against the table schema). */
-  private def updateMatchingInternal(spark: SparkSession, dir: String,
-      matchKeys: DataFrame, keys: Seq[String],
-      assignments: Seq[(String, Column)],
-      expectedVersion: Int): UpdateResult = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to update in $dir"))
-    val cols = read(spark, dir, base).schema
-    val byName = cols.fields.map(f => f.name.toLowerCase -> f).toMap
-    (keys ++ assignments.map(_._1)).foreach { c =>
-      require(byName.contains(c.toLowerCase),
-        s"updateMatching column '$c' is not a column of $dir: " +
-          s"${cols.fieldNames.toSeq}")
+      expectedVersion: Int = -1): UpdateResult =
+    classifyKeys(spark, dir, matchKeys, keys, expectedVersion,
+        "updateMatching", "update") { (at, k) =>
+      val cols = at.table.schema
+      val assigned = assignedOf(dir, cols, assignments)
+      require(!cols.fieldNames.exists(_.equalsIgnoreCase("__upd_mark")),
+        "updateMatching reserves the __upd_mark column name")
+      if (k.mayMatch.isEmpty) // nothing can match: no commit
+        UpdateResult(at.v, 0, k.untouched.length)
+      else {
+        val rows = assign(cols, assigned, col("__upd_mark").isNotNull)(
+          at.scan(k.mayMatch).join(k.src.withColumn("__upd_mark", lit(true)),
+            k.keys, "left"))
+        enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, rows)
+        val staged = stageAt(at.fs, at.root, at.v, rows)
+        val (v, carried) = applyCow(at, "update", k.footprint, k.mayMatch,
+          k.untouched, staged)
+        UpdateResult(v, rewrittenFiles = staged.files.length,
+          untouchedFiles = carried)
+      }
     }
-    require(!cols.fieldNames.exists(_.equalsIgnoreCase("__upd_mark")),
-      "updateMatching reserves the __upd_mark column name")
-    val assigned = assignments.map { case (c, v) =>
-      byName(c.toLowerCase).name -> v
-    }.toMap
-    refuseGeneratedAssignment(cols, assigned.keys, dir)
-    val canonKeys = keys.map(k => byName(k.toLowerCase).name)
-    // metadata-only rename over the PINNED frame — rows untouched
-    val src = matchKeys.toDF(canonKeys: _*)
-    updateMatchingPinned(spark, dir, src, canonKeys, assigned, cols,
-      base, fs, root, allowRebase = expectedVersion < 0)
-  }
-
-  private def updateMatchingPinned(spark: SparkSession, dir: String,
-      src: DataFrame, canonKeys: Seq[String],
-      assigned: Map[String, Column], cols: StructType, base: Int,
-      fs: FileSystem, root: HPath,
-      allowRebase: Boolean = true): UpdateResult = {
-    val fp = keyFootprint(src, canonKeys) // once: src is pinned, but
-      // the footprint probe is a job — never pay (or re-plan) it twice
-    val (mayMatch, untouched) = fp match {
-      case None => (Nil, readManifest(fs, root, base))
-      case Some(pred) => pruneFiles(spark, dir, pred, base)
-    }
-    if (mayMatch.isEmpty) // nothing can match: no commit
-      return UpdateResult(base, 0, untouched.length)
-    val joined = readFilesAs(spark, fs, root, base, mayMatch)
-      .join(src.withColumn("__upd_mark", lit(true)), canonKeys, "left")
-    val hit = col("__upd_mark").isNotNull
-    val rewrittenRows = regenerate(cols,
-      joined.select(cols.fields.toSeq.map { f =>
-        assigned.get(f.name) match {
-          case Some(v) =>
-            when(hit, v.cast(f.dataType)).otherwise(col(f.name)).as(f.name)
-          case None => col(f.name)
-        }
-      }: _*))
-    commitUpdateRewrite(spark, dir, fs, root, base, mayMatch, untouched,
-      rewrittenRows,
-      footprint = fp.get, // mayMatch nonempty ⇒ the footprint existed
-      allowRebase = allowRebase)
-  }
 
   /** Exactly-once [[merge]] for streaming epochs — the upsert analogue
     * of [[idempotentAppend]]: a replayed (writerId, batchId) is
     * recognized from the manifest tag and skipped (None). Unlike the
     * OCC-token batch merge, a lost CAS race here RETRIES against the
-    * new current version (up to 10 attempts): the racing commit is
+    * new current version ([[retryOnRace]]: backoff with jitter, giving
+    * up after 20 straight losses): the racing commit is
     * someone else's append/merge, and re-pruning + re-merging on top of
     * it is exactly the serialization a streaming upsert wants — the
     * source batch is this writer's to apply, in some order, once. */
@@ -5881,9 +5665,8 @@ object Snapshots {
     val (fs, root) = fsFor(spark, dir)
     if (lastBatch(fs, root, spark, dir, writerId).exists(_ >= batchId))
       return None
-    val header = Seq(s"#commit writer=$writerId batch=$batchId")
-    Some(retryOnRace("idempotent merge into " + dir)(
-      mergeInternal(spark, dir, source, keys, -1, header)))
+    Some(mergeCow(spark, dir, source, keys, -1, "idempotentMerge",
+      header = Seq(s"#commit writer=$writerId batch=$batchId")))
   }
 
   /** RESTORE: make `version`'s content the CURRENT version again, as a
@@ -6663,15 +6446,11 @@ object Snapshots {
     }
     if (target.isEmpty) return DvFoldResult(base, 0, 0, files.size)
     val folded = target.keys.toSeq.sorted
-    val basePinned = schemaOf(fs, root, base)
-    val bloomCfg = bloomConfigOf(fs, root, base)
     // the read applies the vectors — the rewrite IS the fold
-    val rewritten = readFilesAs(spark, fs, root, base, folded)
-    val staged = stage(rewritten, fs, root,
-      basePinned.map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-        .getOrElse(Map.empty), bloomCfg, declaredAt = base)
+    val staged = stageAt(fs, root, base,
+      readFilesAs(spark, fs, root, base, folded))
     if (!casChange(fs, root, base,
-        basePinned.getOrElse(allNullable(staged.schema)),
+        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
         carriedMeta(fs, root, base) ++ opHeader("dv-fold"),
         folded, staged.files, staged.stats))
       throw new java.util.ConcurrentModificationException(

@@ -161,6 +161,81 @@ class SnapshotModelSpec extends SparkSpec {
     assert(bad.isEmpty, s"audit: ${bad.toSeq}")
   }
 
+  test("random keyed DML incl. mergeMixed and updateMatching agrees " +
+      "with the model at every step (seed 5)") {
+    val rnd = new Random(5)
+    val root = freshRoot()
+    def batch(n: Int): Seq[(Long, Double)] =
+      Seq.fill(n)((rnd.nextInt(40).toLong, rnd.nextInt(1000) / 4.0))
+        .groupBy(_._1).map(_._2.head).toSeq
+    Snapshots.append(toDf(batch(12)), root)
+    var model: Model = readBack(root).map(r => r._1 -> r).toMap
+    def someKeys(n: Int): Seq[Long] = {
+      val present = model.keys.toSeq
+      val hits =
+        if (present.isEmpty) Nil
+        else Seq.fill(rnd.nextInt(n + 1))(present(rnd.nextInt(present.size)))
+      (hits :+ (9000L + rnd.nextInt(50))).distinct
+    }
+    var drawn = Set.empty[Int]
+    (1 to 30).foreach { step =>
+      val op = rnd.nextInt(9)
+      drawn += op
+      op match {
+        case 0 =>
+          val fresh = batch(4).map { case (k, v) => (-(step * 100 + k), v) }
+          Snapshots.append(toDf(fresh), root)
+          model ++= fresh.map(r => r._1 -> r)
+        case 1 => // upsert half plus a disjoint tombstone half, one commit
+          val src = batch(4)
+          val dead = someKeys(3).filterNot(k => src.exists(_._1 == k))
+          Snapshots.mergeMixed(spark, root, toDf(src), Seq("id"),
+            dead.toDF("id"))
+          model = model -- dead ++ src.map(x => x._1 -> x)
+        case 2 | 3 => // assignments on the rows a key frame names
+          val ks = someKeys(4)
+          val bump = rnd.nextInt(100) * 1.0
+          Snapshots.updateMatching(spark, root, ks.toDF("id"), Seq("id"),
+            Seq("v" -> (col("v") + bump)))
+          model = model.map { case (k, (id, v)) =>
+            k -> (if (ks.contains(k)) (id, v + bump) else (id, v))
+          }
+        case 4 =>
+          val src = batch(5)
+          if (rnd.nextBoolean())
+            Snapshots.merge(spark, root, toDf(src), Seq("id"))
+          else Snapshots.mergeLight(spark, root, toDf(src), Seq("id"))
+          model ++= src.map(x => x._1 -> x)
+        case 5 =>
+          val lo = rnd.nextInt(40).toLong
+          val pred = col("id") >= lo && col("id") <= lo + 4
+          if (rnd.nextBoolean()) Snapshots.deleteWhere(spark, root, pred)
+          else Snapshots.deleteWhereLight(spark, root, pred)
+          model = model.filterNot { case (k, _) => k >= lo && k <= lo + 4 }
+        case 6 =>
+          val lo = rnd.nextInt(40).toLong
+          val pred = col("id") >= lo && col("id") <= lo + 6
+          val assigns = Seq("v" -> (col("v") * 2.0))
+          if (rnd.nextBoolean()) Snapshots.updateWhere(spark, root, pred,
+            assigns)
+          else Snapshots.updateWhereLight(spark, root, pred, assigns)
+          model = model.map { case (k, (id, v)) =>
+            k -> (if (k >= lo && k <= lo + 6) (id, v * 2.0) else (id, v))
+          }
+        case 7 =>
+          val dead = someKeys(3)
+          Snapshots.deleteMatching(spark, root, dead.toDF("id"), Seq("id"))
+          model --= dead
+        case 8 =>
+          Snapshots.compact(spark, root, 2)
+      }
+      assert(readBack(root) == model.values.toSet,
+        s"divergence after step $step (op $op)")
+    }
+    assert(drawn(1) && (drawn(2) || drawn(3)),
+      s"the run must draw mergeMixed and updateMatching: $drawn")
+  }
+
   test("a replica follows a random source op+DDL sequence exactly " +
       "(seed 11)") {
     val rnd = new Random(11)

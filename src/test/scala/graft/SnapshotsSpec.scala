@@ -1084,4 +1084,64 @@ class SnapshotsSpec extends SparkSpec {
     // and nothing was lost by the failed attempt
     assert(Snapshots.read(spark, root).count() == 2)
   }
+
+  test("every keyed verb takes its keys case-insensitively, like merge") {
+    def table(): String = {
+      val root = freshRoot()
+      Snapshots.append((0L until 10L).map(i => (i, i * 1.0)).toDF("id", "v"),
+        root)
+      root
+    }
+    def content(root: String): Set[(Long, Double)] =
+      Snapshots.read(spark, root).as[(Long, Double)].collect().toSet
+    val src = Seq((2L, 20.0), (42L, 42.0)).toDF("id", "v")
+    val ks = Seq(3L, 4L, 99L).toDF("id")
+    val verbs: Seq[(String, (String, Seq[String]) => Any)] = Seq(
+      "merge" -> ((r, k) => Snapshots.merge(spark, r, src, k)),
+      "mergeMixed" -> ((r, k) => Snapshots.mergeMixed(spark, r, src, k, ks)),
+      "mergeLight" -> ((r, k) => Snapshots.mergeLight(spark, r, src, k)),
+      "deleteMatching" -> ((r, k) => Snapshots.deleteMatching(spark, r, ks,
+        k)),
+      "updateMatching" -> ((r, k) => Snapshots.updateMatching(spark, r, ks,
+        k, Seq("v" -> (col("v") + 100.0)))))
+    verbs.foreach { case (name, run) =>
+      val lower = table(); val upper = table()
+      run(lower, Seq("id"))
+      run(upper, Seq("ID"))
+      assert(content(upper) == content(lower), s"$name with key ID")
+      assert(content(lower) != content(table()), s"$name changed nothing")
+    }
+  }
+
+  test("light verbs at maxPositions = Int.MaxValue commit like their " +
+      "copy-on-write twins") {
+    def table(): String = {
+      val root = freshRoot()
+      Snapshots.append((0L until 20L).map(i => (i, i * 1.0)).toDF("id", "v"),
+        root)
+      root
+    }
+    def content(root: String): Set[(Long, Double)] =
+      Snapshots.read(spark, root).as[(Long, Double)].collect().toSet
+    val max = Int.MaxValue
+    val pred = col("id") >= 5L && col("id") < 9L
+    val assigns = Seq("v" -> (col("v") * 3.0))
+    val src = Seq((1L, 10.0), (77L, 7.0)).toDF("id", "v")
+    val pairs: Seq[(String, String => Any, String => Any)] = Seq(
+      ("delete", r => Snapshots.deleteWhere(spark, r, pred),
+        r => Snapshots.deleteWhereLight(spark, r, pred, maxPositions = max)),
+      ("update", r => Snapshots.updateWhere(spark, r, pred, assigns),
+        r => Snapshots.updateWhereLight(spark, r, pred, assigns,
+          maxPositions = max)),
+      ("merge", r => Snapshots.merge(spark, r, src, Seq("id")),
+        r => Snapshots.mergeLight(spark, r, src, Seq("id"),
+          maxPositions = max)))
+    pairs.foreach { case (name, cow, light) =>
+      val a = table(); val b = table()
+      cow(a)
+      light(b)
+      assert(Snapshots.currentVersion(spark, b) == Some(2), name)
+      assert(content(b) == content(a), s"$name light vs copy-on-write")
+    }
+  }
 }
