@@ -960,24 +960,6 @@ object Snapshots {
     else f.copy(metadata = new MetadataBuilder().withMetadata(f.metadata)
       .remove(PhysicalKey).build())
 
-  /** logical → physical for the columns of `df` that exist in the
-    * current pinned schema (staging must write THEIR physical names;
-    * brand-new columns stage under their own name). Empty on a fresh
-    * table — staging is then the identity. */
-  private def physMapFor(spark: SparkSession, dir: String,
-      df: DataFrame): Map[String, String] =
-    currentVersion(spark, dir).flatMap { v =>
-      val (fs, root) = fsFor(spark, dir)
-      schemaOf(fs, root, v)
-    } match {
-      case None => Map.empty
-      case Some(ts) =>
-        val byLower = ts.fields.map(f => f.name.toLowerCase -> f).toMap
-        df.columns.flatMap { c =>
-          byLower.get(c.toLowerCase).map(tf => c -> physOf(tf))
-        }.toMap
-    }
-
   // ---- per-file Bloom sidecar index ---------------------------------
   //
   // Min/max range stats cannot prune an EQUALITY probe when a
@@ -1020,13 +1002,6 @@ object Snapshots {
           f(0).toLong, f(1).toDouble)
     }.filter(_.cols.nonEmpty)
 
-  private def bloomConfigAt(spark: SparkSession,
-      dir: String): Option[BloomConfig] =
-    currentVersion(spark, dir).flatMap { v =>
-      val (fs, root) = fsFor(spark, dir)
-      bloomConfigOf(fs, root, v)
-    }
-
   /** file → physCol → sidecar path, resolved through the delta chain
     * (a file's bloom line lives where the file was added). */
   private def bloomRefsFor(fs: FileSystem, root: HPath,
@@ -1057,31 +1032,21 @@ object Snapshots {
     * Applies to files staged after this commit; run
     * [[compact]]/[[optimize]] to index existing files. */
   def setBloomColumns(spark: SparkSession, dir: String, cols: Seq[String],
-      expectedItems: Long = 100000, fpp: Double = 0.03): Int =
-    retryOnRace(s"setBloomColumns on $dir") {
-      require(expectedItems > 0 && fpp > 0 && fpp < 1,
-        s"invalid bloom sizing: items=$expectedItems fpp=$fpp")
-      val (fs, root) = fsFor(spark, dir)
-      val v = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(s"no table under $dir"))
-      val schema = schemaOf(fs, root, v)
-        .getOrElse(allNullable(read(spark, dir, v).schema))
+      expectedItems: Long = 100000, fpp: Double = 0.03): Int = {
+    require(expectedItems > 0 && fpp > 0 && fpp < 1,
+      s"invalid bloom sizing: items=$expectedItems fpp=$fpp")
+    alterMeta(spark, dir, "bloom-index") { at =>
       val phys = cols.map { c =>
-        val f = schema.fields.find(_.name.equalsIgnoreCase(c))
-          .getOrElse(throw new IllegalArgumentException(
-            s"no column '$c' in $dir: ${schema.fieldNames.toSeq}"))
+        val f = fieldOf(at, c)
         require(isBloomType(f.dataType),
           s"bloom index on '$c' (${f.dataType.sql}) unsupported — " +
             "integral and string columns only")
         physOf(f)
       }
-      val cfg =
-        if (phys.isEmpty) None
-        else Some(BloomConfig(phys, expectedItems, fpp))
-      metadataCommit(fs, root, spark, dir, v, schema,
-        droppedOf(fs, root, v), cfg, constraintsOf(fs, root, v),
-        propsOf(fs, root, v), op = "bloom-index")
+      at.meta.copy(bloom =
+        if (phys.isEmpty) None else Some(BloomConfig(phys, expectedItems, fpp)))
     }
+  }
 
   private def serializeBloom(
       bf: org.apache.spark.util.sketch.BloomFilter): Array[Byte] = {
@@ -1338,16 +1303,29 @@ object Snapshots {
         }
       }.toMap
 
-  /** Tombstone, bloom, constraint and property headers a commit at
-    * base `v` must carry — the one spelling the [[casChange]] callers
-    * share, so a new carried metadata kind is added HERE, not at every
-    * call site. */
-  private def carriedMeta(fs: FileSystem, root: HPath, v: Int,
-      propsDelta: Map[String, String] = Map.empty): Seq[String] =
-    droppedHeader(droppedOf(fs, root, v)) ++
-      bloomHeader(bloomConfigOf(fs, root, v)) ++
-      constraintHeader(constraintsOf(fs, root, v)) ++
-      propsHeader(propsOf(fs, root, v) ++ propsDelta)
+  /** The metadata a version pins and every commit on it carries:
+    * schema (absent on manifests written before schema pinning),
+    * dropped-column tombstones, bloom config, CHECK constraints and
+    * table properties. [[metaAt]] parses it from ONE manifest read;
+    * [[header]] renders all but the schema back (the schema line leads
+    * a manifest, [[casChange]]/[[casManifest]] callers place it). A new
+    * carried metadata kind is added HERE, not at every call site. */
+  private final case class Meta(schema: Option[StructType] = None,
+      dropped: Set[String] = Set.empty, bloom: Option[BloomConfig] = None,
+      constraints: Map[String, String] = Map.empty,
+      props: Map[String, String] = Map.empty) {
+    def header: Seq[String] = droppedHeader(dropped) ++ bloomHeader(bloom) ++
+      constraintHeader(constraints) ++ propsHeader(props)
+    def withProps(delta: Map[String, String]): Meta =
+      copy(props = props ++ delta)
+  }
+
+  private def metaAt(fs: FileSystem, root: HPath, v: Int): Meta = {
+    val lines = manifestLines(fs, root, v)
+    Meta(schemaOfLines(lines), droppedOfLines(lines),
+      bloomConfigOfLines(lines), constraintsOfLines(lines),
+      propsOfLines(lines))
+  }
 
   /** The table properties pinned at `version` (default: latest). */
   def tableProperties(spark: SparkSession, dir: String,
@@ -1382,38 +1360,26 @@ object Snapshots {
 
   /** SET a table property — a metadata-only commit. */
   def setProperty(spark: SparkSession, dir: String, key: String,
-      value: String): Int = retryOnRace(s"setProperty on $dir") {
+      value: String): Int = {
     require(key.nonEmpty && !key.contains("\t") && !value.contains("\t"),
       s"bad property '$key'")
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    if (key == "stats.columns" || key == "cluster.columns")
-      validateDeclaredStatCols(key, value, schema, dir)
-    metadataCommit(fs, root, spark, dir, v, schema, droppedOf(fs, root, v),
-      bloomConfigOf(fs, root, v), constraintsOf(fs, root, v),
-      propsOf(fs, root, v) + (key -> value), op = "set-property")
+    alterMeta(spark, dir, "set-property") { at =>
+      if (key == "stats.columns" || key == "cluster.columns")
+        validateDeclaredStatCols(key, value, at.schema, dir)
+      at.meta.withProps(Map(key -> value))
+    }
   }
 
   /** UNSET a table property — a metadata-only commit (no-op version
     * still commits if the key was absent? No: absent key refuses, the
     * SQL layer's IF EXISTS handles tolerance). */
-  def unsetProperty(spark: SparkSession, dir: String,
-      key: String): Int = retryOnRace(s"unsetProperty on $dir") {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val ps = propsOf(fs, root, v)
-    require(ps.contains(key),
-      s"no property '$key' on $dir: ${ps.keys.toSeq.sorted}")
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    metadataCommit(fs, root, spark, dir, v, schema, droppedOf(fs, root, v),
-      bloomConfigOf(fs, root, v), constraintsOf(fs, root, v),
-      ps - key, op = "unset-property")
-  }
+  def unsetProperty(spark: SparkSession, dir: String, key: String): Int =
+    alterMeta(spark, dir, "unset-property") { at =>
+      val ps = at.meta.props
+      require(ps.contains(key),
+        s"no property '$key' on $dir: ${ps.keys.toSeq.sorted}")
+      at.meta.copy(props = ps - key)
+    }
 
   /** (`stats.columns`, `cluster.columns`) declared at the table's
     * current version — the stats-collection overrides ([[statColumns]]).
@@ -1447,38 +1413,41 @@ object Snapshots {
     * `sqlExpr` is a boolean SQL expression over the table's columns
     * (e.g. `"price >= 0"`, `"ts IS NOT NULL"`). */
   def setConstraint(spark: SparkSession, dir: String, name: String,
-      sqlExpr: String): Int = retryOnRace(s"setConstraint on $dir") {
+      sqlExpr: String): Int = {
     require(name.matches("[A-Za-z0-9._-]+"),
       s"constraint name must be [A-Za-z0-9._-]+, got '$name'")
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val bad = read(spark, dir, v).filter(!expr(sqlExpr)).take(1)
-    require(bad.isEmpty,
-      s"cannot add CHECK constraint '$name' ($sqlExpr) to $dir: existing " +
-        s"row violates it: ${bad.headOption.getOrElse("")}")
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    metadataCommit(fs, root, spark, dir, v, schema, droppedOf(fs, root, v),
-      bloomConfigOf(fs, root, v),
-      constraintsOf(fs, root, v) + (name -> sqlExpr),
-      propsOf(fs, root, v), op = "add-constraint")
+    alterMeta(spark, dir, "add-constraint") { at =>
+      val bad = at.table.filter(!expr(sqlExpr)).take(1)
+      require(bad.isEmpty,
+        s"cannot add CHECK constraint '$name' ($sqlExpr) to $dir: existing " +
+          s"row violates it: ${bad.headOption.getOrElse("")}")
+      at.meta.copy(constraints = at.meta.constraints + (name -> sqlExpr))
+    }
   }
 
   /** DROP a CHECK constraint — a metadata-only commit. */
-  def dropConstraint(spark: SparkSession, dir: String,
-      name: String): Int = retryOnRace(s"dropConstraint on $dir") {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val cs = constraintsOf(fs, root, v)
-    require(cs.contains(name),
-      s"no CHECK constraint '$name' on $dir: ${cs.keys.toSeq.sorted}")
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    metadataCommit(fs, root, spark, dir, v, schema, droppedOf(fs, root, v),
-      bloomConfigOf(fs, root, v), cs - name, propsOf(fs, root, v),
-      op = "drop-constraint")
+  def dropConstraint(spark: SparkSession, dir: String, name: String): Int =
+    alterMeta(spark, dir, "drop-constraint") { at =>
+      val cs = at.meta.constraints
+      require(cs.contains(name),
+        s"no CHECK constraint '$name' on $dir: ${cs.keys.toSeq.sorted}")
+      at.meta.copy(constraints = cs - name)
+    }
+
+  /** Refuse unless every CHECK constraint in `cs` analyzes over
+    * `schema` — the one probe behind CREATE/REPLACE (a constraint naming
+    * a missing column refuses before the first write) and RENAME/DROP
+    * COLUMN (a constraint still naming the old column would fail every
+    * later write). */
+  private def requireConstraintsResolve(spark: SparkSession,
+      schema: StructType, cs: Map[String, String], what: String): Unit = {
+    val probe = spark.createDataFrame(spark.sparkContext.emptyRDD[Row], schema)
+    cs.foreach { case (n, e) =>
+      try probe.filter(expr(e)).queryExecution.analyzed
+      catch { case NonFatal(t) => throw new IllegalArgumentException(
+        s"$what: CHECK constraint '$n' ($e) does not resolve against the " +
+          s"resulting schema (drop or fix the constraint): ${t.getMessage}") }
+    }
   }
 
   /** What a row in a file LACKING column `f` reads for it: the
@@ -1526,7 +1495,7 @@ object Snapshots {
     * Spark's INSERT resolution filled it, or the row carried an
     * explicit NULL — means "compute"; a non-NULL slot is kept AS
     * WRITTEN and must agree with the expression
-    * ([[enforceConstraintsAt]] refuses the commit otherwise — the
+    * ([[enforceConstraints]] refuses the commit otherwise — the
     * GENERATED ALWAYS contract, Delta-style). A frame lacking the
     * column entirely gains it, computed. */
   private def materializeGenerated(schema: StructType,
@@ -1545,16 +1514,6 @@ object Snapshots {
     }
   }
 
-  /** [[materializeGenerated]] against the schema pinned at the
-    * table's version `v` (no-op when none is pinned — pre-DDL tables
-    * cannot declare generated columns). */
-  private def materializeGeneratedAt(fs: FileSystem, root: HPath,
-      v: Option[Int], df: DataFrame): DataFrame =
-    v.flatMap(schemaOf(fs, root, _)) match {
-      case Some(s) => materializeGenerated(s, df)
-      case None => df
-    }
-
   /** Recompute generated columns over an UPDATE's rewritten rows:
     * assignments may change the base columns a generation expression
     * reads, so the expression re-evaluates against the
@@ -1562,7 +1521,7 @@ object Snapshots {
     * carried rows alike) is sound and simpler than threading the hit
     * predicate through the assignment projection: every stored value
     * already equals its (deterministic) expression — the writers
-    * materialize and [[enforceConstraintsAt]] refuses divergence — so
+    * materialize and [[enforceConstraints]] refuses divergence — so
     * on rows the UPDATE missed the recompute is the identity. */
   private def regenerate(schema: StructType, df: DataFrame): DataFrame =
     generatedOf(schema).foldLeft(df) { case (d, (f, e)) =>
@@ -1648,9 +1607,9 @@ object Snapshots {
     * under BY DEFAULT they pass through and the mark advances past
     * their extremum, so future assignments stay collision-free.
     * A frame lacking the column entirely gains it, fully assigned. */
-  private def assignIdentity(spark: SparkSession, schema: StructType,
-      props: Map[String, String], df: DataFrame): IdentityAssignment = {
-    val ids = identityOf(schema)
+  private def assignIdentity(spark: SparkSession, meta: Meta,
+      df: DataFrame): IdentityAssignment = {
+    val ids = meta.schema.map(identityOf).getOrElse(Nil)
     if (ids.isEmpty) return IdentityAssignment(df, Map.empty, Map.empty,
       pin = None)
     var expect = Map.empty[String, Option[String]]
@@ -1665,7 +1624,7 @@ object Snapshots {
     var cur = pin
     ids.foreach { case (f, (start, step, allowExplicit)) =>
       val key = identityMarkKey(f)
-      val markStr = props.get(key)
+      val markStr = meta.props.get(key)
       val mark: Long = markStr.map(_.toLong).getOrElse(start)
       expect += (key -> markStr)
       val has = cur.columns.exists(_.equalsIgnoreCase(f.name))
@@ -1789,11 +1748,8 @@ object Snapshots {
     * the new mark per column. */
   def syncIdentity(spark: SparkSession, dir: String,
       column: Option[String] = None): Map[String, Long] =
-    retryOnRace(s"syncIdentity on $dir") {
-      val (fs, root) = fsFor(spark, dir)
-      val v = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(s"no table under $dir"))
-      val schema = schemaOf(fs, root, v).getOrElse(
+    dmlOn(spark, dir, -1, "alter") { at =>
+      val schema = at.meta.schema.getOrElse(
         throw new IllegalArgumentException(
           s"$dir has no pinned schema — not a DDL table"))
       val ids = identityOf(schema).filter { case (f, _) =>
@@ -1802,10 +1758,9 @@ object Snapshots {
         case Some(c) => s"no IDENTITY column '$c' in $dir"
         case None => s"$dir has no IDENTITY columns"
       })
-      val frame = read(spark, dir, v)
       val updates = ids.map { case (f, (start, step, _)) =>
         val slot = col(f.name)
-        val ext = Option(frame.filter(slot.isNotNull)
+        val ext = Option(at.table.filter(slot.isNotNull)
           .agg(if (step > 0) max(slot.cast("long"))
             else min(slot.cast("long"))).head().get(0))
           .map(_.asInstanceOf[Long])
@@ -1816,12 +1771,8 @@ object Snapshots {
         }
         identityMarkKey(f) -> next
       }
-      metadataCommit(fs, root, spark, dir, v, schema,
-        droppedOf(fs, root, v), bloomConfigOf(fs, root, v),
-        constraintsOf(fs, root, v),
-        propsOf(fs, root, v) ++
-          updates.map { case (k, m) => k -> m.toString },
-        op = "sync-identity")
+      commitOn(at, "sync-identity",
+        at.meta.withProps(updates.map { case (k, m) => k -> m.toString }.toMap))
       updates.toMap
     }
 
@@ -1848,21 +1799,20 @@ object Snapshots {
           "provide it explicitly (matched rows carry the target's ids)")
     }
 
-  /** Validate `df` against the constraints pinned at version `v` and
-    * return that set (the commit re-checks it against its actual base —
-    * see [[commitLoop]]). Table columns the frame lacks enforce as
+  /** Validate `df` against the constraints pinned at `at` (an ingest
+    * commit re-checks them against its actual base — see
+    * [[commitLoop]]). Table columns the frame lacks enforce as
     * what their files' rows will actually READ — the column DEFAULT
     * when one is pinned, NULL otherwise ([[missingColumnReads]]): a
     * NULL stand-in for a defaulted column would let a violating row
     * slip the CHECK (NULL predicate ≠ false) and commit. */
-  private def enforceConstraintsAt(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, v: Int,
-      df: DataFrame): Map[String, String] = {
-    val cs = constraintsOf(fs, root, v)
-    val gens = schemaOf(fs, root, v).map(generatedOf).getOrElse(Nil)
+  private def enforceConstraints(at: At, df: DataFrame): Unit = {
+    import at.dir
+    val cs = at.meta.constraints
+    val gens = at.meta.schema.map(generatedOf).getOrElse(Nil)
     if (cs.nonEmpty || gens.nonEmpty) {
       val have = df.columns.map(_.toLowerCase).toSet
-      val missing = schemaOf(fs, root, v).map(_.fields.toSeq).getOrElse(Nil)
+      val missing = at.meta.schema.map(_.fields.toSeq).getOrElse(Nil)
         .filterNot(f => have.contains(f.name.toLowerCase))
       val full = missing.foldLeft(df)((d, f) =>
         d.withColumn(f.name, missingColumnReads(f)))
@@ -1886,7 +1836,6 @@ object Snapshots {
             "it computed; nothing was committed")
       }
     }
-    cs
   }
 
   /** What a [[mergeLight]] did: files that gained a deletion vector
@@ -1933,36 +1882,34 @@ object Snapshots {
     * [[evolveSchema]] enforces at commit time, checked before any file
     * is staged (a tombstone collision would otherwise surface as a
     * confusing duplicate-physical-column failure inside the write). */
-  private def validateIncoming(spark: SparkSession, dir: String,
-      df: DataFrame): Unit =
-    currentVersion(spark, dir).foreach { v =>
-      val (fs, root) = fsFor(spark, dir)
-      schemaOf(fs, root, v).foreach { ts =>
-        val dropped = droppedOf(fs, root, v)
-        val byLower = ts.fields.map(_.name.toLowerCase).toSet
-        df.schema.fields.filterNot(f => byLower.contains(f.name.toLowerCase))
-          .foreach { f =>
-            require(!dropped.exists(_.equalsIgnoreCase(f.name)),
-              s"column name '${f.name}' was previously dropped from $dir " +
-                "— re-adding it would resurrect the dropped files' bytes; " +
-                "pick another name (or overwrite to restart the lineage)")
-            require(!ts.fields.exists(tf =>
-              physOf(tf).equalsIgnoreCase(f.name) && tf.name != f.name),
-              s"column name '${f.name}' is the physical name behind a " +
-                s"renamed column of $dir; pick another name")
-          }
-      }
+  private def validateIncoming(at: At, df: DataFrame): Unit =
+    at.meta.schema.foreach { ts =>
+      val byLower = ts.fields.map(_.name.toLowerCase).toSet
+      df.columns.filterNot(c => byLower.contains(c.toLowerCase))
+        .foreach(requireFreshName(ts, at.meta.dropped, at.dir, _))
     }
+
+  /** A column name new to `table` must collide with neither a dropped
+    * column's tombstoned physical (its bytes would resurrect from
+    * pre-drop files) nor a live physical behind a renamed column (its
+    * bytes would cross-feed) — the rule ADD COLUMN, the ingest check
+    * and [[evolveSchema]] share. */
+  private def requireFreshName(table: StructType, dropped: Set[String],
+      dir: String, name: String): Unit = {
+    require(!dropped.exists(_.equalsIgnoreCase(name)),
+      s"column name '$name' was previously dropped from $dir — " +
+        "re-adding it would resurrect the dropped files' bytes; " +
+        "pick another name (or overwrite to restart the lineage)")
+    require(!table.fields.exists(tf =>
+      physOf(tf).equalsIgnoreCase(name) && tf.name != name),
+      s"column name '$name' is the physical name behind a renamed " +
+        s"column of $dir; pick another name")
+  }
 
   private def droppedHeader(dropped: Set[String]): Seq[String] =
     if (dropped.isEmpty) Nil
     else Seq(DroppedPrefix +
       dropped.toSeq.sorted.map(enc).mkString(","))
-
-  /** Physical names dropped at or before version `v` (pinned by every
-    * commit, like the schema — no chain walk needed). */
-  private def droppedOf(fs: FileSystem, root: HPath, v: Int): Set[String] =
-    droppedOfLines(manifestLines(fs, root, v))
 
   private def droppedOfLines(lines: Seq[String]): Set[String] =
     lines.collectFirst {
@@ -1979,70 +1926,51 @@ object Snapshots {
     * name, so both eras read uniformly. Unpinned-DML concurrency: a
     * lost race retries on the new current version. */
   def renameColumn(spark: SparkSession, dir: String, existing: String,
-      newName: String): Int = retryOnRace(s"renameColumn on $dir") {
+      newName: String): Int = {
     require(newName.nonEmpty && !newName.contains("\t"),
       s"invalid column name '$newName'")
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    val f = schema.fields.find(_.name.equalsIgnoreCase(existing))
-      .getOrElse(throw new IllegalArgumentException(
-        s"no column '$existing' in $dir: ${schema.fieldNames.toSeq}"))
-    require(!schema.fields.exists(_.name.equalsIgnoreCase(newName)),
-      s"column '$newName' already exists in $dir")
-    val evolved = StructType(schema.fields.map { x =>
-      if (x eq f) withPhysical(x, physOf(x)).copy(name = newName) else x
-    })
-    // a CHECK constraint written against the old logical name would
-    // fail analysis on every later write — refuse with the repair path
-    val cs = constraintsOf(fs, root, v)
-    cs.foreach { case (n, e) =>
-      val probe = spark.createDataFrame(
-        spark.sparkContext.emptyRDD[Row], evolved)
-      val resolves = try { probe.filter(expr(e)).queryExecution.analyzed; true }
-      catch { case NonFatal(_) => false }
-      require(resolves,
-        s"cannot rename column '$existing' of $dir: CHECK constraint " +
-          s"'$n' ($e) references it — drop the constraint first (and " +
-          "re-add it against the new name)")
+    alterMeta(spark, dir, "rename-column") { at =>
+      val f = fieldOf(at, existing)
+      require(!at.schema.fields.exists(_.name.equalsIgnoreCase(newName)),
+        s"column '$newName' already exists in $dir")
+      val evolved = StructType(at.schema.fields.map { x =>
+        if (x eq f) withPhysical(x, physOf(x)).copy(name = newName) else x
+      })
+      // a CHECK constraint or generation expression written against the
+      // old logical name would fail on every later write (renaming the
+      // GENERATED column itself is fine — the expression travels with
+      // the field and cannot self-refer)
+      val what = s"cannot rename column '$existing' of $dir"
+      requireConstraintsResolve(spark, evolved, at.meta.constraints, what)
+      requireGeneratedResolve(spark, evolved, what)
+      // declarations follow the rename: `stats.columns`/`cluster.columns`
+      // naming the old logical name would silently go stale (a stale
+      // declaration collects no stats for the key it exists to protect)
+      val ps0 = Seq("stats.columns", "cluster.columns")
+        .foldLeft(at.meta.props) { (acc, k) =>
+          acc.get(k) match {
+            case Some(csv) => acc + (k -> csv.split(",").map(_.trim)
+              .filter(_.nonEmpty)
+              .map(n => if (n.equalsIgnoreCase(f.name)) newName else n)
+              .mkString(","))
+            case None => acc
+          }
+        }
+      // name-keyed per-column properties follow the rename too: an
+      // identity high-water mark left behind would make the next INSERT
+      // restart from START and collide with every id already handed
+      // out; an orphaned column comment would resurface on a future
+      // column that reuses the name
+      val ps = Seq(identityMarkKey(f) -> s"identity.mark.$newName",
+          s"column.comment.${f.name}" -> s"column.comment.$newName")
+        .foldLeft(ps0) { case (acc, (oldK, newK)) =>
+          acc.get(oldK) match {
+            case Some(value) => acc - oldK + (newK -> value)
+            case None => acc
+          }
+        }
+      at.meta.copy(schema = Some(evolved), props = ps)
     }
-    // likewise a generation expression: it re-evaluates on every
-    // write, so a dangling base-column reference would break every
-    // later INSERT (renaming the GENERATED column itself is fine —
-    // the expression travels with the field and cannot self-refer)
-    requireGeneratedResolve(spark, evolved,
-      s"cannot rename column '$existing' of $dir")
-    // declarations follow the rename: `stats.columns`/`cluster.columns`
-    // naming the old logical name would silently go stale (a stale
-    // declaration collects no stats for the key it exists to protect)
-    val ps0 = Seq("stats.columns", "cluster.columns")
-      .foldLeft(propsOf(fs, root, v)) { (acc, k) =>
-        acc.get(k) match {
-          case Some(csv) => acc + (k -> csv.split(",").map(_.trim)
-            .filter(_.nonEmpty)
-            .map(n => if (n.equalsIgnoreCase(f.name)) newName else n)
-            .mkString(","))
-          case None => acc
-        }
-      }
-    // name-keyed per-column properties follow the rename too: an
-    // identity high-water mark left behind would make the next INSERT
-    // restart from START and collide with every id already handed
-    // out; an orphaned column comment would resurface on a future
-    // column that reuses the name
-    val ps = Seq(identityMarkKey(f) -> s"identity.mark.$newName",
-        s"column.comment.${f.name}" -> s"column.comment.$newName")
-      .foldLeft(ps0) { case (acc, (oldK, newK)) =>
-        acc.get(oldK) match {
-          case Some(value) => acc - oldK + (newK -> value)
-          case None => acc
-        }
-      }
-    metadataCommit(fs, root, spark, dir, v, evolved, droppedOf(fs, root, v),
-      bloomConfigOf(fs, root, v), cs, ps,
-      op = "rename-column")
   }
 
   /** DROP COLUMN — a metadata-only commit: the field leaves the pinned
@@ -2051,41 +1979,21 @@ object Snapshots {
     * and its physical name is tombstoned so no later append can
     * reintroduce the name over the stale bytes. */
   def dropColumn(spark: SparkSession, dir: String, name: String): Int =
-    retryOnRace(s"dropColumn on $dir") {
-      val (fs, root) = fsFor(spark, dir)
-      val v = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(s"no table under $dir"))
-      val schema = schemaOf(fs, root, v)
-        .getOrElse(allNullable(read(spark, dir, v).schema))
-      val f = schema.fields.find(_.name.equalsIgnoreCase(name))
-        .getOrElse(throw new IllegalArgumentException(
-          s"no column '$name' in $dir: ${schema.fieldNames.toSeq}"))
-      require(schema.fields.length > 1,
+    alterMeta(spark, dir, "drop-column") { at =>
+      val f = fieldOf(at, name)
+      require(at.schema.fields.length > 1,
         s"cannot drop the only column of $dir")
-      val evolved = StructType(schema.fields.filterNot(_ eq f))
-      // a CHECK constraint referencing the dropped column would fail
-      // analysis on every later write — refuse with the repair path
-      // (probed by resolving each expression against the evolved shape)
-      val cs = constraintsOf(fs, root, v)
-      cs.foreach { case (n, e) =>
-        val probe = spark.createDataFrame(
-          spark.sparkContext.emptyRDD[Row], evolved)
-        val resolves = try { probe.filter(expr(e)).queryExecution.analyzed; true }
-        catch { case NonFatal(_) => false }
-        require(resolves,
-          s"cannot drop column '$name' of $dir: CHECK constraint '$n' " +
-            s"($e) references it — drop the constraint first")
-      }
-      // a surviving generated column whose expression references the
-      // dropped column would fail on every later write (dropping the
-      // GENERATED column itself is fine — its expression leaves with
-      // it, generatedOf(evolved) no longer sees it)
-      requireGeneratedResolve(spark, evolved,
-        s"cannot drop column '$name' of $dir")
+      val evolved = StructType(at.schema.fields.filterNot(_ eq f))
+      // a CHECK constraint or a surviving generated column referencing
+      // the dropped column would fail on every later write (dropping the
+      // GENERATED column itself is fine — its expression leaves with it)
+      val what = s"cannot drop column '$name' of $dir"
+      requireConstraintsResolve(spark, evolved, at.meta.constraints, what)
+      requireGeneratedResolve(spark, evolved, what)
       // a declared stats/cluster key cannot silently vanish: the
       // declaration exists to guarantee that key's stats, so dropping
       // the column refuses until the property stops naming it
-      val ps0 = propsOf(fs, root, v)
+      val ps0 = at.meta.props
       Seq("stats.columns", "cluster.columns").foreach { k =>
         ps0.get(k).foreach { csv =>
           require(!csv.split(",").map(_.trim)
@@ -2097,15 +2005,13 @@ object Snapshots {
       }
       // a dropped column takes its name-keyed properties with it — a
       // surviving identity mark or comment would resurface on a
-      // future column reusing the name
-      val ps = ps0 - identityMarkKey(f) - s"column.comment.${f.name}"
-      // the dropped column also leaves the bloom config, if indexed
-      val cfg = bloomConfigOf(fs, root, v)
-        .map(c => c.copy(cols = c.cols.filterNot(_ == physOf(f))))
-        .filter(_.cols.nonEmpty)
-      metadataCommit(fs, root, spark, dir, v, evolved,
-        droppedOf(fs, root, v) + physOf(f), cfg, cs, ps,
-        op = "drop-column")
+      // future column reusing the name — and leaves the bloom config
+      at.meta.copy(schema = Some(evolved),
+        dropped = at.meta.dropped + physOf(f),
+        bloom = at.meta.bloom
+          .map(c => c.copy(cols = c.cols.filterNot(_ == physOf(f))))
+          .filter(_.cols.nonEmpty),
+        props = ps0 - identityMarkKey(f) - s"column.comment.${f.name}")
     }
 
   /** ADD COLUMN — a metadata-only commit: the new version pins the
@@ -2137,74 +2043,58 @@ object Snapshots {
     * arbitrary draw and `current_timestamp()` one instant, both
     * surprising, so they refuse. */
   def addColumn(spark: SparkSession, dir: String, name: String,
-      dataType: DataType, defaultSql: Option[String]): Int =
-    retryOnRace(s"addColumn on $dir") {
+      dataType: DataType, defaultSql: Option[String]): Int = {
     require(name.nonEmpty && !name.contains("\t"),
       s"invalid column name '$name'")
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    require(!schema.fields.exists(_.name.equalsIgnoreCase(name)),
-      s"column '$name' already exists in $dir")
-    val dropped = droppedOf(fs, root, v)
-    require(!dropped.exists(_.equalsIgnoreCase(name)),
-      s"column name '$name' was previously dropped from $dir — " +
-        "re-adding it would resurrect the dropped files' bytes; " +
-        "pick another name (or overwrite to restart the lineage)")
-    require(!schema.fields.exists(tf =>
-      physOf(tf).equalsIgnoreCase(name) && tf.name != name),
-      s"column name '$name' is the physical name behind a renamed " +
-        s"column of $dir; pick another name")
-    val md = defaultSql match {
-      case None => Metadata.empty
-      case Some(d) =>
-        // analyze + evaluate ONCE against a dummy frame: the
-        // expression must fold to one deterministic constant — that
-        // constant is what every pre-evolution row will read forever
-        val (pe, eval) =
-          analyzedDefault(spark, s"ADD COLUMN $name DEFAULT", d, dataType)
-        // a CONSTANT is an expression whose every LEAF is a literal:
-        // this refuses rand() (nondeterministic) AND the
-        // context-dependent leaves foldable does not — current_
-        // timestamp()/current_date()/current_database() fold to one
-        // DDL-instant value while CURRENT_DEFAULT would re-evaluate
-        // per INSERT, splitting the column's meaning in two
-        val nonLiteralLeaf = pe.collectFirst {
-          case e if e.children.isEmpty &&
-            !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions
-              .Literal] => e
-        }
-        require(pe.deterministic && pe.foldable && nonLiteralLeaf.isEmpty,
-          s"ADD COLUMN $name DEFAULT ($d) must be a deterministic " +
-            "constant over literals — nondeterministic, row-dependent " +
-            "or evaluation-time values (current_timestamp, ...) would " +
-            "freeze one arbitrary evaluation for pre-existing rows" +
-            nonLiteralLeaf.fold("")(l => s" (offending: ${l.sql})"))
-        val value = eval()
-        // a non-NULL spelling that FOLDS to null (ANSI-off cast of a
-        // malformed literal) would silently pin NULL where the user
-        // wrote a value — refuse unless they asked for NULL
-        require(value != null || d.trim.equalsIgnoreCase("null"),
-          s"ADD COLUMN $name DEFAULT ($d) evaluates to NULL as " +
-            s"${dataType.sql} — spell DEFAULT NULL if that is intended")
-        val literalSql = org.apache.spark.sql.catalyst.expressions
-          .Literal.create(value, dataType).sql
-        // the two keys Spark's machinery reads: EXISTS_DEFAULT fills
-        // the column for files that PREDATE it (scan-side, pinned
-        // literal); CURRENT_DEFAULT fills INSERTs that omit it
-        new MetadataBuilder()
-          .putString("EXISTS_DEFAULT", literalSql)
-          .putString("CURRENT_DEFAULT", d.trim)
-          .build()
+    alterMeta(spark, dir, "add-column") { at =>
+      require(!at.schema.fields.exists(_.name.equalsIgnoreCase(name)),
+        s"column '$name' already exists in $dir")
+      requireFreshName(at.schema, at.meta.dropped, dir, name)
+      val md = defaultSql match {
+        case None => Metadata.empty
+        case Some(d) =>
+          // analyze + evaluate ONCE against a dummy frame: the
+          // expression must fold to one deterministic constant — that
+          // constant is what every pre-evolution row will read forever
+          val (pe, eval) =
+            analyzedDefault(spark, s"ADD COLUMN $name DEFAULT", d, dataType)
+          // a CONSTANT is an expression whose every LEAF is a literal:
+          // this refuses rand() (nondeterministic) AND the
+          // context-dependent leaves foldable does not — current_
+          // timestamp()/current_date()/current_database() fold to one
+          // DDL-instant value while CURRENT_DEFAULT would re-evaluate
+          // per INSERT, splitting the column's meaning in two
+          val nonLiteralLeaf = pe.collectFirst {
+            case e if e.children.isEmpty &&
+              !e.isInstanceOf[org.apache.spark.sql.catalyst.expressions
+                .Literal] => e
+          }
+          require(pe.deterministic && pe.foldable && nonLiteralLeaf.isEmpty,
+            s"ADD COLUMN $name DEFAULT ($d) must be a deterministic " +
+              "constant over literals — nondeterministic, row-dependent " +
+              "or evaluation-time values (current_timestamp, ...) would " +
+              "freeze one arbitrary evaluation for pre-existing rows" +
+              nonLiteralLeaf.fold("")(l => s" (offending: ${l.sql})"))
+          val value = eval()
+          // a non-NULL spelling that FOLDS to null (ANSI-off cast of a
+          // malformed literal) would silently pin NULL where the user
+          // wrote a value — refuse unless they asked for NULL
+          require(value != null || d.trim.equalsIgnoreCase("null"),
+            s"ADD COLUMN $name DEFAULT ($d) evaluates to NULL as " +
+              s"${dataType.sql} — spell DEFAULT NULL if that is intended")
+          val literalSql = org.apache.spark.sql.catalyst.expressions
+            .Literal.create(value, dataType).sql
+          // the two keys Spark's machinery reads: EXISTS_DEFAULT fills
+          // the column for files that PREDATE it (scan-side, pinned
+          // literal); CURRENT_DEFAULT fills INSERTs that omit it
+          new MetadataBuilder()
+            .putString("EXISTS_DEFAULT", literalSql)
+            .putString("CURRENT_DEFAULT", d.trim)
+            .build()
+      }
+      at.meta.copy(schema = Some(allNullable(StructType(at.schema.fields :+
+        StructField(name, dataType, nullable = true, metadata = md)))))
     }
-    val evolved = allNullable(StructType(
-      schema.fields :+
-        StructField(name, dataType, nullable = true, metadata = md)))
-    metadataCommit(fs, root, spark, dir, v, evolved, dropped,
-      bloomConfigOf(fs, root, v), constraintsOf(fs, root, v),
-      propsOf(fs, root, v), op = "add-column")
   }
 
   /** Analyze default-expression `d` cast to `dataType`: the UNALIASED
@@ -2255,49 +2145,37 @@ object Snapshots {
     * `EXISTS_DEFAULT`-or-NULL, not as `CURRENT_DEFAULT`. */
   def setColumnDefault(spark: SparkSession, dir: String, name: String,
       defaultSql: Option[String]): Int =
-    retryOnRace(s"setColumnDefault on $dir") {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    val idx = schema.fields.indexWhere(_.name.equalsIgnoreCase(name))
-    require(idx >= 0,
-      s"no column '$name' in $dir: ${schema.fieldNames.toSeq}")
-    val f = schema.fields(idx)
-    require(org.apache.spark.sql.graft.GraftSparkBridge
-        .generationExpression(f).isEmpty,
-      s"column '${f.name}' of $dir is GENERATED ALWAYS AS — a " +
-        "generated column computes its value and cannot carry a " +
-        "DEFAULT (Spark refuses the combination at CREATE, too)")
-    require(org.apache.spark.sql.graft.GraftSparkBridge
-        .identityInfo(f).isEmpty,
-      s"column '${f.name}' of $dir is an IDENTITY column — its values " +
-        "are system-assigned and cannot carry a DEFAULT")
-    val md = defaultSql match {
-      case Some(d) =>
-        val (pe, eval) = analyzedDefault(spark,
-          s"ALTER COLUMN $name SET DEFAULT", d, f.dataType)
-        require(pe.deterministic && pe.foldable,
-          s"ALTER COLUMN $name SET DEFAULT ($d) must be a " +
-            "deterministic constant expression — a nondeterministic " +
-            "default would make INSERT results irreproducible")
-        eval() // proves it evaluates; NULL folds are the caller's call
-        new MetadataBuilder().withMetadata(f.metadata)
-          .putString("CURRENT_DEFAULT", d.trim).build()
-      case None =>
-        require(f.metadata.contains("CURRENT_DEFAULT"),
-          s"column '$name' of $dir has no DEFAULT to drop")
-        new MetadataBuilder().withMetadata(f.metadata)
-          .remove("CURRENT_DEFAULT").build()
+    alterMeta(spark, dir, "set-default") { at =>
+      val f = fieldOf(at, name)
+      require(org.apache.spark.sql.graft.GraftSparkBridge
+          .generationExpression(f).isEmpty,
+        s"column '${f.name}' of $dir is GENERATED ALWAYS AS — a " +
+          "generated column computes its value and cannot carry a " +
+          "DEFAULT (Spark refuses the combination at CREATE, too)")
+      require(org.apache.spark.sql.graft.GraftSparkBridge
+          .identityInfo(f).isEmpty,
+        s"column '${f.name}' of $dir is an IDENTITY column — its values " +
+          "are system-assigned and cannot carry a DEFAULT")
+      val md = defaultSql match {
+        case Some(d) =>
+          val (pe, eval) = analyzedDefault(spark,
+            s"ALTER COLUMN $name SET DEFAULT", d, f.dataType)
+          require(pe.deterministic && pe.foldable,
+            s"ALTER COLUMN $name SET DEFAULT ($d) must be a " +
+              "deterministic constant expression — a nondeterministic " +
+              "default would make INSERT results irreproducible")
+          eval() // proves it evaluates; NULL folds are the caller's call
+          new MetadataBuilder().withMetadata(f.metadata)
+            .putString("CURRENT_DEFAULT", d.trim).build()
+        case None =>
+          require(f.metadata.contains("CURRENT_DEFAULT"),
+            s"column '$name' of $dir has no DEFAULT to drop")
+          new MetadataBuilder().withMetadata(f.metadata)
+            .remove("CURRENT_DEFAULT").build()
+      }
+      at.meta.copy(schema = Some(StructType(at.schema.fields.map(x =>
+        if (x eq f) f.copy(metadata = md) else x))))
     }
-    val evolved = StructType(schema.fields.updated(idx,
-      f.copy(metadata = md)))
-    metadataCommit(fs, root, spark, dir, v, evolved,
-      droppedOf(fs, root, v), bloomConfigOf(fs, root, v),
-      constraintsOf(fs, root, v), propsOf(fs, root, v),
-      op = "set-default")
-  }
 
   /** Value-preserving widenings the parquet reader performs natively
     * when the read schema is wider than a file's physical type
@@ -2334,15 +2212,10 @@ object Snapshots {
     * CHANGES need a rewrite — CREATE OR REPLACE). Widening to the
     * current type is an idempotent no-op. */
   def widenColumn(spark: SparkSession, dir: String, name: String,
-      newType: DataType): Int = retryOnRace(s"widenColumn on $dir") {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
-    val f = schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
-      throw new IllegalArgumentException(
-        s"no column '$name' in $dir: ${schema.fieldNames.toSeq}"))
+      newType: DataType): Int = dmlOn(spark, dir, -1, "alter") { at =>
+    import at.{fs, root, v}
+    val schema = at.schema
+    val f = fieldOf(at, name)
     // generated columns pin their type to the expression's (validated
     // at CREATE); widening the column OR a base column its expression
     // reads would silently change what future writes compute versus
@@ -2365,8 +2238,8 @@ object Snapshots {
     }
     // copy keeps field metadata — the physical-name mapping of a
     // renamed column must survive its widening
-    def evolved = StructType(schema.fields.map(x =>
-      if (x.name == f.name) x.copy(dataType = newType) else x))
+    val evolved = at.meta.copy(schema = Some(StructType(schema.fields.map(x =>
+      if (x eq f) x.copy(dataType = newType) else x))))
     if (f.dataType == newType) v
     else if (f.dataType == FloatType && newType == DoubleType &&
         readManifest(fs, root, v).nonEmpty) {
@@ -2427,18 +2300,9 @@ object Snapshots {
           val p = l.split('\t'); p.length >= 4 && p(3) == encPhys
         }
       }
-      val next = v + 1
-      val won = casManifest(fs, root, next, files,
-        schemaHeader(evolved) +: (droppedHeader(droppedOf(fs, root, v)) ++
-          bloomHeader(bloomConfigOf(fs, root, v)) ++
-          constraintHeader(constraintsOf(fs, root, v)) ++
-          propsHeader(propsOf(fs, root, v)) ++ opHeader("widen-column") ++
-          dvLines(dvFor(fs, root, v), files.toSet) ++
-          carried ++ newLines ++ zeroLines))
-      if (!won)
-        throw new java.util.ConcurrentModificationException(
-          s"DDL on $dir@v$v lost the commit race")
-      next
+      commitOn(at, "widen-column", evolved, Some(Staged(files,
+        dvLines(dvFor(fs, root, v), files.toSet) ++ carried ++ newLines ++
+          zeroLines, schema)), removed = None)
     } else {
       require(Widenings.get(f.dataType).exists(_.contains(newType)) ||
           (f.dataType == FloatType && newType == DoubleType),
@@ -2449,26 +2313,8 @@ object Snapshots {
           s"${f.dataType.sql} and ${newType.sql} is neither — other " +
           "type changes rewrite data: use CREATE OR REPLACE TABLE " +
           "... AS SELECT with casts")
-      metadataCommit(fs, root, spark, dir, v, evolved,
-        droppedOf(fs, root, v), bloomConfigOf(fs, root, v),
-        constraintsOf(fs, root, v), propsOf(fs, root, v),
-        op = "widen-column")
+      commitOn(at, "widen-column", evolved)
     }
-  }
-
-  /** Commit a schema/tombstone change with the base's exact file list —
-    * pure DDL, a delta with no adds/removes when the chain allows. */
-  private def metadataCommit(fs: FileSystem, root: HPath,
-      spark: SparkSession, dir: String, base: Int, schema: StructType,
-      dropped: Set[String], bloom: Option[BloomConfig],
-      cs: Map[String, String], props: Map[String, String],
-      op: String): Int = {
-    if (!casChange(fs, root, base, schema, droppedHeader(dropped) ++
-        bloomHeader(bloom) ++ constraintHeader(cs) ++ propsHeader(props) ++
-        opHeader(op)))
-      throw new java.util.ConcurrentModificationException(
-        s"DDL on $dir@v$base lost the commit race")
-    base + 1
   }
 
   /** The schema a version's manifest pins (absent for manifests written
@@ -2519,15 +2365,7 @@ object Snapshots {
               s"column '${tf.name}' of $dir was renamed while this batch " +
                 s"staged (staged physical '${physOf(f)}', table physical " +
                 s"'${physOf(tf)}') — re-run the write")
-        case None =>
-          require(!dropped.exists(_.equalsIgnoreCase(f.name)),
-            s"column name '${f.name}' was previously dropped from $dir — " +
-              "re-adding it would resurrect the dropped files' bytes; " +
-              "pick another name (or overwrite to restart the lineage)")
-          require(!table.fields.exists(tf =>
-            physOf(tf).equalsIgnoreCase(f.name) && tf.name != f.name),
-            s"column name '${f.name}' is the physical name behind a " +
-              s"renamed column of $dir; pick another name")
+        case None => requireFreshName(table, dropped, dir, f.name)
       }
     }
     val added = incoming.fields
@@ -2935,7 +2773,7 @@ object Snapshots {
           "update-light", persist = true)(_.filter(isTrue(pred))) {
         _.map { matched =>
           val updated = assign(cols, assigned, lit(true))(matched)
-          enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, updated)
+          enforceConstraints(at, updated)
           updated
         }
       }
@@ -2961,8 +2799,7 @@ object Snapshots {
   private def stage(df: DataFrame, fs: FileSystem, root: HPath,
       phys: Map[String, String] = Map.empty,
       bloomCfg: Option[BloomConfig] = None,
-      declared: Option[(Seq[String], Seq[String])] = None,
-      declaredAt: Int = -1): Staged = {
+      declared: Option[(Seq[String], Seq[String])] = None): Staged = {
     val renamed = df.columns.filter(c => phys.getOrElse(c, c) != c)
     val out =
       if (renamed.isEmpty) df
@@ -2976,7 +2813,7 @@ object Snapshots {
       if (p == f.name) stripPhysical(f) else withPhysical(stripPhysical(f), p)
     })
     finalizeStaged(df.sparkSession, fs, root, rel, logical, bloomCfg,
-      phys, declared, declaredAt)
+      phys, declared)
   }
 
   /** Turn an already-written commit dir into a [[Staged]]: list its
@@ -2989,8 +2826,7 @@ object Snapshots {
       root: HPath, rel: String, logical: StructType,
       bloomCfg: Option[BloomConfig],
       phys: Map[String, String] = Map.empty,
-      declared: Option[(Seq[String], Seq[String])] = None,
-      declaredAt: Int = -1): Staged = {
+      declared: Option[(Seq[String], Seq[String])] = None): Staged = {
     val dir = new HPath(root, rel)
     val listed = fs.listStatus(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -3003,16 +2839,14 @@ object Snapshots {
     // declared stats overrides: `stats.columns` / `cluster.columns`
     // carry LOGICAL names — translate through this frame's column
     // mapping to the staged files' physical spelling; bloom cols are
-    // stored physical already. CREATE/REPLACE paths pass the incoming
-    // statement's declarations explicitly (no version exists to read
-    // them from yet). The mapping lookup is CASE-INSENSITIVE, like
-    // every other name resolution here — a declared 'ID' must find
-    // the mapping recorded under 'id'. Callers that pinned a base
-    // version pass it as `declaredAt` (one manifest read); only
-    // version-unaware paths pay the directory listing.
-    val (declOnly, declCluster) = declared.getOrElse(
-      if (declaredAt >= 0) declaredOf(propsOf(fs, root, declaredAt))
-      else declaredStatsProps(fs, root))
+    // stored physical already. Callers pass the declarations of the
+    // base they commit on (CREATE/REPLACE: the incoming statement's);
+    // only version-unaware paths pay the directory listing. The
+    // mapping lookup is CASE-INSENSITIVE, like every other name
+    // resolution here — a declared 'ID' must find the mapping
+    // recorded under 'id'.
+    val (declOnly, declCluster) =
+      declared.getOrElse(declaredStatsProps(fs, root))
     val physLower = phys.map { case (k, v) => k.toLowerCase -> v }
     def toPhys(n: String): String =
       physLower.getOrElse(n.toLowerCase, n)
@@ -3495,32 +3329,24 @@ object Snapshots {
       // caller-supplied per-attempt guard against the ACTUAL base —
       // the internal CAS retry would otherwise absorb a racing commit
       // the caller's preconditions no longer cover ([[copyInto]]'s
-      // dedup ledger); a throw here escapes to the caller's retry
+      // dedup ledger, the exactly-once writer tag); a throw here
+      // escapes to the caller
       preAttempt(base)
-      // ONE manifest parse per attempt feeds constraints, dropped set,
-      // bloom config, base properties and the pinned schema below —
-      // five helper calls used to re-read the same immutable manifest
-      // (five GETs per commit on an object store)
-      val baseLines =
-        if (carryBase && base.nonEmpty)
-          manifestLines(fs, root, base.get)
-        else Nil
+      // ONE manifest parse per attempt feeds every check and header
+      // below (an append carries the base's metadata; a first commit or
+      // an overwrite starts a fresh lineage that carries none)
+      val carried = base.filter(_ => carryBase)
+      val meta = carried.fold(Meta())(metaAt(fs, root, _))
       // CHECK constraints pinned at the ACTUAL commit base: a
       // constraint that landed after this batch was validated means
       // the validation no longer covers the commit — loud failure, the
       // caller re-runs (same discipline as the rename-mid-commit check)
-      val cs = constraintsOfLines(baseLines)
-      if ((cs.toSet -- validated.toSet).nonEmpty)
+      val unvalidated = meta.constraints.toSet -- validated.toSet
+      if (unvalidated.nonEmpty)
         throw new java.util.ConcurrentModificationException(
           s"CHECK constraints on $dir changed while this batch staged " +
-            s"(unvalidated: ${(cs.toSet -- validated.toSet).map(_._1)
-              .toSeq.sorted.mkString(",")}) — re-run the write")
-      // pin the committed schema: an append evolves the base's pinned
-      // schema additively (conflicts throw before anything commits); an
-      // overwrite replaces it with the staged frame's own
-      val dropped = droppedOfLines(baseLines)
-      val bloomCfg = bloomConfigOfLines(baseLines)
-      val baseProps = propsOfLines(baseLines)
+            s"(unvalidated: ${unvalidated.map(_._1).toSeq.sorted
+              .mkString(",")}) — re-run the write")
       // identity-mark OCC: the values this batch assigned derive from
       // the marks read at assignment time — if the ACTUAL commit
       // base's marks moved (a concurrent writer assigned ids), this
@@ -3529,37 +3355,31 @@ object Snapshots {
       // CAS losses that did NOT move the marks stay inside this loop
       // (the staged files remain valid).
       propsExpect.foreach { case (k, exp) =>
-        if (baseProps.get(k) != exp)
+        if (meta.props.get(k) != exp)
           throw new java.util.ConcurrentModificationException(
             s"identity mark '$k' on $dir advanced while this batch " +
-              s"staged (expected $exp, found ${baseProps.get(k)}) — " +
+              s"staged (expected $exp, found ${meta.props.get(k)}) — " +
               "re-run the write")
       }
-      val props = baseProps ++ propsDelta
-      val pinned =
-        if (!carryBase || base.isEmpty) allNullable(staged.schema)
-        else evolveSchema(
-          schemaOfLines(baseLines)
-            .getOrElse(allNullable(read(spark, dir, base.get).schema)),
-          staged.schema, dir, dropped)
+      // an EXPLICIT propsDelta lands on a fresh lineage too
+      // ([[replicate]]'s first sync records its mark here)
+      val lines = meta.withProps(propsDelta).header ++ hdr
       val next = base.getOrElse(0) + 1
-      val committed =
-        if (carryBase && base.nonEmpty)
-          // an append on the base: O(batch) metadata as a delta, or
-          // the depth-bound checkpoint ([[casChange]])
-          casChange(fs, root, base.get, pinned,
-            droppedHeader(dropped) ++ bloomHeader(bloomCfg) ++
-              constraintHeader(cs) ++ propsHeader(props) ++ hdr,
+      val committed = carried match {
+        // an append on the base: the base's pinned schema evolves
+        // additively (conflicts throw before anything commits), and the
+        // metadata is O(batch) as a delta, or the depth-bound checkpoint
+        case Some(b) =>
+          casChange(fs, root, b, evolveSchema(meta.schema
+            .getOrElse(allNullable(read(spark, dir, b).schema)),
+            staged.schema, dir, meta.dropped), lines,
             added = staged.files, addedStats = staged.stats)
-        else {
-          // first commit / overwrite: full manifest of the staged
-          // files; a fresh lineage has no tombstones and carries no
-          // base metadata — but an EXPLICIT propsDelta still lands
-          // ([[replicate]]'s first sync records its mark here)
+        // first commit / overwrite: full manifest of the staged files
+        case None =>
           casManifest(fs, root, next, staged.files,
-            schemaHeader(pinned) +:
-              (propsHeader(propsDelta) ++ hdr ++ staged.stats))
-        }
+            schemaHeader(allNullable(staged.schema)) +:
+              (lines ++ staged.stats))
+      }
       if (committed) return next
       attempts += 1 // lost the race: re-read the winner's state and retry
     }
@@ -3587,33 +3407,10 @@ object Snapshots {
   def createTable(spark: SparkSession, dir: String, schema: StructType,
       properties: Map[String, String] = Map.empty,
       checkConstraints: Map[String, String] = Map.empty): Int = {
-    require(schema.fields.nonEmpty, s"CREATE TABLE $dir needs columns")
     require(currentVersion(spark, dir).isEmpty,
       s"already a snapshot table under $dir")
-    checkConstraints.keys.foreach(n => require(n.matches("[A-Za-z0-9._-]+"),
-      s"constraint name must be [A-Za-z0-9._-]+, got '$n'"))
-    Seq("stats.columns", "cluster.columns").foreach(k =>
-      properties.get(k).foreach(validateDeclaredStatCols(k, _, schema, dir)))
-    val (fs, root) = fsFor(spark, dir)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
-    checkConstraints.foreach { case (n, e) =>
-      try empty.filter(expr(e)).queryExecution.analyzed
-      catch {
-        case NonFatal(t) => throw new IllegalArgumentException(
-          s"CHECK constraint '$n' ($e) does not resolve against the " +
-            s"schema of $dir: ${t.getMessage}")
-      }
-    }
-    val staged = stage(empty, fs, root,
-      declared = Some(declaredOf(properties)))
-    val won = casManifest(fs, root, 1, staged.files,
-      schemaHeader(allNullable(schema)) +:
-        (constraintHeader(checkConstraints) ++ propsHeader(properties) ++
-          opHeader("create-table") ++ staged.stats))
-    if (!won) throw new java.util.ConcurrentModificationException(
-      s"CREATE TABLE at $dir lost the commit race")
-    1
+    commitReplaceTable(spark, dir, schema, properties, checkConstraints,
+      staged = Nil, mustNotExist = true)
   }
 
   /** A staged-but-uncommitted data set for the two-phase
@@ -3660,22 +3457,14 @@ object Snapshots {
       checkConstraints: Map[String, String],
       staged: Seq[StagedReplace],
       mustExist: Boolean = false, mustNotExist: Boolean = false): Int = {
-    require(schema.fields.nonEmpty, s"REPLACE TABLE $dir needs columns")
+    require(schema.fields.nonEmpty, s"CREATE/REPLACE TABLE $dir needs columns")
     checkConstraints.keys.foreach(n => require(n.matches("[A-Za-z0-9._-]+"),
       s"constraint name must be [A-Za-z0-9._-]+, got '$n'"))
     Seq("stats.columns", "cluster.columns").foreach(k =>
       properties.get(k).foreach(validateDeclaredStatCols(k, _, schema, dir)))
+    requireConstraintsResolve(spark, schema, checkConstraints,
+      s"CREATE/REPLACE TABLE $dir")
     val (fs, root) = fsFor(spark, dir)
-    val empty = spark.createDataFrame(
-      spark.sparkContext.parallelize(Seq.empty[Row], 1), schema)
-    checkConstraints.foreach { case (n, e) =>
-      try empty.filter(expr(e)).queryExecution.analyzed
-      catch {
-        case NonFatal(t) => throw new IllegalArgumentException(
-          s"CHECK constraint '$n' ($e) does not resolve against the " +
-            s"schema of $dir: ${t.getMessage}")
-      }
-    }
     var files = staged.flatMap(_.files)
     var stats = staged.flatMap(_.stats)
     if (checkConstraints.nonEmpty && files.nonEmpty) {
@@ -3688,8 +3477,10 @@ object Snapshots {
             s"row: ${bad.head} — nothing was committed")
       }
     }
-    if (files.isEmpty) { // plain REPLACE TABLE (no AS SELECT)
-      val s = stage(empty, fs, root)
+    if (files.isEmpty) { // plain CREATE / REPLACE TABLE (no AS SELECT)
+      val s = stage(spark.createDataFrame(
+        spark.sparkContext.parallelize(Seq.empty[Row], 1), schema), fs, root,
+        declared = Some(declaredOf(properties)))
       files = s.files; stats = s.stats
     }
     val base = currentVersion(spark, dir)
@@ -3701,11 +3492,11 @@ object Snapshots {
     val next = base.getOrElse(0) + 1
     val won = casManifest(fs, root, next, files,
       schemaHeader(allNullable(schema)) +:
-        (constraintHeader(checkConstraints) ++ propsHeader(properties) ++
+        (Meta(constraints = checkConstraints, props = properties).header ++
           opHeader(if (base.isEmpty) "create-table" else "replace-table") ++
           stats))
     if (!won) throw new java.util.ConcurrentModificationException(
-      s"REPLACE TABLE at $dir@v${base.getOrElse(0)} lost the commit " +
+      s"CREATE/REPLACE TABLE at $dir@v${base.getOrElse(0)} lost the commit " +
         s"race — a writer landed v$next first; re-run the statement " +
         "against the current table")
     next
@@ -3732,13 +3523,9 @@ object Snapshots {
     * deletes via the diff path. Idempotent under the race retry
     * (truncating a truncated table is a no-op in content). */
   def truncate(spark: SparkSession, dir: String): Int =
-    retryOnRace("truncate of " + dir) {
-      val (fs, root) = fsFor(spark, dir)
-      val base = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"nothing to truncate in $dir"))
-      commitContentReplace(spark, dir, fs, root, base,
-        read(spark, dir, base).limit(0), op = "truncate")
+    dmlOn(spark, dir, -1, "truncate") { at =>
+      commitOn(at, "truncate", at.meta,
+        Some(stageAt(at, at.table.limit(0))), removed = None)
     }
 
   /** The DATA-verb overwrite — what SQL `INSERT OVERWRITE` means on a
@@ -3754,103 +3541,67 @@ object Snapshots {
     * OVERWRITE — that would be a silently-dropped data contract.
     * Columns must match the table's (any order); refuses on an empty
     * directory (no contract to keep — the first load is a create or
-    * an append). */
+    * an append). Identity values keep assigning from the mark —
+    * replaced rows' ids are NOT recycled (a restart from START would
+    * collide with ids the old content leaked downstream); the CAS on
+    * the assignment's own base guards the mark. */
   def overwriteData(spark: SparkSession, dir: String,
       df: DataFrame): Int =
-    retryOnRace("overwriteData of " + dir) {
-      val (fs, root) = fsFor(spark, dir)
-      val base = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(
-          s"no snapshot table under $dir — the first load is a plain " +
-            "append/overwrite"))
-      val table = read(spark, dir, base)
-      require(table.columns.sorted.sameElements(df.columns.sorted),
+    dmlOn(spark, dir, -1, "overwrite") { at =>
+      val cols = at.table.columns
+      require(cols.sorted.sameElements(df.columns.sorted),
         s"INSERT OVERWRITE columns ${df.columns.toSeq} != table " +
-          s"columns ${table.columns.toSeq}")
-      val gen = materializeGeneratedAt(fs, root, Some(base),
-        df.select(table.columns.map(df.col).toSeq: _*))
-      // identity values keep assigning from the mark across an
-      // overwrite — replaced rows' ids are NOT recycled (the
-      // standard identity contract; a restart-from-START would
-      // collide with ids the old content leaked downstream)
-      val ia = schemaOf(fs, root, base)
-          .filter(s => identityOf(s).nonEmpty) match {
-        case Some(s) =>
-          assignIdentity(spark, s, propsOf(fs, root, base), gen)
-        case None => IdentityAssignment(gen, Map.empty, Map.empty, None)
+          s"columns ${cols.toSeq}")
+      shaped(Some(at), df.select(cols.map(df.col).toSeq: _*)) { (rows, ia) =>
+        commitOn(at, "overwrite", at.meta.withProps(ia.delta),
+          Some(stageAt(at, rows)), removed = None)
       }
-      try {
-        val aligned = clusterForWrite(spark, dir, ia.frame)
-        enforceConstraintsAt(spark, dir, fs, root, base, aligned)
-        commitContentReplace(spark, dir, fs, root, base, aligned,
-          op = "overwrite", propsExpect = ia.expect,
-          propsDelta = ia.delta)
-      } finally ia.pin.foreach(_.unpersist())
     }
-
-  /** Shared commit of the content-replacing DATA verbs ([[truncate]],
-    * [[overwriteData]]): stage `frame` under the base's physical map
-    * and bloom config, then CAS a FULL manifest of exactly the staged
-    * files with every carried header (pinned schema, tombstones,
-    * bloom config, constraints/properties via carriedMeta) — one
-    * spelling to keep the carried-metadata list in, so the next
-    * header kind cannot be forgotten by one verb. */
-  private def commitContentReplace(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, base: Int, frame: DataFrame,
-      op: String, propsExpect: Map[String, Option[String]] = Map.empty,
-      propsDelta: Map[String, String] = Map.empty): Int = {
-    val staged = stageAt(fs, root, base, frame)
-    val pinnedSchema =
-      schemaOf(fs, root, base).getOrElse(allNullable(staged.schema))
-    val next = base + 1
-    // identity marks were read at `base`, and this commit CASes at
-    // base+1 — a racing writer fails the CAS, so the CAS itself is
-    // the mark-drift guard here (unlike commitLoop's internal retry);
-    // the expect check still validates the caller pinned correctly
-    propsExpect.foreach { case (k, exp) =>
-      require(propsOf(fs, root, base).get(k) == exp,
-        s"identity mark '$k' on $dir does not match the $op's " +
-          "assignment base — the caller pinned the wrong version")
-    }
-    val won = casManifest(fs, root, next, staged.files,
-      schemaHeader(pinnedSchema) +:
-        (carriedMeta(fs, root, base, propsDelta) ++
-          opHeader(op) ++ staged.stats))
-    if (!won) throw new java.util.ConcurrentModificationException(
-      s"$op of $dir@v$base lost the commit race")
-    next
-  }
 
   /** Append `df` as a new version (previous files + the new ones).
     * Returns the committed version. Concurrent appends both land, in
     * some order — appends commute, so the retry is lossless. */
   def append(df: DataFrame, dir: String): Int =
-    retryOnRace("append to " + dir) {
+    dml(df.sparkSession, dir, -1, "append")(ingest(_, dir, df, "append")._1)
+
+  /** The ingest verbs' one path ([[append]], [[idempotentAppend]],
+    * [[copyInto]]) on base `at` (None: no table yet): [[shaped]] for the
+    * base, staged under its column mapping and bloom config, then
+    * committed by [[commitLoop]] with `header` — whose CAS retry stays
+    * inside while the base's constraints and identity marks hold, and
+    * otherwise aborts to the caller's [[dml]] retry (re-shape on the new
+    * base). `preAttempt` runs against every base a CAS is tried on.
+    * Returns the committed version and what was staged. */
+  private def ingest(at: Option[At], dir: String, df: DataFrame, op: String,
+      header: Seq[String] = Nil,
+      preAttempt: Option[Int] => Unit = _ => ()): (Int, Staged) = {
     val spark = df.sparkSession
     val (fs, root) = fsFor(spark, dir)
-    val cur = currentVersion(spark, dir)
-    val schemaPinned = cur.flatMap(schemaOf(fs, root, _))
-    // generated columns materialize BEFORE clustering: the generated
-    // column may itself be the declared cluster key
-    val gen = schemaPinned.map(materializeGenerated(_, df)).getOrElse(df)
-    // identity values assign from the current mark; the commit aborts
-    // back HERE (re-read, re-assign) if the mark moved underneath
-    val ia = schemaPinned.filter(s => identityOf(s).nonEmpty) match {
-      case Some(s) =>
-        assignIdentity(spark, s, propsOf(fs, root, cur.get), gen)
-      case None => IdentityAssignment(gen, Map.empty, Map.empty, None)
+    shaped(at, df) { (rows, ia) =>
+      val staged = stageOn(fs, root, at.fold(Meta())(_.meta), rows)
+      (commitLoop(fs, root, spark, dir, staged, carryBase = true, op,
+        header, at.fold(Map.empty[String, String])(_.meta.constraints),
+        ia.expect, ia.delta, preAttempt), staged)
     }
+  }
+
+  /** An ingest frame made ready for base `at` (None: no table yet):
+    * generated columns materialize, then identity values assign from
+    * the base's marks — BEFORE clustering, since either may be the
+    * declared cluster key — then [[clusterForWrite]] lays it out; the
+    * result must pass the base's name rules ([[validateIncoming]]) and
+    * CHECK constraints. `write` gets it with the identity assignment
+    * whose marks the commit must still observe; the assignment's pin is
+    * released after. */
+  private def shaped[A](at: Option[At], df: DataFrame)(
+      write: (DataFrame, IdentityAssignment) => A): A = {
+    val meta = at.fold(Meta())(_.meta)
+    val ia = assignIdentity(df.sparkSession, meta,
+      meta.schema.fold(df)(materializeGenerated(_, df)))
     try {
-      val shaped = clusterForWrite(spark, dir, ia.frame)
-      validateIncoming(spark, dir, shaped)
-      val validated = cur
-        .map(v => enforceConstraintsAt(spark, dir, fs, root, v, shaped))
-        .getOrElse(Map.empty[String, String])
-      commitLoop(fs, root, spark, dir,
-        stage(shaped, fs, root, physMapFor(spark, dir, shaped),
-          bloomConfigAt(spark, dir)), carryBase = true, op = "append",
-        validated = validated,
-        propsExpect = ia.expect, propsDelta = ia.delta)
+      val rows = clusterForWrite(declaredOf(meta.props)._2, ia.frame)
+      at.foreach { a => validateIncoming(a, rows); enforceConstraints(a, rows) }
+      write(rows, ia)
     } finally ia.pin.foreach(_.unpersist())
   }
 
@@ -3874,11 +3625,10 @@ object Snapshots {
     * re-evaluates the input (the standard Spark range-exchange cost —
     * Iceberg's range distribution pays the same); opt out per session
     * with `spark.graft.write.clusterOnWrite=false`. */
-  private def clusterForWrite(spark: SparkSession, dir: String,
+  private def clusterForWrite(declared: Seq[String],
       df: DataFrame): DataFrame = {
-    if (!java.lang.Boolean.parseBoolean(spark.conf
+    if (!java.lang.Boolean.parseBoolean(df.sparkSession.conf
         .get("spark.graft.write.clusterOnWrite", "true"))) return df
-    val declared = clusterColumns(spark, dir)
     if (declared.isEmpty) return df
     // canonicalize to the FRAME's spelling: the declaration and the
     // ingest frame may disagree on case, and Layout resolves schema
@@ -3914,75 +3664,72 @@ object Snapshots {
   /** Replace the table content with `df` as a new version. Last writer
     * wins among concurrent overwrites (the documented semantic);
     * earlier versions remain readable until [[vacuum]]. */
-  def overwrite(df: DataFrame, dir: String): Int = {
+  def overwrite(df: DataFrame, dir: String): Int =
+    overwrite(df, dir, Nil, _ => ())
+
+  /** [[overwrite]] with the manifest `header` lines and a `guard` run
+    * against the current version before staging and against every base
+    * a CAS is tried on. */
+  private def overwrite(df: DataFrame, dir: String, header: Seq[String],
+      guard: Option[Int] => Unit): Int = {
     val spark = df.sparkSession
     val (fs, root) = fsFor(spark, dir)
+    guard(currentVersion(spark, dir))
     commitLoop(fs, root, spark, dir, stage(df, fs, root),
-      carryBase = false, op = "overwrite")
+      carryBase = false, op = "overwrite", header = header,
+      preAttempt = guard)
   }
 
   private val CommitTag = """#commit writer=([A-Za-z0-9._-]+) batch=(-?\d+)""".r
 
-  /** The newest batch id `writerId` has committed, scanning manifests
-    * newest-first (a streaming writer's tag is almost always in the
-    * last few — the scan is O(distance), not O(history)). */
-  private def lastBatch(fs: FileSystem, root: HPath, spark: SparkSession,
-      dir: String, writerId: String): Option[Long] =
-    versions(spark, dir).reverseIterator.flatMap { v =>
-      manifestLines(fs, root, v).collectFirst {
-        case CommitTag(w, b) if w == writerId => b.toLong
-      }
-    }.nextOption()
+  /** Raised by an exactly-once guard once its batch is found committed;
+    * [[exactlyOnce]] turns it into the verb's `None`. */
+  private object Replayed extends scala.util.control.ControlThrowable
 
-  /** Exactly-once append for Structured Streaming's foreachBatch: the
-    * (writerId, batchId) pair is recorded IN the committed manifest, so
-    * a replayed batch — task retry, driver restart, checkpoint
-    * recovery — is recognized and skipped (returns None) instead of
-    * double-appending. Correct because foreachBatch batch ids are
-    * monotonically increasing per query and a single query runs its
-    * batches serially: a batch id at-or-below the writer's recorded
-    * high-water mark has already landed. Distinct writerIds compose —
-    * several streams may append to one table through the normal CAS
-    * retry. A crash between the manifest CAS and anything else needs no
-    * repair: the manifest IS the record. */
-  def idempotentAppend(df: DataFrame, dir: String, writerId: String,
-      batchId: Long): Option[Int] = {
+  /** Run an exactly-once verb for Structured Streaming's foreachBatch:
+    * `body` gets the (writerId, batchId) tag's manifest header — the
+    * record of the batch IN its commit — and the guard it must run
+    * against every base it would commit on. The guard finds the
+    * writer's newest tag at or below that base and ends the verb with
+    * None when it covers `batchId`: foreachBatch batch ids grow
+    * monotonically per query and one query runs its batches serially,
+    * so such a batch has already landed — a replay (task retry, driver
+    * restart, checkpoint recovery) or the batch racing itself. Versions
+    * already scanned are not read again, so a retry reads only the
+    * commits that landed since (O(distance), not O(history)). A crash
+    * between the manifest CAS and anything else needs no repair: the
+    * manifest IS the record. */
+  private def exactlyOnce[A](spark: SparkSession, dir: String,
+      writerId: String, batchId: Long)(
+      body: (Seq[String], Option[Int] => Unit) => A): Option[A] = {
     require(writerId.matches("[A-Za-z0-9._-]+"),
       s"writerId must be [A-Za-z0-9._-]+, got '$writerId'")
-    val spark = df.sparkSession
     val (fs, root) = fsFor(spark, dir)
-    if (lastBatch(fs, root, spark, dir, writerId).exists(_ >= batchId))
-      return None // replay of an already-committed batch
-    retryOnRace(s"idempotentAppend($writerId) to " + dir) {
-      // replays can also surface inside the retry: a racing commit of
-      // THIS batch (another attempt of the same writer) must not land
-      // twice
-      if (lastBatch(fs, root, spark, dir, writerId).exists(_ >= batchId))
-        return None
-      val cur = currentVersion(spark, dir)
-      val schemaPinned = cur.flatMap(schemaOf(fs, root, _))
-      val gen = schemaPinned.map(materializeGenerated(_, df)).getOrElse(df)
-      val ia = schemaPinned.filter(s => identityOf(s).nonEmpty) match {
-        case Some(s) =>
-          assignIdentity(spark, s, propsOf(fs, root, cur.get), gen)
-        case None => IdentityAssignment(gen, Map.empty, Map.empty, None)
-      }
-      try {
-        val shaped = clusterForWrite(spark, dir, ia.frame)
-        validateIncoming(spark, dir, shaped)
-        val validated = cur
-          .map(v => enforceConstraintsAt(spark, dir, fs, root, v, shaped))
-          .getOrElse(Map.empty[String, String])
-        val staged = stage(shaped, fs, root,
-          physMapFor(spark, dir, shaped), bloomConfigAt(spark, dir))
-        Some(commitLoop(fs, root, spark, dir, staged, carryBase = true,
-          op = "append",
-          header = Seq(s"#commit writer=$writerId batch=$batchId"),
-          validated = validated,
-          propsExpect = ia.expect, propsDelta = ia.delta))
-      } finally ia.pin.foreach(_.unpersist())
+    var scanned = 0
+    def guard(base: Option[Int]): Unit = base.filter(_ > scanned).foreach { b =>
+      val newest = versionsFs(fs, root).filter(v => v > scanned && v <= b)
+        .reverseIterator.flatMap(v => manifestLines(fs, root, v).collectFirst {
+          case CommitTag(w, n) if w == writerId => n.toLong
+        }).nextOption()
+      if (newest.exists(_ >= batchId)) throw Replayed
+      scanned = b
     }
+    try Some(body(Seq(s"#commit writer=$writerId batch=$batchId"), guard))
+    catch { case Replayed => None }
   }
+
+  /** Exactly-once append ([[exactlyOnce]]): a replayed (writerId,
+    * batchId) is skipped (None) instead of double-appending. Distinct
+    * writerIds compose — several streams may append to one table
+    * through the normal CAS retry. */
+  def idempotentAppend(df: DataFrame, dir: String, writerId: String,
+      batchId: Long): Option[Int] =
+    exactlyOnce(df.sparkSession, dir, writerId, batchId) { (tag, guard) =>
+      dml(df.sparkSession, dir, -1, "append") { at =>
+        guard(at.map(_.v))
+        ingest(at, dir, df, "append", tag, guard)._1
+      }
+    }
 
   /** Exactly-once OVERWRITE, same replay discipline as
     * [[idempotentAppend]]: a replayed (writerId, batchId) is skipped.
@@ -3990,36 +3737,26 @@ object Snapshots {
     * a dimension snapshot) advanced once per batch — each version is
     * the full new state, and a batch retry must not re-advance it. */
   def idempotentOverwrite(df: DataFrame, dir: String, writerId: String,
-      batchId: Long): Option[Int] = {
-    require(writerId.matches("[A-Za-z0-9._-]+"),
-      s"writerId must be [A-Za-z0-9._-]+, got '$writerId'")
-    val spark = df.sparkSession
-    val (fs, root) = fsFor(spark, dir)
-    if (lastBatch(fs, root, spark, dir, writerId).exists(_ >= batchId))
-      return None
-    val staged = stage(df, fs, root)
-    Some(commitLoop(fs, root, spark, dir, staged, carryBase = false,
-      op = "overwrite",
-      header = Seq(s"#commit writer=$writerId batch=$batchId")))
-  }
+      batchId: Long): Option[Int] =
+    exactlyOnce(df.sparkSession, dir, writerId, batchId)(
+      overwrite(df, dir, _, _))
 
-  /** Rewrite the CURRENT version's content into `numFiles` files and
-    * commit it as a new version — the small-file compaction a
-    * streaming writer needs after thousands of tiny per-batch commits.
-    * Content-identical by construction (one read, one write, no
-    * transform); concurrent appends that land between the read and the
-    * commit are NOT lost — the commit is an overwrite CAS on top of
-    * whatever base wins, so on a lost race the compactor re-reads and
-    * retries via the normal loop... except content changed, so instead
-    * of retrying blindly it throws: compact during active writes is a
-    * coordination decision the caller must make. Old versions (and
+  /** Rewrite a version's content into `numFiles` files and commit it
+    * as the next version — the small-file compaction a streaming writer
+    * needs after thousands of tiny per-batch commits. Content-identical
+    * by construction (one read, one write, no transform). The base is
+    * `expectedVersion` when given, else the current version; the commit
+    * lands only directly on that base. A writer that commits first
+    * makes it throw ConcurrentModificationException, and it is NOT
+    * retried: a rewrite of the old base on top of the racing commit
+    * would drop that writer's rows, so compacting during active writes
+    * is a coordination decision the caller makes. Old versions (and
     * their small files) stay readable until [[vacuum]]. */
   def compact(spark: SparkSession, dir: String, numFiles: Int,
       expectedVersion: Int = -1): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    maybeReanalyze(spark, dir,
-      rewriteCurrent(spark, dir, _.coalesce(numFiles), expectedVersion,
-        op = "compact"))
+    maybeReanalyze(spark, dir, rewriteCurrent(spark, dir,
+      _.table.coalesce(numFiles), expectedVersion, op = "compact"))
   }
 
   /** OPTIMIZE ... ZORDER BY for snapshot tables: the current version
@@ -4031,10 +3768,9 @@ object Snapshots {
   def optimize(spark: SparkSession, dir: String, cols: Seq[String],
       numFiles: Int, bits: Int = 8, expectedVersion: Int = -1): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    maybeReanalyze(spark, dir,
-      rewriteCurrent(spark, dir,
-        Layout.cluster(_, cols, bits, numFiles), expectedVersion,
-        op = "optimize"))
+    maybeReanalyze(spark, dir, rewriteCurrent(spark, dir,
+      at => Layout.cluster(at.table, clusterKeys(at, cols), bits, numFiles),
+      expectedVersion, op = "optimize"))
   }
 
   /** Incremental OPTIMIZE — re-cluster ONLY the files `pred` may touch
@@ -4052,23 +3788,13 @@ object Snapshots {
       cols: Seq[String], numFiles: Int, bits: Int = 8,
       expectedVersion: Int = -1): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"nothing to optimize in $dir"))
-    val (mayMatch, _) = pruneFiles(spark, dir, pred, base)
-    if (mayMatch.isEmpty) return base
-    val staged = stageAt(fs, root, base, Layout.cluster(
-      readFilesAs(spark, fs, root, base, mayMatch), cols, bits, numFiles))
-    if (!casChange(fs, root, base,
-        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, base) ++ opHeader("optimize-where"),
-        mayMatch, staged.files, staged.stats))
-      throw new java.util.ConcurrentModificationException(
-        s"optimizeWhere on $dir@v$base lost the commit race — a writer " +
-          s"landed v${base + 1} first; re-run maintenance when the table " +
-          "is quiescent")
-    maybeReanalyze(spark, dir, base + 1)
+    maintenance(spark, dir, expectedVersion, "optimize") { at =>
+      val (mayMatch, _) = pruneFiles(spark, dir, pred, at.v)
+      if (mayMatch.isEmpty) at.v
+      else maybeReanalyze(spark, dir, commitOn(at, "optimize-where", at.meta,
+        Some(stageAt(at, Layout.cluster(at.scan(mayMatch),
+          clusterKeys(at, cols), bits, numFiles))), Some(mayMatch)))
+    }
   }
 
   /** Manifest property naming the version whose files are already
@@ -4101,49 +3827,37 @@ object Snapshots {
       expectedVersion: Int = -1, minFileBytes: Long = 0L): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     require(cols.nonEmpty, "optimizeIncremental needs cluster columns")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"nothing to optimize in $dir"))
-    val props = propsOf(fs, root, base)
-    val clusteredSet: Option[Set[String]] =
-      props.get(OptimizeThroughProp).flatMap(_.toIntOption)
-        .filter(t => t >= 1 && t <= base)
-        .flatMap { t =>
-          try Some(readManifest(fs, root, t).toSet)
-          catch { case NonFatal(_) => None } // marker vacuumed: full
-        }
-    val cur = readManifest(fs, root, base)
-    val (untouched0, fresh0) = clusteredSet match {
-      case Some(old) => cur.partition(old.contains)
-      case None => (Seq.empty[String], cur) // first run: full layout
-    }
-    // runt consolidation: clustered files below minFileBytes join
-    // the rewrite so tiny debt sweeps cannot accrete mini-layouts
-    val fresh =
-      if (minFileBytes <= 0L) fresh0
-      else {
-        val sz = sizesFor(fs, root, base)
-        fresh0 ++ untouched0.filter(f =>
-          sz.getOrElse(f, Long.MaxValue) < minFileBytes)
+    maintenance(spark, dir, expectedVersion, "optimize") { at =>
+      import at.{fs, root, v}
+      val clusteredSet: Option[Set[String]] =
+        at.meta.props.get(OptimizeThroughProp).flatMap(_.toIntOption)
+          .filter(t => t >= 1 && t <= v)
+          .flatMap { t =>
+            try Some(readManifest(fs, root, t).toSet)
+            catch { case NonFatal(_) => None } // marker vacuumed: full
+          }
+      val cur = readManifest(fs, root, v)
+      val (untouched0, fresh0) = clusteredSet match {
+        case Some(old) => cur.partition(old.contains)
+        case None => (Seq.empty[String], cur) // first run: full layout
       }
-    if (fresh.isEmpty) return base // debt-free: no commit
-    val staged = stageAt(fs, root, base, Layout.cluster(
-      readFilesAs(spark, fs, root, base, fresh), cols, bits, numFiles))
-    val next = base + 1
-    // the marker advances to THIS commit: its file set (carried old
-    // layout + the files just clustered) is clustered by definition
-    if (!casChange(fs, root, base,
-        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, base,
-          Map(OptimizeThroughProp -> next.toString)) ++
-          opHeader("optimize-incremental"),
-        fresh, staged.files, staged.stats))
-      throw new java.util.ConcurrentModificationException(
-        s"optimizeIncremental on $dir@v$base lost the commit race — " +
-          "re-run maintenance when the table is quiescent")
-    maybeReanalyze(spark, dir, next)
+      // runt consolidation: clustered files below minFileBytes join
+      // the rewrite so tiny debt sweeps cannot accrete mini-layouts
+      val fresh =
+        if (minFileBytes <= 0L) fresh0
+        else {
+          val sz = sizesFor(fs, root, v)
+          fresh0 ++ untouched0.filter(f =>
+            sz.getOrElse(f, Long.MaxValue) < minFileBytes)
+        }
+      if (fresh.isEmpty) v // debt-free: no commit
+      // the marker advances to THIS commit: its file set (carried old
+      // layout + the files just clustered) is clustered by definition
+      else maybeReanalyze(spark, dir, commitOn(at, "optimize-incremental",
+        at.meta.withProps(Map(OptimizeThroughProp -> (v + 1).toString)),
+        Some(stageAt(at, Layout.cluster(at.scan(fresh),
+          clusterKeys(at, cols), bits, numFiles))), Some(fresh)))
+    }
   }
 
   // ---- bucketed layout commits --------------------------------------
@@ -4201,42 +3915,30 @@ object Snapshots {
       buckets: Int, sortCols: Seq[String] = Nil,
       filesPerBucket: Int = 1, expectedVersion: Int = -1): Int = {
     require(keys.nonEmpty, "bucketing needs at least one key column")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"nothing to bucket in $dir"))
-    val baseSchema = schemaOf(fs, root, base)
-    require(baseSchema.forall(_.fields.forall(f => physOf(f) == f.name)),
-      s"bucketed layout on a column-mapped table is unsupported for $dir " +
-        "— restart the lineage (overwrite) before bucketing")
-    val df = read(spark, dir, base)
-    keys.foreach(k => require(df.columns.contains(k),
-      s"bucket key '$k' is not a column: ${df.columns.toSeq}"))
-    val commitId = java.util.UUID.randomUUID.toString
-    val rel = s"$DataDir/$commitId"
-    val tmpName = "graft_snap_bkt_" + commitId.replace("-", "_")
-    try {
-      Bucketing.writeBucketed(df, tmpName, new HPath(root, rel).toString,
-        buckets, keys, sortCols, filesPerBucket)
-    } finally {
-      // the catalog entry is write scaffolding; the manifest owns the
-      // files, and bucketedTable registers its own entry at read time
-      spark.sql(s"DROP TABLE IF EXISTS $tmpName")
+    maintenance(spark, dir, expectedVersion, "bucket") { at =>
+      import at.{fs, root, table}
+      require(at.meta.schema.forall(_.fields.forall(f => physOf(f) == f.name)),
+        s"bucketed layout on a column-mapped table is unsupported for $dir " +
+          "— restart the lineage (overwrite) before bucketing")
+      keys.foreach(k => require(table.columns.contains(k),
+        s"bucket key '$k' is not a column: ${table.columns.toSeq}"))
+      val commitId = java.util.UUID.randomUUID.toString
+      val rel = s"$DataDir/$commitId"
+      val tmpName = "graft_snap_bkt_" + commitId.replace("-", "_")
+      try {
+        Bucketing.writeBucketed(table, tmpName, new HPath(root, rel).toString,
+          buckets, keys, sortCols, filesPerBucket)
+      } finally {
+        // the catalog entry is write scaffolding; the manifest owns the
+        // files, and bucketedTable registers its own entry at read time
+        spark.sql(s"DROP TABLE IF EXISTS $tmpName")
+      }
+      val staged = finalizeStaged(spark, fs, root, rel, at.schema,
+        at.meta.bloom, declared = Some(declaredOf(at.meta.props)))
+      maybeReanalyze(spark, dir, commitOn(at, "optimize-bucketed", at.meta,
+        Some(staged), removed = None,
+        extra = bucketSpecHeader(BucketSpec(buckets, keys, sortCols, rel))))
     }
-    val staged = finalizeStaged(spark, fs, root, rel,
-      baseSchema.getOrElse(allNullable(df.schema)),
-      bloomConfigOf(fs, root, base))
-    val next = base + 1
-    if (!casManifest(fs, root, next, staged.files,
-      schemaHeader(baseSchema.getOrElse(allNullable(staged.schema))) +:
-        (carriedMeta(fs, root, base) ++
-          bucketSpecHeader(BucketSpec(buckets, keys, sortCols, rel)) ++
-          opHeader("optimize-bucketed") ++ staged.stats)))
-      throw new java.util.ConcurrentModificationException(
-        s"bucketed rewrite of $dir@v$base lost the commit race — a writer " +
-          s"landed v$next first; re-run maintenance when the table is " +
-          "quiescent")
-    maybeReanalyze(spark, dir, next)
   }
 
   /** The CURRENT version as a catalog-registered bucketed table named
@@ -4275,36 +3977,18 @@ object Snapshots {
     spark.table(name)
   }
 
-  /** Shared content-identical-rewrite commit: stage `transform(current)`
-    * and CAS it as the next version. `expectedVersion` is the
-    * optimistic-concurrency token: a caller that inspected version N
-    * rewrites exactly N or fails — without it, the freshly-resolved
-    * current version plays the same role against commits landing after
-    * resolution. On a lost race the rewrite throws rather than retrying:
-    * retrying would silently drop the racing writer's rows. */
+  /** Shared content-identical-rewrite commit: stage `transform(base)`
+    * and land it as a full manifest of exactly the staged files — the
+    * base's pinned schema (column mapping included: the new files write
+    * the SAME physical names, so cross-version reads like diff stay
+    * era-uniform) and metadata carry. [[maintenance]] entry: no retry,
+    * a racing commit throws. */
   private def rewriteCurrent(spark: SparkSession, dir: String,
-      transform: DataFrame => DataFrame, expectedVersion: Int,
-      op: String): Int = {
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"nothing to rewrite in $dir"))
-    // a content-identical rewrite keeps the base's pinned schema
-    // (column mapping included — the new files write the SAME physical
-    // names, so cross-version reads like diff stay era-uniform) and
-    // carries its tombstones
-    val staged = stageAt(fs, root, base, transform(read(spark, dir, base)))
-    val next = base + 1
-    if (!casManifest(fs, root, next, staged.files,
-      schemaHeader(schemaOf(fs, root, base)
-        .getOrElse(allNullable(staged.schema))) +:
-        (carriedMeta(fs, root, base) ++
-          opHeader(op) ++ staged.stats)))
-      throw new java.util.ConcurrentModificationException(
-        s"rewrite of $dir@v$base lost the commit race — a writer landed " +
-          s"v$next first; re-run maintenance when the table is quiescent")
-    next
-  }
+      transform: At => DataFrame, expectedVersion: Int, op: String): Int =
+    maintenance(spark, dir, expectedVersion, "rewrite") { at =>
+      commitOn(at, op, at.meta, Some(stageAt(at, transform(at))),
+        removed = None)
+    }
 
   /** File counts of a [[merge]]: how many data files the source's key
     * footprint forced into the rewrite vs how many carried over
@@ -4441,7 +4125,6 @@ object Snapshots {
         // merge — but an explicit propsDelta still lands, metadata-
         // only ([[replicate]]'s mark must advance or the next run
         // re-walks the same versions)
-        val (fs, root) = fsFor(spark, dir)
         if (expectedVersion < 0 && currentVersion(spark, dir).isEmpty) {
           // empty batch into NO table: bootstrap an empty table with
           // the batch's data shape (and the propsDelta — replicate's
@@ -4454,25 +4137,12 @@ object Snapshots {
             createTable(spark, dir, dataSchema, properties = propsDelta),
             0, 0)
         }
-        val v =
-          if (expectedVersion >= 0) expectedVersion
-          else currentVersion(spark, dir).getOrElse(
-            throw new java.util.NoSuchElementException(
-              s"applyChanges: empty batch and no table under $dir"))
-        def markAt(base: Int): Int =
-          metadataCommit(fs, root, spark, dir, base,
-            schemaOf(fs, root, base).getOrElse(
-              allNullable(read(spark, dir, base).schema)),
-            droppedOf(fs, root, base), bloomConfigOf(fs, root, base),
-            constraintsOf(fs, root, base),
-            propsOf(fs, root, base) ++ propsDelta,
-            op = "apply-changes-mark")
-        val committed =
-          if (propsDelta.isEmpty) v
-          else if (expectedVersion >= 0) markAt(expectedVersion)
-          else retryPinned(spark, dir,
-            s"applyChanges mark on $dir")(markAt)
-        return MergeResult(committed, 0, 0)
+        return MergeResult(
+          dmlOn(spark, dir, expectedVersion, "apply changes to") { at =>
+            if (propsDelta.isEmpty) at.v
+            else commitOn(at, "apply-changes-mark",
+              at.meta.withProps(propsDelta))
+          }, 0, 0)
       }
       // a tie at equal (key tuple, sequence, op) would net below by
       // an ARBITRARY row_number pick, and the netted frame is then
@@ -4884,13 +4554,7 @@ object Snapshots {
     if (tip <= from || tip - from > 16) return false
     val range = versionsFs(fs, root).filter(x => x > from && x <= tip)
     if (range.size != tip - from) return false // vacuumed hole mid-range
-    if (schemaOf(fs, root, tip) != schemaOf(fs, root, from)) return false
-    if (droppedOf(fs, root, tip) != droppedOf(fs, root, from)) return false
-    if (bloomConfigOf(fs, root, tip) != bloomConfigOf(fs, root, from))
-      return false
-    if (constraintsOf(fs, root, tip) != constraintsOf(fs, root, from))
-      return false
-    if (propsOf(fs, root, tip) != propsOf(fs, root, from)) return false
+    if (metaAt(fs, root, tip) != metaAt(fs, root, from)) return false
     if (dvFor(fs, root, tip) != dvFor(fs, root, from)) return false
     var prev = readManifest(fs, root, from).toSet
     val added = Seq.newBuilder[String]
@@ -4972,47 +4636,119 @@ object Snapshots {
   private final case class At(spark: SparkSession, dir: String, v: Int,
       unpinned: Boolean) {
     val (fs, root) = fsFor(spark, dir)
+    lazy val meta: Meta = metaAt(fs, root, v)
     lazy val table: DataFrame = read(spark, dir, v)
-    def pinned: Option[StructType] = schemaOf(fs, root, v)
+    def pinned: Option[StructType] = meta.schema
+    /** The pinned schema, else the footer-inferred one (tables written
+      * before schema pinning). */
+    lazy val schema: StructType = pinned.getOrElse(allNullable(table.schema))
     def scan(files: Seq[String]): DataFrame =
       readFilesAs(spark, fs, root, v, files)
   }
 
-  /** The one DML entry: run `body` on the base — the pinned
-    * `expectedVersion`, else the current version (None: nothing
-    * committed yet). Pinned, a lost race throws: the caller pinned a
-    * version and gets told its inspection is stale. Unpinned,
+  /** The one entry of the snapshot writers: run `body` on the base —
+    * the pinned `expectedVersion`, else the current version (None:
+    * nothing committed yet). Pinned, a lost race throws: the caller
+    * pinned a version and gets told its inspection is stale. Unpinned,
     * [[retryOnRace]] re-runs `body` on the new tip — the change is a
     * function of (table, inputs), so re-running it on top of the racing
-    * commit is exactly serializing after it. */
+    * commit is exactly serializing after it. `retry = false` (the
+    * [[maintenance]] verbs) throws unpinned too. */
   private def dml[A](spark: SparkSession, dir: String, expectedVersion: Int,
-      verb: String)(body: Option[At] => A): A = {
+      verb: String, retry: Boolean = true)(body: Option[At] => A): A = {
     def attempt(): A = body(
       (if (expectedVersion >= 0) Some(expectedVersion)
       else currentVersion(spark, dir))
         .map(At(spark, dir, _, unpinned = expectedVersion < 0)))
-    if (expectedVersion >= 0) attempt()
+    if (expectedVersion >= 0 || !retry) attempt()
     else retryOnRace(s"$verb on $dir")(attempt())
   }
 
   /** [[dml]] for the verbs that need a committed base. */
   private def dmlOn[A](spark: SparkSession, dir: String, expectedVersion: Int,
-      verb: String)(body: At => A): A =
-    dml(spark, dir, expectedVersion, verb)(_.map(body).getOrElse(
+      verb: String, retry: Boolean = true)(body: At => A): A =
+    dml(spark, dir, expectedVersion, verb, retry)(_.map(body).getOrElse(
       throw new java.util.NoSuchElementException(s"nothing to $verb in $dir")))
+
+  /** The maintenance entry ([[compact]], the optimize family,
+    * [[foldDeletionVectors]]): [[dmlOn]] WITHOUT retry. A
+    * content-identical rewrite recomputed on a moved base would be
+    * correct, but it is a coordination decision the caller makes —
+    * a lost race surfaces as ConcurrentModificationException. */
+  private def maintenance[A](spark: SparkSession, dir: String,
+      expectedVersion: Int, verb: String)(body: At => A): A =
+    dmlOn(spark, dir, expectedVersion, verb, retry = false)(body)
+
+  /** The metadata-DDL entry: on the current version (a lost race
+    * retries, [[dml]]), `change` derives the new metadata from the
+    * base's ([[At.meta]]) and [[commitOn]] lands it under `op` with
+    * the base's exact file list. */
+  private def alterMeta(spark: SparkSession, dir: String, op: String)(
+      change: At => Meta): Int =
+    dmlOn(spark, dir, -1, "alter")(at => commitOn(at, op, change(at)))
+
+  /** The one commit tail of the non-DML writers: version `at.v + 1` as
+    * `meta` (the base's, changed or not) plus `staged`'s files, and
+    * `extra` lines after the op header. `removed` names the base files
+    * the commit drops — a delta or checkpoint through [[casChange]],
+    * with `newDv` the vectors it (re)writes — or, `None`, every base
+    * file: a FULL manifest of exactly the staged files. No retry: a
+    * lost race throws ConcurrentModificationException, which the
+    * retrying entries ([[dml]]) re-run and [[maintenance]] surfaces. */
+  private def commitOn(at: At, op: String, meta: Meta,
+      staged: Option[Staged] = None, removed: Option[Seq[String]] = Some(Nil),
+      newDv: Map[String, (String, Long)] = Map.empty,
+      extra: Seq[String] = Nil): Int = {
+    import at.{fs, root, v}
+    val schema = meta.schema.getOrElse(at.schema)
+    val header = meta.header ++ opHeader(op) ++ extra
+    val files = staged.fold(Seq.empty[String])(_.files)
+    val stats = staged.fold(Seq.empty[String])(_.stats)
+    val won = removed match {
+      case Some(gone) =>
+        casChange(fs, root, v, schema, header, gone, files, stats, newDv)
+      case None =>
+        casManifest(fs, root, v + 1, files,
+          schemaHeader(schema) +: (header ++ stats))
+    }
+    if (!won) throw new java.util.ConcurrentModificationException(
+      s"$op on ${at.dir}@v$v lost the commit race — a writer landed " +
+        s"v${v + 1} first; re-read and re-run")
+    v + 1
+  }
+
+  /** Column `name` of `at`'s schema, matched case-insensitively. */
+  private def fieldOf(at: At, name: String): StructField =
+    at.schema.fields.find(_.name.equalsIgnoreCase(name)).getOrElse(
+      throw new IllegalArgumentException(
+        s"no column '$name' in ${at.dir}: ${at.schema.fieldNames.toSeq}"))
+
+  /** Clustering keys spelled as in `at`'s schema — [[keyCols]]'s
+    * case-insensitive rule, so a declared `cluster.columns` of "K,V"
+    * clusters a `k`/`v` table like its appends do. */
+  private def clusterKeys(at: At, cols: Seq[String]): Seq[String] =
+    keyCols("cluster", at.schema.fieldNames.toSeq, cols)
 
   /** The matched-row test of every predicate verb: rows where `pred` IS
     * TRUE (SQL DELETE/UPDATE semantics — a NULL predicate never
     * matches). */
   private def isTrue(pred: Column): Column = coalesce(pred, lit(false))
 
-  /** Stage `df` as a commit on version `base`: the base's column
-    * mapping, bloom config and declared stats columns. */
-  private def stageAt(fs: FileSystem, root: HPath, base: Int,
-      df: DataFrame): Staged =
-    stage(df, fs, root, schemaOf(fs, root, base)
-      .map(s => s.fields.map(f => f.name -> physOf(f)).toMap)
-      .getOrElse(Map.empty), bloomConfigOf(fs, root, base), declaredAt = base)
+  /** Stage `df` as a commit on a base with metadata `meta`: the base's
+    * column mapping (matched case-insensitively; columns new to the
+    * table stage under their own name), bloom config and declared
+    * stats columns. */
+  private def stageOn(fs: FileSystem, root: HPath, meta: Meta,
+      df: DataFrame): Staged = {
+    val byLower = meta.schema.fold(Map.empty[String, StructField])(
+      _.fields.map(f => f.name.toLowerCase -> f).toMap)
+    stage(df, fs, root, df.columns.flatMap(c =>
+      byLower.get(c.toLowerCase).map(f => c -> physOf(f))).toMap,
+      meta.bloom, Some(declaredOf(meta.props)))
+  }
+
+  private def stageAt(at: At, df: DataFrame): Staged =
+    stageOn(at.fs, at.root, at.meta, df)
 
   /** Copy-on-write apply: CAS `at` minus `removed` plus `staged` (the
     * touched files' surviving rows and the new ones) through
@@ -5021,18 +4757,22 @@ object Snapshots {
     * carry IMPLICITLY through the base — a narrow change to a
     * million-file table writes O(touched) manifest lines. `schema`
     * overrides the pinned schema (an evolving merge); `delta` lands in
-    * the table properties, `extra` after the op header. */
+    * the table properties, `extra` after the op header; `guard` runs
+    * against every base a CAS is tried on. */
   private def applyCow(at: At, op: String, footprint: Option[Column],
       removed: Seq[String], untouched: Seq[String], staged: Staged,
       schema: Option[StructType] = None,
       delta: Map[String, String] = Map.empty,
-      extra: Seq[String] = Nil): (Int, Int) = {
-    val pinned =
-      schema.getOrElse(at.pinned.getOrElse(allNullable(staged.schema)))
+      extra: Seq[String] = Nil,
+      guard: Option[Int] => Unit = _ => ()): (Int, Int) = {
+    val pinned = schema.getOrElse(at.schema)
+    // a rebase lands only where [[rebaseSafe]] proved the tip's metadata
+    // equal to the base's, so the base's header holds on every attempt
+    val header = at.meta.withProps(delta).header ++ opHeader(op) ++ extra
     val committed = commitWithRebase(at, footprint, op) { b =>
-      casChange(at.fs, at.root, b, pinned,
-        carriedMeta(at.fs, at.root, b, delta) ++ opHeader(op) ++ extra,
-        removed, staged.files, staged.stats)
+      guard(Some(b))
+      casChange(at.fs, at.root, b, pinned, header, removed, staged.files,
+        staged.stats)
     }
     (committed, untouchedAfter(at.fs, at.root, at.v, committed, removed,
       untouched))
@@ -5077,24 +4817,16 @@ object Snapshots {
         s"$what on $dir matches more than $maxPositions table rows — use " +
           s"${what.stripSuffix("Light")} (copy-on-write) for bulk changes")
       val staged = images(matched.filter(_ => hits.nonEmpty))
-        .map(stageAt(fs, root, v, _))
+        .map(stageAt(at, _))
       if (hits.isEmpty && staged.isEmpty) DvApplied(v, 0L, 0, 0, 0)
       else {
         val (dropped, newDv) = foldPositions(fs, root, v, s"$what on $dir",
           hits, mayMatch, staged.flatMap(_.files.headOption)
             .fold(s"$DataDir/${java.util.UUID.randomUUID}")(f =>
               f.take(f.lastIndexOf('/'))))
-        if (!casChange(fs, root, v,
-            at.pinned.getOrElse(allNullable(
-              staged.fold(at.table.schema)(_.schema))),
-            carriedMeta(fs, root, v, delta) ++ opHeader(op) ++ header,
-            dropped, staged.fold(Seq.empty[String])(_.files),
-            staged.fold(Seq.empty[String])(_.stats), newDv))
-          throw new java.util.ConcurrentModificationException(
-            s"$what on $dir@v$v lost the commit race — a writer landed " +
-              s"v${v + 1} first; re-read and re-run")
-        DvApplied(v + 1, hits.length.toLong, dropped.size, newDv.size,
-          staged.fold(0)(_.files.length))
+        DvApplied(commitOn(at, op, at.meta.withProps(delta), staged,
+          Some(dropped), newDv, header), hits.length.toLong, dropped.size,
+          newDv.size, staged.fold(0)(_.files.length))
       }
     } finally if (persist) matched.foreach(_.unpersist(blocking = false))
   }
@@ -5190,7 +4922,7 @@ object Snapshots {
           .filterNot(f => tblLower.contains(f.name.toLowerCase))
           .map(f => source.col(f.name)): _*)
       }
-    val src = pinKeys(materializeGeneratedAt(fs, root, Some(v), aligned))
+    val src = pinKeys(at.pinned.fold(aligned)(materializeGenerated(_, aligned)))
     var pinnedMut: Option[DataFrame] = None
     try {
       at.pinned.foreach(s => refuseNullIdentity(s, src, dir, what))
@@ -5198,7 +4930,7 @@ object Snapshots {
       // in the SAME commit — the next INSERT must not re-issue them
       // (CAS at v+1 guards the advance)
       val idDelta = at.pinned
-        .map(s => identityMarkAdvance(s, propsOf(fs, root, v), src))
+        .map(s => identityMarkAdvance(s, at.meta.props, src))
         .getOrElse(Map.empty[String, String])
       if (!keysProvedUnique) {
         val dup = src.na.drop(canon).groupBy(canon.map(col): _*)
@@ -5208,7 +4940,7 @@ object Snapshots {
           s"merge source has duplicate key tuples on $keys — " +
             "MERGE semantics would be non-deterministic")
       }
-      enforceConstraintsAt(spark, dir, fs, root, v, src)
+      enforceConstraints(at, src)
       // the tombstone side is pinned too: it feeds both the footprint
       // probes and the retiring join
       pinnedMut = dead.map(d => pinKeys(src.select(canon.map(col): _*)
@@ -5254,38 +4986,41 @@ object Snapshots {
       keys: Seq[String], expectedVersion: Int, verb: String,
       header: Seq[String] = Nil, tombstones: Option[DataFrame] = None,
       propsDelta: Map[String, String] = Map.empty,
-      keysProvedUnique: Boolean = false): MergeResult = {
+      keysProvedUnique: Boolean = false,
+      guard: Option[Int] => Unit = _ => ()): MergeResult = {
     require(keys.nonEmpty, "merge needs at least one key column")
-    dml(spark, dir, expectedVersion, verb) {
-      case None =>
-        // empty table: tombstones have nothing to delete, the merge is
-        // the first append
-        val (fs, root) = fsFor(spark, dir)
-        MergeResult(
-          commitLoop(fs, root, spark, dir, stage(source, fs, root),
-            carryBase = true, op = "merge", header = header,
-            propsDelta = propsDelta),
-          rewrittenFiles = 0, untouchedFiles = 0)
-      case Some(at) => classifyMerge(at, source, keys, "merge",
-          evolvable = true, tombstones, keysProvedUnique) { m =>
-        // evolving merges append the NEW columns after the table's
-        // (rewritten table rows read NULL there, like pre-evolution
-        // files do) — exactly evolveSchema's shape
-        val staged = stageAt(at.fs, at.root, at.v,
-          (if (m.mayMatch.isEmpty) at.table.limit(0) else at.scan(m.mayMatch))
-            .join(m.mutKeys, m.keys, "left_anti")
-            .unionByName(m.src, allowMissingColumns = m.evolve))
-        // schema + data land as ONE commit: the staged frame's schema
-        // evolves the base's pinned schema additively
-        val evolved = if (!m.evolve) None else Some(evolveSchema(
-          at.pinned.getOrElse(allNullable(at.table.schema)), staged.schema,
-          dir, droppedOf(at.fs, at.root, at.v)))
-        val (v, carried) = applyCow(at,
-          if (tombstones.isDefined) "merge-mixed" else "merge", m.footprint,
-          m.mayMatch, m.untouched, staged, evolved, m.idDelta ++ propsDelta,
-          dmlKeysHeader(keys) ++ header)
-        MergeResult(v, rewrittenFiles = staged.files.length,
-          untouchedFiles = carried)
+    dml(spark, dir, expectedVersion, verb) { base =>
+      guard(base.map(_.v))
+      base match {
+        case None =>
+          // empty table: tombstones have nothing to delete, the merge is
+          // the first append
+          val (fs, root) = fsFor(spark, dir)
+          MergeResult(
+            commitLoop(fs, root, spark, dir, stage(source, fs, root),
+              carryBase = true, op = "merge", header = header,
+              propsDelta = propsDelta, preAttempt = guard),
+            rewrittenFiles = 0, untouchedFiles = 0)
+        case Some(at) => classifyMerge(at, source, keys, "merge",
+            evolvable = true, tombstones, keysProvedUnique) { m =>
+          // evolving merges append the NEW columns after the table's
+          // (rewritten table rows read NULL there, like pre-evolution
+          // files do) — exactly evolveSchema's shape
+          val staged = stageAt(at,
+            (if (m.mayMatch.isEmpty) at.table.limit(0) else at.scan(m.mayMatch))
+              .join(m.mutKeys, m.keys, "left_anti")
+              .unionByName(m.src, allowMissingColumns = m.evolve))
+          // schema + data land as ONE commit: the staged frame's schema
+          // evolves the base's pinned schema additively
+          val evolved = if (!m.evolve) None else Some(evolveSchema(
+            at.schema, staged.schema, dir, at.meta.dropped))
+          val (v, carried) = applyCow(at,
+            if (tombstones.isDefined) "merge-mixed" else "merge", m.footprint,
+            m.mayMatch, m.untouched, staged, evolved, m.idDelta ++ propsDelta,
+            dmlKeysHeader(keys) ++ header, guard)
+          MergeResult(v, rewrittenFiles = staged.files.length,
+            untouchedFiles = carried)
+        }
       }
     }
   }
@@ -5337,7 +5072,7 @@ object Snapshots {
       if (k.mayMatch.isEmpty) // nothing can match: no commit
         DeleteResult(at.v, 0, 0, k.untouched.length)
       else {
-        val staged = stageAt(at.fs, at.root, at.v,
+        val staged = stageAt(at,
           at.scan(k.mayMatch).join(k.src, k.keys, "left_anti"))
         val (v, carried) = applyCow(at, "merge-delete", k.footprint,
           k.mayMatch, k.untouched, staged)
@@ -5419,7 +5154,7 @@ object Snapshots {
     dmlOn(spark, dir, expectedVersion, "delete") { at =>
       val (mayMatch, untouched, dropWhole, survivors) =
         classifyDelete(at, pred)
-      val staged = stageAt(at.fs, at.root, at.v,
+      val staged = stageAt(at,
         survivors.getOrElse(at.table.limit(0)))
       val (v, carried) = applyCow(at, "delete", Some(pred), mayMatch,
         untouched, staged)
@@ -5511,8 +5246,9 @@ object Snapshots {
       // cannot pass validation with one sample and commit another (and
       // a large backfill is not computed three times over). A failed
       // check deletes the staged files and commits nothing.
-      val stagedLoad = stageAt(fs, root, at.v, materializeGeneratedAt(fs,
-        root, Some(at.v), data.select(table.columns.map(data.col).toSeq: _*)))
+      val load = data.select(table.columns.map(data.col).toSeq: _*)
+      val stagedLoad = stageAt(at,
+        at.pinned.fold(load)(materializeGenerated(_, load)))
       val physToLogical = table.schema.fields
         .map(f => physOf(f) -> f.name).toMap
       val loadBack =
@@ -5539,7 +5275,7 @@ object Snapshots {
         // above, keeping the stage-once discipline.
         at.pinned.foreach(s => refuseNullIdentity(s, loadBack, dir,
           "replaceWhere"))
-        enforceConstraintsAt(spark, dir, fs, root, at.v, loadBack)
+        enforceConstraints(at, loadBack)
       } catch { case NonFatal(t) =>
         stagedLoad.files.map(f => f.take(f.lastIndexOf('/'))).distinct
           .foreach(rel => fs.delete(new HPath(root, rel), true))
@@ -5548,16 +5284,15 @@ object Snapshots {
       // explicit identity values the load introduces push the mark in
       // the SAME commit (usually a no-op — re-loaded rows sit below it)
       val idDelta = at.pinned
-        .map(s => identityMarkAdvance(s, propsOf(fs, root, at.v), loadBack))
+        .map(s => identityMarkAdvance(s, at.meta.props, loadBack))
         .getOrElse(Map.empty[String, String])
       val (mayMatch, untouched, dropWhole, survivors) =
         classifyDelete(at, pred)
-      val staged = survivors.map(stageAt(fs, root, at.v, _)).fold(stagedLoad)(
+      val staged = survivors.map(stageAt(at, _)).fold(stagedLoad)(
         s => Staged(s.files ++ stagedLoad.files, s.stats ++ stagedLoad.stats,
           stagedLoad.schema))
       val (v, carried) = applyCow(at, "replace-where", Some(pred), mayMatch,
-        untouched, staged, Some(at.pinned.getOrElse(allNullable(table.schema))),
-        idDelta)
+        untouched, staged, Some(at.schema), idDelta)
       ReplaceResult(v, stagedFiles = staged.files.length,
         droppedFiles = dropWhole.length, untouchedFiles = carried)
     }
@@ -5591,8 +5326,8 @@ object Snapshots {
         val rows = assign(cols, assigned, isTrue(pred))(at.scan(mayMatch))
         // updated values are NEW data: they must prove the table's CHECK
         // constraints before the commit, exactly like an append's rows
-        enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, rows)
-        val staged = stageAt(at.fs, at.root, at.v, rows)
+        enforceConstraints(at, rows)
+        val staged = stageAt(at, rows)
         val (v, carried) = applyCow(at, "update", Some(pred), mayMatch,
           untouched, staged)
         UpdateResult(v, rewrittenFiles = staged.files.length,
@@ -5639,8 +5374,8 @@ object Snapshots {
         val rows = assign(cols, assigned, col("__upd_mark").isNotNull)(
           at.scan(k.mayMatch).join(k.src.withColumn("__upd_mark", lit(true)),
             k.keys, "left"))
-        enforceConstraintsAt(spark, dir, at.fs, at.root, at.v, rows)
-        val staged = stageAt(at.fs, at.root, at.v, rows)
+        enforceConstraints(at, rows)
+        val staged = stageAt(at, rows)
         val (v, carried) = applyCow(at, "update", k.footprint, k.mayMatch,
           k.untouched, staged)
         UpdateResult(v, rewrittenFiles = staged.files.length,
@@ -5650,7 +5385,8 @@ object Snapshots {
 
   /** Exactly-once [[merge]] for streaming epochs — the upsert analogue
     * of [[idempotentAppend]]: a replayed (writerId, batchId) is
-    * recognized from the manifest tag and skipped (None). Unlike the
+    * recognized from the manifest tag and skipped (None), also when it
+    * lands through a racing call ([[exactlyOnce]]). Unlike the
     * OCC-token batch merge, a lost CAS race here RETRIES against the
     * new current version ([[retryOnRace]]: backoff with jitter, giving
     * up after 20 straight losses): the racing commit is
@@ -5659,15 +5395,11 @@ object Snapshots {
     * source batch is this writer's to apply, in some order, once. */
   def idempotentMerge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], writerId: String,
-      batchId: Long): Option[MergeResult] = {
-    require(writerId.matches("[A-Za-z0-9._-]+"),
-      s"writerId must be [A-Za-z0-9._-]+, got '$writerId'")
-    val (fs, root) = fsFor(spark, dir)
-    if (lastBatch(fs, root, spark, dir, writerId).exists(_ >= batchId))
-      return None
-    Some(mergeCow(spark, dir, source, keys, -1, "idempotentMerge",
-      header = Seq(s"#commit writer=$writerId batch=$batchId")))
-  }
+      batchId: Long): Option[MergeResult] =
+    exactlyOnce(spark, dir, writerId, batchId) { (tag, guard) =>
+      mergeCow(spark, dir, source, keys, -1, "idempotentMerge", header = tag,
+        guard = guard)
+    }
 
   /** RESTORE: make `version`'s content the CURRENT version again, as a
     * new commit — the rollback after a bad write. Purely file-level:
@@ -5688,9 +5420,9 @@ object Snapshots {
     require(missing.isEmpty,
       s"cannot restore $dir to v$version: ${missing.size} of its files " +
         s"were vacuumed (first: ${missing.headOption.getOrElse("")})")
+    val meta = metaAt(fs, root, version)
     val header =
-      schemaOf(fs, root, version).map(schemaHeader).toSeq ++
-        carriedMeta(fs, root, version) ++
+      meta.schema.map(schemaHeader).toSeq ++ meta.header ++
         opHeader("restore") ++
         dvLines(dvFor(fs, root, version), files.toSet) ++
         statsLines(fs, root, version, files.toSet)
@@ -6396,8 +6128,8 @@ object Snapshots {
         case _ => None
       }
     }
-    val header = schemaOf(sfs, sroot, v).map(schemaHeader).toSeq ++
-      carriedMeta(sfs, sroot, v) ++
+    val carried = metaAt(sfs, sroot, v)
+    val header = carried.schema.map(schemaHeader).toSeq ++ carried.header ++
       opHeader("clone") ++ meta
     val (dfs, droot) = fsFor(spark, dstDir)
     if (!casManifest(dfs, droot, 1, files.map(abs), header))
@@ -6426,38 +6158,31 @@ object Snapshots {
       expectedVersion: Int = -1): DvFoldResult = {
     require(maxDeletedFraction > 0 && maxDeletedFraction < 1,
       s"maxDeletedFraction must be in (0, 1), got $maxDeletedFraction")
-    val (fs, root) = fsFor(spark, dir)
-    val base = if (expectedVersion >= 0) expectedVersion
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(s"no table under $dir"))
-    val files = readManifest(fs, root, base)
-    val fileSet = files.toSet
-    val stats = statsFor(fs, root, base)
-    val dv = dvFor(fs, root, base).filter { case (f, (_, n)) =>
-      n > 0 && fileSet.contains(f)
-    }
-    val target = dv.filter { case (f, (_, n)) =>
-      // no recorded row count (pre-stats writer): over-threshold by
-      // definition unknowable — fold it, the safe-and-finite choice
-      stats.get(f).flatMap(_.headOption.map(_._2.rows)) match {
-        case Some(rows) if rows > 0 => n.toDouble / rows > maxDeletedFraction
-        case _ => true
+    maintenance(spark, dir, expectedVersion, "fold") { at =>
+      import at.{fs, root, v}
+      val files = readManifest(fs, root, v)
+      val fileSet = files.toSet
+      val stats = statsFor(fs, root, v)
+      val dv = dvFor(fs, root, v).filter { case (f, (_, n)) =>
+        n > 0 && fileSet.contains(f)
+      }
+      val target = dv.filter { case (f, (_, n)) =>
+        // no recorded row count (pre-stats writer): over-threshold by
+        // definition unknowable — fold it, the safe-and-finite choice
+        stats.get(f).flatMap(_.headOption.map(_._2.rows)) match {
+          case Some(rows) if rows > 0 => n.toDouble / rows > maxDeletedFraction
+          case _ => true
+        }
+      }
+      if (target.isEmpty) DvFoldResult(v, 0, 0, files.size)
+      else {
+        val folded = target.keys.toSeq.sorted
+        // the read applies the vectors — the rewrite IS the fold
+        DvFoldResult(commitOn(at, "dv-fold", at.meta,
+          Some(stageAt(at, at.scan(folded))), Some(folded)), folded.size,
+          target.values.map(_._2).sum, files.size - folded.size)
       }
     }
-    if (target.isEmpty) return DvFoldResult(base, 0, 0, files.size)
-    val folded = target.keys.toSeq.sorted
-    // the read applies the vectors — the rewrite IS the fold
-    val staged = stageAt(fs, root, base,
-      readFilesAs(spark, fs, root, base, folded))
-    if (!casChange(fs, root, base,
-        schemaOf(fs, root, base).getOrElse(allNullable(staged.schema)),
-        carriedMeta(fs, root, base) ++ opHeader("dv-fold"),
-        folded, staged.files, staged.stats))
-      throw new java.util.ConcurrentModificationException(
-        s"foldDeletionVectors on $dir@v$base lost the commit race — " +
-          "re-run maintenance when the table is quiescent")
-    DvFoldResult(base + 1, folded.size, target.values.map(_._2).sum,
-      files.size - folded.size)
   }
 
   /** What one [[maintain]] pass did. */
@@ -6969,7 +6694,7 @@ object Snapshots {
       pattern: String = "",
       schema: Option[StructType] = None,
       force: Boolean = false): CopyIntoResult =
-    retryOnRace(s"copyInto $source -> $dir") {
+    dml(spark, dir, -1, "copyInto") { at =>
       val (fs, root) = fsFor(spark, dir)
       val srcRoot = new HPath(source)
       val sfs = srcRoot.getFileSystem(
@@ -6999,50 +6724,52 @@ object Snapshots {
             seg.startsWith(".") || seg.startsWith("_"))
         }
       }
-      val curV = currentVersion(spark, dir)
+      val curV = at.fold(0)(_.v)
       val already =
         if (force) Set.empty[String]
         else ingestedOf(fs, root, versions(spark, dir))
       val fresh = files.filterNot(f => already.contains(f._1))
         .sortBy(_._1)
-      if (fresh.isEmpty)
-        return CopyIntoResult(curV.getOrElse(0), 0, 0L, files.size)
-      val selfDescribing = Set("parquet", "orc", "avro")
-      val rdr0 = spark.read.format(format).options(options)
-      val rdr = schema match {
-        case Some(s) => rdr0.schema(s)
-        case None if selfDescribing.contains(format.toLowerCase) => rdr0
-        case None => curV.flatMap(schemaOf(fs, root, _)) match {
-          case Some(pinned) =>
-            val computed = (generatedOf(pinned).map(_._1.name) ++
-              identityOf(pinned).map(_._1.name))
-              .map(_.toLowerCase).toSet
-            rdr0.schema(StructType(pinned.fields.toSeq
-              .filterNot(f => computed.contains(f.name.toLowerCase))
-              .map(f => StructField(f.name, f.dataType, nullable = true))))
-          case None => throw new IllegalArgumentException(
-            s"COPY INTO $dir from $format needs a schema: the format " +
-              "is not self-describing and the table does not exist " +
-              "yet — pass schema=... or create the table first")
+      if (fresh.isEmpty) CopyIntoResult(curV, 0, 0L, files.size)
+      else {
+        val selfDescribing = Set("parquet", "orc", "avro")
+        val rdr0 = spark.read.format(format).options(options)
+        val rdr = schema match {
+          case Some(s) => rdr0.schema(s)
+          case None if selfDescribing.contains(format.toLowerCase) => rdr0
+          case None => at.flatMap(_.pinned) match {
+            case Some(pinned) =>
+              val computed = (generatedOf(pinned).map(_._1.name) ++
+                identityOf(pinned).map(_._1.name))
+                .map(_.toLowerCase).toSet
+              rdr0.schema(StructType(pinned.fields.toSeq
+                .filterNot(f => computed.contains(f.name.toLowerCase))
+                .map(f => StructField(f.name, f.dataType, nullable = true))))
+            case None => throw new IllegalArgumentException(
+              s"COPY INTO $dir from $format needs a schema: the format " +
+                "is not self-describing and the table does not exist " +
+                "yet — pass schema=... or create the table first")
+          }
         }
-      }
-      val df = rdr.load(fresh.map(_._1): _*)
-      val batch = fresh.map(_._1).toSet
-      val schemaPinned = curV.flatMap(schemaOf(fs, root, _))
-      val gen = schemaPinned.map(materializeGenerated(_, df)).getOrElse(df)
-      val ia = schemaPinned.filter(s => identityOf(s).nonEmpty) match {
-        case Some(s) =>
-          assignIdentity(spark, s, propsOf(fs, root, curV.get), gen)
-        case None => IdentityAssignment(gen, Map.empty, Map.empty, None)
-      }
-      try {
-        val shaped = clusterForWrite(spark, dir, ia.frame)
-        validateIncoming(spark, dir, shaped)
-        val validated = curV
-          .map(v => enforceConstraintsAt(spark, dir, fs, root, v, shaped))
-          .getOrElse(Map.empty[String, String])
-        val staged = stage(shaped, fs, root,
-          physMapFor(spark, dir, shaped), bloomConfigAt(spark, dir))
+        val df = rdr.load(fresh.map(_._1): _*)
+        val batch = fresh.map(_._1).toSet
+        val ledger = fresh.map { case (p2, len) =>
+          s"$IngestedPrefix${enc(p2)}\t$len"
+        }
+        val (v, staged) = ingest(at, dir, df, "copy-into", ledger,
+          preAttempt = base => if (!force) {
+            // commits that landed between our dedup read and this
+            // attempt may include a RACING copyInto of the same
+            // files — re-check just those versions' ledgers and
+            // abort to the outer retry (re-diff), never double-load
+            val dup =
+              try (curV + 1 to base.getOrElse(0)).exists(nv =>
+                ingestedLinesOf(fs, root, nv).exists(batch.contains))
+              catch { case NonFatal(_) => true } // unprovable: re-diff
+            if (dup) throw new java.util.ConcurrentModificationException(
+              s"COPY INTO $dir lost a race: a concurrent copyInto " +
+                "loaded part of this batch — re-diffing")
+          })
         // per-file row counts already live in the staged stats lines
         // (#stats\t<rel>\t<rows>\t...) — no second pass over the batch.
         // A table with ZERO stat-eligible top-level columns (all
@@ -7055,29 +6782,8 @@ object Snapshots {
         }.toMap
         val rowsLoaded =
           if (byFile.nonEmpty) byFile.values.sum else df.count()
-        val ledger = fresh.map { case (p2, len) =>
-          s"$IngestedPrefix${enc(p2)}\t$len"
-        }
-        val v = commitLoop(fs, root, spark, dir, staged,
-          carryBase = true, op = "copy-into", header = ledger,
-          validated = validated,
-          propsExpect = ia.expect, propsDelta = ia.delta,
-          preAttempt = base => if (!force) {
-            // commits that landed between our dedup read and this
-            // attempt may include a RACING copyInto of the same
-            // files — re-check just those versions' ledgers and
-            // abort to the outer retry (re-diff), never double-load
-            val newer = (curV.getOrElse(0) + 1) to base.getOrElse(0)
-            val dup =
-              try newer.exists(nv =>
-                ingestedLinesOf(fs, root, nv).exists(batch.contains))
-              catch { case NonFatal(_) => true } // unprovable: re-diff
-            if (dup) throw new java.util.ConcurrentModificationException(
-              s"COPY INTO $dir lost a race: a concurrent copyInto " +
-                "loaded part of this batch — re-diffing")
-          })
         CopyIntoResult(v, fresh.size, rowsLoaded, files.size - fresh.size)
-      } finally ia.pin.foreach(_.unpersist())
+      }
     }
 
   // ---- CONVERT (in-place import of an existing parquet directory) ----
@@ -7569,12 +7275,8 @@ object Snapshots {
   def analyzeColumns(spark: SparkSession, dir: String,
       columns: Seq[String] = Nil,
       histogramsOverride: Option[Boolean] = None): AnalyzeResult =
-    retryOnRace(s"analyzeColumns on $dir") {
-      val (fs, root) = fsFor(spark, dir)
-      val v = currentVersion(spark, dir).getOrElse(
-        throw new java.util.NoSuchElementException(s"no table under $dir"))
-      val schema = schemaOf(fs, root, v)
-        .getOrElse(allNullable(read(spark, dir, v).schema))
+    dmlOn(spark, dir, -1, "analyze") { at =>
+      val schema = at.schema
       def eligible(f: StructField): Boolean = f.dataType match {
         case _: NumericType | StringType | DateType | TimestampType |
              TimestampNTZType | BooleanType => true
@@ -7594,7 +7296,7 @@ object Snapshots {
           f
         }
       require(targets.nonEmpty, s"ANALYZE $dir: no stat-eligible columns")
-      val df = read(spark, dir, v)
+      val df = at.table
       val aggs = count(lit(1L)).as("__n") +: targets.flatMap { f =>
         val lenCol: Column = f.dataType match {
           case StringType => octet_length(col(f.name)).cast("long")
@@ -7721,13 +7423,10 @@ object Snapshots {
       }.toMap
       // re-analyzed columns drop their stale histograms first: an old
       // histogram under fresh NDVs would mis-price worse than none
-      val committed = metadataCommit(fs, root, spark, dir, v, schema,
-        droppedOf(fs, root, v), bloomConfigOf(fs, root, v),
-        constraintsOf(fs, root, v),
-        (propsOf(fs, root, v) -- targets.map(f =>
-          analyzeHistKey(physOf(f)))) ++ colProps ++ histProps +
-          (AnalyzeRowsKey -> n.toString) + (AnalyzeAtKey -> v.toString),
-        op = "analyze")
+      val committed = commitOn(at, "analyze", at.meta.copy(props =
+        (at.meta.props -- targets.map(f => analyzeHistKey(physOf(f)))) ++
+          colProps ++ histProps + (AnalyzeRowsKey -> n.toString) +
+          (AnalyzeAtKey -> at.v.toString)))
       AnalyzeResult(committed, n, targets.map(_.name))
     }
 

@@ -146,6 +146,19 @@ class DeltaManifestSpec extends SparkSpec {
         identity),
       ("foldDeletionVectors", r => Snapshots.foldDeletionVectors(spark, r,
           maxDeletedFraction = 0.01),
+        identity),
+      ("setBloomColumns", r => Snapshots.setBloomColumns(spark, r, Seq("k")),
+        identity),
+      ("setConstraint", r => Snapshots.setConstraint(spark, r, "k_nonneg",
+          "k >= 0"),
+        identity),
+      ("setColumnDefault", r => Snapshots.setColumnDefault(spark, r, "v",
+          Some("0.0")),
+        identity),
+      ("analyzeColumns", r => Snapshots.analyzeColumns(spark, r),
+        identity),
+      ("optimizeIncremental", r => Snapshots.optimizeIncremental(spark, r,
+          Seq("k"), numFiles = 1),
         identity))
     // two templates: v2 (delta depth 1) and v9 (depth 8, so the next
     // commit is the checkpoint); both carry a vector from v2

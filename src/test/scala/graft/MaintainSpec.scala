@@ -69,6 +69,31 @@ class MaintainSpec extends SparkSpec {
     assert(!fs.exists(ghost))
   }
 
+  test("declared cluster keys resolve case-insensitively in maintenance") {
+    // the same table declared once as "k,v" and once as "K,V": appends
+    // accept both spellings, so maintain/optimize/optimizeWhere must too
+    val runs = Seq("k,v", "K,V").map { keys =>
+      val root = freshRoot()
+      (0 until 8).foreach(i => Snapshots.append(
+        (0 until 5).map(j => ((i * 5 + j).toLong, j * 1.0)).toDF("k", "v"),
+        root))
+      Snapshots.setProperty(spark, root, "cluster.columns", keys)
+      val before = Snapshots.read(spark, root).as[(Long, Double)]
+        .collect().toSeq.sorted
+      val m = Snapshots.maintain(spark, root, maxFiles = 4, targetFiles = 2)
+      assert(m.compactedTo.nonEmpty, keys)
+      val cols = keys.split(",").toSeq
+      val o = Snapshots.optimize(spark, root, cols, numFiles = 2)
+      val w = Snapshots.optimizeWhere(spark, root, $"k" < 10L, cols,
+        numFiles = 1)
+      val after = Snapshots.read(spark, root).as[(Long, Double)]
+        .collect().toSeq.sorted
+      assert(after == before, keys)
+      (m.compactedTo, o, w, after)
+    }
+    assert(runs(0) == runs(1))
+  }
+
   test("healthy table: maintain is a metadata-only no-op") {
     val root = freshRoot()
     Snapshots.append((0L until 5L).map(i => (i, i * 1.0)).toDF("id", "v"),

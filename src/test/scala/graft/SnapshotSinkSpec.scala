@@ -1,11 +1,13 @@
 package graft
 
 import java.nio.file.Files
+import java.util.concurrent.atomic.AtomicBoolean
 
+import org.apache.hadoop.fs.{FileSystem, Path => HPath}
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 import org.apache.spark.sql.functions._
 
-import graft.ops.Snapshots
+import graft.ops.{CommitCoordinator, HardLinkCommitCoordinator, Snapshots}
 
 /** Streaming-write contract of the snapshot sink
   * (`writeStream.format("graft-snapshots")`): micro-batches commit as
@@ -119,6 +121,42 @@ class SnapshotSinkSpec extends SparkSpec {
     assert(Snapshots.currentVersion(spark, dst) == vAfter)
     assert(Snapshots.read(spark, dst).orderBy("k")
       .as[(Long, String)].collect().toSeq == Seq((1L, "A"), (2L, "B")))
+  }
+
+  test("a replayed exactly-once batch that races itself lands once") {
+    // the race is injected: just before the batch's first manifest
+    // publishes, the same (writerId, batchId) lands through a second
+    // call, so the first call's CAS loses to its own replay
+    def raced[A](replay: => Any)(body: => A): A = {
+      val fired = new AtomicBoolean(false)
+      Snapshots.setCommitCoordinator("file", new CommitCoordinator {
+        override def publish(fs: FileSystem, target: HPath,
+            bytes: Array[Byte]): Boolean = {
+          if (new String(bytes, "UTF-8").contains("#commit writer=w batch=7")
+              && fired.compareAndSet(false, true)) replay
+          HardLinkCommitCoordinator.publish(fs, target, bytes)
+        }
+      })
+      try body finally Snapshots.clearCommitCoordinator("file")
+    }
+    val batch = Seq((2L, "b"), (3L, "c")).toDF("k", "v")
+    val verbs: Seq[(String, String => Option[Any], Seq[Long])] = Seq(
+      ("idempotentAppend",
+        d => Snapshots.idempotentAppend(batch, d, "w", 7L), Seq(1L, 2L, 3L)),
+      ("idempotentOverwrite",
+        d => Snapshots.idempotentOverwrite(batch, d, "w", 7L), Seq(2L, 3L)),
+      ("idempotentMerge",
+        d => Snapshots.idempotentMerge(spark, d, batch, Seq("k"), "w", 7L),
+        Seq(1L, 2L, 3L)))
+    verbs.foreach { case (verb, run, keys) =>
+      val dst = s"${Files.createTempDirectory("snap-replay")}/t"
+      Snapshots.append(Seq((1L, "a")).toDF("k", "v"), dst)
+      val r = raced(run(dst))(run(dst))
+      assert(r.isEmpty, s"$verb: the losing call must report the replay")
+      assert(Snapshots.versions(spark, dst) == Seq(1, 2), verb)
+      assert(Snapshots.read(spark, dst).orderBy("k").select("k").as[Long]
+        .collect().toSeq == keys, verb)
+    }
   }
 
   test("Update mode without mergeKeys is rejected") {
