@@ -179,7 +179,10 @@ object Snapshots {
   // every commit on top of a base (append, DML, DV verbs, maintenance,
   // metadata-only DDL) names its removed/added files and new vectors
   // there, and it alone decides delta vs checkpoint and carries the
-  // surviving files' `#dv`/`#stats` lines into a checkpoint.
+  // surviving files' `#dv`/`#stats` lines into a checkpoint. [[Chain]]
+  // is the ONLY reader: a version's files, stats, sizes, vectors and
+  // bloom refs come from one walk of its chain, each manifest opened
+  // once per call ([[Chains]]).
 
   /** Max delta-chain depth before a commit writes a full checkpoint. */
   private val CheckpointInterval = 8
@@ -195,25 +198,131 @@ object Snapshots {
         (f(1).toInt, f(2).toInt)
     }
 
-  /** Chain depth of version `v` (0 = full manifest). */
-  private def depthOf(fs: FileSystem, root: HPath, v: Int): Int =
-    deltaHeader(manifestLines(fs, root, v)).map(_._2).getOrElse(0)
+  /** One version's manifest chain, resolved. `lines` are the version's
+    * own manifest — its [[Meta]], `#op`, props and `#ingested` parse
+    * from them; every other field folds these lines onto the base's
+    * value, on first use. A file's `#stats`/`#size`/`#bloom` lines live
+    * in the manifest that ADDED it (checkpoints re-carry them) and its
+    * current vector is the newest `#dv` line down the chain, so the
+    * maps keep entries of files the chain later removed — harmless:
+    * every lookup restricts to [[files]]. Built by [[Chains]] only. */
+  private final class Chain(val lines: Seq[String], resolve: Int => Chain) {
+    private val delta = deltaHeader(lines)
+    /** The version this delta applies to; None for a full manifest. */
+    def baseVersion: Option[Int] = delta.map(_._1)
+    /** Chain depth (0 = full manifest). */
+    def depth: Int = delta.fold(0)(_._2)
+    private lazy val base = baseVersion.map(resolve)
+    private def own(prefix: String): Seq[Array[String]] =
+      lines.filter(_.startsWith(prefix)).map(_.split('\t'))
+    private def chained[K, V](own: Map[K, V])(of: Chain => Map[K, V]) =
+      base.fold(own)(of(_) ++ own)
 
-  /** The data files of version `v`, in commit order, resolving delta
-    * chains (base's surviving files first, then this commit's adds). */
-  private def readManifest(fs: FileSystem, root: HPath, v: Int): Seq[String] = {
-    val lines = manifestLines(fs, root, v)
-    val adds = lines.filterNot(_.startsWith("#"))
-    deltaHeader(lines) match {
-      case None => adds
-      case Some((base, _)) =>
+    lazy val meta: Meta = metaOf(lines)
+
+    /** The data files, in commit order: the base's survivors first,
+      * then this commit's adds. */
+    lazy val files: Seq[String] = {
+      val adds = lines.filterNot(_.startsWith("#"))
+      base.fold(adds) { b =>
         val removed = lines.collect {
           case l if l.startsWith(RemovePrefix) =>
             l.substring(RemovePrefix.length)
         }.toSet
-        readManifest(fs, root, base).filterNot(removed) ++ adds
+        b.files.filterNot(removed) ++ adds
+      }
+    }
+
+    /** file → physical column → stats. Files or columns absent simply
+      * have no stats (older writers, post-cap columns) and never
+      * prune. */
+    lazy val stats: Map[String, Map[String, ColStats]] = chained(
+      own("#stats\t").collect {
+        case Array(_, file, rows, colEnc, nulls, mnF, mxF) =>
+          def parse(fld: String): Option[String] =
+            if (fld == "null") None else Some(dec(fld.stripPrefix("v:")))
+          (file, dec(colEnc),
+            ColStats(parse(mnF), parse(mxF), nulls.toLong, rows.toLong))
+        // an unknown stats dialect is ignored: it never prunes
+      }.groupBy(_._1)
+        .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap })(
+      _.stats)
+
+    /** A file's commit-time row count. */
+    def rowsOf(f: String): Option[Long] =
+      stats.get(f).flatMap(_.headOption.map(_._2.rows))
+
+    /** file → recorded commit-time byte size. */
+    lazy val sizes: Map[String, Long] = chained(own("#size\t").collect {
+      case Array(_, file, bytes) => file -> bytes.toLong
+    }.toMap)(_.sizes)
+
+    /** file → (sidecar, deleted-count): the newest line wins (a vector
+      * UPDATES as deletes accrete). */
+    lazy val dv: Map[String, (String, Long)] = chained(own(DvPrefix).collect {
+      case Array(_, f, side, n) => f -> (side, n.toLong)
+    }.toMap)(_.dv)
+
+    /** file → physical column → bloom sidecar path. */
+    lazy val bloomRefs: Map[String, Map[String, String]] = chained(
+      own(BloomLinePrefix).collect {
+        case Array(_, file, colEnc, side) => (file, dec(colEnc), side)
+      }.groupBy(_._1)
+        .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap })(
+      _.bloomRefs)
+
+    /** The raw `#stats`/`#size`/`#bloom` lines down the chain, base
+      * first, each once (a file's lines are written once, where it was
+      * added, and copied verbatim into checkpoints — `distinct` folds
+      * the copies). */
+    lazy val fileLines: Seq[String] = {
+      val mine = lines.filter(l => l.startsWith("#stats\t") ||
+        l.startsWith("#size\t") || l.startsWith(BloomLinePrefix))
+      base.fold(mine)(b => (b.fileLines ++ mine).distinct)
+    }
+
+    /** [[fileLines]] of `keep` — what a commit carries forward for the
+      * files it keeps. */
+    def fileLinesOf(keep: Set[String]): Seq[String] = fileLines.filter { l =>
+      val f = l.split('\t')
+      f.length >= 2 && keep.contains(f(1))
     }
   }
+
+  /** The chain resolver of ONE call: [[Chain]]s by version, each
+    * manifest opened at most once — a walk over N versions resolves
+    * each delta on top of its base's value instead of re-reading the
+    * chain per version. Published manifests are immutable, so the memo
+    * is exact while the call runs; it is never kept across calls. */
+  private final class Chains(val fs: FileSystem, val root: HPath) {
+    private val memo = scala.collection.mutable.HashMap.empty[Int, Chain]
+    def apply(v: Int): Chain = memo.getOrElse(v, {
+      val c = new Chain(manifestLines(fs, root, v), apply(_))
+      memo(v) = c
+      c
+    })
+  }
+
+  private def chainsFor(spark: SparkSession, dir: String): Chains = {
+    val (fs, root) = fsFor(spark, dir)
+    new Chains(fs, root)
+  }
+
+  /** `version` of `dir` (the current one when negative, listed ONCE) as
+    * the base a call resolves everything against; None when nothing is
+    * committed. */
+  private def atOpt(spark: SparkSession, dir: String,
+      version: Int): Option[At] = {
+    val chains = chainsFor(spark, dir)
+    (if (version >= 0) Some(version)
+    else versionsFs(chains.fs, chains.root).lastOption)
+      .map(At(spark, dir, _, unpinned = version < 0, chains))
+  }
+
+  /** [[atOpt]] for the reads that need a committed version. */
+  private def resolveAt(spark: SparkSession, dir: String, version: Int): At =
+    atOpt(spark, dir, version).getOrElse(throw
+      new java.util.NoSuchElementException(s"no committed version under $dir"))
 
   /** The table at `version` (default: latest). The returned plan names
     * this version's exact files — later commits, and even a concurrent
@@ -221,15 +330,8 @@ object Snapshots {
     * reader sees (the files are immutable until [[vacuum]]). An empty
     * version (overwrite with an empty frame) is unrepresentable by
     * design — commits stage at least one parquet file. */
-  def read(spark: SparkSession, dir: String, version: Int = -1): DataFrame = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
-    val files = readManifest(fs, root, v)
-    require(files.nonEmpty, s"manifest v$v of $dir lists no files")
-    readFilesAs(spark, fs, root, v, files)
-  }
+  def read(spark: SparkSession, dir: String, version: Int = -1): DataFrame =
+    resolveAt(spark, dir, version).table
 
   /** TIMESTAMP AS OF resolution: the newest version committed at or
     * before `ts` (manifest modification time — the commit instant, set
@@ -436,8 +538,11 @@ object Snapshots {
     * string semantics — including `5 < 'abc'`-style implicit casts —
     * are exactly the filter's own. */
   def pruneFiles(spark: SparkSession, dir: String, pred: Column,
-      version: Int = -1): (Seq[String], Seq[String]) = {
-    val (files, keeps) = pruneKeepSets(spark, dir, Seq(pred), version)
+      version: Int = -1): (Seq[String], Seq[String]) =
+    pruneAt(resolveAt(spark, dir, version), pred)
+
+  private def pruneAt(at: At, pred: Column): (Seq[String], Seq[String]) = {
+    val (files, keeps) = pruneKeepSets(at, Seq(pred))
     files.partition(keeps.head.contains)
   }
 
@@ -448,10 +553,9 @@ object Snapshots {
     * instead of the two a pruneFiles-per-polarity pair costs; every
     * CoW DELETE/REPLACE commit and every stats-decided filtered
     * aggregate takes this path. */
-  private def pruneBoth(spark: SparkSession, dir: String, pred: Column,
-      version: Int): (Seq[String], Seq[String], Set[String]) = {
-    val (files, keeps) =
-      pruneKeepSets(spark, dir, Seq(pred, !pred), version)
+  private def pruneBoth(at: At,
+      pred: Column): (Seq[String], Seq[String], Set[String]) = {
+    val (files, keeps) = pruneKeepSets(at, Seq(pred, !pred))
     val (mayMatch, pruned) = files.partition(keeps.head.contains)
     (mayMatch, pruned, keeps(1))
   }
@@ -462,16 +566,11 @@ object Snapshots {
     * the local evaluation frame are paid ONCE for every predicate. A
     * predicate with no recognizable atoms keeps every file (fail-open,
     * per predicate). */
-  private def pruneKeepSets(spark: SparkSession, dir: String,
-      preds: Seq[Column], version: Int)
+  private def pruneKeepSets(at: At, preds: Seq[Column])
       : (Seq[String], Seq[Set[String]]) = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
-    val files = readManifest(fs, root, v)
-    val stats = statsFor(fs, root, v)
-    val table = read(spark, dir, v)
+    import at.{chain, spark, table}
+    val files = chain.files
+    val stats = chain.stats
     val schema = table.schema
     def keepAll = (files, preds.map(_ => files.toSet))
     // resolve each predicate the way the scan itself will: analysis
@@ -508,9 +607,9 @@ object Snapshots {
       schema.fields.map(f => f.name -> physOf(f)).toMap
     // bloom probes: `=` / IN atoms over bloom-indexed columns, tested
     // against per-file sidecars in executors ([[probeBlooms]])
-    val bloomCfg = bloomConfigOf(fs, root, v)
+    val bloomCfg = at.meta.bloom
     val bloomRefs: Map[String, Map[String, String]] =
-      if (bloomCfg.isEmpty) Map.empty else bloomRefsFor(fs, root, v)
+      if (bloomCfg.isEmpty) Map.empty else chain.bloomRefs
     def probeOf(conj: Conj): Option[(String, Seq[Any])] =
       bloomCfg.flatMap { cfg =>
         val phys = physByLogical.getOrElse(conj.colName, conj.colName)
@@ -531,7 +630,7 @@ object Snapshots {
     if (stats.isEmpty && !haveBloom) return keepAll
     val bloomKill: Map[String, Set[Int]] =
       if (!haveBloom) Map.empty
-      else probeBlooms(spark, root.toString, files, bloomRefs, probes)
+      else probeBlooms(spark, at.root.toString, files, bloomRefs, probes)
     val probeIdx: Map[Conj, Int] =
       probes.zipWithIndex.map { case ((c, _, _), i) => c -> i }.toMap
     val colType = atoms.map { case (c, t) => c.colName -> t }.toMap
@@ -636,13 +735,10 @@ object Snapshots {
     * narrow, this makes narrow ranges pay. */
   def readWhere(spark: SparkSession, dir: String, pred: Column,
       version: Int = -1): DataFrame = {
-    val (kept, _) = pruneFiles(spark, dir, pred, version)
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version else currentVersion(spark, dir).get
-    val base =
-      if (kept.isEmpty) read(spark, dir, version).limit(0)
-      else readFilesAs(spark, fs, root, v, kept)
-    base.filter(pred)
+    // ONE resolution of "current": the prune and the scan share it
+    val at = resolveAt(spark, dir, version)
+    val (kept, _) = pruneAt(at, pred)
+    (if (kept.isEmpty) at.table.limit(0) else at.scan(kept)).filter(pred)
   }
 
   /** Metadata-only aggregates: `count(*)`, and per requested column
@@ -671,14 +767,13 @@ object Snapshots {
     * are looked up under the physical name). */
   def aggregateFromManifest(spark: SparkSession, dir: String,
       cols: Seq[String], version: Int = -1): Option[DataFrame] = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version) else currentVersion(spark, dir)
-    vOpt.flatMap { v =>
-      schemaOf(fs, root, v).flatMap { schema =>
+    atOpt(spark, dir, version).flatMap { at =>
+      val chain = at.chain
+      at.pinned.flatMap { schema =>
         val resolved: Seq[Option[StructField]] = cols.map(c =>
           schema.fields.find(_.name.equalsIgnoreCase(c))
             .filter(f => statEligible(f.dataType)))
-        val files = readManifest(fs, root, v)
+        val files = chain.files
         // deletion vectors make per-file COLUMN stats bounds, not
         // attained values (the deleted rows' values are unknown), so
         // min/max/count(col) refuse — but count(*) stays exact: each
@@ -687,7 +782,7 @@ object Snapshots {
         // GDPR-trickle table keeps its metadata-only row count.
         val dvTotal = {
           val fileSet = files.toSet
-          dvFor(fs, root, v).iterator.collect {
+          chain.dv.iterator.collect {
             case (f, (_, n)) if n > 0 && fileSet.contains(f) => n
           }.sum
         }
@@ -695,7 +790,7 @@ object Snapshots {
           (dvTotal > 0 && cols.nonEmpty)) None
         else {
           val fields = resolved.flatten
-          val stats = statsFor(fs, root, v)
+          val stats = chain.stats
           // one raw row per file: rows + (min, max, nulls) per column,
           // or None if any file lacks a required stats line
           val raws: Seq[Option[Row]] = files.map { f =>
@@ -781,14 +876,11 @@ object Snapshots {
     * the SQL rewrite splices); this form adds the decision detail. */
   def countWhere(spark: SparkSession, dir: String, pred: Column,
       version: Int = -1): CountWhereResult = {
-    val (v, decided, allMatch, undecided, pruned) =
-      countWhereParts(spark, dir, pred, version)
+    val at = resolveAt(spark, dir, version)
+    val (decided, allMatch, undecided, pruned) = countWhereParts(at, pred)
     val scanned =
       if (undecided.isEmpty) 0L
-      else {
-        val (fs, root) = fsFor(spark, dir)
-        readFilesAs(spark, fs, root, v, undecided).filter(pred).count()
-      }
+      else at.scan(undecided).filter(pred).count()
     CountWhereResult(decided + scanned, allMatch, undecided.size,
       pruned)
   }
@@ -812,29 +904,25 @@ object Snapshots {
     * per requested column — [[aggregateFromManifest]]'s naming. */
   def aggregateWhereFrame(spark: SparkSession, dir: String, pred: Column,
       cols: Seq[String], version: Int = -1): Option[DataFrame] = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version)
-    else currentVersion(spark, dir)
-    vOpt.flatMap { v =>
-      schemaOf(fs, root, v).flatMap { schema =>
+    atOpt(spark, dir, version).flatMap { at =>
+      at.pinned.flatMap { schema =>
         val resolved = cols.map(c =>
           schema.fields.find(_.name.equalsIgnoreCase(c))
             .filter(f => statEligible(f.dataType)))
         if (resolved.exists(_.isEmpty)) None
-        else Some(buildWhereAggregate(spark, dir, fs, root, v, pred,
-          resolved.flatten))
+        else Some(buildWhereAggregate(at, pred, resolved.flatten))
       }
     }
   }
 
-  private def buildWhereAggregate(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, v: Int, pred: Column,
+  private def buildWhereAggregate(at: At, pred: Column,
       fields: Seq[StructField]): DataFrame = {
-    val (mayMatch, _, survivors) = pruneBoth(spark, dir, pred, v)
-    val stats = statsFor(fs, root, v)
-    val (undecided0, allMatch) = splitDropWholeWith(
-      spark, dir, fs, root, pred, v, mayMatch, survivors, stats)
-    val dv = dvFor(fs, root, v)
+    import at.spark
+    val (mayMatch, _, survivors) = pruneBoth(at, pred)
+    val stats = at.chain.stats
+    val (undecided0, allMatch) =
+      splitDropWholeWith(at, pred, mayMatch, survivors)
+    val dv = at.chain.dv
     def dvCount(f: String): Long =
       dv.get(f).filter(_._2 > 0).map(_._2).getOrElse(0L)
     // fail-open demotions: no stats line, a required column's stats
@@ -864,7 +952,7 @@ object Snapshots {
     val scanSide: Option[DataFrame] =
       if (undecided.isEmpty) None
       else {
-        val base = readFilesAs(spark, fs, root, v, undecided).filter(pred)
+        val base = at.scan(undecided).filter(pred)
         val aggs = count(lit(1)).as("n_rows") +:
           fields.flatMap(fd => Seq(
             count(col(fd.name)).as(s"n_${fd.name}"),
@@ -891,33 +979,24 @@ object Snapshots {
     }
   }
 
-  /** (resolved version, stats-decided row total, #all-match files,
-    * undecided files, #pruned files) — [[countWhere]]'s decision pass.
-    * The version resolves ONCE and the caller scans at exactly that
-    * version: resolving again for the scan would race a concurrent
-    * commit into a mixed-snapshot count. An all-match file missing
-    * its manifest row count falls back into the scan set (fail-open,
-    * like every proof here). */
-  private def countWhereParts(spark: SparkSession, dir: String,
-      pred: Column, version: Int)
-      : (Int, Long, Int, Seq[String], Int) = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version
-    else currentVersion(spark, dir).getOrElse(
-      throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
-    val (mayMatch, pruned, survivors) = pruneBoth(spark, dir, pred, v)
-    val stats = statsFor(fs, root, v)
-    val (undecided, allMatch) = splitDropWholeWith(
-      spark, dir, fs, root, pred, v, mayMatch, survivors, stats)
-    val dv = dvFor(fs, root, v)
-    def liveRows(f: String): Option[Long] =
-      stats.get(f).flatMap(_.headOption).map(_._2.rows -
-        dv.get(f).filter(_._2 > 0).map(_._2).getOrElse(0L))
+  /** (stats-decided row total, #all-match files, undecided files,
+    * #pruned files) — [[countWhere]]'s decision pass over `at`.
+    * The caller scans at exactly `at`: resolving again for the scan
+    * would race a concurrent commit into a mixed-snapshot count. An
+    * all-match file missing its manifest row count falls back into the
+    * scan set (fail-open, like every proof here). */
+  private def countWhereParts(at: At, pred: Column)
+      : (Long, Int, Seq[String], Int) = {
+    val (mayMatch, pruned, survivors) = pruneBoth(at, pred)
+    val (undecided, allMatch) =
+      splitDropWholeWith(at, pred, mayMatch, survivors)
+    val dv = at.chain.dv
+    def liveRows(f: String): Option[Long] = at.chain.rowsOf(f).map(_ -
+      dv.get(f).filter(_._2 > 0).map(_._2).getOrElse(0L))
     val counted = allMatch.map(f => f -> liveRows(f))
     val decided = counted.collect { case (_, Some(n)) => n }.sum
     val statless = counted.collect { case (f, None) => f }
-    (v, decided, counted.size - statless.size, undecided ++ statless,
+    (decided, counted.size - statless.size, undecided ++ statless,
       pruned.size)
   }
 
@@ -989,11 +1068,6 @@ object Snapshots {
     cfg.toSeq.map(c => BloomColsPrefix + c.expectedItems + "\t" + c.fpp +
       "\t" + c.cols.map(enc).mkString(","))
 
-  /** The bloom-index config pinned at version `v`, if any. */
-  private def bloomConfigOf(fs: FileSystem, root: HPath,
-      v: Int): Option[BloomConfig] =
-    bloomConfigOfLines(manifestLines(fs, root, v))
-
   private def bloomConfigOfLines(lines: Seq[String]): Option[BloomConfig] =
     lines.collectFirst {
       case l if l.startsWith(BloomColsPrefix) =>
@@ -1001,25 +1075,6 @@ object Snapshots {
         BloomConfig(f(2).split(',').filter(_.nonEmpty).map(dec).toSeq,
           f(0).toLong, f(1).toDouble)
     }.filter(_.cols.nonEmpty)
-
-  /** file → physCol → sidecar path, resolved through the delta chain
-    * (a file's bloom line lives where the file was added). */
-  private def bloomRefsFor(fs: FileSystem, root: HPath,
-      v: Int): Map[String, Map[String, String]] = {
-    val lines = manifestLines(fs, root, v)
-    val own = lines.filter(_.startsWith(BloomLinePrefix)).flatMap { l =>
-      l.split('\t') match {
-        case Array(_, file, colEnc, side) => Some((file, dec(colEnc), side))
-        case _ => None
-      }
-    }.groupBy(_._1).map { case (f, xs) =>
-      f -> xs.map(x => x._2 -> x._3).toMap
-    }
-    deltaHeader(lines) match {
-      case None => own
-      case Some((base, _)) => bloomRefsFor(fs, root, base) ++ own
-    }
-  }
 
   private def isBloomType(t: DataType): Boolean = t match {
     case ByteType | ShortType | IntegerType | LongType | StringType => true
@@ -1249,10 +1304,6 @@ object Snapshots {
       ConstraintPrefix + enc(n) + "\t" + enc(e)
     }
 
-  private def constraintsOf(fs: FileSystem, root: HPath,
-      v: Int): Map[String, String] =
-    constraintsOfLines(manifestLines(fs, root, v))
-
   private def constraintsOfLines(lines: Seq[String]): Map[String, String] =
     lines.filter(_.startsWith(ConstraintPrefix))
       .flatMap { l =>
@@ -1266,9 +1317,7 @@ object Snapshots {
     * empty for a table with none (or no table at all). */
   def constraints(spark: SparkSession, dir: String,
       version: Int = -1): Map[String, String] = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version) else currentVersion(spark, dir)
-    vOpt.map(constraintsOf(fs, root, _)).getOrElse(Map.empty)
+    atOpt(spark, dir, version).map(_.meta.constraints).getOrElse(Map.empty)
   }
 
   // ---- table properties ---------------------------------------------
@@ -1290,10 +1339,6 @@ object Snapshots {
       PropPrefix + enc(k) + "\t" + enc(v)
     }
 
-  private def propsOf(fs: FileSystem, root: HPath,
-      v: Int): Map[String, String] =
-    propsOfLines(manifestLines(fs, root, v))
-
   private def propsOfLines(lines: Seq[String]): Map[String, String] =
     lines.filter(_.startsWith(PropPrefix))
       .flatMap { l =>
@@ -1306,7 +1351,7 @@ object Snapshots {
   /** The metadata a version pins and every commit on it carries:
     * schema (absent on manifests written before schema pinning),
     * dropped-column tombstones, bloom config, CHECK constraints and
-    * table properties. [[metaAt]] parses it from ONE manifest read;
+    * table properties. [[metaOf]] parses it from ONE manifest's lines;
     * [[header]] renders all but the schema back (the schema line leads
     * a manifest, [[casChange]]/[[casManifest]] callers place it). A new
     * carried metadata kind is added HERE, not at every call site. */
@@ -1320,19 +1365,15 @@ object Snapshots {
       copy(props = props ++ delta)
   }
 
-  private def metaAt(fs: FileSystem, root: HPath, v: Int): Meta = {
-    val lines = manifestLines(fs, root, v)
+  private def metaOf(lines: Seq[String]): Meta =
     Meta(schemaOfLines(lines), droppedOfLines(lines),
       bloomConfigOfLines(lines), constraintsOfLines(lines),
       propsOfLines(lines))
-  }
 
   /** The table properties pinned at `version` (default: latest). */
   def tableProperties(spark: SparkSession, dir: String,
       version: Int = -1): Map[String, String] = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version) else currentVersion(spark, dir)
-    vOpt.map(propsOf(fs, root, _)).getOrElse(Map.empty)
+    atOpt(spark, dir, version).map(_.meta.props).getOrElse(Map.empty)
   }
 
   /** `stats.columns` / `cluster.columns` must name existing,
@@ -1389,7 +1430,7 @@ object Snapshots {
   private def declaredStatsProps(fs: FileSystem,
       root: HPath): (Seq[String], Seq[String]) =
     declaredOf(versionsFs(fs, root).lastOption
-      .map(propsOf(fs, root, _)).getOrElse(Map.empty))
+      .map(v => new Chains(fs, root)(v).meta.props).getOrElse(Map.empty))
 
   /** The stats declarations of a properties map:
     * (`stats.columns`, `cluster.columns`), comma-split. */
@@ -2242,7 +2283,7 @@ object Snapshots {
       if (x eq f) x.copy(dataType = newType) else x))))
     if (f.dataType == newType) v
     else if (f.dataType == FloatType && newType == DoubleType &&
-        readManifest(fs, root, v).nonEmpty) {
+        at.chain.files.nonEmpty) {
       // FLOAT→DOUBLE is safe ONLY with REGENERATED stats: a float
       // stat string re-cast as double can EXCLUDE attained values
       // ("0.1" → 0.1d < (double)0.1f — pruning would silently drop
@@ -2252,7 +2293,7 @@ object Snapshots {
       // round-trips exactly), carry every other column's lines
       // untouched, and land schema + corrected stats as ONE
       // full-manifest commit.
-      val files = readManifest(fs, root, v)
+      val files = at.chain.files
       val phys = physOf(f)
       val resolved = resolveForeign(fs, files)
       val paths = resolved.map(x => new HPath(root, x).toString)
@@ -2295,13 +2336,13 @@ object Snapshots {
       // only files the scan saw ZERO rows from — genuinely empty
       val zeroLines = files.filterNot(covered)
         .map(rel => s"#stats\t$rel\t0\t$encPhys\t0\tnull\tnull")
-      val carried = statsLines(fs, root, v, files.toSet).filterNot { l =>
+      val carried = at.chain.fileLinesOf(files.toSet).filterNot { l =>
         l.startsWith("#stats\t") && {
           val p = l.split('\t'); p.length >= 4 && p(3) == encPhys
         }
       }
       commitOn(at, "widen-column", evolved, Some(Staged(files,
-        dvLines(dvFor(fs, root, v), files.toSet) ++ carried ++ newLines ++
+        dvLines(at.chain.dv, files.toSet) ++ carried ++ newLines ++
           zeroLines, schema)), removed = None)
     } else {
       require(Widenings.get(f.dataType).exists(_.contains(newType)) ||
@@ -2319,10 +2360,6 @@ object Snapshots {
 
   /** The schema a version's manifest pins (absent for manifests written
     * before schema pinning — those read by footer inference). */
-  private def schemaOf(fs: FileSystem, root: HPath,
-      v: Int): Option[StructType] =
-    schemaOfLines(manifestLines(fs, root, v))
-
   private def schemaOfLines(lines: Seq[String]): Option[StructType] =
     lines.collectFirst {
       case l if l.startsWith(SchemaPrefix) =>
@@ -2434,31 +2471,6 @@ object Snapshots {
   private val GfCol = "__graft_dv_file"
   private val GposCol = "__graft_dv_pos"
 
-  /** file → (sidecar, deleted-count) at version `v` — newest line along
-    * the chain wins (a vector UPDATES as deletes accrete). Entries for
-    * files the chain later removed are harmless: every lookup
-    * restricts to a resolved file list. */
-  private def dvFor(fs: FileSystem, root: HPath,
-      v: Int): Map[String, (String, Long)] =
-    dvForLines(fs, root, manifestLines(fs, root, v))
-
-  /** [[dvFor]] with the TOP manifest's lines already read — the
-    * single-parse path scan construction uses; delta bases still read
-    * their own manifests (chained, depth-bounded). */
-  private def dvForLines(fs: FileSystem, root: HPath,
-      lines: Seq[String]): Map[String, (String, Long)] = {
-    val own = lines.filter(_.startsWith(DvPrefix)).flatMap { l =>
-      l.split('\t') match {
-        case Array(_, f, side, n) => Some(f -> (side, n.toLong))
-        case _ => None
-      }
-    }.toMap
-    deltaHeader(lines) match {
-      case None => own
-      case Some((base, _)) => dvFor(fs, root, base) ++ own
-    }
-  }
-
   private def dvLines(m: Map[String, (String, Long)],
       files: Set[String]): Seq[String] =
     m.filter { case (f, _) => files.contains(f) }.toSeq.sortBy(_._1)
@@ -2485,12 +2497,12 @@ object Snapshots {
     * partition dirs, and the name only needs uniqueness within the
     * commit dir. Returns (files dropped whole, file → new vector),
     * ready for [[casChange]]. */
-  private def foldPositions(fs: FileSystem, root: HPath, base: Int,
-      what: String, hits: Array[Row], mayMatch: Seq[String],
+  private def foldPositions(at: At, what: String, hits: Array[Row],
+      mayMatch: Seq[String],
       sideDir: String): (Seq[String], Map[String, (String, Long)]) = {
+    import at.{fs, root}
     val refByPhys = physicalPaths(fs, root, mayMatch).map(_.swap).toMap
-    val oldDv = dvFor(fs, root, base)
-    val stats = statsFor(fs, root, base)
+    val oldDv = at.chain.dv
     fs.mkdirs(new HPath(root, sideDir))
     var dvIdx = 0
     val folded = hits.map(r => (r.getString(0), r.getLong(1)))
@@ -2502,8 +2514,7 @@ object Snapshots {
           .map { case (side, _) => readDvSidecar(fs, root, side) }
           .getOrElse(Array.empty[Long])
         val merged = (old ++ xs.map(_._2)).distinct.sorted
-        if (stats.get(file).flatMap(_.headOption.map(_._2.rows))
-            .contains(merged.length.toLong)) Left(file)
+        if (at.chain.rowsOf(file).contains(merged.length.toLong)) Left(file)
         else {
           val side = s"$sideDir/_dv.$dvIdx.${baseNameOf(file)}.bin"
           dvIdx += 1
@@ -2589,31 +2600,15 @@ object Snapshots {
       .toDF("__dv_file", "__dv_pos")
   }
 
-  /** Read `files` of version `v` under that version's pinned schema
-    * (files predating an added column yield NULL there); pre-pinning
-    * manifests fall back to footer inference. Renamed columns read
-    * under their PHYSICAL file name and surface under the logical one
-    * (a Project over the scan — filters and column pruning push
-    * through it). Deletion vectors of `v` are anti-joined out. */
-  private def readFilesAs(spark: SparkSession, fs: FileSystem, root: HPath,
-      v: Int, files: Seq[String]): DataFrame =
-    readFilesWith(spark, fs, root, v, v, files)
-
-  /** [[readFilesAs]] with the schema and DV state pinned SEPARATELY —
-    * [[diff]] reads a removed file under the newer schema but its OWN
-    * version's deletion vectors. */
-  private def readFilesWith(spark: SparkSession, fs: FileSystem,
-      root: HPath, schemaV: Int, dvV: Int, files: Seq[String]): DataFrame =
-    scanWithMeta(spark, fs, root, schemaV, dvV, files).drop(GfCol, GposCol)
-
-  /** The DV-filtered scan with two helper columns kept: the file's
+  /** [[At.scan]] with two helper columns kept: the file's
     * fully-qualified physical path ([[GfCol]]) and original row index
     * ([[GposCol]]) — [[deleteWhereLight]] needs them to NAME the rows
     * it deletes. The path (not the basename) keys every positional
     * join here, so converted hive layouts that repeat basenames
     * across partition directories work like any other manifest. */
-  private def scanWithMeta(spark: SparkSession, fs: FileSystem,
-      root: HPath, schemaV: Int, dvV: Int, files: Seq[String]): DataFrame = {
+  private def scanWithMeta(at: At, files: Seq[String],
+      dvV: Int): DataFrame = {
+    import at.{fs, root, spark}
     // foreign (clone-source) refs resolve through _moved markers —
     // one metadata probe per distinct foreign root, none for owned
     // refs. The READER takes the decoded Path form; the metadata
@@ -2626,13 +2621,10 @@ object Snapshots {
       ref -> metadataPathString(fs, new HPath(root, res))
     }.toMap
     val fileSet = files.toSet
-    // ONE manifest parse feeds schema, DV state and the partition
-    // property below (an object store would otherwise pay a GET per
-    // helper per scan construction); diff's split-version case reads
-    // the DV version's manifest separately, as it must
-    val headLines = manifestLines(fs, root, schemaV)
-    val dv = (if (dvV == schemaV) dvForLines(fs, root, headLines)
-      else dvFor(fs, root, dvV)).filter { case (f, (_, n)) =>
+    // schema, the partition property below and the vectors all come
+    // from the call's resolved chains — a scan construction re-reads
+    // no manifest
+    val dv = at.chains(dvV).dv.filter { case (f, (_, n)) =>
       n > 0 && fileSet.contains(f)
     }
     // converted hive layouts ([[convert]]): the partition columns live
@@ -2642,7 +2634,7 @@ object Snapshots {
     // rewrites) keep their stored values: the fill applies only where
     // the path carries the key=value marker.
     val partFill: Seq[StructField] =
-      propsOfLines(headLines).get(ConvertPartitionsKey)
+      at.meta.props.get(ConvertPartitionsKey)
         .map(j => DataType.fromJson(j).asInstanceOf[StructType]
           .fields.toSeq)
         .getOrElse(Nil)
@@ -2691,7 +2683,7 @@ object Snapshots {
         col(GfCol) === col("__dv_file") && col(GposCol) === col("__dv_pos"),
         "left_anti")
     }
-    schemaOfLines(headLines) match {
+    at.pinned match {
       case Some(s) if s.fields.forall(f => physOf(f) == f.name) =>
         attach(spark.read.schema(s).parquet(paths: _*))
       case Some(s) =>
@@ -2733,7 +2725,7 @@ object Snapshots {
       expectedVersion: Int = -1,
       maxPositions: Int = 1000000): LightDeleteResult =
     dmlOn(spark, dir, expectedVersion, "delete") { at =>
-      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      val (mayMatch, untouched) = pruneAt(at, pred)
       val d = applyDv(at, "deleteWhereLight", maxPositions, mayMatch,
         "delete-light")(_.filter(isTrue(pred)))(_ => None)
       LightDeleteResult(d.version, d.dvFiles, d.dropped,
@@ -2766,7 +2758,7 @@ object Snapshots {
     dmlOn(spark, dir, expectedVersion, "update") { at =>
       val cols = at.table.schema
       val assigned = assignedOf(dir, cols, assignments)
-      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      val (mayMatch, untouched) = pruneAt(at, pred)
       // the matched rows feed TWO consumers — the position collect and
       // the updated-image staging — so they are pinned once
       val d = applyDv(at, "updateWhereLight", maxPositions, mayMatch,
@@ -3083,76 +3075,9 @@ object Snapshots {
     withRows ++ zeroLines
   }
 
-  /** Per-file, per-column stats of version `v`'s manifest. Files or
-    * columns absent from the map simply have no stats (older writers,
-    * post-cap columns) and are never pruned. */
+  /** One file's manifest stats for one column ([[Chain.stats]]). */
   private case class ColStats(min: Option[String], max: Option[String],
       nulls: Long, rows: Long)
-
-  private def statsFor(fs: FileSystem, root: HPath,
-      v: Int): Map[String, Map[String, ColStats]] = {
-    val lines = manifestLines(fs, root, v)
-    val own = lines.filter(_.startsWith("#stats\t"))
-      .flatMap { line =>
-        line.split('\t') match {
-          case Array(_, file, rows, colEnc, nulls, mnF, mxF) =>
-            def parse(fld: String): Option[String] =
-              if (fld == "null") None else Some(dec(fld.stripPrefix("v:")))
-            Some((file, dec(colEnc),
-              ColStats(parse(mnF), parse(mxF), nulls.toLong, rows.toLong)))
-          case _ => None // unknown stats dialect: ignore, never prune
-        }
-      }
-      .groupBy(_._1)
-      .map { case (f, xs) => f -> xs.map(x => x._2 -> x._3).toMap }
-    deltaHeader(lines) match {
-      case None => own
-      // a file's stats live where it was added; entries for files the
-      // chain later removed are harmless (pruning looks up only the
-      // resolved file list)
-      case Some((base, _)) => statsFor(fs, root, base) ++ own
-    }
-  }
-
-  /** The per-file metadata lines (`#stats`, `#size`) of version `v`,
-    * restricted to `files` — what an append carries forward for the
-    * files it keeps. */
-  private def statsLines(fs: FileSystem, root: HPath, v: Int,
-      files: Set[String]): Seq[String] = {
-    val lines = manifestLines(fs, root, v)
-    val own = lines.filter { l =>
-      (l.startsWith("#stats\t") || l.startsWith("#size\t") ||
-        l.startsWith("#bloom\t")) && {
-        val fields = l.split('\t')
-        fields.length >= 2 && files.contains(fields(1))
-      }
-    }
-    deltaHeader(lines) match {
-      case None => own
-      // chain lines for the same (kind, file, column) are identical by
-      // construction (a file's metadata is written once, where it was
-      // added; checkpoints copy it verbatim) — distinct dedups them
-      case Some((base, _)) =>
-        (statsLines(fs, root, base, files) ++ own).distinct
-    }
-  }
-
-  /** Recorded commit-time byte size per file of version `v`. */
-  private def sizesFor(fs: FileSystem, root: HPath,
-      v: Int): Map[String, Long] = {
-    val lines = manifestLines(fs, root, v)
-    val own = lines.filter(_.startsWith("#size\t"))
-      .flatMap { l =>
-        l.split('\t') match {
-          case Array(_, file, bytes) => Some(file -> bytes.toLong)
-          case _ => None
-        }
-      }.toMap
-    deltaHeader(lines) match {
-      case None => own
-      case Some((base, _)) => sizesFor(fs, root, base) ++ own
-    }
-  }
 
   /** Total LIVE data bytes of `version` (current when -1, 0 when the
     * table is empty): commit-time recorded per-file sizes (`#size`
@@ -3164,28 +3089,18 @@ object Snapshots {
     * back to one filesystem stat per unlisted file. */
   def liveBytes(spark: SparkSession, dir: String,
       version: Int = -1): Long = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version)
-    else currentVersion(spark, dir)
-    vOpt match {
-      case None => 0L
-      case Some(v) =>
-        val files = readManifest(fs, root, v)
-        if (files.isEmpty) return 0L
-        val sizes = sizesFor(fs, root, v)
-        val dv = dvFor(fs, root, v)
-        val stats = statsFor(fs, root, v)
-        files.iterator.map { f =>
-          val bytes = sizes.getOrElse(f,
-            try fs.getFileStatus(
-              new HPath(root, resolveForeign(fs, Seq(f)).head)).getLen
-            catch { case NonFatal(_) => 0L })
-          dv.get(f).flatMap { case (_, cnt) =>
-            stats.get(f).flatMap(_.headOption.map(_._2.rows))
-              .filter(_ > 0L)
-              .map(rows => bytes * math.max(0L, rows - cnt) / rows)
-          }.getOrElse(bytes)
-        }.sum
+    atOpt(spark, dir, version).fold(0L) { at =>
+      import at.{chain, fs, root}
+      chain.files.iterator.map { f =>
+        val bytes = chain.sizes.getOrElse(f,
+          try fs.getFileStatus(
+            new HPath(root, resolveForeign(fs, Seq(f)).head)).getLen
+          catch { case NonFatal(_) => 0L })
+        chain.dv.get(f).flatMap { case (_, cnt) =>
+          chain.rowsOf(f).filter(_ > 0L)
+            .map(rows => bytes * math.max(0L, rows - cnt) / rows)
+        }.getOrElse(bytes)
+      }.sum
     }
   }
 
@@ -3198,13 +3113,12 @@ object Snapshots {
     * too-optimistic broadcast. */
   def feedBytes(spark: SparkSession, dir: String, fromExclusive: Int,
       to: Int): Long = {
-    val (fs, root) = fsFor(spark, dir)
+    val chains = chainsFor(spark, dir)
     // walk the RETAINED versions only (changeFeed does the same) —
     // a vacuumed hole inside the range must not fail size estimation
-    // where the read itself succeeds; `to` < 0 means current. Sizes
-    // carry forward one step per iteration (each version's map is
-    // the next iteration's predecessor) — O(range), not O(range ×
-    // chain depth).
+    // where the read itself succeeds; `to` < 0 means current. Each
+    // version resolves on top of its predecessor's chain ([[Chains]]):
+    // every manifest in range is opened once.
     val lo = math.max(fromExclusive, 0)
     val all = versions(spark, dir)
     val hi = if (to >= 0) to else all.lastOption.getOrElse(return 0L)
@@ -3212,14 +3126,14 @@ object Snapshots {
     if (walk.isEmpty) return 0L
     var prev: Set[String] =
       if (lo == 0 || !all.contains(lo)) Set.empty
-      else readManifest(fs, root, lo).toSet
+      else chains(lo).files.toSet
     var prevSizes: Map[String, Long] =
       if (lo == 0 || !all.contains(lo)) Map.empty
-      else sizesFor(fs, root, lo)
+      else chains(lo).sizes
     var total = 0L
     walk.foreach { v =>
-      val cur = readManifest(fs, root, v).toSet
-      val sizes = sizesFor(fs, root, v)
+      val cur = chains(v).files.toSet
+      val sizes = chains(v).sizes
       ((cur -- prev).iterator.map(f => sizes.getOrElse(f, 0L)) ++
         (prev -- cur).iterator.map(f => prevSizes.getOrElse(f, 0L)))
         .foreach(total += _)
@@ -3262,11 +3176,13 @@ object Snapshots {
     * the added files' stats); past it a CHECKPOINT lists every
     * surviving file with its chain-resolved vector and stats lines.
     * True iff this writer won the version. */
-  private def casChange(fs: FileSystem, root: HPath, base: Int,
+  private def casChange(chains: Chains, base: Int,
       schema: StructType, header: Seq[String], removed: Seq[String] = Nil,
       added: Seq[String] = Nil, addedStats: Seq[String] = Nil,
       newDv: Map[String, (String, Long)] = Map.empty): Boolean = {
-    val depth = depthOf(fs, root, base) + 1
+    import chains.{fs, root}
+    val chain = chains(base)
+    val depth = chain.depth + 1
     if (depth <= CheckpointInterval)
       casManifest(fs, root, base + 1, added,
         s"$DeltaPrefix$base\t$depth" +: schemaHeader(schema) +: (header ++
@@ -3274,11 +3190,11 @@ object Snapshots {
           addedStats))
     else {
       val gone = removed.toSet
-      val kept = readManifest(fs, root, base).filterNot(gone)
+      val kept = chain.files.filterNot(gone)
       casManifest(fs, root, base + 1, kept ++ added,
         schemaHeader(schema) +: (header ++
-          dvLines(dvFor(fs, root, base) ++ newDv, kept.toSet) ++
-          statsLines(fs, root, base, kept.toSet) ++ addedStats))
+          dvLines(chain.dv ++ newDv, kept.toSet) ++
+          chain.fileLinesOf(kept.toSet) ++ addedStats))
     }
   }
 
@@ -3315,13 +3231,14 @@ object Snapshots {
   def clearCommitCoordinator(scheme: String): Unit =
     CommitCoordinators.clear(scheme)
 
-  private def commitLoop(fs: FileSystem, root: HPath, spark: SparkSession,
+  private def commitLoop(chains: Chains, spark: SparkSession,
       dir: String, staged: Staged, carryBase: Boolean, op: String,
       header: Seq[String] = Nil,
       validated: Map[String, String] = Map.empty,
       propsExpect: Map[String, Option[String]] = Map.empty,
       propsDelta: Map[String, String] = Map.empty,
       preAttempt: Option[Int] => Unit = _ => ()): Int = {
+    import chains.{fs, root}
     val hdr = opHeader(op) ++ header
     var attempts = 0
     while (attempts < 10) {
@@ -3336,7 +3253,7 @@ object Snapshots {
       // below (an append carries the base's metadata; a first commit or
       // an overwrite starts a fresh lineage that carries none)
       val carried = base.filter(_ => carryBase)
-      val meta = carried.fold(Meta())(metaAt(fs, root, _))
+      val meta = carried.fold(Meta())(chains(_).meta)
       // CHECK constraints pinned at the ACTUAL commit base: a
       // constraint that landed after this batch was validated means
       // the validation no longer covers the commit — loud failure, the
@@ -3370,8 +3287,8 @@ object Snapshots {
         // additively (conflicts throw before anything commits), and the
         // metadata is O(batch) as a delta, or the depth-bound checkpoint
         case Some(b) =>
-          casChange(fs, root, b, evolveSchema(meta.schema
-            .getOrElse(allNullable(read(spark, dir, b).schema)),
+          casChange(chains, b, evolveSchema(
+            At(spark, dir, b, unpinned = true, chains).schema,
             staged.schema, dir, meta.dropped), lines,
             added = staged.files, addedStats = staged.stats)
         // first commit / overwrite: full manifest of the staged files
@@ -3576,10 +3493,11 @@ object Snapshots {
       header: Seq[String] = Nil,
       preAttempt: Option[Int] => Unit = _ => ()): (Int, Staged) = {
     val spark = df.sparkSession
-    val (fs, root) = fsFor(spark, dir)
+    val chains = at.fold(chainsFor(spark, dir))(_.chains)
     shaped(at, df) { (rows, ia) =>
-      val staged = stageOn(fs, root, at.fold(Meta())(_.meta), rows)
-      (commitLoop(fs, root, spark, dir, staged, carryBase = true, op,
+      val staged =
+        stageOn(chains.fs, chains.root, at.fold(Meta())(_.meta), rows)
+      (commitLoop(chains, spark, dir, staged, carryBase = true, op,
         header, at.fold(Map.empty[String, String])(_.meta.constraints),
         ia.expect, ia.delta, preAttempt), staged)
     }
@@ -3673,9 +3591,9 @@ object Snapshots {
   private def overwrite(df: DataFrame, dir: String, header: Seq[String],
       guard: Option[Int] => Unit): Int = {
     val spark = df.sparkSession
-    val (fs, root) = fsFor(spark, dir)
+    val chains = chainsFor(spark, dir)
     guard(currentVersion(spark, dir))
-    commitLoop(fs, root, spark, dir, stage(df, fs, root),
+    commitLoop(chains, spark, dir, stage(df, chains.fs, chains.root),
       carryBase = false, op = "overwrite", header = header,
       preAttempt = guard)
   }
@@ -3704,11 +3622,12 @@ object Snapshots {
       body: (Seq[String], Option[Int] => Unit) => A): Option[A] = {
     require(writerId.matches("[A-Za-z0-9._-]+"),
       s"writerId must be [A-Za-z0-9._-]+, got '$writerId'")
-    val (fs, root) = fsFor(spark, dir)
+    val chains = chainsFor(spark, dir)
     var scanned = 0
     def guard(base: Option[Int]): Unit = base.filter(_ > scanned).foreach { b =>
-      val newest = versionsFs(fs, root).filter(v => v > scanned && v <= b)
-        .reverseIterator.flatMap(v => manifestLines(fs, root, v).collectFirst {
+      val newest = versionsFs(chains.fs, chains.root)
+        .filter(v => v > scanned && v <= b)
+        .reverseIterator.flatMap(v => chains(v).lines.collectFirst {
           case CommitTag(w, n) if w == writerId => n.toLong
         }).nextOption()
       if (newest.exists(_ >= batchId)) throw Replayed
@@ -3789,7 +3708,7 @@ object Snapshots {
       expectedVersion: Int = -1): Int = {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     maintenance(spark, dir, expectedVersion, "optimize") { at =>
-      val (mayMatch, _) = pruneFiles(spark, dir, pred, at.v)
+      val (mayMatch, _) = pruneAt(at, pred)
       if (mayMatch.isEmpty) at.v
       else maybeReanalyze(spark, dir, commitOn(at, "optimize-where", at.meta,
         Some(stageAt(at, Layout.cluster(at.scan(mayMatch),
@@ -3828,15 +3747,15 @@ object Snapshots {
     require(numFiles >= 1, s"numFiles must be >= 1, got $numFiles")
     require(cols.nonEmpty, "optimizeIncremental needs cluster columns")
     maintenance(spark, dir, expectedVersion, "optimize") { at =>
-      import at.{fs, root, v}
+      import at.v
       val clusteredSet: Option[Set[String]] =
         at.meta.props.get(OptimizeThroughProp).flatMap(_.toIntOption)
           .filter(t => t >= 1 && t <= v)
           .flatMap { t =>
-            try Some(readManifest(fs, root, t).toSet)
+            try Some(at.chains(t).files.toSet)
             catch { case NonFatal(_) => None } // marker vacuumed: full
           }
-      val cur = readManifest(fs, root, v)
+      val cur = at.chain.files
       val (untouched0, fresh0) = clusteredSet match {
         case Some(old) => cur.partition(old.contains)
         case None => (Seq.empty[String], cur) // first run: full layout
@@ -3846,7 +3765,7 @@ object Snapshots {
       val fresh =
         if (minFileBytes <= 0L) fresh0
         else {
-          val sz = sizesFor(fs, root, v)
+          val sz = at.chain.sizes
           fresh0 ++ untouched0.filter(f =>
             sz.getOrElse(f, Long.MaxValue) < minFileBytes)
         }
@@ -3891,10 +3810,8 @@ object Snapshots {
     * describes exactly the commit that wrote the layout). */
   def bucketSpecOf(spark: SparkSession, dir: String,
       version: Int = -1): Option[BucketSpec] = {
-    val (fs, root) = fsFor(spark, dir)
-    val vOpt = if (version >= 0) Some(version) else currentVersion(spark, dir)
-    vOpt.flatMap { v =>
-      manifestLines(fs, root, v).collectFirst {
+    atOpt(spark, dir, version).flatMap { at =>
+      at.chain.lines.collectFirst {
         case l if l.startsWith(BucketSpecPrefix) =>
           val f = l.substring(BucketSpecPrefix.length).split('\t')
           BucketSpec(f(0).toInt,
@@ -3952,17 +3869,14 @@ object Snapshots {
   def bucketedTable(spark: SparkSession, dir: String, name: String,
       version: Int = -1): DataFrame = {
     require(name.matches("[A-Za-z0-9_.]+"), s"unsafe table name '$name'")
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
+    val at = resolveAt(spark, dir, version)
+    import at.{fs, root, v}
     val spec = bucketSpecOf(spark, dir, v).getOrElse(
       throw new IllegalStateException(
         s"version $v of $dir is not a bucketed-layout commit — run " +
           "Snapshots.optimizeBucketed (appends after a bucketed commit " +
           "invalidate its layout)"))
-    val schema = schemaOf(fs, root, v).getOrElse(
-      allNullable(read(spark, dir, v).schema))
+    val schema = at.schema
     val loc = fs.makeQualified(new HPath(root, spec.rel)).toString
     val sorted =
       if (spec.sortCols.isEmpty) ""
@@ -4226,9 +4140,9 @@ object Snapshots {
     * the apply sees equal column sets and needs no mergeSchema. */
   private def alignReplicaSchema(spark: SparkSession, srcDir: String,
       appliedV: Int, srcV: Int, dstDir: String): Unit = {
-    val (sfs, sroot) = fsFor(spark, srcDir)
-    val before = schemaOf(sfs, sroot, appliedV).getOrElse(return)
-    val after = schemaOf(sfs, sroot, srcV).getOrElse(return)
+    val src = chainsFor(spark, srcDir)
+    val before = src(appliedV).meta.schema.getOrElse(return)
+    val after = src(srcV).meta.schema.getOrElse(return)
     val beforeByPhys = before.fields.map(f => physOf(f) -> f).toMap
     val afterByPhys = after.fields.map(f => physOf(f) -> f).toMap
     if (beforeByPhys.keySet == afterByPhys.keySet &&
@@ -4239,10 +4153,7 @@ object Snapshots {
     // listing + manifest parse
     var dstCache: Option[StructType] = None
     def dstSchema(): StructType = dstCache.getOrElse {
-      val (dfs, droot) = fsFor(spark, dstDir)
-      val dv = currentVersion(spark, dstDir).get
-      val sc = schemaOf(dfs, droot, dv).getOrElse(
-        allNullable(read(spark, dstDir, dv).schema))
+      val sc = resolveAt(spark, dstDir, -1).schema
       dstCache = Some(sc)
       sc
     }
@@ -4309,10 +4220,9 @@ object Snapshots {
     * common case — skip the version walk entirely. */
   private def projectFeedTo(spark: SparkSession, srcDir: String,
       appliedV: Int, srcV: Int, feed: DataFrame): DataFrame = {
-    val (sfs, sroot) = fsFor(spark, srcDir)
-    val after = schemaOf(sfs, sroot, srcV)
-      .getOrElse(allNullable(read(spark, srcDir, srcV).schema))
-    val beforeByPhys = schemaOf(sfs, sroot, appliedV)
+    val at = resolveAt(spark, srcDir, srcV)
+    val after = at.schema
+    val beforeByPhys = at.chains(appliedV).meta.schema
       .map(_.fields.map(f => physOf(f) -> f).toMap)
       .getOrElse(after.fields.map(f => physOf(f) -> f).toMap)
     val feedCols = feed.columns.toSet
@@ -4323,7 +4233,7 @@ object Snapshots {
     // materialized under drift)
     lazy val winSchemas: Seq[(Int, Option[StructType])] =
       versions(spark, srcDir).filter(v => v > appliedV && v <= srcV)
-        .map(v => v -> schemaOf(sfs, sroot, v))
+        .map(v => v -> at.chains(v).meta.schema)
     val projected = after.fields.toSeq.map { f =>
       val p = physOf(f)
       def absentRead: Column =
@@ -4548,18 +4458,18 @@ object Snapshots {
     * versions) returns false and the caller falls back to the full
     * recompute. Cost when it applies: O(range) manifest reads + one
     * local prune evaluation — no data touched, no job run. */
-  private def rebaseSafe(spark: SparkSession, fs: FileSystem, root: HPath,
-      dir: String, from: Int, tip: Int,
+  private def rebaseSafe(at: At, from: Int, tip: Int,
       footprint: Option[Column]): Boolean = {
     if (tip <= from || tip - from > 16) return false
-    val range = versionsFs(fs, root).filter(x => x > from && x <= tip)
+    val c = at.chains
+    val range = versionsFs(c.fs, c.root).filter(x => x > from && x <= tip)
     if (range.size != tip - from) return false // vacuumed hole mid-range
-    if (metaAt(fs, root, tip) != metaAt(fs, root, from)) return false
-    if (dvFor(fs, root, tip) != dvFor(fs, root, from)) return false
-    var prev = readManifest(fs, root, from).toSet
+    if (c(tip).meta != c(from).meta) return false
+    if (c(tip).dv != c(from).dv) return false
+    var prev = c(from).files.toSet
     val added = Seq.newBuilder[String]
     range.foreach { iv =>
-      val cur = readManifest(fs, root, iv).toSet
+      val cur = c(iv).files.toSet
       if (!prev.subsetOf(cur)) return false // something was removed
       added ++= (cur -- prev)
       prev = cur
@@ -4568,7 +4478,7 @@ object Snapshots {
     newFiles.isEmpty || (footprint match {
       case None => true
       case Some(pred) =>
-        val (mayMatch, _) = pruneFiles(spark, dir, pred, tip)
+        val (mayMatch, _) = pruneAt(at.at(tip), pred)
         val kept = mayMatch.toSet
         newFiles.forall(f => !kept(f))
     })
@@ -4606,7 +4516,7 @@ object Snapshots {
       rebases += 1
       val tip = currentVersion(at.spark, at.dir).getOrElse(base)
       if (!at.unpinned || rebases > 8 ||
-          !rebaseSafe(at.spark, at.fs, at.root, at.dir, base, tip, footprint))
+          !rebaseSafe(at, base, tip, footprint))
         throw new java.util.ConcurrentModificationException(
           s"$what on ${at.dir}@v$base lost the commit race — a writer " +
             s"landed v${base + 1} first and its changes may overlap " +
@@ -4630,20 +4540,36 @@ object Snapshots {
   //     deletion vectors. A copy-on-write verb and its `*Light` twin
   //     share everything but the apply.
 
-  /** One DML attempt's base: version `v` of `dir`. `unpinned` when the
-    * caller gave no `expectedVersion` — the only case a lost race may
-    * rebase ([[commitWithRebase]]) or retry ([[retryOnRace]]). */
+  /** One call's base: version `v` of `dir`, its chain resolved through
+    * the call's [[Chains]]. `unpinned` when the caller gave no
+    * `expectedVersion` — the only case a lost race may rebase
+    * ([[commitWithRebase]]) or retry ([[retryOnRace]]). */
   private final case class At(spark: SparkSession, dir: String, v: Int,
-      unpinned: Boolean) {
-    val (fs, root) = fsFor(spark, dir)
-    lazy val meta: Meta = metaAt(fs, root, v)
-    lazy val table: DataFrame = read(spark, dir, v)
+      unpinned: Boolean, chains: Chains) {
+    val fs: FileSystem = chains.fs
+    val root: HPath = chains.root
+    lazy val chain: Chain = chains(v)
+    def meta: Meta = chain.meta
+    lazy val table: DataFrame = {
+      require(chain.files.nonEmpty, s"manifest v$v of $dir lists no files")
+      scan(chain.files)
+    }
     def pinned: Option[StructType] = meta.schema
     /** The pinned schema, else the footer-inferred one (tables written
       * before schema pinning). */
     lazy val schema: StructType = pinned.getOrElse(allNullable(table.schema))
-    def scan(files: Seq[String]): DataFrame =
-      readFilesAs(spark, fs, root, v, files)
+    /** `files` under this version's pinned schema (files predating an
+      * added column yield NULL there; pre-pinning manifests fall back to
+      * footer inference), renamed columns read under their PHYSICAL
+      * file name and surfaced under the logical one (a Project over the
+      * scan — filters and column pruning push through it), and version
+      * `dvV`'s deletion vectors anti-joined out — [[diff]] reads a
+      * removed file under the newer schema but its OWN version's
+      * vectors. */
+    def scan(files: Seq[String], dvV: Int = v): DataFrame =
+      scanWithMeta(this, files, dvV).drop(GfCol, GposCol)
+    /** Version `w` of the same table, through the same [[Chains]]. */
+    def at(w: Int): At = copy(v = w)
   }
 
   /** The one entry of the snapshot writers: run `body` on the base —
@@ -4656,10 +4582,7 @@ object Snapshots {
     * [[maintenance]] verbs) throws unpinned too. */
   private def dml[A](spark: SparkSession, dir: String, expectedVersion: Int,
       verb: String, retry: Boolean = true)(body: Option[At] => A): A = {
-    def attempt(): A = body(
-      (if (expectedVersion >= 0) Some(expectedVersion)
-      else currentVersion(spark, dir))
-        .map(At(spark, dir, _, unpinned = expectedVersion < 0)))
+    def attempt(): A = body(atOpt(spark, dir, expectedVersion))
     if (expectedVersion >= 0 || !retry) attempt()
     else retryOnRace(s"$verb on $dir")(attempt())
   }
@@ -4706,7 +4629,7 @@ object Snapshots {
     val stats = staged.fold(Seq.empty[String])(_.stats)
     val won = removed match {
       case Some(gone) =>
-        casChange(fs, root, v, schema, header, gone, files, stats, newDv)
+        casChange(at.chains, v, schema, header, gone, files, stats, newDv)
       case None =>
         casManifest(fs, root, v + 1, files,
           schemaHeader(schema) +: (header ++ stats))
@@ -4771,11 +4694,10 @@ object Snapshots {
     val header = at.meta.withProps(delta).header ++ opHeader(op) ++ extra
     val committed = commitWithRebase(at, footprint, op) { b =>
       guard(Some(b))
-      casChange(at.fs, at.root, b, pinned, header, removed, staged.files,
+      casChange(at.chains, b, pinned, header, removed, staged.files,
         staged.stats)
     }
-    (committed, untouchedAfter(at.fs, at.root, at.v, committed, removed,
-      untouched))
+    (committed, untouchedAfter(at, committed, removed, untouched))
   }
 
   /** What [[applyDv]] did: the version after it (the base when nothing
@@ -4799,11 +4721,11 @@ object Snapshots {
       delta: Map[String, String] = Map.empty, persist: Boolean = false)(
       matchedIn: DataFrame => DataFrame)(
       images: Option[DataFrame] => Option[DataFrame]): DvApplied = {
-    import at.{dir, fs, root, v}
+    import at.{dir, v}
     require(maxPositions >= 0,
       s"$what: maxPositions must be >= 0, got $maxPositions")
     val matched = if (mayMatch.isEmpty) None else Some {
-      val m = matchedIn(scanWithMeta(at.spark, fs, root, v, v, mayMatch))
+      val m = matchedIn(scanWithMeta(at, mayMatch, v))
       if (persist) m.persist() else m
     }
     try {
@@ -4820,7 +4742,7 @@ object Snapshots {
         .map(stageAt(at, _))
       if (hits.isEmpty && staged.isEmpty) DvApplied(v, 0L, 0, 0, 0)
       else {
-        val (dropped, newDv) = foldPositions(fs, root, v, s"$what on $dir",
+        val (dropped, newDv) = foldPositions(at, s"$what on $dir",
           hits, mayMatch, staged.flatMap(_.files.headOption)
             .fold(s"$DataDir/${java.util.UUID.randomUUID}")(f =>
               f.take(f.lastIndexOf('/'))))
@@ -4995,9 +4917,10 @@ object Snapshots {
         case None =>
           // empty table: tombstones have nothing to delete, the merge is
           // the first append
-          val (fs, root) = fsFor(spark, dir)
+          val chains = chainsFor(spark, dir)
           MergeResult(
-            commitLoop(fs, root, spark, dir, stage(source, fs, root),
+            commitLoop(chains, spark, dir,
+              stage(source, chains.fs, chains.root),
               carryBase = true, op = "merge", header = header,
               propsDelta = propsDelta, preAttempt = guard),
             rewrittenFiles = 0, untouchedFiles = 0)
@@ -5034,11 +4957,9 @@ object Snapshots {
     * untouched, dropped whole, the rewrite set's surviving rows). */
   private def classifyDelete(at: At, pred: Column)
       : (Seq[String], Seq[String], Seq[String], Option[DataFrame]) = {
-    val (mayMatch, untouched, survivors) =
-      pruneBoth(at.spark, at.dir, pred, at.v)
-    val (maySurvive, dropWhole) = splitDropWholeWith(at.spark, at.dir,
-      at.fs, at.root, pred, at.v, mayMatch, survivors,
-      statsFor(at.fs, at.root, at.v))
+    val (mayMatch, untouched, survivors) = pruneBoth(at, pred)
+    val (maySurvive, dropWhole) =
+      splitDropWholeWith(at, pred, mayMatch, survivors)
     (mayMatch, untouched, dropWhole,
       if (maySurvive.isEmpty) None
       else Some(at.scan(maySurvive).filter(!isTrue(pred))))
@@ -5108,8 +5029,7 @@ object Snapshots {
       }.reduce(_ && _))
     }
     val (mayMatch, untouched) = fp.fold(
-      (Seq.empty[String], readManifest(at.fs, at.root, at.v)))(
-      pruneFiles(at.spark, at.dir, _, at.v))
+      (Seq.empty[String], at.chain.files))(pruneAt(at, _))
     (fp, mayMatch, untouched)
   }
 
@@ -5177,14 +5097,13 @@ object Snapshots {
     * is fail-open: the file stays in the rewrite set, where the row
     * filter gets the semantics exactly right. Returns
     * (maySurvive → rewrite, dropWhole). */
-  private def splitDropWholeWith(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, pred: Column, base: Int,
-      mayMatch: Seq[String], survivors: Set[String],
-      stats: Map[String, Map[String, ColStats]])
+  private def splitDropWholeWith(at: At, pred: Column,
+      mayMatch: Seq[String], survivors: Set[String])
       : (Seq[String], Seq[String]) =
     if (mayMatch.isEmpty) (Nil, Nil)
     else {
-      val table = read(spark, dir, base)
+      val table = at.table
+      val stats = at.chain.stats
       val refs = table.filter(pred).queryExecution.analyzed
         .collectFirst { case f: Filter => f.condition }
         .map(_.references.map(_.name).toSeq.distinct).getOrElse(Nil)
@@ -5320,7 +5239,7 @@ object Snapshots {
     dmlOn(spark, dir, expectedVersion, "update") { at =>
       val cols = at.table.schema
       val assigned = assignedOf(dir, cols, assignments)
-      val (mayMatch, untouched) = pruneFiles(spark, dir, pred, at.v)
+      val (mayMatch, untouched) = pruneAt(at, pred)
       if (mayMatch.isEmpty) UpdateResult(at.v, 0, untouched.length)
       else {
         val rows = assign(cols, assigned, isTrue(pred))(at.scan(mayMatch))
@@ -5338,12 +5257,12 @@ object Snapshots {
   /** Files a keyed/predicate DML commit carried by name: `untouched`
     * when it landed on its own base, else the rebased tip's files
     * minus the `removed` ones (interlopers' adds carried too). */
-  private def untouchedAfter(fs: FileSystem, root: HPath, base: Int,
-      committed: Int, removed: Seq[String], untouched: Seq[String]): Int =
-    if (committed == base + 1) untouched.length
+  private def untouchedAfter(at: At, committed: Int, removed: Seq[String],
+      untouched: Seq[String]): Int =
+    if (committed == at.v + 1) untouched.length
     else {
       val gone = removed.toSet
-      readManifest(fs, root, committed - 1).count(!gone(_))
+      at.chains(committed - 1).files.count(!gone(_))
     }
 
   /** Copy-on-write KEY-FRAME update — the UPDATE twin of
@@ -5415,17 +5334,17 @@ object Snapshots {
       throw new java.util.NoSuchElementException(s"nothing to restore in $dir"))
     require(versions(spark, dir).contains(version),
       s"version $version does not exist in $dir")
-    val files = readManifest(fs, root, version)
+    val chain = new Chains(fs, root)(version)
+    val files = chain.files
     val missing = files.filterNot(f => fs.exists(new HPath(root, f)))
     require(missing.isEmpty,
       s"cannot restore $dir to v$version: ${missing.size} of its files " +
         s"were vacuumed (first: ${missing.headOption.getOrElse("")})")
-    val meta = metaAt(fs, root, version)
+    val meta = chain.meta
     val header =
       meta.schema.map(schemaHeader).toSeq ++ meta.header ++
         opHeader("restore") ++
-        dvLines(dvFor(fs, root, version), files.toSet) ++
-        statsLines(fs, root, version, files.toSet)
+        dvLines(chain.dv, files.toSet) ++ chain.fileLinesOf(files.toSet)
     val next = cur + 1
     if (!casManifest(fs, root, next, files, header))
       throw new java.util.ConcurrentModificationException(
@@ -5451,17 +5370,21 @@ object Snapshots {
     * new files). Append-only histories skip the exceptAll entirely.
     */
   def diff(spark: SparkSession, dir: String, fromVersion: Int,
-      toVersion: Int): DataFrame = {
+      toVersion: Int): DataFrame =
+    diffAt(resolveAt(spark, dir, toVersion), fromVersion)
+
+  /** [[diff]] from `fromVersion` to `to`, through `to`'s chains. */
+  private def diffAt(to: At, fromVersion: Int): DataFrame = {
     import org.apache.spark.sql.functions.lit
-    val (fs, root) = fsFor(spark, dir)
-    val fromF = readManifest(fs, root, fromVersion).toSet
-    val toF = readManifest(fs, root, toVersion).toSet
+    val from = to.chains(fromVersion)
+    val fromF = from.files.toSet
+    val toF = to.chain.files.toSet
     // a file in both versions whose deletion vector CHANGED no longer
     // contributes identical rows to both sides: it re-enters the scan
     // on both, each side read under its own DV state, and the row-level
     // exceptAll cancels what survived on both
-    val dvFromM = dvFor(fs, root, fromVersion)
-    val dvToM = dvFor(fs, root, toVersion)
+    val dvFromM = from.dv
+    val dvToM = to.chain.dv
     val drifted = (fromF intersect toF)
       .filter(f => dvFromM.get(f) != dvToM.get(f))
     val addedFiles = ((toF -- fromF) ++ drifted).toSeq.sorted
@@ -5471,11 +5394,10 @@ object Snapshots {
     // sides read under toVersion's pinned schema, so after an additive
     // evolution the diff is expressed in the newer shape (older rows
     // carry NULL in columns that postdate them).
-    lazy val empty = read(spark, dir, toVersion).limit(0)
+    lazy val empty = to.table.limit(0)
     def readFiles(files: Seq[String], dvV: Int): DataFrame =
-      if (files.isEmpty) empty
-      else readFilesWith(spark, fs, root, toVersion, dvV, files)
-    val added = readFiles(addedFiles, toVersion)
+      if (files.isEmpty) empty else to.scan(files, dvV)
+    val added = readFiles(addedFiles, to.v)
     val removed = readFiles(removedFiles, fromVersion)
     val inserts =
       (if (removedFiles.isEmpty) added else added.exceptAll(removed))
@@ -5501,27 +5423,24 @@ object Snapshots {
     * version-by-version via [[diff]]). */
   def changesSince(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Int = -1): DataFrame = {
-    val (fs, root) = fsFor(spark, dir)
-    val to = if (toVersion >= 0) toVersion else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
-    val (fromF, toF) = appendOnlyGuard(fs, root, dir, fromVersion, to)
+    val at = resolveAt(spark, dir, toVersion)
+    val (fromF, toF) = appendOnlyGuard(at, fromVersion)
     val added = (toF -- fromF).toSeq.sorted
-    if (added.isEmpty) read(spark, dir, to).limit(0)
-    else readFilesAs(spark, fs, root, to, added)
+    if (added.isEmpty) at.table.limit(0) else at.scan(added)
   }
 
   /** The shared [[changesSince]] precondition: between `fromVersion`
-    * and `to`, nothing of the base may have been rewritten (files) or
+    * and `at`, nothing of the base may have been rewritten (files) or
     * re-characterized (deletion vectors) — otherwise appended-files no
     * longer describe the change and the consumer must re-sync. Returns
     * the two manifests' file sets. */
-  private def appendOnlyGuard(fs: FileSystem, root: HPath, dir: String,
-      fromVersion: Int, to: Int): (Set[String], Set[String]) = {
+  private def appendOnlyGuard(at: At,
+      fromVersion: Int): (Set[String], Set[String]) = {
+    import at.{dir, v => to}
     val fromF =
       if (fromVersion == 0) Set.empty[String]
-      else readManifest(fs, root, fromVersion).toSet
-    val toF = readManifest(fs, root, to).toSet
+      else at.chains(fromVersion).files.toSet
+    val toF = at.chain.files.toSet
     val removed = fromF -- toF
     if (removed.nonEmpty)
       throw new IllegalStateException(
@@ -5532,8 +5451,8 @@ object Snapshots {
     // deletion vectors break the file-identity-implies-content-identity
     // premise the same way a rewrite does — fail as loudly
     if (fromVersion != 0) {
-      val dvFromM = dvFor(fs, root, fromVersion)
-      val dvToM = dvFor(fs, root, to)
+      val dvFromM = at.chains(fromVersion).dv
+      val dvToM = at.chain.dv
       val drifted = fromF.filter(f => dvFromM.get(f) != dvToM.get(f))
       if (drifted.nonEmpty)
         throw new IllegalStateException(
@@ -5558,14 +5477,14 @@ object Snapshots {
     * only; no data touched. */
   def appendedFilesByVersion(spark: SparkSession, dir: String,
       fromVersion: Int, toVersion: Int): Seq[(Int, Seq[String])] = {
-    val (fs, root) = fsFor(spark, dir)
-    val (fromF, toF) = appendOnlyGuard(fs, root, dir, fromVersion, toVersion)
+    val at = resolveAt(spark, dir, toVersion)
+    val (fromF, toF) = appendOnlyGuard(at, fromVersion)
     val walk = versions(spark, dir)
       .filter(v => v > fromVersion && v <= toVersion)
     var prev = fromF
     val seen = scala.collection.mutable.Set[String]()
     walk.map { v =>
-      val cur = readManifest(fs, root, v).toSet
+      val cur = at.chains(v).files.toSet
       val appeared = (cur -- prev).filterNot(seen).toSeq.sorted
       val gone = appeared.filterNot(toF)
       if (gone.nonEmpty)
@@ -5585,9 +5504,8 @@ object Snapshots {
     * partial-batch reader behind `maxFilesPerTrigger`. */
   def readAppendedSlice(spark: SparkSession, dir: String,
       toVersion: Int, files: Seq[String]): DataFrame = {
-    val (fs, root) = fsFor(spark, dir)
-    if (files.isEmpty) read(spark, dir, toVersion).limit(0)
-    else readFilesAs(spark, fs, root, toVersion, files)
+    val at = resolveAt(spark, dir, toVersion)
+    if (files.isEmpty) at.table.limit(0) else at.scan(files)
   }
 
   /** The row-level CHANGE FEED across `(fromVersion, toVersion]`:
@@ -5686,10 +5604,8 @@ object Snapshots {
   def changeFeed(spark: SparkSession, dir: String, fromVersion: Int,
       toVersion: Int = -1): DataFrame = {
     import org.apache.spark.sql.functions.{broadcast, lit}
-    val (fs, root) = fsFor(spark, dir)
-    val to = if (toVersion >= 0) toVersion else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no committed version under $dir"))
+    val at = resolveAt(spark, dir, toVersion)
+    import at.{chains, fs, root, v => to}
     val vs = versions(spark, dir)
     require(fromVersion == 0 || vs.contains(fromVersion),
       s"change feed base v$fromVersion of $dir is not retained " +
@@ -5711,7 +5627,7 @@ object Snapshots {
         val byFile = run.reverse.flatMap { case (v, fl) =>
           fl.map(f => (phys(f), v))
         }.toDF("__cf_file", "_commit_version")
-        segs += scanWithMeta(spark, fs, root, endV, endV, files)
+        segs += scanWithMeta(at.at(endV), files, endV)
           .join(broadcast(byFile), col(GfCol) === col("__cf_file"))
           .drop(GfCol, GposCol, "__cf_file")
           .withColumn("_change_type", lit("insert"))
@@ -5721,39 +5637,39 @@ object Snapshots {
     var prev = fromVersion
     var prevF =
       if (fromVersion == 0) Set.empty[String]
-      else readManifest(fs, root, fromVersion).toSet
+      else chains(fromVersion).files.toSet
     walk.foreach { v =>
-      val curF = readManifest(fs, root, v).toSet
+      val curF = chains(v).files.toSet
+      val mLines = chains(v).lines
       val common = prevF intersect curF
       val dvDrift = prev != 0 && common.nonEmpty && {
-        val a = dvFor(fs, root, prev); val b = dvFor(fs, root, v)
+        val a = chains(prev).dv; val b = chains(v).dv
         common.exists(f => a.get(f) != b.get(f))
       }
       if ((prevF -- curF).isEmpty && !dvDrift)
         run = (v, (curF -- prevF).toSeq.sorted) :: run
       else if (prev == v - 1 &&
-          opOf(manifestLines(fs, root, v)).exists(ContentIdenticalOps)) {
+          opOf(mLines).exists(ContentIdenticalOps)) {
         // a declared content-identical rewrite: zero change rows by
         // construction — no scan, and it does not break a run's
         // neighbors into separate scans more than necessary
         flushRun()
       } else if (prev == v - 1 && (prevF -- curF).isEmpty &&
-          opOf(manifestLines(fs, root, v)).exists(DvAccretiveOps)) {
+          opOf(mLines).exists(DvAccretiveOps)) {
         // DV-accretive DML: inserts are the appended image files
         // (live rows under v's vectors), deletes are the rows at the
         // newly vectored positions of the drifted files — read ONCE
         // positionally, instead of diff's two-sided exceptAll over
         // the drifted files' full bytes
         flushRun()
-        val mLines = manifestLines(fs, root, v)
         val appended = (curF -- prevF).toSeq.sorted
         val ins =
           if (appended.isEmpty) None
-          else Some(readFilesAs(spark, fs, root, v, appended)
+          else Some(at.at(v).scan(appended)
             .withColumn("_change_type", lit("insert"))
             .withColumn("_commit_version", lit(v)))
-        val prevDv = dvFor(fs, root, prev)
-        val curDv = dvFor(fs, root, v)
+        val prevDv = chains(prev).dv
+        val curDv = chains(v).dv
         val drifted = (prevF intersect curF)
           .filter(f => prevDv.get(f) != curDv.get(f)).toSeq.sorted
         val del =
@@ -5761,7 +5677,7 @@ object Snapshots {
           else {
             val newPos = dvNewPositions(spark, root, prevDv, curDv,
               drifted, physicalPaths(fs, root, drifted).toMap)
-            Some(scanWithMeta(spark, fs, root, v, prev, drifted)
+            Some(scanWithMeta(at.at(v), drifted, prev)
               .join(newPos, col(GfCol) === col("__dv_file") &&
                 col(GposCol) === col("__dv_pos"))
               .drop(GfCol, GposCol, "__dv_file", "__dv_pos")
@@ -5783,8 +5699,7 @@ object Snapshots {
           }
       } else {
         flushRun()
-        val mLines = manifestLines(fs, root, v)
-        val d = diff(spark, dir, prev, v)
+        val d = diffAt(at.at(v), prev)
           .withColumnRenamed("change_type", "_change_type")
           .withColumn("_commit_version", lit(v))
         // CoW DML (and DV DML that dropped whole files, which lands
@@ -5803,7 +5718,7 @@ object Snapshots {
     }
     flushRun()
     if (segs.isEmpty)
-      read(spark, dir, to).limit(0)
+      at.table.limit(0)
         .withColumn("_change_type", lit(null).cast(StringType))
         .withColumn("_commit_version", lit(null).cast(IntegerType))
     else segs.reduce(_.unionByName(_, allowMissingColumns = true))
@@ -5819,22 +5734,16 @@ object Snapshots {
   def files(spark: SparkSession, dir: String,
       version: Int = -1): DataFrame = {
     import spark.implicits._
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version else currentVersion(spark, dir)
-      .getOrElse(throw new java.util.NoSuchElementException(
-        s"no table under $dir"))
-    val sizes = sizesFor(fs, root, v)
-    val stats = statsFor(fs, root, v)
-    val dv = dvFor(fs, root, v)
-    readManifest(fs, root, v).map { f =>
-      val st = stats.getOrElse(f, Map.empty)
+    val chain = atOpt(spark, dir, version).getOrElse(throw
+      new java.util.NoSuchElementException(s"no table under $dir")).chain
+    chain.files.map { f =>
+      val st = chain.stats.getOrElse(f, Map.empty)
       val span = st.toSeq.sortBy(_._1).map { case (c, cs) =>
         s"$c: ${cs.min.getOrElse("?")} .. ${cs.max.getOrElse("?")}" +
           (if (cs.nulls > 0) s" (${cs.nulls} null)" else "")
       }.mkString("; ")
-      (f, sizes.getOrElse(f, -1L),
-        st.headOption.map(_._2.rows).getOrElse(-1L),
-        dv.get(f).map(_._2).getOrElse(0L), span)
+      (f, chain.sizes.getOrElse(f, -1L), chain.rowsOf(f).getOrElse(-1L),
+        chain.dv.get(f).map(_._2).getOrElse(0L), span)
     }.toDF("file", "bytes", "rows", "deleted_rows", "column_spans")
   }
 
@@ -5856,12 +5765,13 @@ object Snapshots {
   def audit(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (fs, root) = fsFor(spark, dir)
+    val chains = new Chains(fs, root)
     val vs = versions(spark, dir)
     val referenced = scala.collection.mutable.LinkedHashMap[String, Long]()
     val rows = scala.collection.mutable.ArrayBuffer[(String, String, Long, Long)]()
     vs.foreach { v =>
-      val sizes = sizesFor(fs, root, v)
-      val listed = readManifest(fs, root, v)
+      val sizes = chains(v).sizes
+      val listed = chains(v).files
       // foreign (clone-source) refs resolve through _moved markers
       // exactly as reads do — but audit DIAGNOSES a dead unmarked
       // source (`source_moved_or_dropped`) instead of throwing: the
@@ -6042,17 +5952,18 @@ object Snapshots {
     * n_added / n_removed (file-level change vs the previous version),
     * n_files (total after the commit), bytes_added (commit-time sizes
     * of the added files). Pure manifest metadata — nothing scanned;
-    * the driver-side cost is resolving each version's file list once
-    * (chain-bounded by the checkpoint interval). */
+    * each version resolves on top of its predecessor's chain, so every
+    * manifest is opened once. */
   def history(spark: SparkSession, dir: String): DataFrame = {
     import spark.implicits._
     val (fs, root) = fsFor(spark, dir)
+    val chains = new Chains(fs, root)
     val vs = versions(spark, dir)
     val retained = vs.toSet
     var prev = Set.empty[String]
     val rows = vs.map { v =>
-      val lines = manifestLines(fs, root, v)
-      val resolved = readManifest(fs, root, v)
+      val chain = chains(v)
+      val resolved = chain.files
       val cur = resolved.toSet
       // the file-level delta is only meaningful against the TRUE
       // previous version: after a vacuum the oldest surviving commit
@@ -6063,13 +5974,12 @@ object Snapshots {
       val haveDelta = v == 1 || retained.contains(v - 1)
       val added = cur -- prev
       val removed = (prev -- cur).size
-      val sizes = sizesFor(fs, root, v)
-      val bytesAdded = added.toSeq.flatMap(sizes.get).sum
+      val bytesAdded = added.toSeq.flatMap(chain.sizes.get).sum
       val ts = new java.sql.Timestamp(
         fs.getFileStatus(manifestPath(root, v)).getModificationTime)
-      val kind = if (deltaHeader(lines).nonEmpty) "delta" else "full"
+      val kind = if (chain.baseVersion.nonEmpty) "delta" else "full"
       prev = cur
-      (v, ts, opOf(lines).getOrElse("unknown"), kind,
+      (v, ts, opOf(chain.lines).getOrElse("unknown"), kind,
         if (haveDelta) Some(added.size) else None,
         if (haveDelta) Some(removed) else None,
         resolved.size,
@@ -6108,12 +6018,13 @@ object Snapshots {
         s"no committed version under $srcDir"))
     require(currentVersion(spark, dstDir).isEmpty,
       s"cannot clone into $dstDir: already a snapshot table")
-    val files = readManifest(sfs, sroot, v)
+    val src = new Chains(sfs, sroot)(v)
+    val files = src.files
     def abs(rel: String): String =
       if (!ownedByRoot(rel)) rel // clone-of-clone: keep the original ref
       else sfs.makeQualified(new HPath(sroot, rel)).toString
-    val meta = (statsLines(sfs, sroot, v, files.toSet) ++
-      dvLines(dvFor(sfs, sroot, v), files.toSet)).flatMap { l =>
+    val meta = (src.fileLinesOf(files.toSet) ++
+      dvLines(src.dv, files.toSet)).flatMap { l =>
       l.split('\t') match {
         case Array(kind, f, rest @ _*) =>
           // #bloom lines carry a sidecar path LAST, #dv lines carry one
@@ -6128,7 +6039,7 @@ object Snapshots {
         case _ => None
       }
     }
-    val carried = metaAt(sfs, sroot, v)
+    val carried = src.meta
     val header = carried.schema.map(schemaHeader).toSeq ++ carried.header ++
       opHeader("clone") ++ meta
     val (dfs, droot) = fsFor(spark, dstDir)
@@ -6159,17 +6070,16 @@ object Snapshots {
     require(maxDeletedFraction > 0 && maxDeletedFraction < 1,
       s"maxDeletedFraction must be in (0, 1), got $maxDeletedFraction")
     maintenance(spark, dir, expectedVersion, "fold") { at =>
-      import at.{fs, root, v}
-      val files = readManifest(fs, root, v)
+      import at.{chain, v}
+      val files = chain.files
       val fileSet = files.toSet
-      val stats = statsFor(fs, root, v)
-      val dv = dvFor(fs, root, v).filter { case (f, (_, n)) =>
+      val dv = chain.dv.filter { case (f, (_, n)) =>
         n > 0 && fileSet.contains(f)
       }
       val target = dv.filter { case (f, (_, n)) =>
         // no recorded row count (pre-stats writer): over-threshold by
         // definition unknowable — fold it, the safe-and-finite choice
-        stats.get(f).flatMap(_.headOption.map(_._2.rows)) match {
+        chain.rowsOf(f) match {
           case Some(rows) if rows > 0 => n.toDouble / rows > maxDeletedFraction
           case _ => true
         }
@@ -6214,9 +6124,9 @@ object Snapshots {
       dvFoldFraction: Double = 0.1): MaintainResult = {
     require(targetFiles >= 1 && maxFiles >= targetFiles,
       s"need maxFiles >= targetFiles >= 1, got $maxFiles/$targetFiles")
-    val (fs, root) = fsFor(spark, dir)
-    val compacted = currentVersion(spark, dir).flatMap { v =>
-      if (readManifest(fs, root, v).size > maxFiles) {
+    val compacted = atOpt(spark, dir, -1).flatMap { at =>
+      val v = at.v
+      if (at.chain.files.size > maxFiles) {
         val cluster = clusterColumns(spark, dir)
         if (cluster.nonEmpty) {
           // multi-key Z-order, or pure range layout for one key —
@@ -6274,8 +6184,9 @@ object Snapshots {
   def cleanOrphans(spark: SparkSession, dir: String,
       olderThanMs: Long = 24L * 3600 * 1000): Int = {
     val (fs, root) = fsFor(spark, dir)
+    val chains = new Chains(fs, root)
     val vs = versions(spark, dir)
-    val live = vs.flatMap(readManifest(fs, root, _)).toSet
+    val live = vs.flatMap(chains(_).files).toSet
     // live SIDECARS too: a deletion-vector commit stages `_dv.*.bin`
     // files in a parquet-less commit dir, and a bloom index lives
     // beside data files other manifests own — a dir holding a sidecar
@@ -6285,7 +6196,7 @@ object Snapshots {
     // chain closure — so the union of retained versions' own lines
     // covers all chain-referenced sidecars.)
     val liveSidecars = vs
-      .flatMap(v => manifestLines(fs, root, v).flatMap(sidecarRefOf))
+      .flatMap(v => chains(v).lines.flatMap(sidecarRefOf))
       .toSet
     val cutoff = System.currentTimeMillis() - olderThanMs
     val dataRoot = new HPath(root, DataDir)
@@ -6615,16 +6526,16 @@ object Snapshots {
     * record (delta manifests are not chain-resolved here — each
     * commit's ledger lives in its own file; the consumer unions over
     * every retained version). */
-  private def ingestedLinesOf(fs: FileSystem, root: HPath,
-      v: Int): Seq[String] =
-    manifestLines(fs, root, v).collect {
+  private def ingestedLinesOf(chain: Chain): Seq[String] =
+    chain.lines.collect {
       case l if l.startsWith(IngestedPrefix) =>
         dec(l.substring(IngestedPrefix.length).split('\t')(0))
     }
 
   private def ingestedOf(fs: FileSystem, root: HPath,
       vs: Seq[Int]): Set[String] = {
-    val fromManifests = vs.flatMap(ingestedLinesOf(fs, root, _))
+    val chains = new Chains(fs, root)
+    val fromManifests = vs.flatMap(v => ingestedLinesOf(chains(v)))
     val d = new HPath(root, IngestDir)
     val fromMarkers =
       if (!fs.exists(d)) Nil
@@ -6646,10 +6557,10 @@ object Snapshots {
     * duplicate entries across markers are harmless (the consumer is
     * a set union). Written temp-then-rename like every other sidecar
     * marker: readers never see a half-written ledger. */
-  private def syncIngestMarkers(fs: FileSystem, root: HPath,
-      drop: Seq[Int]): Unit = {
+  private def syncIngestMarkers(chains: Chains, drop: Seq[Int]): Unit = {
+    import chains.{fs, root}
     val lines = drop.flatMap(v =>
-      manifestLines(fs, root, v).filter(_.startsWith(IngestedPrefix))
+      chains(v).lines.filter(_.startsWith(IngestedPrefix))
         .map(_.substring(IngestedPrefix.length)))
     if (lines.isEmpty) return
     val body = lines.distinct.sorted.mkString("\n")
@@ -6764,7 +6675,8 @@ object Snapshots {
             // abort to the outer retry (re-diff), never double-load
             val dup =
               try (curV + 1 to base.getOrElse(0)).exists(nv =>
-                ingestedLinesOf(fs, root, nv).exists(batch.contains))
+                ingestedLinesOf(new Chains(fs, root)(nv))
+                  .exists(batch.contains))
               catch { case NonFatal(_) => true } // unprovable: re-diff
             if (dup) throw new java.util.ConcurrentModificationException(
               s"COPY INTO $dir lost a race: a concurrent copyInto " +
@@ -7447,22 +7359,14 @@ object Snapshots {
     * cheap enough to consult on every statistics load. */
   def liveRowsExact(spark: SparkSession, dir: String,
       version: Int = -1): Option[Long] = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = if (version >= 0) version
-    else currentVersion(spark, dir).getOrElse(return None)
-    liveRowsOfManifest(fs, root, v)
+    atOpt(spark, dir, version).flatMap(at => liveRowsOf(at.chain))
   }
 
-  private def liveRowsOfManifest(fs: FileSystem, root: HPath,
-      v: Int): Option[Long] = {
-    val files = readManifest(fs, root, v)
-    if (files.isEmpty) return Some(0L)
-    val stats = statsFor(fs, root, v)
-    val dv = dvFor(fs, root, v)
+  private def liveRowsOf(chain: Chain): Option[Long] = {
     var total = 0L
-    files.foreach { f =>
-      stats.get(f).flatMap(_.headOption.map(_._2.rows)) match {
-        case Some(r) => total += r - dv.get(f).map(_._2).getOrElse(0L)
+    chain.files.foreach { f =>
+      chain.rowsOf(f) match {
+        case Some(r) => total += r - chain.dv.get(f).map(_._2).getOrElse(0L)
         case None => return None
       }
     }
@@ -7483,11 +7387,10 @@ object Snapshots {
     * failure surfaces rather than silently skipping). */
   private def maybeReanalyze(spark: SparkSession, dir: String,
       committed: Int): Int = {
-    val (fs, root) = fsFor(spark, dir)
-    val props = propsOf(fs, root, committed)
-    if (!props.get(AnalyzeOnOptimizeKey)
+    val at = resolveAt(spark, dir, committed)
+    if (!at.meta.props.get(AnalyzeOnOptimizeKey)
         .exists(_.trim.equalsIgnoreCase("true"))) return committed
-    reanalyzeAsBefore(spark, dir, fs, root, committed, props).version
+    reanalyzeAsBefore(at).version
   }
 
   /** Re-run ANALYZE with the SAME scope the stored stats cover: the
@@ -7495,11 +7398,9 @@ object Snapshots {
     * table was never analyzed) and histograms iff the prior pass had
     * them — maintenance must not silently widen or narrow what the
     * operator chose at ANALYZE time. */
-  private def reanalyzeAsBefore(spark: SparkSession, dir: String,
-      fs: FileSystem, root: HPath, v: Int,
-      props: Map[String, String]): AnalyzeResult = {
-    val schema = schemaOf(fs, root, v)
-      .getOrElse(allNullable(read(spark, dir, v).schema))
+  private def reanalyzeAsBefore(at: At): AnalyzeResult = {
+    import at.{dir, schema, spark}
+    val props = at.meta.props
     val priorCols = schema.fields.toSeq
       .filter(f => props.contains(analyzeColKey(physOf(f)))).map(_.name)
     val hadHists = schema.fields.exists(f =>
@@ -7527,16 +7428,14 @@ object Snapshots {
     * actually runs. */
   def analyzeIfStale(spark: SparkSession, dir: String,
       maxDriftPct: Double): Option[AnalyzeResult] = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(return None)
-    val props = propsOf(fs, root, v)
-    val analyzed = props.get(AnalyzeRowsKey).map(_.toLong)
+    val at = atOpt(spark, dir, -1).getOrElse(return None)
+    val analyzed = at.meta.props.get(AnalyzeRowsKey).map(_.toLong)
       .getOrElse(return None)
-    val live = liveRowsOfManifest(fs, root, v).getOrElse(return None)
+    val live = liveRowsOf(at.chain).getOrElse(return None)
     val driftPct =
       math.abs(live - analyzed) * 100.0 / math.max(1L, analyzed)
     if (driftPct <= maxDriftPct) None
-    else Some(reanalyzeAsBefore(spark, dir, fs, root, v, props))
+    else Some(reanalyzeAsBefore(at))
   }
 
   /** The stored ANALYZE statistics of the table's current version, if
@@ -7558,12 +7457,11 @@ object Snapshots {
     * frozen stats — fail-safe, never worse than before. */
   def analyzedStats(spark: SparkSession,
       dir: String): Option[(Long, Map[String, ColumnAnalysis])] = {
-    val (fs, root) = fsFor(spark, dir)
-    val v = currentVersion(spark, dir).getOrElse(return None)
-    val props = propsOf(fs, root, v)
+    val at = atOpt(spark, dir, -1).getOrElse(return None)
+    import at.v
+    val props = at.meta.props
     props.get(AnalyzeRowsKey).map { rc =>
-      val schema = schemaOf(fs, root, v)
-        .getOrElse(allNullable(read(spark, dir, v).schema))
+      val schema = at.schema
       val cols = schema.fields.toSeq.flatMap { f =>
         props.get(analyzeColKey(physOf(f))).flatMap { s =>
           def build(ndv: String, nulls: String, al: String, ml: String,
@@ -7592,7 +7490,7 @@ object Snapshots {
       // the version the pass READ, the stats landed at atVersion + 1
       val atTip = props.get(AnalyzeAtKey).map(_.toInt)
         .exists(a => a == v || a + 1 == v)
-      val live = if (atTip) None else liveRowsOfManifest(fs, root, v)
+      val live = if (atTip) None else liveRowsOf(at.chain)
       live match {
         case None => (analyzedRows, cols)
         case Some(l) if l == analyzedRows => (analyzedRows, cols)
@@ -7634,6 +7532,7 @@ object Snapshots {
       dryRun: Boolean = false): (Int, Int) = {
     require(keepVersions >= 1, "must keep at least the current version")
     val (fs, root) = fsFor(spark, dir)
+    val chains = new Chains(fs, root)
     val vs = versions(spark, dir)
     val floors =
       if (force) Nil else bindingFloors(spark, dir, vs)
@@ -7647,9 +7546,7 @@ object Snapshots {
     val needed = scala.collection.mutable.Set[Int]()
     def close(v: Int): Unit = if (!needed.contains(v)) {
       needed += v
-      deltaHeader(manifestLines(fs, root, v)).foreach {
-        case (b, _) => close(b)
-      }
+      chains(v).baseVersion.foreach(close)
     }
     keepTail.foreach(close)
     // TAGGED versions are pinned UNCONDITIONALLY (force included):
@@ -7676,32 +7573,31 @@ object Snapshots {
             s"$ConsumersDir/ (clearConsumerFloor), or pass force=true")
     }
     val keep = vs.filter(needed.contains)
-    val live = keep.flatMap(readManifest(fs, root, _)).toSet
-    val dead = drop.flatMap(readManifest(fs, root, _)).filterNot(live).distinct
+    val live = keep.flatMap(chains(_).files).toSet
+    val dead = drop.flatMap(chains(_).files).filterNot(live).distinct
     // ownership guard: absolute references written by shallowClone are
     // ANOTHER table's bytes — drop the manifest lines, never the files
     val deadOwned = dead.filter(ownedByRoot)
     // dry run: the full decision — floors checked, tags pinned, chain
     // closure resolved, dead set priced — with NOTHING deleted; what
     // the operator reads before pointing the real sweep at a 100 TB
-    // table. Returns HERE, before the sidecar sweep re-reads every
-    // dropped manifest a second time.
+    // table.
     if (dryRun) return (drop.size, deadOwned.size)
     // sidecars (bloom indexes, deletion vectors): one is dead exactly
     // when NO kept manifest line still references it — covers both a
     // dead file's sidecars and SUPERSEDED vectors of a live file whose
     // only referencing manifests are dropped
     val keptSidecars = keep
-      .flatMap(kv => manifestLines(fs, root, kv).flatMap(sidecarRefOf))
+      .flatMap(kv => chains(kv).lines.flatMap(sidecarRefOf))
       .toSet
     val deadSidecars = drop
-      .flatMap(dv => manifestLines(fs, root, dv).flatMap(sidecarRefOf))
+      .flatMap(dv => chains(dv).lines.flatMap(sidecarRefOf))
       .distinct.filterNot(keptSidecars)
     // COPY INTO ledger lines must outlive their manifests: roll the
     // dropped versions' #ingested lines into an _ingest/ sidecar
     // BEFORE anything is deleted (a crash after this point re-runs
     // into the same content-addressed marker — see syncIngestMarkers)
-    syncIngestMarkers(fs, root, drop)
+    syncIngestMarkers(chains, drop)
     // delete dead files FIRST, their manifests LAST: the dropped
     // manifests are the only map to the dead files, so a crash between
     // the two phases leaves a rerunnable state (the next vacuum re-lists

@@ -284,40 +284,6 @@ object TextDedup {
     }
   }
 
-  /** Near-dup PAIRS → dedup CLUSTERS: connected components over the pair
-    * graph by iterated hash-min label propagation with pointer jumping —
-    * every doc's label becomes the minimum doc_id reachable from it;
-    * keep-one-per-cluster is then `doc_id == cluster_id`.
-    *
-    * Scale shape: each iteration is two joins + one min-aggregation on
-    * doc_id (no collect). Plain hash-min needs diameter iterations; the
-    * pointer-jump step (`l(v) ← l(l(v))`, valid because labels only ever
-    * decrease and `l(u) ≤ u`) halves every label-chain each round, so
-    * convergence is O(log diameter) — a 200-doc transitive chain closes
-    * in ~9 rounds, not 200.
-    *
-    * Fault tolerance + plan control: each iteration's labels MUST leave
-    * the Catalyst layer — the pointer-jump self-join doubles the logical
-    * plan every round, so an unmaterialized loop goes exponential in
-    * analysis time. Labels materialize by re-rooting the DataFrame on
-    * its own persisted RDD: flat SQL plan, and blocks recomputable
-    * through RDD lineage on loss — never the executor-local unreplicated
-    * blocks of `localCheckpoint`, which turn one lost executor into a
-    * failed job. On a cluster the persist level is DISK_ONLY_2 (two
-    * replicas), so a single executor loss doesn't even trigger
-    * recompute. (Reliable `checkpoint()` was rejected here: `unpersist`
-    * does not delete checkpoint files, so an iterative loop leaks one
-    * directory per round.) The previous iteration is unpersisted once
-    * the new one is compared; the edge set is materialized once, not
-    * recomputed per iteration.
-    *
-    * @param docs  all documents (singletons cluster to themselves)
-    * @param pairs near-dup pairs (doc_a, doc_b) from any detector above
-    * @param requireConvergence throw if the iteration cap is hit before
-    *   the fixpoint — unconverged labels silently split real clusters,
-    *   so keep-one-per-cluster would retain near-duplicates; pass false
-    *   to accept partial clustering (logged) instead.
-    */
   /** Edge-row bound for the driver union-find shortcut in
     * [[dedupClusters]]: 2^20 symmetrized edge rows ≈ 16 MB of longs on
     * the driver — the same order as merge's footprint materialization.
@@ -358,6 +324,46 @@ object TextDedup {
     out.result()
   }
 
+  /** Near-dup PAIRS → dedup CLUSTERS: connected components over the pair
+    * graph by iterated hash-min label propagation with pointer jumping —
+    * every doc's label becomes the minimum doc_id reachable from it;
+    * keep-one-per-cluster is then `doc_id == cluster_id`.
+    *
+    * Scale shape: each iteration is two joins + one min-aggregation on
+    * doc_id (no collect). Plain hash-min needs diameter iterations; the
+    * pointer-jump step (`l(v) ← l(l(v))`, valid because labels only ever
+    * decrease and `l(u) ≤ u`) halves every label-chain each round, so
+    * convergence is O(log diameter) — a 200-doc transitive chain closes
+    * in ~9 rounds, not 200.
+    *
+    * Fault tolerance + plan control: each iteration's labels MUST leave
+    * the Catalyst layer — the pointer-jump self-join doubles the logical
+    * plan every round, so an unmaterialized loop goes exponential in
+    * analysis time. Labels materialize by re-rooting the DataFrame on
+    * its own persisted RDD: flat SQL plan, and blocks recomputable
+    * through RDD lineage on loss — never the executor-local unreplicated
+    * blocks of `localCheckpoint`, which turn one lost executor into a
+    * failed job. On a cluster the persist level is DISK_ONLY_2 (two
+    * replicas), so a single executor loss doesn't even trigger
+    * recompute. (Reliable `checkpoint()` was rejected here: `unpersist`
+    * does not delete checkpoint files, so an iterative loop leaks one
+    * directory per round.) The previous iteration is unpersisted once
+    * the new one is compared; the edge set is materialized once, not
+    * recomputed per iteration.
+    *
+    * Small integral-keyed pair graphs (at most [[DriverUnionFindMaxEdges]]
+    * symmetrized edge rows, no NULL keys) skip the loop: a driver
+    * union-find ([[driverComponents]]) computes the same min-id labels
+    * in one pass, so that path always converges and `maxIterations` /
+    * `requireConvergence` only bound the distributed loop.
+    *
+    * @param docs  all documents (singletons cluster to themselves)
+    * @param pairs near-dup pairs (doc_a, doc_b) from any detector above
+    * @param requireConvergence throw if the iteration cap is hit before
+    *   the fixpoint — unconverged labels silently split real clusters,
+    *   so keep-one-per-cluster would retain near-duplicates; pass false
+    *   to accept partial clustering (logged) instead.
+    */
   def dedupClusters(docs: DataFrame, pairs: DataFrame,
       maxIterations: Int = 20,
       requireConvergence: Boolean = true): DataFrame = {

@@ -46,7 +46,7 @@ private[graft] class SnapshotRelation(val sqlContext: SQLContext,
   // a cached val: a version = -1 relation scans the CURRENT version
   // per buildScan, so a long-lived DataFrame over a growing table
   // must re-price too (Catalyst caches per-plan stats above this —
-  // each call is one manifest walk, metadata-cheap).
+  // each call opens each manifest of the chain once, metadata-cheap).
   override def sizeInBytes: Long =
     math.max(1L, Snapshots.liveBytes(spark, dir, version))
 

@@ -1,0 +1,146 @@
+package graft
+
+import java.net.URI
+import java.nio.file.Files
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicInteger
+
+import scala.jdk.CollectionConverters._
+
+import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path => HPath, RawLocalFileSystem}
+import org.apache.spark.sql.functions._
+
+import graft.ops.{HardLinkCommitCoordinator, Snapshots}
+
+/** The local filesystem under its own scheme (`countfs://`), counting
+  * every `open` of a `_manifests/v*` file and running a one-shot hook
+  * right after a listing of a `_manifests` directory — the seam the
+  * manifest-chain tests below measure and race through. */
+class CountingFileSystem extends RawLocalFileSystem {
+  override def getScheme: String = CountingFileSystem.Scheme
+  override def getUri: URI = URI.create(s"${CountingFileSystem.Scheme}:///")
+
+  override def open(p: HPath, bufferSize: Int): FSDataInputStream = {
+    if (p.getParent != null && p.getParent.getName == "_manifests" &&
+        p.getName.matches("v[0-9]+"))
+      CountingFileSystem.opens
+        .computeIfAbsent(p.getName, _ => new AtomicInteger).incrementAndGet()
+    super.open(p, bufferSize)
+  }
+
+  override def listStatus(p: HPath): Array[FileStatus] = {
+    val listed = super.listStatus(p)
+    if (p.getName == "_manifests")
+      Option(CountingFileSystem.afterListing.getAndSet(null)).foreach(_())
+    listed
+  }
+}
+
+object CountingFileSystem {
+  val Scheme = "countfs"
+  /** manifest name → opens since the last [[reset]]. */
+  val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  /** Runs once, after the next `_manifests` listing returns. */
+  val afterListing =
+    new java.util.concurrent.atomic.AtomicReference[() => Unit]()
+
+  def reset(): Unit = opens.clear()
+  def snapshot: Map[String, Int] =
+    opens.asScala.map { case (k, v) => k -> v.get }.toMap
+}
+
+/** The manifest chain has one reader: within one call every manifest
+  * of the versions it touches is opened at most once, however deep the
+  * delta chain and however many versions the call walks. */
+class ManifestChainSpec extends SparkSpec {
+  import spark.implicits._
+
+  private def freshRoot(): String = {
+    val hc = spark.sparkContext.hadoopConfiguration
+    hc.set(s"fs.${CountingFileSystem.Scheme}.impl",
+      classOf[CountingFileSystem].getName)
+    Snapshots.setCommitCoordinator(CountingFileSystem.Scheme,
+      HardLinkCommitCoordinator)
+    s"${CountingFileSystem.Scheme}://" +
+      Files.createTempDirectory("graft_chain").toFile.toString + "/t"
+  }
+
+  private def batch(i: Int) =
+    Seq.tabulate(20)(j => (i * 100L + j, (i * 100L + j) % 10, s"b$i"))
+      .toDF("id", "v", "tag").repartition(1)
+
+  /** v1 full, v2 bloom config, v3-v8 appends, v9 a deletion vector
+    * (depth 8), v10 the checkpoint, v11-v18 appends (depth 8 again). */
+  private def deepTable(): String = {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    Snapshots.setBloomColumns(spark, root, Seq("id"))
+    (3 to 8).foreach(i => Snapshots.append(batch(i), root))
+    Snapshots.deleteWhereLight(spark, root, $"id" === 301L)
+    (10 to 18).foreach(i => Snapshots.append(batch(i), root))
+    assert(Snapshots.currentVersion(spark, root).contains(18))
+    root
+  }
+
+  private def manifestBody(root: String, v: Int): Seq[String] = {
+    val p = new HPath(root + f"/_manifests/v$v%09d")
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val in = fs.open(p)
+    try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
+    finally in.close()
+  }
+
+  private def maxOpens(what: String)(call: => Any): (String, Int) = {
+    CountingFileSystem.reset()
+    call
+    val worst = CountingFileSystem.snapshot.toSeq.sortBy(-_._2).headOption
+    what -> worst.map(_._2).getOrElse(0)
+  }
+
+  test("every manifest is opened at most once per call on a depth-8 chain") {
+    val root = deepTable()
+    val rows = Snapshots.read(spark, root).count()
+    val counts = Seq(
+      maxOpens("read")(Snapshots.read(spark, root).count()),
+      maxOpens("readWhere")(
+        Snapshots.readWhere(spark, root, $"id" === 1705L).count()),
+      maxOpens("liveBytes")(Snapshots.liveBytes(spark, root)),
+      maxOpens("files")(Snapshots.files(spark, root).collect()),
+      maxOpens("history")(Snapshots.history(spark, root).collect()),
+      maxOpens("audit")(Snapshots.audit(spark, root).collect()),
+      maxOpens("feedBytes")(Snapshots.feedBytes(spark, root, 0, 18)),
+      maxOpens("appendedFilesByVersion")(
+        Snapshots.appendedFilesByVersion(spark, root, 10, 18)),
+      maxOpens("changeFeed")(Snapshots.changeFeed(spark, root, 1).count()),
+      maxOpens("diff")(Snapshots.diff(spark, root, 1, 18).count()),
+      maxOpens("vacuum")(
+        Snapshots.vacuum(spark, root, keepVersions = 3, dryRun = true)),
+      maxOpens("append")(Snapshots.append(batch(19), root)))
+    assert(Snapshots.read(spark, root, 19).count() == rows + 20)
+    assert(!manifestBody(root, 19).exists(_.startsWith("#delta")),
+      "the append past depth 8 writes the checkpoint")
+    val over = counts.filter(_._2 > 1)
+    assert(over.isEmpty, s"manifests opened more than once: $over")
+  }
+
+  test("unpinned readWhere prunes and scans one resolved version") {
+    // a DDL lands right after the read resolves "current": the result
+    // must still be v1's, under v1's schema
+    val ddls = Seq[(String, String => Int)](
+      "rename" -> (Snapshots.renameColumn(spark, _, "v", "w")),
+      "drop" -> (Snapshots.dropColumn(spark, _, "v")))
+    ddls.foreach { case (what, ddl) =>
+      val root = freshRoot()
+      Snapshots.append(batch(1), root)
+      val pred = col("v") > 5
+      val expected = Snapshots.read(spark, root, 1).filter(pred)
+      CountingFileSystem.afterListing.set(() => ddl(root))
+      val got = Snapshots.readWhere(spark, root, pred)
+      assert(CountingFileSystem.afterListing.get() == null, what)
+      assert(Snapshots.currentVersion(spark, root).contains(2), what)
+      assert(got.columns.toSeq == expected.columns.toSeq, what)
+      assert(got.collect().map(_.toString).sorted.toSeq ==
+        expected.collect().map(_.toString).sorted.toSeq, what)
+    }
+  }
+}

@@ -3,7 +3,8 @@
 
 Usage: python3 tools/perfpairs.py --parent REV --workload W --pairs N [--seed S]
 
-REV is checked out into a temporary git worktree outside the repository.
+REV is exported (git archive) into a temporary directory outside the
+repository.
 Each pair runs BENCHMARK.json's command (perfbench/run.py, --trace 0) once
 in that tree and once in the working tree, alternating which side runs
 first. The last stdout line of every run is its JSON result. For each
@@ -13,8 +14,8 @@ for neither side), and whether the change's median is within the
 metric's bound of the parent's; then the failed-operation counts.
 
 Build outputs go to per-side cache directories under the system temp
-directory, so nothing is written inside the repository; the worktree is
-removed on exit.
+directory, so nothing is written inside the repository; the exported
+tree is removed on exit.
 """
 import argparse
 import json
@@ -113,7 +114,13 @@ def main():
     # SIGTERM unwinds through the finally below like Ctrl-C does
     signal.signal(signal.SIGTERM, lambda *_: sys.exit(143))
     try:
-        git(root, "worktree", "add", "--detach", tree, rev)
+        os.makedirs(tree)
+        archive = subprocess.Popen(["git", "-C", root, "archive", rev],
+                                   stdout=subprocess.PIPE)
+        subprocess.run(["tar", "-x", "-C", tree], stdin=archive.stdout,
+                       check=True)
+        if archive.wait() != 0:
+            sys.exit(f"git archive {rev} failed")
         sides = {"parent": tree, "change": root}
         pairs, runs_failed = [], 0
         for i in range(a.pairs):
@@ -137,10 +144,6 @@ def main():
             report(bench, pairs)
         sys.exit(1 if runs_failed else 0)
     finally:
-        subprocess.run(["git", "-C", root, "worktree", "remove", "--force",
-                        tree], capture_output=True)
-        subprocess.run(["git", "-C", root, "worktree", "prune"],
-                       capture_output=True)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
