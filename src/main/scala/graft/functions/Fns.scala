@@ -25,12 +25,6 @@ object Fns {
   def snakeCaseCol(c: Column): Column =
     lower(regexp_replace(c, "(?<!^)(?=[A-Z])", "_"))
 
-  /** Explicit rename map (P3) — only renames columns present. */
-  def renameAll(df: DataFrame, renames: Map[String, String]): DataFrame =
-    renames.foldLeft(df) { case (acc, (from, to)) =>
-      acc.withColumnRenamed(from, to)
-    }
-
   /** Epoch milliseconds → timestamp (F5 — pd.to_datetime(unit="ms")). */
   def epochMillisToTs(c: Column): Column = timestamp_millis(c)
 

@@ -23,14 +23,6 @@ object Sampling {
   def hashBucket(key: Column): Column =
     pmod(TextFns.hash60(key.cast("string")), lit(100L))
 
-  /** Keep rows whose key hashes into [lo, hi) of 100 buckets — e.g.
-    * (df, key, 0, 80) = the 80% train split, (.., 80, 100) = eval;
-    * the two are disjoint and exhaustive by construction. */
-  def hashSplit(df: DataFrame, key: Column, lo: Int, hi: Int): DataFrame = {
-    require(0 <= lo && lo < hi && hi <= 100, s"need 0 <= $lo < $hi <= 100")
-    df.filter(hashBucket(key) >= lo && hashBucket(key) < hi)
-  }
-
   /** 2^60 as an (exactly representable) double — the denominator turning
     * [[TextFns.hash60]] into a uniform draw in (0, 1]. */
   private val TwoPow60 = 1152921504606846976L

@@ -2880,7 +2880,7 @@ object Snapshots {
     * (driver-side for small commits, distributed past
     * [[FooterDriverMax]] files) replacing the per-commit read-back
     * aggregate job, which measured as ~55% of a whole append at
-    * fixture scale (tools/CommitProbe: 0.30 s of a 0.53 s append).
+    * fixture scale (0.30 s of a 0.53 s append).
     * Everything else — and any column whose footer failed to yield an
     * exact stat for EVERY staged file (NaN bounds, missing stats) —
     * falls back to the original aggregate, so the emitted lines are
@@ -3541,12 +3541,9 @@ object Snapshots {
     * DML rewrites keep their footprint-sized staging and rely on
     * maintain/OPTIMIZE for layout, as before. The range sampling pass
     * re-evaluates the input (the standard Spark range-exchange cost —
-    * Iceberg's range distribution pays the same); opt out per session
-    * with `spark.graft.write.clusterOnWrite=false`. */
+    * Iceberg's range distribution pays the same). */
   private def clusterForWrite(declared: Seq[String],
       df: DataFrame): DataFrame = {
-    if (!java.lang.Boolean.parseBoolean(df.sparkSession.conf
-        .get("spark.graft.write.clusterOnWrite", "true"))) return df
     if (declared.isEmpty) return df
     // canonicalize to the FRAME's spelling: the declaration and the
     // ingest frame may disagree on case, and Layout resolves schema
@@ -6116,8 +6113,8 @@ object Snapshots {
     * the SQL catalog) compacts by OPTIMIZE on those keys instead of
     * blind concatenation — maintenance then not only bounds the file
     * count but keeps per-file stat ranges narrow, which is what makes
-    * point DML and readWhere prune (see DmlScaleProbe: range-clustered
-    * 1 file touched vs 11 under an unrelated layout). */
+    * point DML and readWhere prune (BASELINE.md round 8: 1 file
+    * touched under range vs 11). */
   def maintain(spark: SparkSession, dir: String, maxFiles: Int = 64,
       targetFiles: Int = 8, keepVersions: Int = 10,
       orphanOlderThanMs: Long = 24L * 3600 * 1000,
@@ -6481,21 +6478,6 @@ object Snapshots {
       .map(f => if (f.version == 0 && vs.nonEmpty)
         f.copy(version = vs.head) else f)
       .filter(f => vs.headOption.exists(f.version >= _))
-
-  /** The `keepVersions` that respects every recorded consumer floor:
-    * at least `requested`, widened so no version >= a floor drops.
-    * Prefer `vacuum(clipToConsumers = true)`, which resolves the
-    * floors and the drop set under ONE version listing — computing
-    * the keep here and vacuuming separately races concurrent commits
-    * (the newest-K window shifts past the floor between the calls). */
-  def consumerSafeKeep(spark: SparkSession, dir: String,
-      requested: Int): Int = {
-    val vs = versions(spark, dir)
-    if (vs.isEmpty) return requested
-    val floors = bindingFloors(spark, dir, vs).map(_.version)
-    if (floors.isEmpty) requested
-    else math.max(requested, vs.count(_ >= floors.min))
-  }
 
   // ---- COPY INTO (idempotent file-level ingestion) -------------------
 

@@ -26,14 +26,11 @@ object SinkQueries {
 
   /** s46's base-table bound: every statement's key range sits below
     * it, and the ANTI statements sweep the whole key space by
-    * semantics — shared so the bench query and S46Probe cannot
-    * drift. */
+    * semantics. */
   val S46KeyBound = 60000
 
   /** s46's DML statements, in execution order, parameterized by the
-    * catalog name — the SINGLE source of truth consumed by both the
-    * oracle QueryDef and `tools.S46Probe` (a hand-copied probe would
-    * silently time a different query than the bench runs). */
+    * catalog name; each is named for the shape it exercises. */
   def s46Statements(cat: String): Seq[(String, String)] = Seq(
     "ctas" ->
       s"CREATE TABLE $cat.default.t AS SELECT * FROM s46_base",
@@ -1605,8 +1602,7 @@ object SinkQueries {
         // sits below it, and the round-11 ANTI statements sweep the
         // whole key space BY SEMANTICS — the fixture bounds the
         // sweep's I/O without weakening any statement. Statement
-        // notes live with [[s46Statements]] — the shared list the
-        // per-statement probe times verbatim.
+        // notes live with [[s46Statements]].
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .filter(col("o_orderkey") < S46KeyBound)

@@ -188,16 +188,14 @@ final case class GraftResolution(session: SparkSession)
     * its file into the scan set, so the answer stays exact for
     * arbitrary deterministic predicates. When either path refuses,
     * this rewrite falls through to the normal scan — correctness
-    * never depends on the fast path. Opt out with
-    * `spark.graft.sql.metadataAggregates=false`.
+    * never depends on the fast path.
     *
-    * The proof work (manifest read; for the filtered path two
-    * pruneFiles passes ≈ 0.3-0.5 s driver-side) runs at ANALYSIS
-    * time, so EXPLAIN and re-analysis pay it — deliberate: the plan's
-    * SHAPE depends on the proofs (which files scan), exactly like
-    * Delta's metadata-only query optimization, and the opt-out conf
-    * exists for scan-cheap deployments where the constant outweighs
-    * the saved I/O (measured crossover in BASELINE.md).
+    * The proof work (manifest read; for the filtered path one stats
+    * pass, 149-383 ms — BASELINE.md round 9, stats-decided count(*)
+    * WHERE) runs at ANALYSIS time, so EXPLAIN and re-analysis pay it
+    * — deliberate: the plan's SHAPE depends on the proofs (which
+    * files scan), exactly like Delta's metadata-only query
+    * optimization.
     *
     * The one-row result plan is spliced the same way [[readPlan]]
     * splices scans: aliases map its columns onto the Aggregate's
@@ -205,8 +203,6 @@ final case class GraftResolution(session: SparkSession)
     * consumers above are untouched. A type-mismatch guard falls
     * through rather than miscast. */
   private def metadataAggregate(agg: Aggregate): Option[LogicalPlan] = {
-    if (!java.lang.Boolean.parseBoolean(session.conf
-        .get("spark.graft.sql.metadataAggregates", "true"))) return None
     if (agg.groupingExpressions.nonEmpty) return None
     // derived-table aliases wrap the projection (SELECT agg FROM
     // (SELECT cols FROM t)): strip them, then accept the relation or a

@@ -57,19 +57,12 @@ class ClusterOnWriteSpec extends SparkSpec {
     assert(dataFiles(root) - before <= 4)
   }
 
-  test("no declared keys / opt-out: frame passes through unshaped") {
+  test("no declared keys: frame passes through unshaped") {
     val rootPlain = Files.createTempDirectory("graft_cow")
       .toFile.toString + "/t"
     Snapshots.append(scattered(), rootPlain)
     val (kept, _) = Snapshots.pruneFiles(spark, rootPlain, $"id" === 123)
     assert(kept.size == 4, kept.toString) // hash-scattered: all may match
-
-    val rootOff = clusteredTable()
-    spark.conf.set("spark.graft.write.clusterOnWrite", "false")
-    try Snapshots.append(scattered(), rootOff)
-    finally spark.conf.unset("spark.graft.write.clusterOnWrite")
-    val (keptOff, _) = Snapshots.pruneFiles(spark, rootOff, $"id" === 123)
-    assert(keptOff.size == 4, keptOff.toString)
   }
 
   test("streaming exactly-once appends cluster too; replays still no-op") {

@@ -130,16 +130,6 @@ class SqlMetaAggSpec extends SparkSpec {
     assert(sub.as[Long].head() == 1L)
   }
 
-  test("spark.graft.sql.metadataAggregates=false opts out") {
-    mk("m7")
-    spark.conf.set("spark.graft.sql.metadataAggregates", "false")
-    try {
-      val df = spark.sql("SELECT count(*) AS n FROM gm.default.m7")
-      assert(scansData(df))
-      assert(df.as[Long].head() == 5L)
-    } finally spark.conf.unset("spark.graft.sql.metadataAggregates")
-  }
-
   test("the DataFrame reader path plans metadata-only too") {
     import org.apache.spark.sql.functions.{count, lit, max, min}
     val dir = mk("m8")

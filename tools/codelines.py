@@ -17,6 +17,9 @@ def count(path):
     return sum(1 for l in lines if l and not l.startswith(COMMENT))
 
 
+if len(sys.argv) < 2:
+    print("usage: python3 tools/codelines.py PATH [PATH ...]", file=sys.stderr)
+    sys.exit(2)
 files = []
 for arg in sys.argv[1:]:
     p = pathlib.Path(arg)
