@@ -876,13 +876,15 @@ object Snapshots {
     * the SQL rewrite splices); this form adds the decision detail. */
   def countWhere(spark: SparkSession, dir: String, pred: Column,
       version: Int = -1): CountWhereResult = {
+    // the scan reads exactly `at`: resolving again for it would race a
+    // concurrent commit into a mixed-snapshot count
     val at = resolveAt(spark, dir, version)
-    val (decided, allMatch, undecided, pruned) = countWhereParts(at, pred)
+    val (statted, undecided, pruned) = decideWhere(at, pred, Nil)
     val scanned =
       if (undecided.isEmpty) 0L
       else at.scan(undecided).filter(pred).count()
-    CountWhereResult(decided + scanned, allMatch, undecided.size,
-      pruned)
+    CountWhereResult(statted.map(_._2).sum + scanned, statted.size,
+      undecided.size, pruned)
   }
 
   /** `min`/`max`/`count(col)`/`count(*)` over the `pred`-matching
@@ -915,33 +917,45 @@ object Snapshots {
     }
   }
 
-  private def buildWhereAggregate(at: At, pred: Column,
-      fields: Seq[StructField]): DataFrame = {
-    import at.spark
-    val (mayMatch, _, survivors) = pruneBoth(at, pred)
+  /** The stats decision of a filtered aggregate over `at`:
+    * `(statted, undecided, #pruned)`. `statted` are the ALL-MATCH files
+    * whose contribution the manifest decides, each with its live row
+    * count (manifest rows − deletion-vector positions); `undecided`
+    * must be scanned. Fail-open demotions into the scan set: no stats
+    * line, a requested column's stats missing, or (when column bounds
+    * are requested) a deletion vector. */
+  private def decideWhere(at: At, pred: Column, fields: Seq[StructField])
+      : (Seq[(String, Long)], Seq[String], Int) = {
+    val (mayMatch, pruned, survivors) = pruneBoth(at, pred)
     val stats = at.chain.stats
     val (undecided0, allMatch) =
       splitDropWholeWith(at, pred, mayMatch, survivors)
     val dv = at.chain.dv
     def dvCount(f: String): Long =
       dv.get(f).filter(_._2 > 0).map(_._2).getOrElse(0L)
-    // fail-open demotions: no stats line, a required column's stats
-    // missing, or (when column bounds are needed) a deletion vector
     def decidable(f: String): Boolean = {
       val per = stats.getOrElse(f, Map.empty[String, ColStats])
       per.nonEmpty && (fields.isEmpty || dvCount(f) == 0) &&
         fields.forall(fd => per.contains(physOf(fd)))
     }
     val (statted, demoted) = allMatch.partition(decidable)
-    val undecided = undecided0 ++ demoted
+    (statted.map(f => f -> (stats(f).head._2.rows - dvCount(f))),
+      undecided0 ++ demoted, pruned.size)
+  }
+
+  private def buildWhereAggregate(at: At, pred: Column,
+      fields: Seq[StructField]): DataFrame = {
+    import at.spark
+    val (statted, undecided, _) = decideWhere(at, pred, fields)
+    val stats = at.chain.stats
     val metaSide: Option[DataFrame] =
       if (statted.isEmpty) None
       else {
-        // __rows pre-adjusted per file: a DV'd file reaches here only
-        // when fields is empty (count-only), where live rows suffice
-        val raws = statted.map { f =>
+        // live rows per file: a DV'd file reaches here only when
+        // fields is empty (count-only), where live rows suffice
+        val raws = statted.map { case (f, live) =>
           val per = stats(f)
-          Row.fromSeq((per.head._2.rows - dvCount(f)) +:
+          Row.fromSeq(live +:
             fields.flatMap { fd =>
               val s = per(physOf(fd))
               Seq(s.min.orNull, s.max.orNull, s.nulls)
@@ -977,27 +991,6 @@ object Snapshots {
             lit(null).cast(fd.dataType).as(s"min_${fd.name}"),
             lit(null).cast(fd.dataType).as(s"max_${fd.name}"))): _*)
     }
-  }
-
-  /** (stats-decided row total, #all-match files, undecided files,
-    * #pruned files) — [[countWhere]]'s decision pass over `at`.
-    * The caller scans at exactly `at`: resolving again for the scan
-    * would race a concurrent commit into a mixed-snapshot count. An
-    * all-match file missing its manifest row count falls back into the
-    * scan set (fail-open, like every proof here). */
-  private def countWhereParts(at: At, pred: Column)
-      : (Long, Int, Seq[String], Int) = {
-    val (mayMatch, pruned, survivors) = pruneBoth(at, pred)
-    val (undecided, allMatch) =
-      splitDropWholeWith(at, pred, mayMatch, survivors)
-    val dv = at.chain.dv
-    def liveRows(f: String): Option[Long] = at.chain.rowsOf(f).map(_ -
-      dv.get(f).filter(_._2 > 0).map(_._2).getOrElse(0L))
-    val counted = allMatch.map(f => f -> liveRows(f))
-    val decided = counted.collect { case (_, Some(n)) => n }.sum
-    val statless = counted.collect { case (f, None) => f }
-    (decided, counted.size - statless.size, undecided ++ statless,
-      pruned.size)
   }
 
   // ---- pinned schema + additive evolution ---------------------------

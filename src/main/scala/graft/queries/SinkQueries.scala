@@ -1611,9 +1611,9 @@ object SinkQueries {
         stmts.init.foreach { case (_, sql) => s.sql(sql) }
         s.sql(stmts.last._2)
       },
-      """WITH base AS (
+      s"""WITH base AS (
         |  SELECT o_orderkey, o_custkey, o_totalprice FROM orders
-        |  WHERE o_orderkey < 60000),
+        |  WHERE o_orderkey < $S46KeyBound),
         |p1 AS (
         |  SELECT o_orderkey, o_custkey,
         |    CASE WHEN o_custkey % 7 = 2 AND o_orderkey < 40000

@@ -47,9 +47,9 @@ private[sql] object GraftDml {
 
   /** The bound on driver-materialized subquery values: the same order
     * as merge's in-set footprint discipline — beyond it, the one
-    * distributed shape (`DELETE ... WHERE k IN (subquery)` alone,
-    * which routes to [[Snapshots.deleteMatching]] without ANY driver
-    * materialization) or MERGE tombstones are the scale paths. */
+    * distributed shape (`DELETE/UPDATE ... WHERE k IN (subquery)`
+    * alone, which [[runWhere]] applies as a key frame without ANY
+    * driver materialization) or MERGE tombstones are the scale paths. */
   private val SubqueryValueLimit = 100000
 
   private def refuseCorrelated(se: SubqueryExpression, what: String): Unit =
@@ -71,7 +71,7 @@ private[sql] object GraftDml {
     * subquery over an empty result becomes a NULL literal, `EXISTS`
     * becomes a boolean literal. Values are driver-materialized and
     * capped at [[SubqueryValueLimit]] — the uncapped distributed
-    * path is the pure IN-subquery DELETE ([[GraftDeleteCommand]]). */
+    * path is the pure IN-subquery shape of [[runWhere]]. */
   def evaluateSubqueries(spark: SparkSession, e: Expression,
       what: String): Expression = e.transformUp {
     case sq: ScalarSubquery =>
@@ -108,7 +108,8 @@ private[sql] object GraftDml {
     spark.conf.getOption("spark.graft.sql.deletionVectors")
       .exists(_.equalsIgnoreCase("true"))
 
-  private def splitConj(e: Expression): Seq[Expression] = e match {
+  /** The conjuncts of `e`, left to right. */
+  def splitConj(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConj(l) ++ splitConj(r)
     case x => Seq(x)
   }
@@ -131,9 +132,9 @@ private[sql] object GraftDml {
     * correlated inner columns (aliased to the target columns they
     * equate to). `None` when the correlation doesn't fit that shape —
     * the caller keeps its loud refusal. The frame feeds
-    * [[Snapshots.deleteMatching]], which NULL-drops and dedups keys
-    * itself, so EXISTS/IN null-and-multiplicity semantics are
-    * preserved: a NULL never equals, duplicates never double-delete. */
+    * [[runWhere]]'s key-frame executor, which NULL-drops and dedups
+    * keys itself, so EXISTS/IN null-and-multiplicity semantics are
+    * preserved: a NULL never equals, duplicates never double-apply. */
   def equalityCorrelationFrame(spark: SparkSession, plan: LogicalPlan,
       valNames: Seq[String]): Option[(DataFrame, Seq[String])] = {
     val (projList, cond, child) = plan match {
@@ -168,41 +169,133 @@ private[sql] object GraftDml {
     Some((GraftSparkBridge.ofRows(spark,
       LProject(keyCols, residualPlan)), names))
   }
-}
 
-/** `DELETE FROM graft.db.t WHERE p` → [[Snapshots.deleteWhere]] (or
-  * the deletion-vector [[Snapshots.deleteWhereLight]] when
-  * `spark.graft.sql.deletionVectors=true`). Returns the count of a
-  * post-delete... nothing: Spark's DELETE returns no rows.
-  *
-  * Subquery predicates are first-class: the most common CDC cleanups
-  * — `DELETE FROM t WHERE k IN (SELECT ...)` standing alone, and the
-  * CORRELATED `WHERE EXISTS (SELECT .. FROM s WHERE s.a = t.a [AND
-  * s-only predicates])` / `WHERE k IN (SELECT x FROM s WHERE s.y =
-  * t.y)` with pure-equality correlation — route to
-  * [[Snapshots.deleteMatching]] with the subquery as the DISTRIBUTED
-  * tombstone frame (no driver materialization, any cardinality,
-  * merge-style footprint pruning): a correlated-equality semi-join IS
-  * a key-frame match. The ANTI shapes are first-class too: the
-  * correlated `NOT EXISTS` retention sweep and the standing-alone
-  * single-column `NOT IN (subquery)` both run distributed at any
-  * cardinality ([[antiDelete]]: target keys anti-join the subquery
-  * frame, exact three-valued NOT IN semantics — empty set deletes
-  * all, a NULL in the set deletes nothing, NULL keys keep). Other
-  * uncorrelated shapes (IN among conjuncts, NOT IN under other
-  * predicates, EXISTS, scalar comparisons) evaluate via
-  * [[GraftDml.evaluateSubqueries]]'s capped literal path;
-  * non-equality correlation refuses loudly. */
-final case class GraftDeleteCommand(dir: String, tableName: String,
-    shieldedCond: ShieldedExpr) extends LeafRunnableCommand {
-  override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.{col, lit}
-    val cond = shieldedCond.e
+  /** Run one SQL DELETE or UPDATE: decompose its WHERE by shape and
+    * apply the statement's verb through its two executors.
+    * `matching(frame, names, expectedVersion)` applies the verb to the
+    * target rows whose `names` tuple appears in `frame` (-1 leaves the
+    * version unpinned); `where(pred)` applies it to the rows `pred`
+    * holds for, and a missing WHERE is `where(lit(true))`. `stmt` is
+    * the statement's leading words (`DELETE FROM` / `UPDATE`), which
+    * messages and retry labels name; its first word is the verb a
+    * remedy names.
+    *
+    * Each subquery shape below stands alone as the whole WHERE:
+    *
+    *   1. uncorrelated `k IN (SELECT ..)`, single or composite key
+    *      `(a, b) IN (SELECT x, y ..)` — the subquery is a DISTRIBUTED
+    *      key frame: no driver materialization, any cardinality,
+    *      key-footprint file pruning;
+    *   2. correlated `EXISTS` and 3. correlated `k IN`, whose
+    *      correlation is a conjunction of `inner = outer` equalities —
+    *      [[equalityCorrelationFrame]] turns the semi-join into the
+    *      same key frame;
+    *   4. correlated `NOT EXISTS` — the retention sweep: target keys
+    *      anti-join that frame;
+    *   5. correlated single-column `NOT IN` — per correlation-key
+    *      tuple, NOT IN over that key's value set with exact
+    *      three-valued semantics;
+    *   6. uncorrelated single-column `NOT IN` — exact three-valued
+    *      semantics at any cardinality: an empty subquery selects
+    *      every row (NULL keys included), any NULL in the subquery
+    *      selects none and commits nothing, a NULL target key is never
+    *      selected (UNKNOWN);
+    *   7. anything else — uncorrelated subqueries evaluate through
+    *      [[evaluateSubqueries]]'s capped literal path.
+    *
+    * A correlated shape whose correlation is not pure equality refuses
+    * loudly, as do target rows the semantics select but key-addressed
+    * DML cannot express (a NULL correlation key). */
+  def runWhere(spark: SparkSession, dir: String, tableName: String,
+      stmt: String, cond: Option[Expression],
+      matching: (DataFrame, Seq[String], Int) => Unit,
+      where: Column => Unit): Unit = {
+    import org.apache.spark.sql.functions.{col, count, lit, max}
+    val verb = stmt.takeWhile(_ != ' ')
+
+    def refuseCorrelatedShape(what: String): Nothing =
+      throw new UnsupportedOperationException(
+        s"$stmt '$tableName' WHERE $what: only a standing-alone " +
+          "subquery whose correlation is a conjunction of `inner = " +
+          "outer` column equalities in its WHERE clause is supported " +
+          s"(it runs as a distributed key-frame ${verb.toLowerCase} — " +
+          "EXISTS/IN as the matching keys, NOT EXISTS as their anti " +
+          "complement); otherwise materialize the correlation as a " +
+          "source table and MERGE")
+
+    // The target rows whose `names` tuple has NO match in `frame`: the
+    // anti complement of the key-frame verb. `nullMatchless` (NOT
+    // EXISTS) means the semantics DO select NULL-keyed target rows (a
+    // NULL equality never matches), which key-addressed DML cannot
+    // express, so it refuses; NOT IN passes false (a NULL key compares
+    // UNKNOWN and is kept). The key set is computed against the pinned
+    // version the commit CASes on; a lost race recomputes it.
+    def anti(frame: DataFrame, names: Seq[String],
+        nullMatchless: Boolean): Unit =
+      Snapshots.retryPinned(spark, dir, s"$stmt '$tableName' (anti-join)") {
+        base =>
+          val tgt = Snapshots.read(spark, dir, base)
+            .select(names.map(col): _*)
+          if (nullMatchless && tgt.filter(names.map(col(_).isNull)
+              .reduce(_ || _)).take(1).nonEmpty)
+            throw new UnsupportedOperationException(
+              s"$stmt '$tableName' WHERE NOT EXISTS selected a " +
+                "target row with a NULL correlation-key value — " +
+                s"key-addressed DML cannot express it; $verb those " +
+                "rows with an IS NULL predicate first")
+          matching(tgt.na.drop(names).distinct()
+            .join(frame, names, "left_anti"), names, base)
+      }
+
+    // Correlated NOT IN: a target row's comparison set is the
+    // subquery's `vName` values at the row's correlation-key tuple.
+    // Empty set → selected; a NULL in the set → kept; NULL value with a
+    // non-empty set → kept; else selected iff the (value, keys) tuple
+    // has no pair match. Rows the semantics select but key-addressed
+    // DML cannot express (NULL correlation key — its set is empty;
+    // NULL value whose set is empty) refuse.
+    def antiNotIn(pairs: DataFrame, names: Seq[String],
+        vName: String): Unit = {
+      val corr = names.filterNot(_ == vName)
+      require(corr.nonEmpty, "correlated NOT IN lost its correlation")
+      require(!names.exists(n => n == "__nin_cnt" || n == "__nin_hasnull"),
+        "NOT IN decomposition reserves the __nin_ column prefix")
+      val sAgg = pairs.groupBy(corr.map(col): _*)
+        .agg(count(lit(1)).as("__nin_cnt"),
+          max(col(vName).isNull.cast("int")).as("__nin_hasnull"))
+      Snapshots.retryPinned(spark, dir, s"$stmt '$tableName' (NOT IN)") {
+        base =>
+          val tgt = Snapshots.read(spark, dir, base)
+            .select(names.map(col): _*).distinct()
+          if (tgt.filter(corr.map(col(_).isNull).reduce(_ || _))
+              .take(1).nonEmpty)
+            throw new UnsupportedOperationException(
+              s"$stmt '$tableName' WHERE ... NOT IN (correlated " +
+                "subquery) selected a target row with a NULL " +
+                "correlation-key value (its comparison set is empty, " +
+                "so NOT IN is TRUE) — key-addressed DML cannot express " +
+                s"it; $verb those rows with an IS NULL predicate first")
+          val j = tgt.join(sAgg, corr, "left")
+          if (j.filter(col(vName).isNull && col("__nin_cnt").isNull)
+              .take(1).nonEmpty)
+            throw new UnsupportedOperationException(
+              s"$stmt '$tableName' WHERE ... NOT IN (correlated " +
+                "subquery) selected a target row with a NULL value and " +
+                "an empty comparison set (NOT IN over the empty set is " +
+                "TRUE) — key-addressed DML cannot express it; " +
+                s"$verb those rows with an IS NULL predicate first")
+          val emptySet = j.filter(col("__nin_cnt").isNull &&
+            col(vName).isNotNull).select(names.map(col): _*)
+          val noMatch = j.filter(col("__nin_cnt").isNotNull &&
+              col("__nin_hasnull") === 0 && col(vName).isNotNull)
+            .select(names.map(col): _*)
+            .join(pairs, names, "left_anti")
+          matching(emptySet.unionByName(noMatch), names, base)
+      }
+    }
+
     cond match {
-      // the pure IN-subquery shape — single OR composite key
-      // `(a, b) IN (SELECT x, y ...)` — is a distributed tombstone
-      // delete at any cardinality
-      case InSubquery(vals, lq: ListQuery)
+      case Some(InSubquery(vals, lq: ListQuery))
           if lq.outerAttrs.isEmpty &&
             vals.forall(_.isInstanceOf[AttributeReference]) =>
         val names = vals.map(_.asInstanceOf[AttributeReference].name)
@@ -212,65 +305,42 @@ final case class GraftDeleteCommand(dir: String, tableName: String,
             s"vs ${frame.columns.length} subquery columns")
         // positional rename: subquery output columns may carry
         // expression-derived names (dots included) col() would mangle
-        Snapshots.deleteMatching(spark, dir, frame.toDF(names: _*), names)
-      // correlated EXISTS standing alone: equality correlation → the
-      // same distributed tombstone frame, any cardinality
-      case ex: Exists if ex.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, ex.plan, Nil) match {
-          case Some((frame, names)) =>
-            Snapshots.deleteMatching(spark, dir, frame, names)
+        matching(frame.toDF(names: _*), names, -1)
+      case Some(ex: Exists) if ex.getOuterAttrs.nonEmpty =>
+        equalityCorrelationFrame(spark, ex.plan, Nil) match {
+          case Some((frame, names)) => matching(frame, names, -1)
           case None => refuseCorrelatedShape("EXISTS")
         }
-      // correlated IN standing alone: SELECT-list values pair with
-      // the IN columns, correlation equalities join the key set
-      case InSubquery(vals, lq: ListQuery)
+      case Some(InSubquery(vals, lq: ListQuery))
           if lq.getOuterAttrs.nonEmpty &&
             vals.forall(_.isInstanceOf[AttributeReference]) =>
-        GraftDml.equalityCorrelationFrame(spark, lq.plan,
+        equalityCorrelationFrame(spark, lq.plan,
           vals.map(_.asInstanceOf[AttributeReference].name)) match {
-          case Some((frame, names)) =>
-            Snapshots.deleteMatching(spark, dir, frame, names)
+          case Some((frame, names)) => matching(frame, names, -1)
           case None => refuseCorrelatedShape("IN (subquery)")
         }
-      // correlated NOT EXISTS standing alone — the retention sweep:
-      // the ANTI twin of the EXISTS decomposition (delete target rows
-      // whose key tuple has NO match in the subquery's residual
-      // frame), distributed at any cardinality
-      case Not(ex: Exists) if ex.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, ex.plan, Nil) match {
+      case Some(Not(ex: Exists)) if ex.getOuterAttrs.nonEmpty =>
+        equalityCorrelationFrame(spark, ex.plan, Nil) match {
           case Some((frame0, names)) =>
-            // pin the subquery frame: the anti-join (and a lost-CAS
-            // retry) must see the SAME rows even if the plan is
-            // nondeterministic
+            // pinned: the anti-join (and a lost-CAS retry) must see the
+            // SAME rows even if the plan is nondeterministic
             val frame = frame0.persist()
-            try antiDelete(spark, frame, names)
+            try anti(frame, names, nullMatchless = true)
             finally frame.unpersist()
           case None => refuseCorrelatedShape("NOT EXISTS")
         }
-      // correlated single-column NOT IN: per correlation-key tuple,
-      // NOT IN over that key's value set with exact three-valued
-      // semantics — empty set deletes, a NULL in the set keeps, a
-      // NULL value keeps (unless its set is empty, which refuses:
-      // key-addressed DML cannot delete a NULL-keyed row)
-      case Not(InSubquery(Seq(v: AttributeReference), lq: ListQuery))
+      case Some(Not(InSubquery(Seq(v: AttributeReference), lq: ListQuery)))
           if lq.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, lq.plan,
-          Seq(v.name)) match {
+        equalityCorrelationFrame(spark, lq.plan, Seq(v.name)) match {
           case Some((pairs0, names)) =>
-            // pinned: the per-key aggregate, the refusal probes and
-            // the anti-join must all see the SAME subquery rows
+            // pinned: the per-key aggregate, the refusal probes and the
+            // anti-join must all see the SAME subquery rows
             val pairs = pairs0.persist()
-            try antiDeleteNotIn(spark, pairs, names, v.name)
+            try antiNotIn(pairs, names, v.name)
             finally pairs.unpersist()
           case None => refuseCorrelatedShape("NOT IN (subquery)")
         }
-      // single-column NOT IN (subquery) standing alone, uncorrelated:
-      // distributed at any cardinality with EXACT three-valued
-      // semantics — an empty subquery deletes everything (NOT IN over
-      // the empty set is TRUE, NULL keys included), any NULL in the
-      // subquery deletes nothing (the comparison is never TRUE), and
-      // a NULL target key never deletes (UNKNOWN)
-      case Not(InSubquery(Seq(v: AttributeReference), lq: ListQuery))
+      case Some(Not(InSubquery(Seq(v: AttributeReference), lq: ListQuery)))
           if lq.getOuterAttrs.isEmpty =>
         val frame = GraftSparkBridge.ofRows(spark, lq.plan)
         require(frame.columns.length == 1,
@@ -278,347 +348,69 @@ final case class GraftDeleteCommand(dir: String, tableName: String,
             s"${frame.columns.length} subquery columns")
         // pinned: the emptiness/NULL probe and the anti-join must see
         // the SAME rows (a nondeterministic subquery could otherwise
-        // pass the NULL-free probe yet produce NULLs in the join),
-        // and the probe is ONE aggregate pass, not three scans
+        // pass the NULL-free probe yet produce NULLs in the join), and
+        // the probe is ONE aggregate pass, not three scans
         val keyed = frame.toDF(v.name).persist()
         try {
-          import org.apache.spark.sql.functions.count
           val r = keyed.agg(count(lit(1)).as("__n"),
             count(col(v.name)).as("__nn")).head()
           val n = r.getLong(0)
-          if (n == 0) {
-            // NOT IN over an EMPTY set is TRUE for every row, NULL
-            // keys included — a predicate delete, no keys involved
-            if (GraftDml.useDv(spark))
-              Snapshots.deleteWhereLight(spark, dir, lit(true))
-            else Snapshots.deleteWhere(spark, dir, lit(true))
-          } else if (r.getLong(1) == n) {
-            antiDelete(spark, keyed.distinct(), Seq(v.name),
-              nullMatchless = false)
-          } // else: a NULL in the subquery — no row's NOT IN is
-            // TRUE; the delete is a no-op and commits nothing
+          // NOT IN over an EMPTY set is TRUE for every row, NULL keys
+          // included — a predicate statement, no keys involved
+          if (n == 0) where(lit(true))
+          else if (r.getLong(1) == n)
+            anti(keyed.distinct(), Seq(v.name), nullMatchless = false)
+          // else: a NULL in the subquery — no row's NOT IN is TRUE; the
+          // statement is a no-op and commits nothing
         } finally keyed.unpersist()
-      case _ =>
-        val pred = GraftDml.toColumn(
-          GraftDml.evaluateSubqueries(spark, cond, "DELETE"), "DELETE")
-        if (GraftDml.useDv(spark)) Snapshots.deleteWhereLight(spark, dir, pred)
-        else Snapshots.deleteWhere(spark, dir, pred)
-    }
-    Seq.empty
-  }
-
-  /** Delete the target rows whose `names` tuple has NO match in
-    * `frame` — the distributed ANTI complement of the key-frame
-    * delete (target keys anti-join the frame, then
-    * [[Snapshots.deleteMatching]]). `nullMatchless=true` (NOT EXISTS)
-    * means the semantics DO select NULL-keyed target rows (a NULL
-    * equality never matches, so NOT EXISTS holds) — key-addressed DML
-    * cannot express their deletion, so it refuses loudly; NOT IN
-    * passes false (a NULL key compares UNKNOWN and is kept). The
-    * tombstone set is computed against the pinned version the commit
-    * CASes on; a lost race recomputes against the new version. */
-  private def antiDelete(spark: SparkSession, frame: DataFrame,
-      names: Seq[String], nullMatchless: Boolean = true): Unit =
-    Snapshots.retryPinned(spark, dir,
-      s"DELETE FROM '$tableName' (anti-join)") { base =>
-      import org.apache.spark.sql.functions.col
-      val tgt = Snapshots.read(spark, dir, base)
-        .select(names.map(col): _*)
-      if (nullMatchless && tgt.filter(names.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"DELETE FROM '$tableName' WHERE NOT EXISTS selected a " +
-            "target row with a NULL correlation-key value — " +
-            "key-addressed DML cannot express it; DELETE those " +
-            "rows with an IS NULL predicate first")
-      val tomb = tgt.na.drop(names).distinct()
-        .join(frame, names, "left_anti")
-      Snapshots.deleteMatching(spark, dir, tomb, names,
-        expectedVersion = base)
-      ()
-    }
-
-  /** Correlated NOT IN: for each target row, the comparison set is
-    * the subquery's `vName` values at the row's correlation-key
-    * tuple. Exact three-valued semantics, fully distributed:
-    *
-    *   - empty set → NOT IN is TRUE → delete;
-    *   - a NULL in the set → never TRUE → keep;
-    *   - NULL value, non-empty set → UNKNOWN → keep;
-    *   - else delete iff the (value, keys) tuple has no pair match.
-    *
-    * Target rows the semantics WOULD delete but key-addressed DML
-    * cannot express (NULL correlation key — its set is empty; NULL
-    * value whose set is empty) refuse loudly. */
-  private def antiDeleteNotIn(spark: SparkSession, pairs: DataFrame,
-      names: Seq[String], vName: String): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit, max}
-    val corr = names.filterNot(_ == vName)
-    require(corr.nonEmpty, "correlated NOT IN lost its correlation")
-    require(!names.exists(n => n == "__nin_cnt" || n == "__nin_hasnull"),
-      "NOT IN decomposition reserves the __nin_ column prefix")
-    val sAgg = pairs.groupBy(corr.map(col): _*)
-      .agg(count(lit(1)).as("__nin_cnt"),
-        max(col(vName).isNull.cast("int")).as("__nin_hasnull"))
-    Snapshots.retryPinned(spark, dir,
-      s"DELETE FROM '$tableName' (NOT IN)") { base =>
-      val tgt = Snapshots.read(spark, dir, base)
-        .select(names.map(col): _*).distinct()
-      if (tgt.filter(corr.map(col(_).isNull).reduce(_ || _))
-          .take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"DELETE FROM '$tableName' WHERE ... NOT IN (correlated " +
-            "subquery) selected a target row with a NULL " +
-            "correlation-key value (its comparison set is empty, so " +
-            "NOT IN is TRUE) — key-addressed DML cannot express it; " +
-            "DELETE those rows with an IS NULL predicate first")
-      val j = tgt.join(sAgg, corr, "left")
-      if (j.filter(col(vName).isNull && col("__nin_cnt").isNull)
-          .take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"DELETE FROM '$tableName' WHERE ... NOT IN (correlated " +
-            "subquery) selected a target row with a NULL value and " +
-            "an empty comparison set (NOT IN over the empty set is " +
-            "TRUE) — key-addressed DML cannot express it; DELETE " +
-            "those rows with an IS NULL predicate first")
-      val emptySet = j.filter(col("__nin_cnt").isNull &&
-        col(vName).isNotNull).select(names.map(col): _*)
-      val noMatch = j.filter(col("__nin_cnt").isNotNull &&
-          col("__nin_hasnull") === 0 && col(vName).isNotNull)
-        .select(names.map(col): _*)
-        .join(pairs, names, "left_anti")
-      Snapshots.deleteMatching(spark, dir,
-        emptySet.unionByName(noMatch), names, expectedVersion = base)
-      ()
+      case other =>
+        where(other.map(c => toColumn(evaluateSubqueries(spark, c, verb),
+          verb)).getOrElse(lit(true)))
     }
   }
-
-  private def refuseCorrelatedShape(what: String): Nothing =
-    throw new UnsupportedOperationException(
-      s"DELETE FROM '$tableName' WHERE $what: only a standing-alone " +
-        "subquery whose correlation is a conjunction of `inner = " +
-        "outer` column equalities in its WHERE clause is supported " +
-        "(it runs as a distributed key-frame delete — EXISTS/IN as " +
-        "the matching keys, NOT EXISTS as their anti complement); " +
-        "otherwise materialize the correlation as a source table " +
-        "and MERGE")
 }
 
-/** `UPDATE graft.db.t SET c = e, ... WHERE p` →
+/** `DELETE FROM graft.db.t WHERE p` → [[GraftDml.runWhere]] with
+  * [[Snapshots.deleteMatching]] as the key-frame executor and
+  * [[Snapshots.deleteWhere]] (or the deletion-vector
+  * [[Snapshots.deleteWhereLight]] when
+  * `spark.graft.sql.deletionVectors=true`) as the predicate executor.
+  * Returns no rows, as Spark's DELETE does. */
+final case class GraftDeleteCommand(dir: String, tableName: String,
+    shieldedCond: ShieldedExpr) extends LeafRunnableCommand {
+  override def run(spark: SparkSession): Seq[Row] = {
+    GraftDml.runWhere(spark, dir, tableName, "DELETE FROM",
+      Some(shieldedCond.e),
+      Snapshots.deleteMatching(spark, dir, _, _, _),
+      pred =>
+        if (GraftDml.useDv(spark)) Snapshots.deleteWhereLight(spark, dir, pred)
+        else Snapshots.deleteWhere(spark, dir, pred))
+    Seq.empty
+  }
+}
+
+/** `UPDATE graft.db.t SET c = e, ... WHERE p` → [[GraftDml.runWhere]]
+  * with [[Snapshots.updateMatching]] as the key-frame executor and
   * [[Snapshots.updateWhere]] (copy-on-write, file-level pruned), or
   * the deletion-vector [[Snapshots.updateWhereLight]] when
-  * `spark.graft.sql.deletionVectors=true`. */
+  * `spark.graft.sql.deletionVectors=true`, as the predicate executor.
+  * The SET values' own uncorrelated subqueries evaluate first. */
 final case class GraftUpdateCommand(dir: String, tableName: String,
     assignments: Seq[(String, ShieldedExpr)],
     cond: Option[ShieldedExpr]) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
-    import org.apache.spark.sql.functions.lit
     val assigns = assignments.map { case (c, e) =>
       c -> GraftDml.toColumn(
         GraftDml.evaluateSubqueries(spark, e.e, "UPDATE SET"), "UPDATE")
     }
-    cond.map(_.e) match {
-      // correlated-equality EXISTS / IN standing alone: the CDC
-      // "update the rows these keys name" statement — the same
-      // distributed key-frame decomposition as DELETE's, executed by
-      // the copy-on-write updateMatching (any source cardinality, no
-      // driver materialization, key-footprint file pruning)
-      case Some(ex: Exists) if ex.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, ex.plan, Nil) match {
-          case Some((frame, names)) =>
-            Snapshots.updateMatching(spark, dir, frame, names, assigns)
-          case None => refuseCorrelatedShape("EXISTS")
-        }
-      case Some(InSubquery(vals, lq: ListQuery))
-          if lq.getOuterAttrs.nonEmpty &&
-            vals.forall(_.isInstanceOf[AttributeReference]) =>
-        GraftDml.equalityCorrelationFrame(spark, lq.plan,
-          vals.map(_.asInstanceOf[AttributeReference].name)) match {
-          case Some((frame, names)) =>
-            Snapshots.updateMatching(spark, dir, frame, names, assigns)
-          case None => refuseCorrelatedShape("IN (subquery)")
-        }
-      // pure uncorrelated IN-subquery: distributed at any cardinality
-      // (the capped literal path stays for IN among other conjuncts)
-      case Some(InSubquery(vs, lq: ListQuery))
-          if lq.outerAttrs.isEmpty &&
-            vs.forall(_.isInstanceOf[AttributeReference]) =>
-        val names = vs.map(_.asInstanceOf[AttributeReference].name)
-        val frame = GraftSparkBridge.ofRows(spark, lq.plan)
-        require(frame.columns.length == names.length,
-          s"IN (subquery) arity mismatch: ${names.length} key columns " +
-            s"vs ${frame.columns.length} subquery columns")
-        Snapshots.updateMatching(spark, dir, frame.toDF(names: _*),
-          names, assigns)
-      // correlated NOT EXISTS standing alone — "touch up every row
-      // that has NO match": the ANTI twin of the EXISTS decomposition
-      // (target keys anti-join the subquery's residual frame →
-      // updateMatching), distributed at any cardinality — the same
-      // week-one CDC statement as DELETE's retention sweep
-      case Some(Not(ex: Exists)) if ex.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, ex.plan, Nil) match {
-          case Some((frame0, names)) =>
-            // pin the subquery frame: the anti-join (and a lost-CAS
-            // retry) must see the SAME rows even if the plan is
-            // nondeterministic
-            val frame = frame0.persist()
-            try antiUpdate(spark, frame, names, assigns)
-            finally frame.unpersist()
-          case None => refuseCorrelatedShape("NOT EXISTS")
-        }
-      // correlated single-column NOT IN: per correlation-key tuple,
-      // NOT IN over that key's value set with exact three-valued
-      // semantics — empty set updates, a NULL in the set keeps, a
-      // NULL value keeps (unless its set is empty, which refuses:
-      // key-addressed DML cannot express updating a NULL-keyed row)
-      case Some(Not(InSubquery(Seq(v: AttributeReference),
-          lq: ListQuery))) if lq.getOuterAttrs.nonEmpty =>
-        GraftDml.equalityCorrelationFrame(spark, lq.plan,
-          Seq(v.name)) match {
-          case Some((pairs0, names)) =>
-            // pinned: the per-key aggregate, the refusal probes and
-            // the anti-join must all see the SAME subquery rows
-            val pairs = pairs0.persist()
-            try antiUpdateNotIn(spark, pairs, names, v.name, assigns)
-            finally pairs.unpersist()
-          case None => refuseCorrelatedShape("NOT IN (subquery)")
-        }
-      // single-column NOT IN (subquery) standing alone, uncorrelated:
-      // exact three-valued semantics — an empty subquery updates
-      // everything (NULL keys included), any NULL in the subquery
-      // updates nothing, a NULL target key never updates (UNKNOWN)
-      case Some(Not(InSubquery(Seq(v: AttributeReference),
-          lq: ListQuery))) if lq.getOuterAttrs.isEmpty =>
-        val frame = GraftSparkBridge.ofRows(spark, lq.plan)
-        require(frame.columns.length == 1,
-          "NOT IN (subquery) arity mismatch: 1 key column vs " +
-            s"${frame.columns.length} subquery columns")
-        // pinned: the emptiness/NULL probe and the anti-join must see
-        // the SAME rows, and the probe is ONE aggregate pass
-        val keyed = frame.toDF(v.name).persist()
-        try {
-          import org.apache.spark.sql.functions.{col, count}
-          val r = keyed.agg(count(lit(1)).as("__n"),
-            count(col(v.name)).as("__nn")).head()
-          val n = r.getLong(0)
-          if (n == 0) {
-            // NOT IN over an EMPTY set is TRUE for every row, NULL
-            // keys included — a predicate update, no keys involved
-            if (GraftDml.useDv(spark))
-              Snapshots.updateWhereLight(spark, dir, lit(true), assigns)
-            else Snapshots.updateWhere(spark, dir, lit(true), assigns)
-          } else if (r.getLong(1) == n) {
-            antiUpdate(spark, keyed.distinct(), Seq(v.name), assigns,
-              nullMatchless = false)
-          } // else: a NULL in the subquery — no row's NOT IN is
-            // TRUE; the update is a no-op and commits nothing
-        } finally keyed.unpersist()
-      case other =>
-        val pred = other
-          .map(c => GraftDml.toColumn(
-            GraftDml.evaluateSubqueries(spark, c, "UPDATE"), "UPDATE"))
-          .getOrElse(lit(true))
+    GraftDml.runWhere(spark, dir, tableName, "UPDATE", cond.map(_.e),
+      Snapshots.updateMatching(spark, dir, _, _, assigns, _),
+      pred =>
         if (GraftDml.useDv(spark))
           Snapshots.updateWhereLight(spark, dir, pred, assigns)
-        else Snapshots.updateWhere(spark, dir, pred, assigns)
-    }
+        else Snapshots.updateWhere(spark, dir, pred, assigns))
     Seq.empty
   }
-
-  /** Update the target rows whose `names` tuple has NO match in
-    * `frame` — the distributed ANTI complement of the key-frame
-    * update (target keys anti-join the frame, then
-    * [[Snapshots.updateMatching]]). `nullMatchless=true` (NOT EXISTS)
-    * means the semantics DO select NULL-keyed target rows (a NULL
-    * equality never matches, so NOT EXISTS holds) — key-addressed DML
-    * cannot express their update, so it refuses loudly; NOT IN
-    * passes false (a NULL key compares UNKNOWN and is kept). The key
-    * set is computed against the pinned version the commit CASes on;
-    * a lost race recomputes against the new version. */
-  private def antiUpdate(spark: SparkSession, frame: DataFrame,
-      names: Seq[String], assigns: Seq[(String, Column)],
-      nullMatchless: Boolean = true): Unit =
-    Snapshots.retryPinned(spark, dir,
-      s"UPDATE '$tableName' (anti-join)") { base =>
-      import org.apache.spark.sql.functions.col
-      val tgt = Snapshots.read(spark, dir, base)
-        .select(names.map(col): _*)
-      if (nullMatchless && tgt.filter(names.map(col(_).isNull)
-          .reduce(_ || _)).take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"UPDATE '$tableName' WHERE NOT EXISTS selected a " +
-            "target row with a NULL correlation-key value — " +
-            "key-addressed DML cannot express it; UPDATE those " +
-            "rows with an IS NULL predicate first")
-      val ks = tgt.na.drop(names).distinct()
-        .join(frame, names, "left_anti")
-      Snapshots.updateMatching(spark, dir, ks, names, assigns,
-        expectedVersion = base)
-      ()
-    }
-
-  /** Correlated NOT IN for UPDATE — the exact three-valued
-    * decomposition of [[GraftDeleteCommand]]'s antiDeleteNotIn with
-    * [[Snapshots.updateMatching]] as the executor: empty set →
-    * update; NULL in set → keep; NULL value with non-empty set →
-    * keep; else update iff the (value, keys) tuple has no pair
-    * match. Rows the semantics WOULD update but key-addressed DML
-    * cannot express (NULL correlation key; NULL value whose set is
-    * empty) refuse loudly. */
-  private def antiUpdateNotIn(spark: SparkSession, pairs: DataFrame,
-      names: Seq[String], vName: String,
-      assigns: Seq[(String, Column)]): Unit = {
-    import org.apache.spark.sql.functions.{col, count, lit, max}
-    val corr = names.filterNot(_ == vName)
-    require(corr.nonEmpty, "correlated NOT IN lost its correlation")
-    require(!names.exists(n => n == "__nin_cnt" || n == "__nin_hasnull"),
-      "NOT IN decomposition reserves the __nin_ column prefix")
-    val sAgg = pairs.groupBy(corr.map(col): _*)
-      .agg(count(lit(1)).as("__nin_cnt"),
-        max(col(vName).isNull.cast("int")).as("__nin_hasnull"))
-    Snapshots.retryPinned(spark, dir,
-      s"UPDATE '$tableName' (NOT IN)") { base =>
-      val tgt = Snapshots.read(spark, dir, base)
-        .select(names.map(col): _*).distinct()
-      if (tgt.filter(corr.map(col(_).isNull).reduce(_ || _))
-          .take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"UPDATE '$tableName' WHERE ... NOT IN (correlated " +
-            "subquery) selected a target row with a NULL " +
-            "correlation-key value (its comparison set is empty, so " +
-            "NOT IN is TRUE) — key-addressed DML cannot express it; " +
-            "UPDATE those rows with an IS NULL predicate first")
-      val j = tgt.join(sAgg, corr, "left")
-      if (j.filter(col(vName).isNull && col("__nin_cnt").isNull)
-          .take(1).nonEmpty)
-        throw new UnsupportedOperationException(
-          s"UPDATE '$tableName' WHERE ... NOT IN (correlated " +
-            "subquery) selected a target row with a NULL value and " +
-            "an empty comparison set (NOT IN over the empty set is " +
-            "TRUE) — key-addressed DML cannot express it; UPDATE " +
-            "those rows with an IS NULL predicate first")
-      val emptySet = j.filter(col("__nin_cnt").isNull &&
-        col(vName).isNotNull).select(names.map(col): _*)
-      val noMatch = j.filter(col("__nin_cnt").isNotNull &&
-          col("__nin_hasnull") === 0 && col(vName).isNotNull)
-        .select(names.map(col): _*)
-        .join(pairs, names, "left_anti")
-      Snapshots.updateMatching(spark, dir,
-        emptySet.unionByName(noMatch), names, assigns,
-        expectedVersion = base)
-      ()
-    }
-  }
-
-  private def refuseCorrelatedShape(what: String): Nothing =
-    throw new UnsupportedOperationException(
-      s"UPDATE '$tableName' WHERE $what: only a standing-alone " +
-        "subquery whose correlation is a conjunction of `inner = " +
-        "outer` column equalities in its WHERE clause is supported " +
-        "(it runs as a distributed key-frame update — EXISTS/IN as " +
-        "the matching keys, NOT EXISTS as their anti complement); " +
-        "otherwise materialize the correlation as a source table " +
-        "and MERGE")
 }
 
 /** `MERGE INTO graft.db.t USING s ON t.k = s.k WHEN MATCHED THEN

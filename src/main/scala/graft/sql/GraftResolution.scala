@@ -1,7 +1,7 @@
 package graft.sql
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{Alias, And, AttributeReference, AttributeSet, EqualTo, Expression, Literal, SubqueryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Alias, AttributeReference, AttributeSet, EqualTo, Expression, Literal, SubqueryExpression}
 import org.apache.spark.sql.catalyst.expressions.aggregate.{AggregateExpression, Count, Max, Min}
 import org.apache.spark.sql.catalyst.plans.logical.{AddCheckConstraint, Aggregate, Assignment, DeleteAction, DeleteFromTable, Filter => LogicalFilter, InsertAction, InsertStarAction, LogicalPlan, MergeAction, MergeIntoTable, Project, SubqueryAlias, UpdateAction, UpdateStarAction, UpdateTable, V2WriteCommand}
 import org.apache.spark.sql.catalyst.rules.Rule
@@ -291,11 +291,6 @@ final case class GraftResolution(session: SparkSession)
 
   // ---- merge --------------------------------------------------------
 
-  private def splitConjuncts(e: Expression): Seq[Expression] = e match {
-    case And(l, r) => splitConjuncts(l) ++ splitConjuncts(r)
-    case x => Seq(x)
-  }
-
   /** Convert graft READ relations inside an expression's subquery
     * plans — a `DELETE ... WHERE k IN (SELECT ... FROM graft.db.s)`
     * carries a whole plan inside its predicate. */
@@ -347,7 +342,7 @@ final case class GraftResolution(session: SparkSession)
       refuse("ON with a subquery is not supported")
     val tAttrs = AttributeSet(rel.output)
     val sAttrs = AttributeSet(m.sourceTable.output)
-    val keyPairs = splitConjuncts(m.mergeCondition).map {
+    val keyPairs = GraftDml.splitConj(m.mergeCondition).map {
       case EqualTo(a: AttributeReference, b: AttributeReference)
           if tAttrs.contains(a) && sAttrs.contains(b) => a.name -> b.name
       case EqualTo(b: AttributeReference, a: AttributeReference)

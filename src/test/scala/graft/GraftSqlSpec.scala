@@ -519,6 +519,26 @@ class GraftSqlSpec extends SparkSpec {
         SELECT 1 FROM ucor_src s WHERE s.rid > t.id)""")
     }
     assert(e.getMessage.contains("column equalities"), e.getMessage)
+    // standing-alone uncorrelated IN, single key: the subquery is the
+    // distributed key frame
+    spark.sql("""UPDATE gs.default.ucor SET v = -6.0
+      WHERE id IN (SELECT rid FROM ucor_src WHERE rid < 8)""")
+    assert(spark.sql("SELECT id FROM gs.default.ucor WHERE v = -6.0")
+      .as[Long].collect().toSet == Set(0L, 2L, 4L, 6L))
+    // ... and a composite key: (id, grp) pairs with (rid, rgrp)
+    spark.sql("""UPDATE gs.default.ucor SET v = -7.0
+      WHERE (id, grp) IN (SELECT rid, rgrp FROM ucor_src)""")
+    assert(spark.sql("SELECT id FROM gs.default.ucor WHERE v = -7.0")
+      .as[Long].collect().toSet ==
+      (0L until 15L).filter(i => (i * 2) % 3 == i % 3).map(_ * 2).toSet)
+    // correlated IN: the SELECT-list value pairs with the IN column,
+    // the correlation equality joins the key set
+    spark.sql("""UPDATE gs.default.ucor t SET v = -8.0 WHERE id IN (
+      SELECT s.rid + 1 FROM ucor_src s WHERE s.rgrp = t.grp)""")
+    assert(spark.sql("SELECT id FROM gs.default.ucor WHERE v = -8.0")
+      .as[Long].collect().toSet ==
+      (0L until 15L).filter(i => (i * 2 + 1) % 3 == i % 3)
+        .map(_ * 2 + 1).toSet)
   }
 
   test("UPDATE NOT EXISTS refuses NULL correlation keys loudly") {

@@ -11,7 +11,11 @@ first. The last stdout line of every run is its JSON result. For each
 gated metric of BENCHMARK.json the report gives both medians, the
 parent's interquartile range, how many pairs the change won (ties count
 for neither side), and whether the change's median is within the
-metric's bound of the parent's; then the failed-operation counts.
+metric's bound of the parent's: "yes" or "NO", or "unresolved" when the
+parent's interquartile range is wider than the bound times the parent's
+median, so run-to-run spread cannot tell the two apart (unless every
+change run is better than every parent run, when the verdict stands);
+then the failed-operation counts.
 
 Build outputs go to per-side cache directories under the system temp
 directory, so nothing is written inside the repository; the exported
@@ -87,9 +91,12 @@ def report(bench, pairs):
                     else c["metrics"][name] > p["metrics"][name]))
         limit = pm * (1 + m["bound"]) if lower else pm * (1 - m["bound"])
         ok = cm <= limit if lower else cm >= limit
+        verdict = "yes" if ok else "NO"
+        separated = max(cs) < min(ps) if lower else min(cs) > max(ps)
+        if iqr(ps) > m["bound"] * pm and not separated:
+            verdict = "unresolved"
         print(f"{name:<18}{pm:>12.1f}{cm:>12.1f}{iqr(ps):>12.1f}"
-              f"{wins:>5}/{len(pairs):<2}  {'yes' if ok else 'NO'} "
-              f"(bound {m['bound']})")
+              f"{wins:>5}/{len(pairs):<2}  {verdict} (bound {m['bound']})")
     for side, k in (("parent", 0), ("change", 1)):
         att = sum(p[k]["attempted"] for p in pairs)
         bad = sum(p[k]["failed"] for p in pairs)
