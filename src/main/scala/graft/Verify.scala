@@ -25,6 +25,11 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.forall(_ == name) }
       .foreach { case (name, fn) =>
+      // an earlier run's output must not stand in for a query that
+      // throws now: the oracle compare then reports it missing
+      val out = new org.apache.hadoop.fs.Path(s"$outDir/$name")
+      out.getFileSystem(spark.sparkContext.hadoopConfiguration)
+        .delete(out, true)
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -10,6 +10,9 @@ import org.apache.spark.sql.DataFrame
   * deletes the target before the job commits, so a crash mid-write (or
   * a concurrent read mid-rewrite) loses or misses the table — this
   * machinery closes that window to the instant between two renames.
+  * Every swap replaces the WHOLE table directory: there is one
+  * granularity, so a parked copy always means the same thing to
+  * recovery.
   *
   * Concurrent-reader contract (asserted by SwapReaderSpec): a reader
   * whose file listing predates a swap either serves the old snapshot or
@@ -17,9 +20,7 @@ import org.apache.spark.sql.DataFrame
   * mixed/partial/empty result, because the whole directory moves in one
   * rename and the pinned old paths vanish together. A reader arriving in
   * the instant between the renames fails at path resolution; the next
-  * maintenance pass heals. Partition-level swaps are individually atomic
-  * — cross-partition atomicity is not provided, but a stale reader still
-  * cannot assemble a torn SUCCESS for the same reason.
+  * call heals.
   */
 private[ops] object AtomicDir {
 
@@ -36,61 +37,32 @@ private[ops] object AtomicDir {
   /** Sibling dir where the previous copy is parked during a swap — NEVER
     * inside the table directory, where partition discovery would read it
     * as a phantom partition. */
-  def oldFor(target: HPath): HPath =
+  private def oldFor(target: HPath): HPath =
     new HPath(target.getParent, target.getName + "__old__")
 
-  /** Parking dir for partitions a delete has fully EMPTIED. Distinct from
-    * [[oldFor]] because recovery must treat the two oppositely: an
-    * interrupted swap restores `__old__` (the replacement never landed),
-    * but restoring a fully-deleted partition would resurrect rows the
-    * delete had already removed — so [[recoverInterruptedSwap]] PURGES
-    * this dir instead. */
-  def droppedFor(target: HPath): HPath =
-    new HPath(target.getParent, target.getName + "__dropped__")
-
   /** Crash recovery, run BEFORE the existence probe of every caller: a
-    * crash between swap renames leaves the previous copy parked at
-    * `<target>__old__` (whole table) or `<target>__old__/<part>=...`
-    * (partition dirs). Restore whatever the interrupted swap had not yet
-    * replaced, then clear the parking dir. */
+    * crash between the swap renames leaves the previous copy parked at
+    * `<target>__old__`. If `<target>` is missing, the replacement never
+    * landed and the parked copy IS the table: rename it back. If
+    * `<target>` exists, the swap landed and the parked copy is a
+    * leftover: delete it. */
   def recoverInterruptedSwap(fs: FileSystem, target: HPath): Unit = {
-    // partitions parked here were fully emptied by an interrupted delete:
-    // finishing that delete means discarding them, never restoring
-    val dropped = droppedFor(target)
-    if (fs.exists(dropped)) fs.delete(dropped, true)
     val old = oldFor(target)
     if (!fs.exists(old)) return
-    if (!fs.exists(target)) {
-      // whole-table swap died between the renames: the parked copy IS
-      // the table
-      if (!fs.rename(old, target))
-        throw new java.io.IOException(s"recovery rename $old -> $target failed")
-      return
-    }
-    // partition-level swap: restore only the parked partition dirs whose
-    // replacement never landed; everything else is a completed-swap
-    // leftover (its target exists) and is safe to drop
-    fs.listStatus(old).foreach { st =>
-      val dest = new HPath(target, st.getPath.getName)
-      if (st.isDirectory && st.getPath.getName.contains("=") &&
-        !fs.exists(dest)) {
-        if (!fs.rename(st.getPath, dest))
-          throw new java.io.IOException(
-            s"recovery rename ${st.getPath} -> $dest failed")
-      }
-    }
-    fs.delete(old, true)
+    if (fs.exists(target)) fs.delete(old, true)
+    else if (!fs.rename(old, target))
+      throw new java.io.IOException(s"recovery rename $old -> $target failed")
   }
 
   /** Swap a fully-written staging dir into place: rename current aside
-    * (to `old` — a path OUTSIDE the table dir), rename staging in,
+    * (to [[oldFor]] — a path OUTSIDE the table dir), rename staging in,
     * delete the parked copy. The previous data survives a failure at ANY
     * point — a crash between the renames is healed by
     * [[recoverInterruptedSwap]] on the next call; the visibility gap is
     * the instant between the renames — the price of running on a store
     * without atomic directory replace. */
-  def swapInto(fs: FileSystem, staging: HPath, target: HPath,
-      old: HPath): Unit = {
+  def swapInto(fs: FileSystem, staging: HPath, target: HPath): Unit = {
+    val old = oldFor(target)
     if (fs.exists(old)) fs.delete(old, true)
     val hadPrev = fs.exists(target)
     if (hadPrev && !fs.rename(target, old))
@@ -112,6 +84,6 @@ private[ops] object AtomicDir {
     val staging = stagingFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
     write(df, staging.toString)
-    swapInto(fs, staging, target, oldFor(target))
+    swapInto(fs, staging, target)
   }
 }

@@ -103,8 +103,8 @@ object Layout {
     * with nothing to interleave against is just a sort, and a pure
     * range layout is strictly better for single-key point DML
     * (BASELINE.md round 8: 1 file touched under range vs 11). Write
-    * the result with `.write.parquet(...)` (or hand it to
-    * [[Compact]]'s swap for an in-place OPTIMIZE). */
+    * the result with `.write.parquet(...)` (or use
+    * [[Snapshots.optimize]] for an in-place OPTIMIZE). */
   def cluster(df: DataFrame, cols: Seq[String], bits: Int = 8,
       numFiles: Int = 0): DataFrame = {
     require(cols.nonEmpty, "cluster needs at least one column")

@@ -23,8 +23,8 @@ object Sinks {
     * time-range queries prune files (dynamic partition overwrite only
     * rewrites the partitions present in `df`, not the whole table).
     * Note the delete-before-commit window applies per touched partition;
-    * for crash-critical tables use [[Upsert.upsertParquetPartitioned]],
-    * whose per-partition swap parks the previous copy. */
+    * for crash-critical tables use a snapshot table, whose
+    * [[Snapshots.replaceWhere]] replaces a range in one atomic commit. */
   def overwritePartitioned(df: DataFrame, path: String,
       partitionCols: Seq[String]): Unit =
     df.write.mode("overwrite")

@@ -11,7 +11,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 /** Versioned snapshot tables — manifest-pinned commits, the isolation
-  * model [[Upsert]]/[[Delete]]/[[Compact]]'s directory swaps cannot
+  * model [[Upsert]]/[[Sinks]]'s directory swaps cannot
   * give. A swap replaces the directory a reader is ABOUT to list; a
   * manifest names the exact immutable files of one version, so a
   * reader resolves a version once and is untouchable by every later

@@ -1,7 +1,6 @@
 package graft.ops
 
-import org.apache.hadoop.fs.{Path => HPath}
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Merge-upsert (SURVEY.md S7) — the reference's
@@ -16,9 +15,10 @@ import org.apache.spark.sql.functions._
   * Scale notes: the winner-per-key pick is max_by over a struct — a hash
   * aggregation with map-side partial combine, which beats a row_number
   * window (no sort, and pre-shuffle partial aggregation collapses
-  * re-delivered duplicates early). For 100 TB, partition the sink table
-  * (e.g. by date) and restrict the read-existing side to the partitions the
-  * batch touches.
+  * re-delivered duplicates early). `upsertParquet` rewrites the whole
+  * table per batch; a table too large for that is a snapshot table,
+  * whose [[Snapshots.merge]] rewrites only the files the batch's keys
+  * can touch.
   */
 object Upsert {
 
@@ -43,76 +43,6 @@ object Upsert {
       .select(keys.map(col) ++
         cols.filterNot(keys.contains).map(c => col(s"__w.$c").as(c)): _*)
       .select(cols.map(col): _*)
-  }
-
-  /** Partition-restricted upsert — the 100 TB form: the sink is
-    * partitioned by `partCol` (a column of `updates`, e.g. a derived
-    * date); only the partitions PRESENT IN THE BATCH are read, merged
-    * and dynamically overwritten. A 5-minute tick then touches one or
-    * two date directories of a multi-year table instead of rewriting all
-    * of it — the reference's pkey-indexed ON CONFLICT upsert has the
-    * same locality (it touches only conflicting pages).
-    *
-    * Correct because the merge key set must determine the partition: two
-    * versions of one key land in the same `partCol` value (e.g. key
-    * contains the event date the partition derives from). */
-  def upsertParquetPartitioned(updates: DataFrame, path: String,
-      keys: Seq[String], version: String, partCol: String): Unit = {
-    val spark = updates.sparkSession
-    val (fs, target) = AtomicDir.fsFor(updates, path)
-    AtomicDir.recoverInterruptedSwap(fs, target)
-    val touched = updates.select(partCol).distinct().collect()
-      .map(_.get(0)).toSeq // bounded: partitions per batch, not rows
-    // null partition values need an explicit isNull arm — `IN (null)` is
-    // SQL-null, which would EXCLUDE existing null-partition rows from the
-    // merge while dynamic overwrite still rewrites that partition: silent
-    // data loss.
-    val (nullTouched, defined) = touched.partition(_ == null)
-    val touchedPred = {
-      val in =
-        if (defined.nonEmpty) col(partCol).isInCollection(defined)
-        else lit(false)
-      if (nullTouched.nonEmpty) in || col(partCol).isNull else in
-    }
-    val exists = fs.exists(target)
-    val merged =
-      if (exists) {
-        val existing = spark.read.parquet(path)
-          .filter(touchedPred) // partition pruning
-          .select(updates.columns.map(col).toIndexedSeq: _*)
-        merge(existing, updates, keys, version)
-      } else merge(updates.limit(0), updates, keys, version)
-    // Stage the touched partitions beside the table, then swap each
-    // partition dir into place: the lazy read of the current table
-    // happens while writing the staging dir (target untouched), and a
-    // failure at any point leaves the current table readable — unlike a
-    // read-then-overwrite of the same path, whose recompute-after-
-    // executor-loss would re-read a half-deleted target.
-    val staging = AtomicDir.stagingFor(target)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    merged.write.mode("overwrite")
-      .partitionBy(partCol)
-      .parquet(staging.toString)
-    if (!exists) {
-      AtomicDir.swapInto(fs, staging, target, AtomicDir.oldFor(target))
-    } else {
-      // partition backups park under <target>__old__/<part>= ... — a
-      // SIBLING of the table root, never inside it (partition discovery
-      // would read an in-table backup as a phantom partition value)
-      val oldRoot = AtomicDir.oldFor(target)
-      if (fs.exists(oldRoot)) fs.delete(oldRoot, true)
-      fs.mkdirs(oldRoot)
-      val partDirs = fs.listStatus(staging)
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith(s"$partCol="))
-      partDirs.foreach { st =>
-        AtomicDir.swapInto(fs, st.getPath,
-          new HPath(target, st.getPath.getName),
-          new HPath(oldRoot, st.getPath.getName))
-      }
-      fs.delete(staging, true)
-      fs.delete(oldRoot, true)
-    }
   }
 
   /** Idempotent batch upsert into a parquet path (read ∪ merge ∪ atomic
@@ -140,6 +70,6 @@ object Upsert {
     val staging = AtomicDir.stagingFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
     merged.write.mode("overwrite").parquet(staging.toString)
-    AtomicDir.swapInto(fs, staging, target, AtomicDir.oldFor(target))
+    AtomicDir.swapInto(fs, staging, target)
   }
 }

@@ -301,24 +301,24 @@ object SinkQueries {
         |FROM f ORDER BY user_id, change_seq""".stripMargin),
 
     // S17: targeted physical delete (right-to-be-forgotten / retention
-    // expiry) — the complement of S7's upsert, same stage-and-swap
-    // machinery. Stages the events table partitioned by event_type,
-    // deletes every row of a deterministic user subset, then reads the
-    // REAL post-delete files back; the oracle replays the deletion as a
-    // plain anti-filter over the source. Only partitions containing
-    // affected keys are rewritten (DeleteSpec proves untouched partitions
-    // byte-identical).
+    // expiry) — the complement of S7's upsert. Stages the events table
+    // as a snapshot table, deletes every row of a deterministic user
+    // subset by key frame (Snapshots.deleteMatching: only files whose
+    // key footprint may match are rewritten, in one atomic commit), then
+    // reads the post-delete version back; the oracle replays the
+    // deletion as a plain anti-filter over the source.
     QueryDef("s17_delete_keys",
       (s, dir) => {
-        val path = s"${stageDir(dir)}/s17_table"
-        Tables.events(s, dir)
-          .select("event_id", "user_id", "event_type", "value")
-          .write.mode("overwrite").partitionBy("event_type").parquet(path)
+        import graft.ops.Snapshots
+        val root = s"${stageDir(dir)}/s17_snap"
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        Snapshots.append(Tables.events(s, dir)
+          .select("event_id", "user_id", "event_type", "value"), root)
         val keys = Tables.events(s, dir).select("user_id")
           .filter(col("user_id") % 7 === 0).distinct()
-        graft.ops.Delete.deleteKeysPartitioned(
-          s, path, keys, Seq("user_id"), "event_type")
-        s.read.parquet(path)
+        Snapshots.deleteMatching(s, root, keys, Seq("user_id"))
+        Snapshots.read(s, root)
           .groupBy("event_type")
           .agg(count(lit(1)).cast("long").as("n_rows"),
             sum(col("value").cast("decimal(18,4)")).cast("double")
@@ -331,22 +331,23 @@ object SinkQueries {
         |GROUP BY event_type ORDER BY event_type""".stripMargin),
 
     // S18: small-file compaction — stage the events table fragmented
-    // (16 files per partition, the after-a-month-of-5-min-ticks layout),
-    // compact, and read the REAL post-compaction files back. The oracle
-    // is the same aggregation from the source: compaction must be
-    // byte-exact on data while collapsing the layout (CompactSpec proves
-    // the file counts and the untouched-partition guarantee; here the
-    // oracle proves no row was lost, duplicated, or altered).
+    // (16 files in one commit, the after-a-month-of-5-min-ticks layout),
+    // compact it into a new version (Snapshots.compact), and read that
+    // version back. The oracle is the same aggregation from the source:
+    // compaction must be byte-exact on data while collapsing the layout
+    // (the snapshot compact specs prove the file counts; here the oracle
+    // proves no row was lost, duplicated, or altered).
     QueryDef("s18_compaction",
       (s, dir) => {
-        val path = s"${stageDir(dir)}/s18_table"
-        Tables.events(s, dir)
+        import graft.ops.Snapshots
+        val root = s"${stageDir(dir)}/s18_snap"
+        val p = new org.apache.hadoop.fs.Path(root)
+        p.getFileSystem(s.sparkContext.hadoopConfiguration).delete(p, true)
+        Snapshots.append(Tables.events(s, dir)
           .select("event_id", "user_id", "event_type", "value")
-          .repartition(16)
-          .write.mode("overwrite").partitionBy("event_type").parquet(path)
-        graft.ops.Compact.compactPartitions(s, path, "event_type",
-          maxFiles = 2, targetBytes = 1L << 30)
-        s.read.parquet(path)
+          .repartition(16), root)
+        Snapshots.compact(s, root, 2)
+        Snapshots.read(s, root)
           .groupBy("event_type")
           .agg(count(lit(1)).cast("long").as("n_rows"),
             sum(col("value").cast("decimal(18,4)")).cast("double")

@@ -52,12 +52,17 @@ private[sql] object GraftDml {
     * driver materialization) or MERGE tombstones are the scale paths. */
   private val SubqueryValueLimit = 100000
 
+  /** The verb of a statement's words (`DELETE`, `UPDATE SET` → `UPDATE`)
+    * — what a refusal's remedy names. */
+  private def verbOf(what: String): String = what.takeWhile(_ != ' ')
+
   private def refuseCorrelated(se: SubqueryExpression, what: String): Unit =
     if (se.getOuterAttrs.nonEmpty)
       throw new UnsupportedOperationException(
         s"$what with a CORRELATED subquery in this position is not " +
-          "supported on graft tables — DELETE supports a standing-alone " +
-          "EXISTS/IN with equality correlation (distributed); otherwise " +
+          s"supported on graft tables — ${verbOf(what)} supports a " +
+          "standing-alone EXISTS/IN with equality correlation " +
+          "(distributed); otherwise " +
           "rewrite as an uncorrelated IN (subquery), or materialize the " +
           "correlation as a source table and MERGE")
 
@@ -95,9 +100,14 @@ private[sql] object GraftDml {
         throw new UnsupportedOperationException(
           s"$what IN (subquery) materialized more than " +
             s"$SubqueryValueLimit distinct values — use the pure " +
-            "'DELETE FROM t WHERE k IN (SELECT ...)' shape (a " +
-            "distributed tombstone delete) or MERGE ... WHEN MATCHED " +
-            "THEN DELETE")
+            (if (verbOf(what) == "UPDATE")
+              "'UPDATE t SET ... WHERE k IN (SELECT ...)' shape (a " +
+                "distributed key-frame update) or MERGE ... WHEN " +
+                "MATCHED THEN UPDATE"
+            else
+              "'DELETE FROM t WHERE k IN (SELECT ...)' shape (a " +
+                "distributed tombstone delete) or MERGE ... WHEN " +
+                "MATCHED THEN DELETE"))
       val dt = lq.plan.output.head.dataType
       In(vals.head, rows.toSeq.map(r => Literal.create(r.get(0), dt)))
   }
@@ -211,7 +221,7 @@ private[sql] object GraftDml {
       matching: (DataFrame, Seq[String], Int) => Unit,
       where: Column => Unit): Unit = {
     import org.apache.spark.sql.functions.{col, count, lit, max}
-    val verb = stmt.takeWhile(_ != ' ')
+    val verb = verbOf(stmt)
 
     def refuseCorrelatedShape(what: String): Nothing =
       throw new UnsupportedOperationException(

@@ -519,6 +519,14 @@ class GraftSqlSpec extends SparkSpec {
         SELECT 1 FROM ucor_src s WHERE s.rid > t.id)""")
     }
     assert(e.getMessage.contains("column equalities"), e.getMessage)
+    // a correlated subquery among other conjuncts refuses with UPDATE's
+    // own remedy named
+    val ec = intercept[Exception] {
+      spark.sql("""UPDATE gs.default.ucor t SET v = 0.0 WHERE v > 0 AND
+        EXISTS (SELECT 1 FROM ucor_src s WHERE s.rid = t.id)""")
+    }
+    assert(ec.getMessage.contains("UPDATE supports a standing-alone") &&
+      !ec.getMessage.contains("DELETE"), ec.getMessage)
     // standing-alone uncorrelated IN, single key: the subquery is the
     // distributed key frame
     spark.sql("""UPDATE gs.default.ucor SET v = -6.0

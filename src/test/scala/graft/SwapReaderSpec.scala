@@ -4,21 +4,16 @@ import java.nio.file.Files
 
 import scala.util.{Failure, Success, Try}
 
-import org.apache.spark.sql.functions._
-
-import graft.ops.{Compact, Delete, Upsert}
+import graft.ops.Upsert
 
 /** Concurrent-reader contract of the stage-and-swap sinks (upsert /
-  * delete / compact): a reader whose file listing predates the swap
-  * either serves the OLD snapshot or fails cleanly (missing-file error
-  * it can retry) — it never silently returns a mixed, partial, or empty
+  * overwrite): a reader whose file listing predates the swap either
+  * serves the OLD snapshot or fails cleanly (missing-file error it can
+  * retry) — it never silently returns a mixed, partial, or empty
   * result; a reader that lists after the swap sees the new state whole.
   * During the instant between the swap renames the table path is absent,
-  * so a new reader fails cleanly at resolution and the next maintenance
-  * pass heals the table. Cross-partition atomicity is NOT provided (each
-  * partition swap is individually atomic) — but stale readers still
-  * can't assemble a torn SUCCESS, because their pinned old file paths
-  * are gone and the whole job fails instead. */
+  * so a new reader fails cleanly at resolution and the next swap heals
+  * the table. */
 class SwapReaderSpec extends SparkSpec {
   import spark.implicits._
 
@@ -61,49 +56,6 @@ class SwapReaderSpec extends SparkSpec {
       Seq(1L, 2L))
   }
 
-  test("partitioned delete: stale cross-partition reader can't assemble a torn success") {
-    val root = Files.createTempDirectory("graft_swapread2").toFile
-    val path = s"$root/table"
-    Seq((1L, "A", 1.0), (2L, "A", 2.0), (3L, "C", 3.0))
-      .toDF("k", "part", "v")
-      .write.partitionBy("part").parquet(path)
-
-    val stale = spark.read.parquet(path)
-    assert(stale.count() == 3)
-
-    // touches only partition A; C's files are untouched — the dangerous
-    // outcome would be a stale SUCCESS mixing new-A with old-C
-    Delete.deleteKeysPartitioned(spark, path,
-      Seq(1L).toDF("k"), Seq("k"), "part")
-
-    val fresh = spark.read.parquet(path).select("k").as[Long]
-      .collect().sorted.toSeq
-    assert(fresh == Seq(2L, 3L))
-    assertStaleOutcome(Try(stale.select("k").as[Long].collect()),
-      Seq(1L, 2L, 3L))
-  }
-
-  test("compaction: stale reader = old snapshot or clean failure, data identical") {
-    val root = Files.createTempDirectory("graft_swapread3").toFile
-    val path = s"$root/table"
-    Seq.tabulate(8)(i => (i.toLong, "A")).toDF("k", "part")
-      .repartition(8) // many small files -> partition A is needy
-      .write.partitionBy("part").parquet(path)
-
-    val stale = spark.read.parquet(path)
-    assert(stale.count() == 8)
-
-    val reports = Compact.compactPartitions(spark, path, "part",
-      maxFiles = 2, targetBytes = Long.MaxValue)
-    assert(reports.exists(_.compacted))
-
-    val fresh = spark.read.parquet(path).select("k").as[Long]
-      .collect().sorted.toSeq
-    assert(fresh == (0L until 8L))
-    assertStaleOutcome(Try(stale.select("k").as[Long].collect()),
-      0L until 8L)
-  }
-
   test("mid-swap window: new reader fails at resolution, next pass heals") {
     val root = Files.createTempDirectory("graft_swapread4").toFile
     val path = s"$root/table"
@@ -120,9 +72,10 @@ class SwapReaderSpec extends SparkSpec {
       ex.getMessage.contains("PATH_NOT_FOUND") ||
       ex.getMessage.contains("does not exist"))
 
-    // any next maintenance pass heals the interrupted swap first
-    Delete.deleteKeysPartitioned(spark, path,
-      Seq(999L).toDF("k"), Seq("k"), "part")
+    // any next swap heals the interrupted one first; an empty batch
+    // keeps the healed content as it is
+    Upsert.upsertParquet(Seq.empty[(Long, String)].toDF("k", "part"), path,
+      Seq("k"), "part")
     assert(spark.read.parquet(path).select("k").as[Long]
       .collect().toSeq == Seq(1L))
   }

@@ -54,48 +54,6 @@ class UpsertSpec extends SparkSpec {
     assert(out == Seq(("a", "new", 2L)))
   }
 
-  test("partitioned upsert preserves existing rows in the null partition") {
-    val pcols = Seq("k", "v", "ver", "day")
-    val dir = Files.createTempDirectory("upsert5").toFile
-    val path = s"$dir/t"
-    Upsert.upsertParquetPartitioned(
-      Seq(("a", "v1", 1L, null: String)).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-    // second batch also hits the null partition with a DIFFERENT key —
-    // the existing null-partition row must survive the dynamic overwrite
-    Upsert.upsertParquetPartitioned(
-      Seq(("b", "w1", 1L, null: String)).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-    val out = spark.read.parquet(path).orderBy("k")
-      .select("k", "v", "ver").as[(String, String, Long)].collect().toSeq
-    assert(out == Seq(("a", "v1", 1L), ("b", "w1", 1L)))
-  }
-
-  test("partitioned upsert only rewrites touched partitions") {
-    val pcols = Seq("k", "v", "ver", "day")
-    val dir = Files.createTempDirectory("upsert3").toFile
-    val path = s"$dir/t"
-    Upsert.upsertParquetPartitioned(
-      Seq(("a", "v1", 1L, "d1"), ("b", "w1", 1L, "d2")).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-    val d2FileBefore = new java.io.File(s"$path/day=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq
-
-    // second batch touches ONLY d1: update 'a', insert 'c'
-    Upsert.upsertParquetPartitioned(
-      Seq(("a", "v2", 2L, "d1"), ("c", "x1", 1L, "d1")).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-
-    val out = spark.read.parquet(path).orderBy("k")
-      .as[(String, String, Long, String)].collect().toSeq
-    assert(out == Seq(("a", "v2", 2L, "d1"), ("b", "w1", 1L, "d2"),
-      ("c", "x1", 1L, "d1")))
-    // untouched d2 partition files survive byte-identically (same names)
-    val d2FileAfter = new java.io.File(s"$path/day=d2").listFiles()
-      .filter(_.getName.endsWith(".parquet")).map(_.getName).toSeq
-    assert(d2FileAfter == d2FileBefore, "d2 partition must not be rewritten")
-  }
-
   test("merge properties: idempotent, associative-by-batch, seeded sweep") {
     // seeded generator, evaluated against a reference fold — the
     // StatsPropertySpec pattern (scalacheck bridge is offline)
@@ -155,27 +113,24 @@ class UpsertSpec extends SparkSpec {
     assert(!new java.io.File(s"${path}__old__").exists)
   }
 
-  test("interrupted partition swap is healed; backups never pollute the table") {
-    val pcols = Seq("k", "v", "ver", "day")
+  test("a hive-partitioned table's parked copy never leaks into its replacement") {
+    val pcols = Seq("k", "v", "ver", "part")
     val dir = Files.createTempDirectory("upsert7").toFile
     val path = s"$dir/t"
-    Upsert.upsertParquetPartitioned(
-      Seq(("a", "v1", 1L, "d1"), ("b", "w1", 1L, "d2")).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-    // backups park OUTSIDE the table dir — a reader mid-swap must never
-    // see a phantom partition value like day=d1__old__
-    assert(!new java.io.File(path).listFiles().exists(_.getName.contains("__old__")))
-    // simulate a crash mid-partition-swap: day=d1 parked, replacement lost
-    new java.io.File(s"${path}__old__").mkdirs()
-    assert(new java.io.File(s"$path/day=d1")
-      .renameTo(new java.io.File(s"${path}__old__/day=d1")))
-    // next upsert (touching only d2) must restore d1 from the parking dir
-    Upsert.upsertParquetPartitioned(
-      Seq(("b", "w2", 2L, "d2")).toDF(pcols: _*),
-      path, Seq("k"), "ver", "day")
-    val out = spark.read.parquet(path).orderBy("k")
-      .as[(String, String, Long, String)].collect().toSeq
-    assert(out == Seq(("a", "v1", 1L, "d1"), ("b", "w2", 2L, "d2")))
+    Seq(("1", "a", 1L, "A"), ("2", "b", 1L, "B")).toDF(pcols: _*)
+      .write.partitionBy("part").parquet(path)
+    // simulate a whole-table swap that died after its second rename: the
+    // partitioned copy is parked, its flat replacement (key 2 deleted)
+    // has landed
+    assert(new java.io.File(path).renameTo(new java.io.File(s"${path}__old__")))
+    Seq(("1", "a", 1L, "A")).toDF(pcols: _*).write.parquet(path)
+    // recovery must discard the parked copy, not move its part= dirs in
+    Upsert.upsertParquet(Seq(("3", "c", 1L, "C")).toDF(pcols: _*),
+      path, Seq("k"), "ver")
+    val keys = spark.read.parquet(path).select("k").as[String]
+      .collect().sorted.toSeq
+    assert(keys == Seq("1", "3"))
+    assert(!new java.io.File(path).list().exists(_.startsWith("part=")))
     assert(!new java.io.File(s"${path}__old__").exists)
   }
 }
