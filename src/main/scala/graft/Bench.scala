@@ -1,8 +1,6 @@
 package graft
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.SparkSession
-
 /** Benchmark entrypoint: times every registered query at
   * `SPARK_GRAFT_SF_DIR` and emits ONE compact JSON line as the final stdout
   * line (plus a backstop file `BENCH_LOCAL.json`), for the round driver.
@@ -23,15 +21,9 @@ object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_AQE", "true"))
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(cpus.toInt, "WARN",
+      Map("spark.sql.adaptive.enabled" ->
+        sys.env.getOrElse("SPARK_GRAFT_AQE", "true")))
     // Warmup: execute EVERY registered query once, untimed, against the
     // smallest available scale factor (falling back to the target dir).
     // This pays JVM/codegen/classload costs per-plan before the measured

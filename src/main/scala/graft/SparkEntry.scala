@@ -15,6 +15,23 @@ import graft.queries.QueryDef
   */
 object SparkEntry {
 
+  /** The local session every dev main runs on: `cpus` task slots and
+    * shuffle partitions, UTC session time (so printed timestamps match
+    * across mains and hosts), the graft extensions, no UI. */
+  def localSession(cpus: Int, logLevel: String = "ERROR",
+      conf: Map[String, String] = Map.empty): SparkSession = {
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.ui.enabled", "false")
+      .config(conf)
+      .getOrCreate()
+    spark.sparkContext.setLogLevel(logLevel)
+    spark
+  }
+
   /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
     FundingStats.build(spark, "/root/testdata/sf0.001")

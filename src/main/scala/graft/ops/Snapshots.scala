@@ -1,5 +1,6 @@
 package graft.ops
 
+import scala.jdk.CollectionConverters._
 import scala.util.control.NonFatal
 
 import org.apache.hadoop.fs.{FileSystem, Path => HPath}
@@ -333,6 +334,12 @@ object Snapshots {
   def read(spark: SparkSession, dir: String, version: Int = -1): DataFrame =
     resolveAt(spark, dir, version).table
 
+  /** The schema [[read]] returns for `version` (default: latest), from
+    * its manifest alone — no data file is listed or opened unless the
+    * version predates schema pinning. */
+  def schema(spark: SparkSession, dir: String, version: Int = -1): StructType =
+    resolveAt(spark, dir, version).readSchema
+
   /** TIMESTAMP AS OF resolution: the newest version committed at or
     * before `ts` (manifest modification time — the commit instant, set
     * by the CAS rename). Completes the time-travel surface next to
@@ -549,7 +556,7 @@ object Snapshots {
   /** Both polarity verdicts in ONE stats pass: `(mayMatch, pruned,
     * survivors)` where `survivors` is the set of files `!pred` may
     * still match — the complement is [[splitDropWholeWith]]'s all-match
-    * disproof. One manifest/stats read and one local evaluation job
+    * disproof. One manifest/stats read and one driver-local evaluation
     * instead of the two a pruneFiles-per-polarity pair costs; every
     * CoW DELETE/REPLACE commit and every stats-decided filtered
     * aggregate takes this path. */
@@ -655,8 +662,9 @@ object Snapshots {
         }
       } ++ probes.indices.map(kills.contains)))
     }
-    val typed = spark.createDataFrame(
-      spark.sparkContext.parallelize(rows, 1), rawSchema)
+    // a local relation: the projection and verdicts below evaluate on
+    // the driver, no Spark job
+    val typed = spark.createDataFrame(rows.asJava, rawSchema)
       .select(col("__file") +: (refCols.flatMap { c =>
         val t = colType(c)
         Seq(col(s"__has_$c"),
@@ -4548,6 +4556,9 @@ object Snapshots {
     /** The pinned schema, else the footer-inferred one (tables written
       * before schema pinning). */
     lazy val schema: StructType = pinned.getOrElse(allNullable(table.schema))
+    /** The schema [[table]] surfaces: the pinned one with every field
+      * nullable (file reads are), the scan's own before pinning. */
+    lazy val readSchema: StructType = pinned.fold(table.schema)(allNullable)
     /** `files` under this version's pinned schema (files predating an
       * added column yield NULL there; pre-pinning manifests fall back to
       * footer inference), renamed columns read under their PHYSICAL
@@ -6954,7 +6965,6 @@ object Snapshots {
       md: org.apache.parquet.hadoop.metadata.ParquetMetadata,
       want: Seq[(String, DataType)],
       sessionTz: String): (Seq[String], Long) = {
-    import scala.jdk.CollectionConverters._
     val blocks = md.getBlocks.asScala.toSeq
     val rows = blocks.map(_.getRowCount).sum
     // a LEGACY-rebased writer stored hybrid-Julian days/micros, which
@@ -7374,11 +7384,11 @@ object Snapshots {
     * them — maintenance must not silently widen or narrow what the
     * operator chose at ANALYZE time. */
   private def reanalyzeAsBefore(at: At): AnalyzeResult = {
-    import at.{dir, schema, spark}
+    import at.{dir, spark}
     val props = at.meta.props
-    val priorCols = schema.fields.toSeq
+    val priorCols = at.schema.fields.toSeq
       .filter(f => props.contains(analyzeColKey(physOf(f)))).map(_.name)
-    val hadHists = schema.fields.exists(f =>
+    val hadHists = at.schema.fields.exists(f =>
       props.contains(analyzeHistKey(physOf(f))))
     analyzeColumns(spark, dir, priorCols,
       histogramsOverride = Some(hadHists ||
@@ -7413,8 +7423,8 @@ object Snapshots {
     else Some(reanalyzeAsBefore(at))
   }
 
-  /** The stored ANALYZE statistics of the table's current version, if
-    * any — row count plus per-column stats keyed by the CURRENT
+  /** The stored ANALYZE statistics of `version` (default: latest), if
+    * any — row count plus per-column stats keyed by the version's
     * logical column names (translated from the stored physical keys,
     * so a post-ANALYZE rename still finds its stats). Consumed by the
     * catalog relation to feed the cost-based optimizer.
@@ -7430,9 +7440,9 @@ object Snapshots {
     * (they describe a distribution that no longer exists). A manifest
     * that cannot prove its live count (pre-row-count files) keeps the
     * frozen stats — fail-safe, never worse than before. */
-  def analyzedStats(spark: SparkSession,
-      dir: String): Option[(Long, Map[String, ColumnAnalysis])] = {
-    val at = atOpt(spark, dir, -1).getOrElse(return None)
+  def analyzedStats(spark: SparkSession, dir: String,
+      version: Int = -1): Option[(Long, Map[String, ColumnAnalysis])] = {
+    val at = atOpt(spark, dir, version).getOrElse(return None)
     import at.v
     val props = at.meta.props
     props.get(AnalyzeRowsKey).map { rc =>

@@ -1,6 +1,7 @@
 package graft.ops
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
 import org.apache.spark.sql.functions._
 
 /** Merge-upsert (SURVEY.md S7) — the reference's
@@ -52,16 +53,23 @@ object Upsert {
     val spark = updates.sparkSession
     val (fs, target) = AtomicDir.fsFor(updates, path)
     AtomicDir.recoverInterruptedSwap(fs, target)
-    val merged =
+    // a hive-partitioned target is written back under the partition
+    // columns its read discovered, keeping its `k=v` directories
+    val (merged, partCols) =
       if (fs.exists(target)) {
-        val existing = spark.read.parquet(path).select(
-          updates.columns.map(col).toIndexedSeq: _*)
-        merge(existing, updates, keys, version)
+        val table = spark.read.parquet(path)
+        val discovered = table.queryExecution.analyzed
+          .collectFirst { case lr: LogicalRelation => lr.relation }
+          .collect { case r: HadoopFsRelation => r.partitionSchema.fieldNames }
+          .getOrElse(Array.empty[String])
+        val existing = table.select(updates.columns.map(col).toIndexedSeq: _*)
+        (merge(existing, updates, keys, version),
+          discovered.filter(updates.columns.contains).toSeq)
       } else
         // first write still merges (against nothing): a first batch with
         // in-batch duplicate keys must land deduplicated like every later
         // one, or the one-row-per-key invariant starts out violated
-        merge(updates.limit(0), updates, keys, version)
+        (merge(updates.limit(0), updates, keys, version), Nil)
     // Stage beside the table, then swap: the lazy read of the current
     // files happens while writing the staging dir, and the previous
     // table survives a failure at any point. (The earlier cache()-as-
@@ -69,7 +77,8 @@ object Upsert {
     // if an executor was lost after the cached blocks were evicted.)
     val staging = AtomicDir.stagingFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
-    merged.write.mode("overwrite").parquet(staging.toString)
+    merged.write.mode("overwrite").partitionBy(partCols: _*)
+      .parquet(staging.toString)
     AtomicDir.swapInto(fs, staging, target)
   }
 }

@@ -108,9 +108,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   private def fullName(ident: Identifier): String =
     (catalogName +: ident.namespace.toSeq :+ ident.name).mkString(".")
 
+  /** The handle of `ident` at the version this load resolves — the
+    * one version every read of the handle sees ([[GraftTable]]). */
   override def loadTable(ident: Identifier): Table = {
-    if (!tableExists(ident)) throw new NoSuchTableException(ident)
-    new GraftTable(fullName(ident), dirFor(ident), None)
+    val dir = dirFor(ident)
+    val v = Snapshots.currentVersion(spark, dir)
+      .getOrElse(throw new NoSuchTableException(ident))
+    new GraftTable(fullName(ident), dir, v, pinned = false)
   }
 
   /** `VERSION AS OF <v>` — an integer commit number, or a TAG name
@@ -123,10 +127,10 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = dirFor(ident)
     val v = Snapshots.resolveVersionRef(spark, dir, version)
-    require(Snapshots.versions(spark, dir).contains(v),
-      s"version $v of ${fullName(ident)} does not exist " +
-        s"(retained: ${Snapshots.versions(spark, dir).mkString(",")})")
-    new GraftTable(fullName(ident), dir, Some(v))
+    val retained = Snapshots.versions(spark, dir)
+    require(retained.contains(v), s"version $v of ${fullName(ident)} " +
+      s"does not exist (retained: ${retained.mkString(",")})")
+    new GraftTable(fullName(ident), dir, v, pinned = true)
   }
 
   /** `TIMESTAMP AS OF <ts>` — Spark hands micros since epoch; resolve
@@ -136,7 +140,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     val dir = dirFor(ident)
     val v = Snapshots.versionAsOf(spark, dir,
       new java.sql.Timestamp(timestampMicros / 1000L))
-    new GraftTable(fullName(ident), dir, Some(v))
+    new GraftTable(fullName(ident), dir, v, pinned = true)
   }
 
   /** `TableInfo.schema()` with each generated column's expression
@@ -310,14 +314,14 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def createTable(ident: Identifier, info: TableInfo): Table = {
     if (tableExists(ident)) throw new TableAlreadyExistsException(ident)
     val (props, constraints) = translateInfo(ident, info)
-    Snapshots.createTable(spark, dirFor(ident), schemaWithGeneration(info),
-      props, constraints)
+    val v = Snapshots.createTable(spark, dirFor(ident),
+      schemaWithGeneration(info), props, constraints)
     // mutual exclusion with a RACING CREATE VIEW of the same name
     // (translateInfo's pre-check covers the sequential case): the view
     // side re-checks after its CAS too, so whichever artifact landed
     // second rolls itself back and both racers fail loudly
     rollbackIfViewRaced(ident)
-    new GraftTable(fullName(ident), dir = dirFor(ident), None)
+    new GraftTable(fullName(ident), dirFor(ident), v, pinned = false)
   }
 
   /** Post-commit half of the table/view mutual exclusion: when a view

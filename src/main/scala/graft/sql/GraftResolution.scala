@@ -20,7 +20,10 @@ import graft.ops.Snapshots
   *     pruning, deletion vectors, column mapping) a Scala-API read
   *     gets. Output attribute ids of the replaced relation are
   *     preserved via an aliasing Project, so the surrounding resolved
-  *     plan is untouched.
+  *     plan is untouched. The scan, and the metadata-aggregate
+  *     rewrite that may replace it, read the handle's one version
+  *     ([[GraftTable.snapshotVersion]], resolved when the catalog
+  *     loaded it) — the version the relation's schema came from.
   *   - `DELETE FROM` / `UPDATE` / `MERGE INTO` over a [[GraftTable]]
   *     become runnable commands over the existing Snapshots DML
   *     machinery (copy-on-write by default; deletion vectors when
@@ -163,7 +166,7 @@ final case class GraftResolution(session: SparkSession)
       val src = scan.output.find(o => resolver(o.name, a.name)).getOrElse(
         throw new IllegalStateException(
           s"column '${a.name}' of ${t.identName} is missing from the " +
-            "snapshot scan — catalog and manifest disagree"))
+            s"scan of its version ${t.snapshotVersion}"))
       Alias(src, a.name)(exprId = a.exprId)
     }, scan)
   }
@@ -213,7 +216,8 @@ final case class GraftResolution(session: SparkSession)
     }
     // the SQL catalog path (DSv2 GraftTable) and the DataFrame reader
     // path (v1 `format("graft-snapshots")` relation) unify HERE: both
-    // name a table directory + optional pinned version, which is all
+    // name a table directory + a version (the handle's own, or the
+    // relation's, -1 for latest), which is all
     // the manifest-stats plan needs — one rule serves both surfaces
     // (a DSv2 row-based scan for the reader path would forfeit the
     // native columnar parquet swap for every NON-aggregate read,
@@ -221,7 +225,7 @@ final case class GraftResolution(session: SparkSession)
     // SupportsPushDownAggregates scan)
     object StatsRel {
       def unapply(plan: LogicalPlan): Option[(String, Int)] = plan match {
-        case GraftRel(_, t) => Some((t.dir, t.pinnedVersion.getOrElse(-1)))
+        case GraftRel(_, t) => Some((t.dir, t.snapshotVersion))
         case lr: org.apache.spark.sql.execution.datasources.LogicalRelation
             if lr.relation.isInstanceOf[graft.streaming.SnapshotRelation] =>
           val sr = lr.relation.asInstanceOf[graft.streaming.SnapshotRelation]

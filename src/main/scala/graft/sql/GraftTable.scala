@@ -41,9 +41,14 @@ import graft.ops.Snapshots
   *     [[GraftResolution]] to commands over [[Snapshots.merge]] /
   *     [[Snapshots.deleteWhere]] / [[Snapshots.updateWhere]].
   *
-  * `pinnedVersion` carries `VERSION AS OF` / `TIMESTAMP AS OF` — the
-  * catalog resolves the time-travel spec to a concrete version at
-  * load, and every read of this handle sees exactly that version.
+  * ONE VERSION PER HANDLE: the catalog resolves `snapshotVersion`
+  * once at load (the current version, or the `VERSION AS OF` /
+  * `TIMESTAMP AS OF` target), and the handle's schema (the manifest's
+  * pinned schema — no scan is built for it), properties and
+  * constraints, CBO statistics and [[readDF]] all read exactly that
+  * version, so one statement can neither mix two versions nor pay for
+  * two scans. `pinned` marks a time-travel handle; writes refuse it
+  * ([[pinnedVersion]]), because writes target the current version.
   *
   * Spark-first rationale per the reference's ETL surface
   * (`scripts/funding_rates_etl.py:100-111` upserts via SQL ON
@@ -52,7 +57,8 @@ import graft.ops.Snapshots
 final class GraftTable(
     val identName: String,
     val dir: String,
-    val pinnedVersion: Option[Int]) extends Table
+    val snapshotVersion: Int,
+    pinned: Boolean) extends Table
     with SupportsRead with SupportsWrite with TruncatableTable
     with GraftSparkBridge.V1FallbackTable {
 
@@ -71,12 +77,15 @@ final class GraftTable(
     true
   }
 
+  /** The time-travel version, for the write refusals. */
+  def pinnedVersion: Option[Int] = Option.when(pinned)(snapshotVersion)
+
   private def spark: SparkSession = SparkSession.active
 
   override def name(): String = identName
 
   override lazy val schema: StructType =
-    Snapshots.read(spark, dir, pinnedVersion.getOrElse(-1)).schema
+    Snapshots.schema(spark, dir, snapshotVersion)
 
   // AUTOMATIC_SCHEMA_EVOLUTION is MERGE-scoped (the only consumer in
   // Spark 4.1 is MergeIntoTable.schemaEvolutionEnabled): it lets
@@ -97,25 +106,16 @@ final class GraftTable(
       TableCapability.OVERWRITE_BY_FILTER,
       TableCapability.AUTOMATIC_SCHEMA_EVOLUTION)
 
-  // memoized per handle like the statistics below: the catalog loads
-  // a fresh GraftTable per statement, while one statement's analysis
-  // may ask for properties several times — each a manifest metadata
-  // read on an object store
-  private lazy val memoizedProperties: util.Map[String, String] = {
-    val cs = Snapshots.constraints(spark, dir)
-    (Snapshots.tableProperties(spark, dir) ++
+  override lazy val properties: util.Map[String, String] =
+    (Snapshots.tableProperties(spark, dir, snapshotVersion) ++
       Map("format" -> "graft-snapshots", "location" -> dir) ++
       pinnedVersion.map(v => "pinnedVersion" -> v.toString).toMap ++
-      cs.map { case (n, e) => s"constraint.$n" -> e }).asJava
-  }
+      Snapshots.constraints(spark, dir, snapshotVersion)
+        .map { case (n, e) => s"constraint.$n" -> e }).asJava
 
-  override def properties(): util.Map[String, String] =
-    memoizedProperties
-
-  /** The version-pinned DataFrame behind this handle — what
-    * [[GraftResolution]] splices in place of the relation. */
-  def readDF(): DataFrame =
-    Snapshots.read(spark, dir, pinnedVersion.getOrElse(-1))
+  /** The handle's version as a DataFrame — what [[GraftResolution]]
+    * splices in place of the relation. */
+  def readDF(): DataFrame = Snapshots.read(spark, dir, snapshotVersion)
 
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
     () => throw new IllegalStateException(
@@ -213,20 +213,15 @@ final class GraftTable(
   // the CatalogTable below (readPlan attaches it to every
   // LogicalRelation of the converted scan): row count + per-column
   // NDV/null counts let CostBasedJoinReorder re-root multi-join
-  // queries by estimated cardinality. Only for CURRENT-version reads —
-  // a time-traveled read must not borrow the tip's cardinalities.
-  // MEMOIZED per table handle: the catalog loads a fresh GraftTable
-  // per statement (so staleness is statement-scoped), while one
-  // statement's analysis may build v1Table several times — each an
-  // analyzedStats + liveBytes manifest-metadata pass, which on an
-  // object store is storage round trips per planning iteration.
-  private lazy val memoizedStats
+  // queries by estimated cardinality. They are the handle's version's
+  // own (drift-corrected against that version's live rows), so a
+  // time-traveled read never borrows the tip's cardinalities.
+  private lazy val stats
       : Option[org.apache.spark.sql.catalyst.catalog.CatalogStatistics] =
-    if (pinnedVersion.nonEmpty) None
-    else Snapshots.analyzedStats(spark, dir).map { case (rc, cols) =>
+    Snapshots.analyzedStats(spark, dir, snapshotVersion).map { case (rc, cols) =>
       org.apache.spark.sql.catalyst.catalog.CatalogStatistics(
-        sizeInBytes =
-          BigInt(math.max(1L, Snapshots.liveBytes(spark, dir))),
+        sizeInBytes = BigInt(
+          math.max(1L, Snapshots.liveBytes(spark, dir, snapshotVersion))),
         rowCount = Some(BigInt(rc)),
         colStats = cols.map { case (name, a) =>
           name -> org.apache.spark.sql.catalyst.catalog.CatalogColumnStat(
@@ -246,7 +241,6 @@ final class GraftTable(
 
   override def v1Table: CatalogTable = {
     val parts = identName.split('.')
-    val stats = memoizedStats
     CatalogTable(
       identifier = TableIdentifier(parts.last,
         if (parts.length >= 2) Some(parts(parts.length - 2)) else None,

@@ -22,7 +22,9 @@ import graft.ops.Snapshots
   * predicate is part of the inner plan). All filters are also declared
   * unhandled so Spark re-applies them above — pruning is a subset
   * proof, not row-exact. `versionAsOf` is the reader-facing time
-  * travel.
+  * travel. The schema comes from the version's manifest (no scan is
+  * built for it); `version = -1` reads the latest version at each
+  * [[buildScan]].
   *
   * The scan surfaces through the DSv1 row interface (one extra
   * row-conversion layer); for hot analytical paths prefer
@@ -37,7 +39,7 @@ private[graft] class SnapshotRelation(val sqlContext: SQLContext,
 
   private def spark = sqlContext.sparkSession
 
-  override val schema: StructType = Snapshots.read(spark, dir, version).schema
+  override val schema: StructType = Snapshots.schema(spark, dir, version)
 
   // manifest-recorded live bytes (DV fraction discounted): without
   // this override Catalyst sees defaultSizeInBytes (Long.MaxValue)

@@ -279,7 +279,7 @@ class SnapshotSourceProvider extends StreamSourceProvider
       schema: Option[StructType], providerName: String,
       parameters: Map[String, String]): (String, StructType) = {
     val base = schema.getOrElse(
-      Snapshots.read(sqlContext.sparkSession, dirOf(sqlContext, parameters)).schema)
+      Snapshots.schema(sqlContext.sparkSession, dirOf(sqlContext, parameters)))
     val out =
       if (!changeFeedOf(parameters)) base
       else StructType(base.fields :+
@@ -329,7 +329,7 @@ private[streaming] class SnapshotSource(sqlContext: SQLContext,
 
   private val spark = sqlContext.sparkSession
 
-  private val tableSchema: StructType = Snapshots.read(spark, dir).schema
+  private val tableSchema: StructType = Snapshots.schema(spark, dir)
 
   override val schema: StructType =
     if (!changeFeed) tableSchema

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -14,12 +13,7 @@ object QueryOne {
     val name = args.headOption.getOrElse(
       sys.error("usage: QueryOne <name> [sfDir]"))
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     val fn = SparkEntry.queries.getOrElse(name,
       sys.error(s"unknown query '$name'; known: " +
         SparkEntry.queries.keys.toSeq.sorted.mkString(", ")))

@@ -1,8 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import graft.SparkEntry
 import graft.Tables
 import graft.functions.VectorFns
 import graft.ops.Similarity
@@ -17,11 +18,7 @@ import graft.ops.Similarity
 object RecallProbe {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.01")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     val emb = Tables.embeddings(spark, dir)
     val corpus = emb.count()
     val e = emb.select(col("vec_id"),

@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 
 import graft.SparkEntry
 
@@ -19,12 +18,7 @@ object ScaleBench {
     val small = args.headOption.getOrElse("/root/testdata/sf0.1")
     val big = args.lift(1).getOrElse("/tmp/graft_sf1")
     val qs = args.lift(2).map(_.split(",").toSeq).getOrElse(DefaultQs)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     def time(name: String, dir: String): Double = {
       println(s"SCALEBENCH_RUN $name $dir")
       val t0 = System.nanoTime()

@@ -1,7 +1,8 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
+
+import graft.SparkEntry
 
 /** Deterministic 10× scale-up of the `documents`/`embeddings` fixtures —
   * evidence material for the scaling table in BASELINE.md (the slope of
@@ -37,11 +38,7 @@ object ScaleGen {
     val src = args.headOption.getOrElse("/root/testdata/sf0.1")
     val out = args.lift(1).getOrElse("/tmp/graft_sf1")
     val replicas = args.lift(2).map(_.toInt).getOrElse(10)
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(32, "WARN")
 
     val docs = spark.read.parquet(s"$src/documents.parquet")
     val emb = spark.read.parquet(s"$src/embeddings.parquet")

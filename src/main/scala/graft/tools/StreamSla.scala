@@ -3,10 +3,10 @@ package graft.tools
 import java.nio.file.Files
 import java.sql.Timestamp
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.streaming.{OutputMode, Trigger}
 
+import graft.SparkEntry
 import graft.ops.Stats
 import graft.pipelines.MainDag
 import graft.streaming.{AsOfEnrich, AsOfProbe, FundingStatsStream, KeyedObs}
@@ -31,13 +31,7 @@ import graft.streaming.{AsOfEnrich, AsOfProbe, FundingStatsStream, KeyedObs}
 object StreamSla {
   def main(args: Array[String]): Unit = {
     val dir = args.headOption.getOrElse("/root/testdata/sf0.1")
-    val spark = SparkSession.builder().master("local[32]")
-      .config("spark.sql.shuffle.partitions", 32)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = SparkEntry.localSession(32)
     import spark.implicits._
     implicit val sq: org.apache.spark.sql.SQLContext = spark.sqlContext
 

@@ -1466,4 +1466,32 @@ class GraftSqlSpec extends SparkSpec {
     // the source is intact after both refusals
     assert(spark.sql("SELECT count(*) FROM gs.rnx.src2").head().getLong(0) == 0)
   }
+
+  test("a catalog handle's schema is its version's scan schema, field " +
+      "for field (names, types, nullability, metadata)") {
+    warehouse
+    spark.sql("""CREATE TABLE gs.default.parity (
+        |  id BIGINT GENERATED ALWAYS AS IDENTITY,
+        |  ts TIMESTAMP,
+        |  day DATE GENERATED ALWAYS AS (CAST(ts AS DATE)),
+        |  v DOUBLE NOT NULL,
+        |  s STRING DEFAULT 'x' COMMENT 'a note')""".stripMargin)
+    spark.sql("""INSERT INTO gs.default.parity (ts, v)
+        |VALUES (TIMESTAMP'2024-01-01 10:00:00', 1.0)""".stripMargin) // v2
+    val dir = dirOf("default", "parity")
+    Snapshots.renameColumn(spark, dir, "s", "note")
+    spark.sql("""INSERT INTO gs.default.parity (ts, v)
+        |VALUES (TIMESTAMP'2024-01-02 10:00:00', 2.0)""".stripMargin) // v4
+    val cat = spark.sessionState.catalogManager.catalog("gs")
+      .asInstanceOf[org.apache.spark.sql.connector.catalog.TableCatalog]
+    val ident = org.apache.spark.sql.connector.catalog.Identifier
+      .of(Array("default"), "parity")
+    Seq(4 -> cat.loadTable(ident), 2 -> cat.loadTable(ident, "2"))
+      .foreach { case (v, t) =>
+        val scan = Snapshots.read(spark, dir, v).schema
+        assert(t.schema().fields.toSeq == scan.fields.toSeq, s"v$v")
+      }
+    assert(cat.loadTable(ident).schema().fieldNames.contains("note"))
+    assert(cat.loadTable(ident, "2").schema().fieldNames.contains("s"))
+  }
 }

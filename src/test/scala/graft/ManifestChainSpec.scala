@@ -8,30 +8,46 @@ import java.util.concurrent.atomic.AtomicInteger
 import scala.jdk.CollectionConverters._
 
 import org.apache.hadoop.fs.{FileStatus, FSDataInputStream, Path => HPath, RawLocalFileSystem}
+import org.apache.spark.sql.connector.catalog.{Identifier, TableCatalog}
 import org.apache.spark.sql.functions._
 
 import graft.ops.{HardLinkCommitCoordinator, Snapshots}
 
 /** The local filesystem under its own scheme (`countfs://`), counting
-  * every `open` of a `_manifests/v*` file and running a one-shot hook
-  * right after a listing of a `_manifests` directory — the seam the
-  * manifest-chain tests below measure and race through. */
+  * every `open` of a `_manifests/v*` file, every listing of a
+  * `_manifests` directory and every `getFileStatus`/`listStatus`/`open`
+  * of a data file, and running a one-shot hook right after a
+  * `_manifests` listing — the seam the manifest-chain tests below
+  * measure and race through. */
 class CountingFileSystem extends RawLocalFileSystem {
-  override def getScheme: String = CountingFileSystem.Scheme
-  override def getUri: URI = URI.create(s"${CountingFileSystem.Scheme}:///")
+  import CountingFileSystem._
+  override def getScheme: String = Scheme
+  override def getUri: URI = URI.create(s"$Scheme:///")
+
+  private def touch(p: HPath): Unit =
+    if (p.toUri.getPath.contains("/data/")) dataTouches.incrementAndGet()
 
   override def open(p: HPath, bufferSize: Int): FSDataInputStream = {
     if (p.getParent != null && p.getParent.getName == "_manifests" &&
         p.getName.matches("v[0-9]+"))
-      CountingFileSystem.opens
-        .computeIfAbsent(p.getName, _ => new AtomicInteger).incrementAndGet()
+      opens.computeIfAbsent(p.getName, _ => new AtomicInteger)
+        .incrementAndGet()
+    touch(p)
     super.open(p, bufferSize)
   }
 
+  override def getFileStatus(p: HPath): FileStatus = {
+    touch(p)
+    super.getFileStatus(p)
+  }
+
   override def listStatus(p: HPath): Array[FileStatus] = {
+    touch(p)
     val listed = super.listStatus(p)
-    if (p.getName == "_manifests")
-      Option(CountingFileSystem.afterListing.getAndSet(null)).foreach(_())
+    if (p.getName == "_manifests") {
+      listings.incrementAndGet()
+      Option(afterListing.getAndSet(null)).foreach(_())
+    }
     listed
   }
 }
@@ -40,18 +56,27 @@ object CountingFileSystem {
   val Scheme = "countfs"
   /** manifest name → opens since the last [[reset]]. */
   val opens = new ConcurrentHashMap[String, AtomicInteger]()
+  /** `_manifests` listings since the last [[reset]]. */
+  val listings = new AtomicInteger
+  /** Data-file status probes, listings and opens since the last
+    * [[reset]]. */
+  val dataTouches = new AtomicInteger
   /** Runs once, after the next `_manifests` listing returns. */
   val afterListing =
     new java.util.concurrent.atomic.AtomicReference[() => Unit]()
 
-  def reset(): Unit = opens.clear()
+  def reset(): Unit = {
+    opens.clear(); listings.set(0); dataTouches.set(0)
+  }
   def snapshot: Map[String, Int] =
     opens.asScala.map { case (k, v) => k -> v.get }.toMap
 }
 
 /** The manifest chain has one reader: within one call every manifest
   * of the versions it touches is opened at most once, however deep the
-  * delta chain and however many versions the call walks. */
+  * delta chain and however many versions the call walks. A catalog
+  * table reference resolves its version once: one statement lists the
+  * manifests once and reads one version throughout. */
 class ManifestChainSpec extends SparkSpec {
   import spark.implicits._
 
@@ -142,5 +167,76 @@ class ManifestChainSpec extends SparkSpec {
       assert(got.collect().map(_.toString).sorted.toSeq ==
         expected.collect().map(_.toString).sorted.toSeq, what)
     }
+  }
+
+  // ---- one version per catalog table reference ----------------------
+
+  private lazy val warehouse: String = {
+    val w = freshRoot().stripSuffix("/t")
+    spark.conf.set("spark.sql.catalog.gcnt", "graft.sql.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gcnt.warehouse", w)
+    w
+  }
+
+  private def catalog: TableCatalog =
+    spark.sessionState.catalogManager.catalog("gcnt")
+      .asInstanceOf[TableCatalog]
+
+  /** A one-batch table `gcnt.default.<name>`; returns its directory. */
+  private def catalogTable(name: String): String = {
+    val dir = s"$warehouse/default/$name"
+    Snapshots.append(batch(1), dir)
+    dir
+  }
+
+  private def ident(name: String) = Identifier.of(Array("default"), name)
+
+  test("a column dropped right after a SELECT resolves its version " +
+      "does not fail it: the statement reads the pre-drop version") {
+    val dir = catalogTable("drop_mid")
+    val expected = Snapshots.read(spark, dir, 1)
+    CountingFileSystem.afterListing.set(() =>
+      Snapshots.dropColumn(spark, dir, "v"))
+    val got = spark.sql("SELECT * FROM gcnt.default.drop_mid")
+    assert(CountingFileSystem.afterListing.get() == null)
+    assert(Snapshots.currentVersion(spark, dir).contains(2))
+    assert(got.columns.toSeq == Seq("id", "v", "tag"))
+    assert(got.collect().map(_.toString).sorted.toSeq ==
+      expected.collect().map(_.toString).sorted.toSeq)
+  }
+
+  test("a VERSION AS OF handle's properties are its version's") {
+    val dir = catalogTable("props_pin")
+    Snapshots.setProperty(spark, dir, "team", "first")
+    Snapshots.setConstraint(spark, dir, "id_pos", "id > 0")
+    spark.sql(
+      "ALTER TABLE gcnt.default.props_pin SET TBLPROPERTIES ('team' = 'later')")
+    Snapshots.dropConstraint(spark, dir, "id_pos")
+    val pinned = catalog.loadTable(ident("props_pin"), "3").properties()
+    assert(pinned.get("team") == "first")
+    assert(pinned.get("constraint.id_pos") == "id > 0")
+    assert(pinned.get("pinnedVersion") == "3")
+    val current = catalog.loadTable(ident("props_pin")).properties()
+    assert(current.get("team") == "later")
+    assert(!current.containsKey("constraint.id_pos"))
+  }
+
+  test("one SELECT on an unpinned catalog table lists _manifests once") {
+    catalogTable("one_listing")
+    CountingFileSystem.reset()
+    val rows = spark.sql(
+      "SELECT id, tag FROM gcnt.default.one_listing WHERE v > 5").collect()
+    assert(rows.length == 8)
+    assert(CountingFileSystem.listings.get() == 1,
+      s"listed ${CountingFileSystem.listings.get()} times")
+  }
+
+  test("a catalog handle's schema touches no data file") {
+    val dir = catalogTable("schema_only")
+    CountingFileSystem.reset()
+    val schema = catalog.loadTable(ident("schema_only")).schema()
+    assert(CountingFileSystem.dataTouches.get() == 0,
+      s"${CountingFileSystem.dataTouches.get()} data-file touches")
+    assert(schema == Snapshots.read(spark, dir).schema)
   }
 }

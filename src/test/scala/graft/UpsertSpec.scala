@@ -133,4 +133,21 @@ class UpsertSpec extends SparkSpec {
     assert(!new java.io.File(path).list().exists(_.startsWith("part=")))
     assert(!new java.io.File(s"${path}__old__").exists)
   }
+
+  test("upsert into a hive-partitioned table keeps its partition dirs") {
+    val pcols = Seq("k", "v", "ver", "part")
+    val dir = Files.createTempDirectory("upsert8").toFile
+    val path = s"$dir/t"
+    Seq(("1", "a", 1L, "A"), ("2", "b", 1L, "B")).toDF(pcols: _*)
+      .write.partitionBy("part").parquet(path)
+    Upsert.upsertParquet(
+      Seq(("2", "b2", 2L, "B"), ("3", "c", 1L, "C")).toDF(pcols: _*),
+      path, Seq("k"), "ver")
+    assert(new java.io.File(path).list().filter(_.startsWith("part="))
+      .sorted.toSeq == Seq("part=A", "part=B", "part=C"))
+    val rows = spark.read.parquet(path).select(pcols.head, pcols.tail: _*)
+      .as[(String, String, Long, String)].collect().sortBy(_._1).toSeq
+    assert(rows == Seq(("1", "a", 1L, "A"), ("2", "b2", 2L, "B"),
+      ("3", "c", 1L, "C")))
+  }
 }
