@@ -40,10 +40,14 @@ import org.apache.spark.sql.types._
   * then publish it as `v<next>` via an EXCLUSIVE atomic primitive —
   * the version number is a compare-and-swap. A crash before the
   * publish leaves only ignored garbage (dot-temp manifest, orphan
-  * data dir); a crash after is a completed commit. [[append]]
-  * auto-retries a lost race (re-reading the new base — appends
-  * commute); [[overwrite]] retries as last-writer-wins, its documented
-  * semantic. The CAS itself is PLUGGABLE per filesystem scheme
+  * data dir); a crash after is a completed commit. A lost race is
+  * retried by ONE loop, [[commitWithRebase]], whose per-verb rebase
+  * rule is the only difference between writers: [[append]] re-CASes
+  * its staged batch on the new tip while the tip admits it (appends
+  * commute), [[overwrite]] always does (last writer wins, its
+  * documented semantic), DML does when the interlopers are invisible
+  * to its footprint, and metadata DDL and maintenance never do. The
+  * CAS itself is PLUGGABLE per filesystem scheme
   * ([[CommitCoordinator]], [[setCommitCoordinator]]) with a built-in
   * matrix: hard-link publish on `file://` (local rename does NOT
   * refuse an existing destination atomically — `link(2)`'s kernel
@@ -81,9 +85,9 @@ object Snapshots {
   }
 
   private def versionsFs(fs: FileSystem, root: HPath): Seq[Int] = {
-    val md = new HPath(root, ManifestDir)
-    if (!fs.exists(md)) return Seq.empty
-    fs.listStatus(md).map(_.getPath.getName)
+    val listed = try fs.listStatus(new HPath(root, ManifestDir))
+      catch { case _: java.io.FileNotFoundException => return Seq.empty }
+    listed.map(_.getPath.getName)
       .filter(_.matches("v[0-9]{9}"))
       .map(_.drop(1).toInt).sorted.toSeq
   }
@@ -1423,16 +1427,6 @@ object Snapshots {
       at.meta.copy(props = ps - key)
     }
 
-  /** (`stats.columns`, `cluster.columns`) declared at the table's
-    * current version — the stats-collection overrides ([[statColumns]]).
-    * Read at staging time; stats are advisory bounds, so a racing
-    * property change can only cost pruning on this one commit's
-    * files, never correctness. */
-  private def declaredStatsProps(fs: FileSystem,
-      root: HPath): (Seq[String], Seq[String]) =
-    declaredOf(versionsFs(fs, root).lastOption
-      .map(v => new Chains(fs, root)(v).meta.props).getOrElse(Map.empty))
-
   /** The stats declarations of a properties map:
     * (`stats.columns`, `cluster.columns`), comma-split. */
   private def declaredOf(
@@ -1620,13 +1614,13 @@ object Snapshots {
 
   /** The table property holding an identity column's NEXT value to
     * assign (the "high-water mark"). It advances ATOMICALLY with the
-    * data commit that consumed the values — [[commitLoop]] /
-    * [[commitContentReplace]] verify the mark they read for the
-    * assignment is still the commit base's mark, and a drift (another
-    * writer assigned ids concurrently) aborts to the caller's retry,
-    * which re-reads and re-assigns. Values are therefore unique
-    * across writers; like every identity implementation, GAPS happen
-    * (a failed commit abandons its reserved range). */
+    * data commit that consumed the values — [[commitIngest]] rebases
+    * only onto a tip whose mark is still the one the assignment read,
+    * and a drift (another writer assigned ids concurrently) aborts to
+    * the caller's retry, which re-reads and re-assigns. Values are
+    * therefore unique across writers; like every identity
+    * implementation, GAPS happen (a failed commit abandons its reserved
+    * range). */
   private def identityMarkKey(f: StructField): String =
     s"identity.mark.${f.name}"
 
@@ -1842,8 +1836,8 @@ object Snapshots {
     }
 
   /** Validate `df` against the constraints pinned at `at` (an ingest
-    * commit re-checks them against its actual base — see
-    * [[commitLoop]]). Table columns the frame lacks enforce as
+    * commit rebases only onto a tip whose constraints it validated —
+    * see [[commitIngest]]). Table columns the frame lacks enforce as
     * what their files' rows will actually READ — the column DEFAULT
     * when one is pinned, NULL otherwise ([[missingColumnReads]]): a
     * NULL stand-in for a defaulted column would let a violating row
@@ -1965,8 +1959,10 @@ object Snapshots {
     * name (the one every existing file wrote) recorded, and lists the
     * SAME data files as the base. Nothing is read or copied; appends
     * after the rename stage their files under the original physical
-    * name, so both eras read uniformly. Unpinned-DML concurrency: a
-    * lost race retries on the new current version. */
+    * name, so both eras read uniformly. A NOT NULL declaration (the
+    * CHECK `nn_<col>`, `<col> IS NOT NULL`) is renamed with the column
+    * in the same commit. Unpinned-DML concurrency: a lost race retries
+    * on the new current version. */
   def renameColumn(spark: SparkSession, dir: String, existing: String,
       newName: String): Int = {
     require(newName.nonEmpty && !newName.contains("\t"),
@@ -1982,8 +1978,13 @@ object Snapshots {
       // old logical name would fail on every later write (renaming the
       // GENERATED column itself is fine — the expression travels with
       // the field and cannot self-refer)
+      // a NOT NULL declaration (the catalog's CHECK `nn_<col>`) follows
+      // the rename; any other CHECK naming the column still refuses
+      val nn = s"nn_${f.name}" -> s"${f.name} IS NOT NULL"
+      val constraints = at.meta.constraints.map(c =>
+        if (c == nn) s"nn_$newName" -> s"$newName IS NOT NULL" else c)
       val what = s"cannot rename column '$existing' of $dir"
-      requireConstraintsResolve(spark, evolved, at.meta.constraints, what)
+      requireConstraintsResolve(spark, evolved, constraints, what)
       requireGeneratedResolve(spark, evolved, what)
       // declarations follow the rename: `stats.columns`/`cluster.columns`
       // naming the old logical name would silently go stale (a stale
@@ -2011,7 +2012,8 @@ object Snapshots {
             case None => acc
           }
         }
-      at.meta.copy(schema = Some(evolved), props = ps)
+      at.meta.copy(schema = Some(evolved), constraints = constraints,
+        props = ps)
     }
   }
 
@@ -2790,9 +2792,9 @@ object Snapshots {
     * recorded [[Staged.schema]] is LOGICAL, carrying the physical name
     * as field metadata where the two differ. */
   private def stage(df: DataFrame, fs: FileSystem, root: HPath,
+      declared: (Seq[String], Seq[String]),
       phys: Map[String, String] = Map.empty,
-      bloomCfg: Option[BloomConfig] = None,
-      declared: Option[(Seq[String], Seq[String])] = None): Staged = {
+      bloomCfg: Option[BloomConfig] = None): Staged = {
     val renamed = df.columns.filter(c => phys.getOrElse(c, c) != c)
     val out =
       if (renamed.isEmpty) df
@@ -2806,7 +2808,7 @@ object Snapshots {
       if (p == f.name) stripPhysical(f) else withPhysical(stripPhysical(f), p)
     })
     finalizeStaged(df.sparkSession, fs, root, rel, logical, bloomCfg,
-      phys, declared)
+      declared, phys)
   }
 
   /** Turn an already-written commit dir into a [[Staged]]: list its
@@ -2817,9 +2819,8 @@ object Snapshots {
     * path (the bucketed layout writer). */
   private def finalizeStaged(spark: SparkSession, fs: FileSystem,
       root: HPath, rel: String, logical: StructType,
-      bloomCfg: Option[BloomConfig],
-      phys: Map[String, String] = Map.empty,
-      declared: Option[(Seq[String], Seq[String])] = None): Staged = {
+      bloomCfg: Option[BloomConfig], declared: (Seq[String], Seq[String]),
+      phys: Map[String, String] = Map.empty): Staged = {
     val dir = new HPath(root, rel)
     val listed = fs.listStatus(dir)
       .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
@@ -2833,13 +2834,11 @@ object Snapshots {
     // carry LOGICAL names — translate through this frame's column
     // mapping to the staged files' physical spelling; bloom cols are
     // stored physical already. Callers pass the declarations of the
-    // base they commit on (CREATE/REPLACE: the incoming statement's);
-    // only version-unaware paths pay the directory listing. The
-    // mapping lookup is CASE-INSENSITIVE, like every other name
+    // base they commit on (CREATE/REPLACE: the incoming statement's).
+    // The mapping lookup is CASE-INSENSITIVE, like every other name
     // resolution here — a declared 'ID' must find the mapping
     // recorded under 'id'.
-    val (declOnly, declCluster) =
-      declared.getOrElse(declaredStatsProps(fs, root))
+    val (declOnly, declCluster) = declared
     val physLower = phys.map { case (k, v) => k.toLowerCase -> v }
     def toPhys(n: String): String =
       physLower.getOrElse(n.toLowerCase, n)
@@ -3144,6 +3143,13 @@ object Snapshots {
     total
   }
 
+  // ---- commits -------------------------------------------------------
+  //
+  // Every version is published by one CAS ([[casManifest]]; deltas and
+  // checkpoints through [[casChange]]) and a lost CAS is retried by one
+  // loop, [[commitWithRebase]], which differs per verb only in its
+  // rebase rule; [[retryOnRace]] is the full recompute above it.
+
   /** CAS one manifest: true iff this writer won version `v` — routes
     * the publication to the [[CommitCoordinator]] configured for
     * `fs`'s scheme (hard-link on local, rename on HDFS, conditional
@@ -3232,77 +3238,53 @@ object Snapshots {
   def clearCommitCoordinator(scheme: String): Unit =
     CommitCoordinators.clear(scheme)
 
-  private def commitLoop(chains: Chains, spark: SparkSession,
-      dir: String, staged: Staged, carryBase: Boolean, op: String,
-      header: Seq[String] = Nil,
+  /** The ingest commit ([[ingest]], [[overwrite]], the empty-table
+    * branch of [[mergeCow]]): `staged` lands on base `from` (0: nothing
+    * committed) through the one CAS loop, [[commitWithRebase]], whose
+    * rebase rule here is "the tip still admits the batch". A `fresh`
+    * commit (overwrite) is a full manifest of the staged files — a new
+    * lineage that carries no metadata, so every tip admits it and the
+    * last writer wins. Otherwise the batch lands on the base as a delta
+    * (or the depth-bound checkpoint) whose header renders from the
+    * base's metadata, and the base's pinned schema evolves additively
+    * under it (a conflict throws before anything commits); a tip admits
+    * the batch while its CHECK constraints are among those `validated`
+    * and its identity marks are as `expect`ed (ids assigned from a mark
+    * that moved may collide with the winner's). An interloper that
+    * removed files, changed vectors or set an unrelated property never
+    * forces a re-stage; one the tip does not admit throws
+    * ConcurrentModificationException, which sends [[dml]] to re-shape on
+    * the new base. `delta` lands in the table properties (on a first
+    * commit too: [[replicate]]'s first sync records its mark there),
+    * `header` after the op header, and `guard` runs against every base
+    * a CAS is tried on. */
+  private def commitIngest(spark: SparkSession, dir: String, chains: Chains,
+      from: Int, staged: Staged, op: String, header: Seq[String],
+      guard: Option[Int] => Unit, fresh: Boolean = false,
       validated: Map[String, String] = Map.empty,
-      propsExpect: Map[String, Option[String]] = Map.empty,
-      propsDelta: Map[String, String] = Map.empty,
-      preAttempt: Option[Int] => Unit = _ => ()): Int = {
+      expect: Map[String, Option[String]] = Map.empty,
+      delta: Map[String, String] = Map.empty): Int = {
     import chains.{fs, root}
-    val hdr = opHeader(op) ++ header
-    var attempts = 0
-    while (attempts < 10) {
-      val base = currentVersion(spark, dir)
-      // caller-supplied per-attempt guard against the ACTUAL base —
-      // the internal CAS retry would otherwise absorb a racing commit
-      // the caller's preconditions no longer cover ([[copyInto]]'s
-      // dedup ledger, the exactly-once writer tag); a throw here
-      // escapes to the caller
-      preAttempt(base)
-      // ONE manifest parse per attempt feeds every check and header
-      // below (an append carries the base's metadata; a first commit or
-      // an overwrite starts a fresh lineage that carries none)
-      val carried = base.filter(_ => carryBase)
-      val meta = carried.fold(Meta())(chains(_).meta)
-      // CHECK constraints pinned at the ACTUAL commit base: a
-      // constraint that landed after this batch was validated means
-      // the validation no longer covers the commit — loud failure, the
-      // caller re-runs (same discipline as the rename-mid-commit check)
-      val unvalidated = meta.constraints.toSet -- validated.toSet
-      if (unvalidated.nonEmpty)
-        throw new java.util.ConcurrentModificationException(
-          s"CHECK constraints on $dir changed while this batch staged " +
-            s"(unvalidated: ${unvalidated.map(_._1).toSeq.sorted
-              .mkString(",")}) — re-run the write")
-      // identity-mark OCC: the values this batch assigned derive from
-      // the marks read at assignment time — if the ACTUAL commit
-      // base's marks moved (a concurrent writer assigned ids), this
-      // batch's ids may collide with the winner's. Abort to the
-      // caller's retry, which re-reads the marks and re-assigns;
-      // CAS losses that did NOT move the marks stay inside this loop
-      // (the staged files remain valid).
-      propsExpect.foreach { case (k, exp) =>
-        if (meta.props.get(k) != exp)
-          throw new java.util.ConcurrentModificationException(
-            s"identity mark '$k' on $dir advanced while this batch " +
-              s"staged (expected $exp, found ${meta.props.get(k)}) — " +
-              "re-run the write")
-      }
-      // an EXPLICIT propsDelta lands on a fresh lineage too
-      // ([[replicate]]'s first sync records its mark here)
-      val lines = meta.withProps(propsDelta).header ++ hdr
-      val next = base.getOrElse(0) + 1
-      val committed = carried match {
-        // an append on the base: the base's pinned schema evolves
-        // additively (conflicts throw before anything commits), and the
-        // metadata is O(batch) as a delta, or the depth-bound checkpoint
-        case Some(b) =>
-          casChange(chains, b, evolveSchema(
-            At(spark, dir, b, unpinned = true, chains).schema,
-            staged.schema, dir, meta.dropped), lines,
-            added = staged.files, addedStats = staged.stats)
-        // first commit / overwrite: full manifest of the staged files
-        case None =>
-          casManifest(fs, root, next, staged.files,
-            schemaHeader(allNullable(staged.schema)) +:
-              (lines ++ staged.stats))
-      }
-      if (committed) return next
-      attempts += 1 // lost the race: re-read the winner's state and retry
+    def admits(tip: Int): Boolean = fresh || {
+      val meta = chains(tip).meta
+      meta.constraints.toSet.subsetOf(validated.toSet) &&
+        expect.forall { case (k, e) => meta.props.get(k) == e }
     }
-    throw new java.util.ConcurrentModificationException(
-      s"snapshot commit on $dir lost ${attempts} CAS races; giving up")
+    val hdr = opHeader(op) ++ header
+    commitWithRebase(spark, dir, from, op, (_, tip) => admits(tip)) { b =>
+      guard(Some(b).filter(_ > 0))
+      if (fresh || b == 0)
+        casManifest(fs, root, b + 1, staged.files,
+          schemaHeader(allNullable(staged.schema)) +:
+            (Meta(props = delta).header ++ hdr ++ staged.stats))
+      else {
+        val meta = chains(b).meta
+        casChange(chains, b, evolveSchema(
+          At(spark, dir, b, unpinned = true, chains).schema, staged.schema,
+          dir, meta.dropped), meta.withProps(delta).header ++ hdr,
+          added = staged.files, addedStats = staged.stats)
+      }
+    }
   }
 
   /** CREATE TABLE as ONE atomic commit: version 1 pins the schema,
@@ -3352,8 +3334,7 @@ object Snapshots {
   def stageReplaceData(df: DataFrame, dir: String,
       properties: Map[String, String] = Map.empty): StagedReplace = {
     val (fs, root) = fsFor(df.sparkSession, dir)
-    val staged = stage(df, fs, root,
-      declared = Some(declaredOf(properties)))
+    val staged = stage(df, fs, root, declaredOf(properties))
     new StagedReplace(staged.files, staged.stats)
   }
 
@@ -3398,7 +3379,7 @@ object Snapshots {
     if (files.isEmpty) { // plain CREATE / REPLACE TABLE (no AS SELECT)
       val s = stage(spark.createDataFrame(
         spark.sparkContext.parallelize(Seq.empty[Row], 1), schema), fs, root,
-        declared = Some(declaredOf(properties)))
+        declaredOf(properties))
       files = s.files; stats = s.stats
     }
     val base = currentVersion(spark, dir)
@@ -3485,22 +3466,23 @@ object Snapshots {
   /** The ingest verbs' one path ([[append]], [[idempotentAppend]],
     * [[copyInto]]) on base `at` (None: no table yet): [[shaped]] for the
     * base, staged under its column mapping and bloom config, then
-    * committed by [[commitLoop]] with `header` — whose CAS retry stays
-    * inside while the base's constraints and identity marks hold, and
-    * otherwise aborts to the caller's [[dml]] retry (re-shape on the new
-    * base). `preAttempt` runs against every base a CAS is tried on.
+    * committed by [[commitIngest]] with `header`: its first CAS goes at
+    * the version `at` resolved, and a lost one rebases onto the tip while
+    * the tip admits the batch (its constraints and identity marks hold),
+    * else aborts to the caller's [[dml]] retry (re-shape on the new
+    * base). `guard` runs against every base a CAS is tried on.
     * Returns the committed version and what was staged. */
   private def ingest(at: Option[At], dir: String, df: DataFrame, op: String,
       header: Seq[String] = Nil,
-      preAttempt: Option[Int] => Unit = _ => ()): (Int, Staged) = {
+      guard: Option[Int] => Unit = _ => ()): (Int, Staged) = {
     val spark = df.sparkSession
     val chains = at.fold(chainsFor(spark, dir))(_.chains)
     shaped(at, df) { (rows, ia) =>
       val staged =
         stageOn(chains.fs, chains.root, at.fold(Meta())(_.meta), rows)
-      (commitLoop(chains, spark, dir, staged, carryBase = true, op,
-        header, at.fold(Map.empty[String, String])(_.meta.constraints),
-        ia.expect, ia.delta, preAttempt), staged)
+      (commitIngest(spark, dir, chains, at.fold(0)(_.v), staged, op, header,
+        guard, validated = at.fold(Map.empty[String, String])(
+          _.meta.constraints), expect = ia.expect, delta = ia.delta), staged)
     }
   }
 
@@ -3584,17 +3566,22 @@ object Snapshots {
     overwrite(df, dir, Nil, _ => ())
 
   /** [[overwrite]] with the manifest `header` lines and a `guard` run
-    * against the current version before staging and against every base
-    * a CAS is tried on. */
+    * against the resolved version before staging and against every base
+    * a CAS is tried on. A fresh lineage: [[commitIngest]] rebases it
+    * onto any tip that beat its CAS. */
   private def overwrite(df: DataFrame, dir: String, header: Seq[String],
-      guard: Option[Int] => Unit): Int = {
-    val spark = df.sparkSession
-    val chains = chainsFor(spark, dir)
-    guard(currentVersion(spark, dir))
-    commitLoop(chains, spark, dir, stage(df, chains.fs, chains.root),
-      carryBase = false, op = "overwrite", header = header,
-      preAttempt = guard)
-  }
+      guard: Option[Int] => Unit): Int =
+    dml(df.sparkSession, dir, -1, "overwrite") { at =>
+      guard(at.map(_.v))
+      val chains = at.fold(chainsFor(df.sparkSession, dir))(_.chains)
+      // a fresh lineage carries no metadata, but its files collect the
+      // stats the replaced table declares
+      val declared =
+        declaredOf(at.fold(Map.empty[String, String])(_.meta.props))
+      commitIngest(df.sparkSession, dir, chains, at.fold(0)(_.v),
+        stage(df, chains.fs, chains.root, declared), "overwrite", header,
+        guard, fresh = true)
+    }
 
   private val CommitTag = """#commit writer=([A-Za-z0-9._-]+) batch=(-?\d+)""".r
 
@@ -3849,7 +3836,7 @@ object Snapshots {
         spark.sql(s"DROP TABLE IF EXISTS $tmpName")
       }
       val staged = finalizeStaged(spark, fs, root, rel, at.schema,
-        at.meta.bloom, declared = Some(declaredOf(at.meta.props)))
+        at.meta.bloom, declaredOf(at.meta.props))
       maybeReanalyze(spark, dir, commitOn(at, "optimize-bucketed", at.meta,
         Some(staged), removed = None,
         extra = bucketSpecHeader(BucketSpec(buckets, keys, sortCols, rel))))
@@ -4412,11 +4399,13 @@ object Snapshots {
     * drain, and the jitter de-synchronizes symmetric contenders).
     * After 20 straight losses the documented
     * ConcurrentModificationException surfaces for the operator —
-    * same contract as Delta's ConcurrentAppendException. The merge
-    * family additionally REBASES before falling back here: a lost
-    * CAS re-CASes the already-staged result on the new tip when
-    * [[rebaseSafe]] proves the interlopers invisible to it, so under
-    * append contention this loop rarely sees a merge at all. */
+    * same contract as Delta's ConcurrentAppendException. This is the
+    * recompute, not the CAS loop: a lost CAS first goes through
+    * [[commitWithRebase]], which re-CASes the already-staged result on
+    * the new tip whenever the verb's rebase rule holds (a DML footprint
+    * the interlopers cannot see, an ingest batch the tip still admits,
+    * any overwrite), so under append contention this loop rarely runs
+    * twice. */
   private def retryOnRace[A](what: String)(body: => A): A = {
     var attempts = 0
     while (true) {
@@ -4458,7 +4447,7 @@ object Snapshots {
     * local prune evaluation — no data touched, no job run. */
   private def rebaseSafe(at: At, from: Int, tip: Int,
       footprint: Option[Column]): Boolean = {
-    if (tip <= from || tip - from > 16) return false
+    if (tip - from > 16) return false
     val c = at.chains
     val range = versionsFs(c.fs, c.root).filter(x => x > from && x <= tip)
     if (range.size != tip - from) return false // vacuumed hole mid-range
@@ -4482,43 +4471,47 @@ object Snapshots {
     })
   }
 
-  /** The keyed/predicate DML commit loop WITH REBASE under the
-    * copy-on-write apply ([[applyCow]]): run `attempt(base)` (one CAS
-    * at `base + 1` with headers derived from `base`); on a lost race,
-    * move the base to the tip and retry — at metadata cost — when
-    * [[rebaseSafe]] proves every interloper invisible to the staged
-    * result under `footprint`, else surface the loud
-    * ConcurrentModificationException that sends the caller to the
-    * full recompute. Returns the committed version.
+  /** The one loop that retries a lost CAS: every snapshot commit of a
+    * row or metadata change runs through it. `attempt(base)` is one CAS
+    * at `base + 1` with headers derived from `base`; on a lost race the
+    * verb's `rebase(base, tip)` rule says whether the result staged on
+    * `base` still holds on the tip, and the only difference between
+    * verbs is that rule:
+    *
+    *   - DML ([[applyCow]]): unpinned, and [[rebaseSafe]] proves every
+    *     interloper invisible to the mutation's footprint;
+    *   - ingest ([[commitIngest]]): the tip still admits the staged
+    *     batch (its constraints and identity marks hold);
+    *   - overwrite ([[commitIngest]], fresh): always — a new lineage,
+    *     the last writer wins;
+    *   - [[commitOn]] (metadata DDL, maintenance, deletion-vector
+    *     applies): never.
+    *
+    * When the rule holds the base moves to the tip and the next attempt
+    * is one manifest write; otherwise, when no winner is visible (a
+    * store that refused the publish), or after 8 rebases, the
+    * ConcurrentModificationException sends the caller to the full
+    * recompute ([[retryOnRace]]) or surfaces it. Returns the committed
+    * version.
     *
     * This is the OCC fairness fix for the starvation mode
     * [[retryOnRace]] documents: a slow recompute among fast appenders
     * used to lose EVERY race (each attempt outlasted the competitors'
     * inter-commit gap); with rebase the loser's next attempt is one
-    * manifest write, which fits any gap. Unsafe interlopers (DML,
-    * overlapping appends, DDL) still fall back to the full recompute.
-    *
-    * Only UNPINNED attempts rebase: a pin (`expectedVersion >= 0`) is
-    * the CALLER's promise that its own derived state (SQL
-    * classification joins, inspection reads) still describes the
-    * table — [[rebaseSafe]] only proves the interlopers invisible to
-    * THIS mutation's footprint, not to whatever else the caller read,
-    * so a pinned loss must surface for the caller's own retry
-    * discipline. */
-  private def commitWithRebase(at: At, footprint: Option[Column],
-      what: String)(attempt: Int => Boolean): Int = {
-    var base = at.v
+    * manifest write, which fits any gap. */
+  private def commitWithRebase(spark: SparkSession, dir: String, from: Int,
+      what: String, rebase: (Int, Int) => Boolean)(
+      attempt: Int => Boolean): Int = {
+    var base = from
     var rebases = 0
     while (true) {
       if (attempt(base)) return base + 1
       rebases += 1
-      val tip = currentVersion(at.spark, at.dir).getOrElse(base)
-      if (!at.unpinned || rebases > 8 ||
-          !rebaseSafe(at, base, tip, footprint))
+      val tip = currentVersion(spark, dir).getOrElse(base)
+      if (rebases > 8 || tip <= base || !rebase(base, tip))
         throw new java.util.ConcurrentModificationException(
-          s"$what on ${at.dir}@v$base lost the commit race — a writer " +
-            s"landed v${base + 1} first and its changes may overlap " +
-            "this mutation; re-read and re-run")
+          s"$what on $dir@v$base lost the commit race — a writer landed " +
+            s"v${base + 1} first; re-read and re-run")
       base = tip
     }
     throw new IllegalStateException(s"unreachable: $what")
@@ -4616,9 +4609,10 @@ object Snapshots {
     * `extra` lines after the op header. `removed` names the base files
     * the commit drops — a delta or checkpoint through [[casChange]],
     * with `newDv` the vectors it (re)writes — or, `None`, every base
-    * file: a FULL manifest of exactly the staged files. No retry: a
-    * lost race throws ConcurrentModificationException, which the
-    * retrying entries ([[dml]]) re-run and [[maintenance]] surfaces. */
+    * file: a FULL manifest of exactly the staged files. The never-rebase
+    * case of [[commitWithRebase]]: a lost race throws
+    * ConcurrentModificationException, which the retrying entries
+    * ([[dml]]) re-run and [[maintenance]] surfaces. */
   private def commitOn(at: At, op: String, meta: Meta,
       staged: Option[Staged] = None, removed: Option[Seq[String]] = Some(Nil),
       newDv: Map[String, (String, Long)] = Map.empty,
@@ -4628,17 +4622,15 @@ object Snapshots {
     val header = meta.header ++ opHeader(op) ++ extra
     val files = staged.fold(Seq.empty[String])(_.files)
     val stats = staged.fold(Seq.empty[String])(_.stats)
-    val won = removed match {
-      case Some(gone) =>
-        casChange(at.chains, v, schema, header, gone, files, stats, newDv)
-      case None =>
-        casManifest(fs, root, v + 1, files,
-          schemaHeader(schema) +: (header ++ stats))
+    commitWithRebase(at.spark, at.dir, v, op, (_, _) => false) { _ =>
+      removed match {
+        case Some(gone) =>
+          casChange(at.chains, v, schema, header, gone, files, stats, newDv)
+        case None =>
+          casManifest(fs, root, v + 1, files,
+            schemaHeader(schema) +: (header ++ stats))
+      }
     }
-    if (!won) throw new java.util.ConcurrentModificationException(
-      s"$op on ${at.dir}@v$v lost the commit race — a writer landed " +
-        s"v${v + 1} first; re-read and re-run")
-    v + 1
   }
 
   /** Column `name` of `at`'s schema, matched case-insensitively. */
@@ -4666,9 +4658,9 @@ object Snapshots {
       df: DataFrame): Staged = {
     val byLower = meta.schema.fold(Map.empty[String, StructField])(
       _.fields.map(f => f.name.toLowerCase -> f).toMap)
-    stage(df, fs, root, df.columns.flatMap(c =>
+    stage(df, fs, root, declaredOf(meta.props), df.columns.flatMap(c =>
       byLower.get(c.toLowerCase).map(f => c -> physOf(f))).toMap,
-      meta.bloom, Some(declaredOf(meta.props)))
+      meta.bloom)
   }
 
   private def stageAt(at: At, df: DataFrame): Staged =
@@ -4691,9 +4683,13 @@ object Snapshots {
       guard: Option[Int] => Unit = _ => ()): (Int, Int) = {
     val pinned = schema.getOrElse(at.schema)
     // a rebase lands only where [[rebaseSafe]] proved the tip's metadata
-    // equal to the base's, so the base's header holds on every attempt
+    // equal to the base's, so the base's header holds on every attempt;
+    // a pin is the caller's promise that its own inspections still
+    // describe the table, which rebaseSafe cannot prove, so only an
+    // unpinned attempt rebases
     val header = at.meta.withProps(delta).header ++ opHeader(op) ++ extra
-    val committed = commitWithRebase(at, footprint, op) { b =>
+    val committed = commitWithRebase(at.spark, at.dir, at.v, op,
+        (b, tip) => at.unpinned && rebaseSafe(at, b, tip, footprint)) { b =>
       guard(Some(b))
       casChange(at.chains, b, pinned, header, removed, staged.files,
         staged.stats)
@@ -4920,10 +4916,9 @@ object Snapshots {
           // the first append
           val chains = chainsFor(spark, dir)
           MergeResult(
-            commitLoop(chains, spark, dir,
-              stage(source, chains.fs, chains.root),
-              carryBase = true, op = "merge", header = header,
-              propsDelta = propsDelta, preAttempt = guard),
+            commitIngest(spark, dir, chains, 0,
+              stageOn(chains.fs, chains.root, Meta(), source), "merge",
+              header, guard, delta = propsDelta),
             rewrittenFiles = 0, untouchedFiles = 0)
         case Some(at) => classifyMerge(at, source, keys, "merge",
             evolvable = true, tombstones, keysProvedUnique) { m =>
@@ -6572,7 +6567,7 @@ object Snapshots {
     * loaded file is NOT re-loaded (the standard COPY INTO contract);
     * `force` re-loads everything listed. A concurrent copyInto racing
     * this one is detected per commit attempt against the actual base
-    * ([[commitLoop]]'s `preAttempt`) and resolves by re-diffing, never
+    * ([[commitIngest]]'s `guard`) and resolves by re-diffing, never
     * by double-loading. The ledger survives [[vacuum]] (rolled into
     * `_ingest/` sidecars); [[shallowClone]] does NOT carry it — the
     * clone re-ingesting from its own sources is a deliberate act.
@@ -6654,7 +6649,7 @@ object Snapshots {
           s"$IngestedPrefix${enc(p2)}\t$len"
         }
         val (v, staged) = ingest(at, dir, df, "copy-into", ledger,
-          preAttempt = base => if (!force) {
+          guard = base => if (!force) {
             // commits that landed between our dedup read and this
             // attempt may include a RACING copyInto of the same
             // files — re-check just those versions' ledgers and

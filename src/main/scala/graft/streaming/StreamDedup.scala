@@ -6,7 +6,9 @@ import org.apache.spark.sql.functions._
 /** Streaming dedup and session windows — the two stateful stream shapes
   * the batch surface already covers (Dedup.keepFirst / ops.Sessionize)
   * re-expressed with native Structured Streaming state, so an ingest DAG
-  * can dedup and sessionize without a foreachBatch round-trip.
+  * can dedup and sessionize without a foreachBatch round-trip. The dedup
+  * is [[MicroBatch.dedupWithinWatermark]]; this object holds the
+  * session windows.
   *
   * Scale shape (both): state is keyed and watermark-bounded — the
   * watermark is the contract that lets a 1000-executor cluster run these
@@ -14,20 +16,6 @@ import org.apache.spark.sql.functions._
   * event's key columns + payload.
   */
 object StreamDedup {
-
-  /** Exactly-once-per-key admission within the watermark horizon:
-    * [[org.apache.spark.sql.Dataset.dropDuplicatesWithinWatermark]] keyed
-    * on `keys`. Unlike plain dropDuplicates (whose per-key state never
-    * expires), state for a key is evicted once the watermark passes its
-    * last-seen event time — the streaming analogue of batch
-    * `Dedup.keepFirst` restricted to a bounded horizon: a re-occurrence
-    * AFTER eviction is admitted again (and downstream idempotent upsert
-    * absorbs it — SURVEY §2.9's at-least-once + idempotent-sink
-    * contract). */
-  def withinWatermark(stream: DataFrame, timeCol: String, delay: String,
-      keys: Seq[String]): DataFrame =
-    stream.withWatermark(timeCol, delay)
-      .dropDuplicatesWithinWatermark(keys)
 
   /** Event-time session windows: activity separated by less than `gap`
     * merges into one session per key; a quiet period of `gap` closes it.

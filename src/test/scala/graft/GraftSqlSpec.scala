@@ -679,6 +679,23 @@ class GraftSqlSpec extends SparkSpec {
     assert(spark.table("gs.default.alt").columns.toSeq == Seq("id", "val"))
   }
 
+  test("RENAME COLUMN carries a NOT NULL contract to the new name") {
+    warehouse
+    spark.sql("CREATE TABLE gs.default.nnren (id BIGINT, v DOUBLE NOT NULL)")
+    spark.sql("INSERT INTO gs.default.nnren VALUES (1, 2.0)")
+    spark.sql("ALTER TABLE gs.default.nnren RENAME COLUMN v TO w")
+    assert(Snapshots.constraints(spark, dirOf("default", "nnren")) ==
+      Map("nn_w" -> "w IS NOT NULL"))
+    val e = intercept[Exception] {
+      spark.sql("INSERT INTO gs.default.nnren VALUES (2, CAST(NULL AS DOUBLE))")
+    }
+    assert(e.getMessage.contains("nn_w"), e.getMessage)
+    spark.sql("ALTER TABLE gs.default.nnren ALTER COLUMN w DROP NOT NULL")
+    spark.sql("INSERT INTO gs.default.nnren VALUES (2, CAST(NULL AS DOUBLE))")
+    assert(spark.sql("SELECT id, w FROM gs.default.nnren ORDER BY id")
+      .collect().map(_.toString).toSeq == Seq("[1,2.0]", "[2,null]"))
+  }
+
   test("CTAS creates and populates in one statement") {
     warehouse
     spark.sql("CREATE TABLE gs.default.ctas AS SELECT id, id*2 AS dbl FROM range(5)")

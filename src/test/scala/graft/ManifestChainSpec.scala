@@ -76,7 +76,9 @@ object CountingFileSystem {
   * of the versions it touches is opened at most once, however deep the
   * delta chain and however many versions the call walks. A catalog
   * table reference resolves its version once: one statement lists the
-  * manifests once and reads one version throughout. */
+  * manifests once and reads one version throughout. An ingest write
+  * lists them once too, and under a forced race commits by its verb's
+  * rebase rule. */
 class ManifestChainSpec extends SparkSpec {
   import spark.implicits._
 
@@ -167,6 +169,103 @@ class ManifestChainSpec extends SparkSpec {
       assert(got.collect().map(_.toString).sorted.toSeq ==
         expected.collect().map(_.toString).sorted.toSeq, what)
     }
+  }
+
+  // ---- the ingest commit under a forced race ------------------------
+
+  private def dataDirs(root: String): Set[String] = {
+    val p = new HPath(root + "/data")
+    p.getFileSystem(spark.sparkContext.hadoopConfiguration).listStatus(p)
+      .map(_.getPath.getName).toSet
+  }
+
+  /** Run `write` with `interloper` committed right after the writer's
+    * first `_manifests` listing; returns what `write` returned and the
+    * `data/` dirs it staged (those new since the interloper). */
+  private def raced[A](root: String, interloper: => Unit)(
+      write: => A): (A, Set[String]) = {
+    var before = Set.empty[String]
+    CountingFileSystem.afterListing.set { () =>
+      interloper
+      before = dataDirs(root)
+    }
+    val out = write
+    assert(CountingFileSystem.afterListing.get() == null)
+    (out, dataDirs(root) -- before)
+  }
+
+  private def ids(root: String): Set[Long] =
+    Snapshots.read(spark, root).select("id").as[Long].collect().toSet
+
+  test("append and overwrite into an existing table list _manifests once") {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    Seq[(String, () => Int)](
+      "append" -> (() => Snapshots.append(batch(2), root)),
+      "overwrite" -> (() => Snapshots.overwrite(batch(3), root))
+    ).foreach { case (what, write) =>
+      CountingFileSystem.reset()
+      write()
+      assert(CountingFileSystem.listings.get() == 1,
+        s"$what listed ${CountingFileSystem.listings.get()} times")
+    }
+    assert(ids(root) == (300L until 320L).toSet)
+  }
+
+  test("an append lands on the tip past a racing delete or property " +
+      "change without re-staging") {
+    val interlopers = Seq[(String, String => Unit, String => Unit)](
+      ("delete", r => Snapshots.deleteWhere(spark, r, $"id" < 105L),
+        r => assert(ids(r) ==
+          ((105L until 120L) ++ (200L until 220L)).toSet)),
+      ("property", r => Snapshots.setProperty(spark, r, "team", "x"),
+        r => {
+          assert(ids(r) == ((100L until 120L) ++ (200L until 220L)).toSet)
+          assert(Snapshots.tableProperties(spark, r).get("team")
+            .contains("x"))
+        }))
+    interlopers.foreach { case (what, interloper, check) =>
+      val root = freshRoot()
+      Snapshots.append(batch(1), root)
+      val (v, staged) = raced(root, interloper(root))(
+        Snapshots.append(batch(2), root))
+      assert(v == 3, what)
+      assert(staged.size == 1, s"$what staged $staged")
+      check(root)
+    }
+  }
+
+  test("an append fails when a racing constraint rejects its batch") {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    val e = intercept[IllegalArgumentException](raced(root,
+      Snapshots.setConstraint(spark, root, "id_small", "id < 200"))(
+      Snapshots.append(batch(2), root)))
+    assert(e.getMessage.contains("CHECK constraint 'id_small'"), e.getMessage)
+    assert(Snapshots.currentVersion(spark, root).contains(2))
+    assert(ids(root) == (100L until 120L).toSet)
+  }
+
+  test("an overwrite wins over an append that lands under it") {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    val (v, _) = raced(root, Snapshots.append(batch(2), root))(
+      Snapshots.overwrite(batch(3), root))
+    assert(v == 3)
+    assert(ids(root) == (300L until 320L).toSet)
+  }
+
+  test("a racing idempotentAppend replay commits once") {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    var first = Option.empty[Int]
+    val (second, _) = raced(root, {
+      first = Snapshots.idempotentAppend(batch(2), root, "w", 7L)
+    })(Snapshots.idempotentAppend(batch(2), root, "w", 7L))
+    assert(first.contains(2))
+    assert(second.isEmpty)
+    assert(Snapshots.currentVersion(spark, root).contains(2))
+    assert(Snapshots.read(spark, root).count() == 40)
   }
 
   // ---- one version per catalog table reference ----------------------

@@ -6,7 +6,7 @@ import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
 
-import graft.streaming.StreamDedup
+import graft.streaming.{MicroBatch, StreamDedup}
 
 /** Streaming dedup + session-window semantics: within-watermark
   * duplicates drop, post-eviction re-occurrences re-admit (the bounded-
@@ -20,7 +20,7 @@ class StreamDedupSpec extends SparkSpec {
   test("dropDuplicatesWithinWatermark: dups drop in-horizon, re-admit after eviction") {
     implicit val sq = spark.sqlContext
     val mem = MemoryStream[RawLend]
-    val deduped = StreamDedup.withinWatermark(
+    val deduped = MicroBatch.dedupWithinWatermark(
       mem.toDF().withColumnRenamed("observed_at", "ts"),
       timeCol = "ts", delay = "10 minutes", keys = Seq("term"))
     val q = deduped.writeStream

@@ -4,7 +4,8 @@
 Usage: python3 tools/perfpairs.py --parent REV --workload W --pairs N [--seed S]
 
 REV is exported (git archive) into a temporary directory outside the
-repository.
+repository. Fewer than ten pairs prints a warning: the workloads' own
+run-to-run spread is too wide for fewer to resolve a bound or a gain.
 Each pair runs BENCHMARK.json's command (perfbench/run.py, --trace 0) once
 in that tree and once in the working tree, alternating which side runs
 first. The last stdout line of every run is its JSON result. For each
@@ -32,6 +33,7 @@ import sys
 import tempfile
 
 RUN_TIMEOUT_S = 1200
+MIN_PAIRS = 10
 
 
 def git(root, *args):
@@ -110,6 +112,10 @@ def main():
     ap.add_argument("--pairs", type=int, required=True)
     ap.add_argument("--seed", type=int, default=1)
     a = ap.parse_args()
+    if a.pairs < MIN_PAIRS:
+        print(f"warning: --pairs {a.pairs} < {MIN_PAIRS}: the run-to-run "
+              "spread of these workloads needs at least ten pairs to "
+              "resolve a bound or a gain", file=sys.stderr, flush=True)
     root = git(os.path.dirname(os.path.abspath(__file__)),
                "rev-parse", "--show-toplevel")
     with open(os.path.join(root, "BENCHMARK.json")) as f:
