@@ -32,13 +32,15 @@ object SparkEntry {
     spark
   }
 
-  /** Flagship query on /root/testdata/sf0.001; driver smoke-checks rows>0. */
+  /** Flagship query on /root/testdata/sf0.001, ordered by symbol;
+    * driver smoke-checks rows>0. */
   def entry(spark: SparkSession): DataFrame =
-    FundingStats.build(spark, "/root/testdata/sf0.001")
+    FundingStats.build(spark, "/root/testdata/sf0.001").orderBy("symbol")
 
   private def registry: Seq[QueryDef] =
     Seq(QueryDef("funding_stats",
-      (s: SparkSession, dir: String) => FundingStats.build(s, dir),
+      (s: SparkSession, dir: String) =>
+        FundingStats.build(s, dir).orderBy("symbol"),
       FundingStats.oracleSql)) ++
       graft.queries.CleanseQueries.all ++
       graft.queries.AggQueries.all ++

@@ -1,6 +1,9 @@
 package graft.ops
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.hadoop.fs.{FileStatus, Path => HPath}
+import org.apache.parquet.hadoop.ParquetFileReader
+import org.apache.parquet.hadoop.util.HadoopInputFile
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 
 /** Batch sinks (SURVEY.md S8-S10).
   *
@@ -10,7 +13,8 @@ import org.apache.spark.sql.{Column, DataFrame}
   * the job commits, so [[overwriteParquet]] goes through the shared
   * stage-and-swap ([[AtomicDir]]): the previous table stays readable
   * until the final rename pair, and a crash at any point is healed on
-  * the next call.
+  * the next call. [[rowCount]] reports a written table's size from its
+  * parquet footers, without a Spark job.
   */
 object Sinks {
 
@@ -18,6 +22,35 @@ object Sinks {
   def overwriteParquet(df: DataFrame, path: String): Unit =
     AtomicDir.replaceWith(df, path)(
       (d, staging) => d.write.mode("overwrite").parquet(staging))
+
+  /** Rows of the parquet table at `path`: the sum of the footer row
+    * counts of the files `spark.read.parquet(path)` lists — recursively,
+    * so hive `k=v` directories count, and skipping what Spark's listing
+    * hides (a name starting with `.`, one starting with `_` that holds
+    * no `=`, an in-flight `._COPYING_` copy) and the zero-length files
+    * its scan skips. Equal to `spark.read.parquet(path).count()`, but
+    * read on the driver from footers alone: no Spark job, where the
+    * count runs a schema job plus its count jobs. A missing path throws
+    * FileNotFoundException, as the read does. */
+  def rowCount(spark: SparkSession, path: String): Long = {
+    val conf = spark.sparkContext.hadoopConfiguration
+    val root = new HPath(path)
+    val fs = root.getFileSystem(conf)
+    def hidden(name: String): Boolean =
+      (name.startsWith("_") && !name.contains("=")) ||
+        name.startsWith(".") || name.endsWith("._COPYING_")
+    def rows(st: FileStatus): Long =
+      if (st.isDirectory)
+        fs.listStatus(st.getPath)
+          .filterNot(c => hidden(c.getPath.getName)).map(rows).sum
+      else if (st.getLen == 0) 0L
+      else {
+        val reader =
+          ParquetFileReader.open(HadoopInputFile.fromStatus(st, conf))
+        try reader.getRecordCount finally reader.close()
+      }
+    rows(fs.getFileStatus(root))
+  }
 
   /** 100 TB layout: overwrite partitioned by a derived date column so
     * time-range queries prune files (dynamic partition overwrite only

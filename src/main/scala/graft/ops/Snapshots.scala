@@ -3254,18 +3254,22 @@ object Snapshots {
     * removed files, changed vectors or set an unrelated property never
     * forces a re-stage; one the tip does not admit throws
     * ConcurrentModificationException, which sends [[dml]] to re-shape on
-    * the new base. `delta` lands in the table properties (on a first
-    * commit too: [[replicate]]'s first sync records its mark there),
-    * `header` after the op header, and `guard` runs against every base
-    * a CAS is tried on. */
+    * the new base. `rebase = false` is the never-rebase rule, for a batch
+    * whose rows hold only on an empty base (a merge that found the table
+    * empty inserts every source row): a lost race throws, and [[dml]]
+    * re-classifies against the tip. `delta` lands in the table
+    * properties (on a first commit too: [[replicate]]'s first sync
+    * records its mark there), `header` after the op header, and `guard`
+    * runs against every base a CAS is tried on. */
   private def commitIngest(spark: SparkSession, dir: String, chains: Chains,
       from: Int, staged: Staged, op: String, header: Seq[String],
       guard: Option[Int] => Unit, fresh: Boolean = false,
+      rebase: Boolean = true,
       validated: Map[String, String] = Map.empty,
       expect: Map[String, Option[String]] = Map.empty,
       delta: Map[String, String] = Map.empty): Int = {
     import chains.{fs, root}
-    def admits(tip: Int): Boolean = fresh || {
+    def admits(tip: Int): Boolean = fresh || rebase && {
       val meta = chains(tip).meta
       meta.constraints.toSet.subsetOf(validated.toSet) &&
         expect.forall { case (k, e) => meta.props.get(k) == e }
@@ -4485,7 +4489,8 @@ object Snapshots {
     *   - overwrite ([[commitIngest]], fresh): always — a new lineage,
     *     the last writer wins;
     *   - [[commitOn]] (metadata DDL, maintenance, deletion-vector
-    *     applies): never.
+    *     applies) and a merge into an empty table ([[commitIngest]],
+    *     `rebase = false`): never.
     *
     * When the rule holds the base moves to the tip and the next attempt
     * is one manifest write; otherwise, when no winner is visible (a
@@ -4913,12 +4918,14 @@ object Snapshots {
       base match {
         case None =>
           // empty table: tombstones have nothing to delete, the merge is
-          // the first append
+          // the first append — which holds only while the table is
+          // empty, so a lost race never rebases: dml re-runs the merge
+          // against the winner's rows
           val chains = chainsFor(spark, dir)
           MergeResult(
             commitIngest(spark, dir, chains, 0,
               stageOn(chains.fs, chains.root, Meta(), source), "merge",
-              header, guard, delta = propsDelta),
+              header, guard, rebase = false, delta = propsDelta),
             rewrittenFiles = 0, untouchedFiles = 0)
         case Some(at) => classifyMerge(at, source, keys, "merge",
             evolvable = true, tombstones, keysProvedUnique) { m =>

@@ -62,11 +62,16 @@ object DimensionRefresh {
       (lit(1700000000000L) + col("s_suppkey") * 86400123L).as("first_open_ms"),
       (lit(1706000000000L) + col("s_suppkey") * 3600999L).as("next_funding_ms"))
 
+  /** The spot-pairs table over the fixture feed, unordered: the sink
+    * keeps no row order, so ordering (by `ticker_id`) is the registry
+    * entry's job ([[graft.queries.PipelineQueries]]). */
   def buildSpot(spark: SparkSession, dir: String): DataFrame =
-    spotTransform(rawSpot(spark, dir)).orderBy("ticker_id")
+    spotTransform(rawSpot(spark, dir))
 
+  /** The active-futures table over the fixture feed, unordered: ordering
+    * (by `contract_id`) is the registry entry's job. */
   def buildFutures(spark: SparkSession, dir: String): DataFrame =
-    futuresTransform(rawFutures(spark, dir)).orderBy("contract_id")
+    futuresTransform(rawFutures(spark, dir))
 
   val spotOracleSql: String =
     """WITH raw AS (

@@ -76,7 +76,12 @@ object FundingStats {
         ((col("sym_num") + 1) * 1000.0).as("futures_dollar_volume_24h"))
 
   /** The full stats table: one row per symbol, reference output shape
-    * (funding_stats_etl.py:105-118). */
+    * (funding_stats_etl.py:105-118), unordered. The replace sink keeps
+    * no row order, so ordering (by `symbol`) is the job of the callers
+    * whose contract is row order — the `funding_stats` registry entry
+    * and [[graft.SparkEntry.entry]]; a sort here would compute the
+    * trailing window twice, once to sample the range and once to
+    * shuffle. */
   def build(spark: SparkSession, dir: String): DataFrame = {
     val sliced = fundingRates(spark, dir)
 
@@ -103,11 +108,11 @@ object FundingStats {
             .as("predicted_funding_rate"),
           (col("latest_value") / 10000.0 * AnnualFactor).as("funding_8h"))
           ++ horizonCols: _*)
-      .orderBy("symbol")
   }
 
-  /** DuckDB oracle for [[build]] — same operation order everywhere a double
-    * is produced, so the hash compare is exact. */
+  /** DuckDB oracle for [[build]] ordered by `symbol` — same operation
+    * order everywhere a double is produced, so the hash compare is
+    * exact. */
   def oracleSql: String = {
     val horizonExprs = Stats.referenceHorizons.map { h =>
       val n = h.sessions

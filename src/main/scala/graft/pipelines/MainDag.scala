@@ -1,6 +1,6 @@
 package graft.pipelines
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 
 import graft.Schemas
 import graft.ops.{Ddl, Sinks, Upsert}
@@ -28,6 +28,13 @@ import graft.ops.{Ddl, Sinks, Upsert}
   * newest-wins upsert, and the stats rebuild is a full replace — so a
   * retried tick (the reference's 5×-retry policy) converges to the same
   * state.
+  *
+  * A tick runs only the Spark jobs its tables need. The stage builders
+  * return unordered frames (no sink keeps row order: the upsert's
+  * `groupBy` re-shuffles and the overwrites are sets), so no range-sort
+  * sampling job runs before a write; and [[TickResult]]'s counts come
+  * from the written files' parquet footers ([[Sinks.rowCount]]), not
+  * from re-reading each table.
   */
 object MainDag {
 
@@ -67,7 +74,7 @@ object MainDag {
     val stats = FundingStats.build(spark, dir)
     Sinks.overwriteParquet(stats, s"$warehouse/kucoin_funding_stats")
 
-    def n(t: String): Long = spark.read.parquet(s"$warehouse/$t").count()
+    def n(t: String): Long = Sinks.rowCount(spark, s"$warehouse/$t")
     TickResult(
       n("kucoin_active_futures"), n("kucoin_active_spot_pairs"),
       n("kucoin_lending_rates"), n("kucoin_funding_rates"),

@@ -13,10 +13,11 @@ import graft.ops.{Sinks, Stats, Upsert}
   * the inter-task Postgres tables replaced by the parquet sink.
   *
   * The rebuild is a full recompute per tick, like the reference's
-  * to_sql(replace) (funding_stats_etl.py:128). At 100 TB the 120-day scan
-  * window plus date partition pruning bounds the rebuild input regardless
-  * of total history size — the same envelope the reference gets from its
-  * (symbol, funding_time) pkey index.
+  * to_sql(replace) (funding_stats_etl.py:128). It reads the whole funding
+  * sink, with no time-window or partition filter, so its input grows with
+  * the history the sink holds. The stats themselves need less: the
+  * trailing horizons are row counts (the reference's longest is 270
+  * sessions), so a symbol's stats depend only on its newest rows.
   */
 object FundingStatsStream {
 

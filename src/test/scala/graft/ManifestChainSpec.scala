@@ -268,6 +268,22 @@ class ManifestChainSpec extends SparkSpec {
     assert(Snapshots.read(spark, root).count() == 40)
   }
 
+  test("a merge into an empty table re-classifies against a racing " +
+      "append of a matching key") {
+    val root = freshRoot()
+    // the hook runs after a listing: give the empty table one to list
+    val ms = new HPath(root + "/_manifests")
+    ms.getFileSystem(spark.sparkContext.hadoopConfiguration).mkdirs(ms)
+    val (res, _) = raced(root,
+      Snapshots.append(Seq((1L, 0L, "append")).toDF("id", "v", "tag"), root))(
+      Snapshots.merge(spark, root,
+        Seq((1L, 9L, "merge")).toDF("id", "v", "tag"), Seq("id")))
+    // serialized after the append, the merge updates its row
+    assert(res.version == 2)
+    assert(Snapshots.read(spark, root).as[(Long, Long, String)].collect()
+      .toSeq == Seq((1L, 9L, "merge")))
+  }
+
   // ---- one version per catalog table reference ----------------------
 
   private lazy val warehouse: String = {

@@ -4,11 +4,12 @@ import java.nio.file.Files
 
 import org.apache.spark.sql.functions._
 
-import graft.ops.Sinks
+import graft.ops.{Sinks, Upsert}
 
 /** Batch sink behaviors: S10 TSV staging roundtrip; partitioned overwrite
   * layout + partition pruning at read (the 100 TB layout property — a
-  * date-filtered read must touch only matching partition directories). */
+  * date-filtered read must touch only matching partition directories);
+  * the footer row count agrees with a parquet read's count. */
 class SinksSpec extends SparkSpec {
 
   private def tmp(prefix: String) =
@@ -128,5 +129,42 @@ class SinksSpec extends SparkSpec {
     assert(after.filter(col("event_date") === oneDate).count() === 1)
     assert(after.count() === before - onePartBefore + 1,
       "untouched partitions must survive")
+  }
+
+  test("rowCount equals a parquet read's count: flat, hive-partitioned " +
+      "and beside hidden files") {
+    import spark.implicits._
+    def agrees(path: String, rows: Long): Unit = {
+      assert(spark.read.parquet(path).count() === rows, path)
+      assert(Sinks.rowCount(spark, path) === rows, path)
+    }
+
+    val flat = tmp("rc") + "/flat"
+    spark.range(0, 1000, 1, 4).toDF("id").write.parquet(flat)
+    agrees(flat, 1000)
+
+    // the upsert rewrites a hive-partitioned table under its `p=` dirs
+    val part = tmp("rc") + "/part"
+    (0 until 50).map(i => (i.toLong, i % 3, i * 1.0)).toDF("id", "p", "v")
+      .write.partitionBy("p").parquet(part)
+    Upsert.upsertParquet(
+      (40 until 70).map(i => (i.toLong, i % 3, i * 2.0)).toDF("id", "p", "v"),
+      part, keys = Seq("id"), version = "v")
+    assert(new java.io.File(part).list().count(_.startsWith("p=")) === 3)
+    agrees(part, 70)
+
+    // `_SUCCESS`, `.crc` checksums and a parquet file under `_temporary/`
+    // are hidden from the read, so they count no rows
+    val hidden = new java.io.File(tmp("rc"), "hidden")
+    spark.range(0, 100, 1, 2).toDF("id").write.parquet(hidden.getPath)
+    val names = hidden.list().toSeq
+    assert(names.contains("_SUCCESS"), names)
+    assert(names.exists(_.endsWith(".crc")), names)
+    val data = hidden.listFiles().filter(_.getName.startsWith("part-"))
+    val attempt = new java.io.File(hidden, "_temporary/0")
+    assert(attempt.mkdirs())
+    Files.copy(data.head.toPath, new java.io.File(attempt,
+      data.head.getName).toPath)
+    agrees(hidden.getPath, 100)
   }
 }

@@ -2,6 +2,7 @@
 """Paired benchmark runs of a parent revision against the working tree.
 
 Usage: python3 tools/perfpairs.py --parent REV --workload W --pairs N [--seed S]
+       python3 tools/perfpairs.py --selftest
 
 REV is exported (git archive) into a temporary directory outside the
 repository. Fewer than ten pairs prints a warning: the workloads' own
@@ -16,7 +17,11 @@ metric's bound of the parent's: "yes" or "NO", or "unresolved" when the
 parent's interquartile range is wider than the bound times the parent's
 median, so run-to-run spread cannot tell the two apart (unless every
 change run is better than every parent run, when the verdict stands);
-then the failed-operation counts.
+then the failed-operation counts. Two paired statistics follow each
+metric: the median of the per-pair change/parent ratios, and the exact
+two-sided sign-test p-value of the pairs' wins against their losses
+(ties dropped), i.e. how likely a split at least that uneven is when
+the change makes no difference. --selftest checks both on fixed inputs.
 
 Build outputs go to per-side cache directories under the system temp
 directory, so nothing is written inside the repository; the exported
@@ -24,6 +29,7 @@ tree is removed on exit.
 """
 import argparse
 import json
+import math
 import os
 import shutil
 import signal
@@ -76,9 +82,40 @@ def iqr(xs):
     return q[2] - q[0]
 
 
+def median_ratio(pairs):
+    """Median of the per-pair change/parent ratios of (parent, change)
+    values; pairs whose parent value is 0 have no ratio."""
+    rs = [c / p for p, c in pairs if p != 0]
+    return statistics.median(rs) if rs else float("nan")
+
+
+def sign_test_p(wins, losses):
+    """Exact two-sided sign-test p-value of `wins` against `losses`: the
+    probability, under a fair coin per pair, of a split at least as
+    uneven as this one."""
+    n = wins + losses
+    if n == 0:
+        return 1.0
+    tail = sum(math.comb(n, i) for i in range(min(wins, losses) + 1))
+    return min(1.0, 2 * tail / 2 ** n)
+
+
+def selftest():
+    assert median_ratio([(100, 50), (200, 150), (10, 10)]) == 0.75
+    assert median_ratio([(4, 1), (2, 1)]) == 0.375
+    assert math.isnan(median_ratio([(0, 1)]))
+    assert sign_test_p(10, 0) == sign_test_p(0, 10) == 2 / 1024
+    assert sign_test_p(9, 1) == 22 / 1024
+    assert sign_test_p(8, 2) == 112 / 1024
+    assert sign_test_p(5, 5) == 1.0
+    assert sign_test_p(0, 0) == 1.0
+    assert sign_test_p(3, 0) == 0.25
+    print("perfpairs selftest: ok")
+
+
 def report(bench, pairs):
     print(f"{'metric':<18}{'parent':>12}{'change':>12}{'parent IQR':>12}"
-          f"{'wins':>8}  within bound")
+          f"{'wins':>8}{'ratio':>8}{'sign p':>9}  within bound")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         ps = [p["metrics"][name] for p, _ in pairs if name in p["metrics"]]
@@ -87,10 +124,10 @@ def report(bench, pairs):
             print(f"{name:<18}  missing from a side's results")
             continue
         pm, cm = statistics.median(ps), statistics.median(cs)
-        wins = sum(1 for p, c in pairs
-                   if name in p["metrics"] and name in c["metrics"] and
-                   (c["metrics"][name] < p["metrics"][name] if lower
-                    else c["metrics"][name] > p["metrics"][name]))
+        both = [(p["metrics"][name], c["metrics"][name]) for p, c in pairs
+                if name in p["metrics"] and name in c["metrics"]]
+        wins = sum(1 for p, c in both if (c < p if lower else c > p))
+        losses = sum(1 for p, c in both if (c > p if lower else c < p))
         limit = pm * (1 + m["bound"]) if lower else pm * (1 - m["bound"])
         ok = cm <= limit if lower else cm >= limit
         verdict = "yes" if ok else "NO"
@@ -98,7 +135,9 @@ def report(bench, pairs):
         if iqr(ps) > m["bound"] * pm and not separated:
             verdict = "unresolved"
         print(f"{name:<18}{pm:>12.1f}{cm:>12.1f}{iqr(ps):>12.1f}"
-              f"{wins:>5}/{len(pairs):<2}  {verdict} (bound {m['bound']})")
+              f"{wins:>5}/{len(pairs):<2}{median_ratio(both):>8.3f}"
+              f"{sign_test_p(wins, losses):>9.4f}  {verdict} "
+              f"(bound {m['bound']})")
     for side, k in (("parent", 0), ("change", 1)):
         att = sum(p[k]["attempted"] for p in pairs)
         bad = sum(p[k]["failed"] for p in pairs)
@@ -107,11 +146,18 @@ def report(bench, pairs):
 
 def main():
     ap = argparse.ArgumentParser(description=__doc__.split("\n")[0])
-    ap.add_argument("--parent", required=True, help="revision to compare with")
-    ap.add_argument("--workload", required=True)
-    ap.add_argument("--pairs", type=int, required=True)
+    ap.add_argument("--parent", help="revision to compare with")
+    ap.add_argument("--workload")
+    ap.add_argument("--pairs", type=int)
     ap.add_argument("--seed", type=int, default=1)
+    ap.add_argument("--selftest", action="store_true",
+                    help="check the paired statistics on fixed inputs")
     a = ap.parse_args()
+    if a.selftest:
+        selftest()
+        return
+    if a.parent is None or a.workload is None or a.pairs is None:
+        ap.error("--parent, --workload and --pairs are required")
     if a.pairs < MIN_PAIRS:
         print(f"warning: --pairs {a.pairs} < {MIN_PAIRS}: the run-to-run "
               "spread of these workloads needs at least ten pairs to "
