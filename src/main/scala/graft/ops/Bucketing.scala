@@ -58,11 +58,8 @@ object Bucketing {
   def writeBucketed(df: DataFrame, name: String, path: String,
       buckets: Int, keys: Seq[String], sortCols: Seq[String] = Nil,
       filesPerBucket: Int = 1): Unit = {
-    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
-    require(filesPerBucket >= 0,
-      s"filesPerBucket must be >= 1, or 0 for auto; got $filesPerBucket")
-    require(keys.nonEmpty, "bucketing needs at least one key column")
     require(name.matches("[A-Za-z0-9_.]+"), s"unsafe table name '$name'")
+    val pre = preShuffled(df, buckets, keys, filesPerBucket)
     val spark = df.sparkSession
     spark.sql(s"DROP TABLE IF EXISTS $name")
     // a previous run's files under the same path would be re-adopted by
@@ -70,35 +67,45 @@ object Bucketing {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) fs.delete(p, true)
-    // pre-shuffle rows onto their bucket BEFORE the bucketed write:
-    // without this every write task emits a file per bucket it sees
-    // (tasks × buckets small files — the classic bucketing file
-    // explosion); with it each per-bucket sort runs once, in parallel,
-    // and the file count is bucket-aligned (≤ buckets × filesPerBucket)
-    val perBucketFiles =
-      if (filesPerBucket > 0) filesPerBucket
-      else autoFilesPerBucket(df, buckets)
-    val pre =
-      if (perBucketFiles == 1) df.repartition(buckets, keys.map(df.col): _*)
-      else {
-        // Spark's bucket id is pmod(murmur3(keys), buckets) and hash()
-        // IS that murmur3 (seed 42), so the derived split key never
-        // crosses a bucket boundary
-        val bucketId = pmod(hash(keys.map(df.col): _*), lit(buckets))
-        val saltCols = df.schema.fields
-          .filterNot(_.dataType.isInstanceOf[MapType]) // hash() rejects maps
-          .map(f => df.col(f.name)).toSeq
-        val salt = pmod(hash((lit("graft-split") +: saltCols): _*),
-          lit(perBucketFiles))
-        df.repartition(buckets * perBucketFiles,
-          bucketId * lit(perBucketFiles) + salt)
-      }
     val w = pre
       .write.format("parquet").mode(SaveMode.Overwrite)
       .option("path", path)
       .bucketBy(buckets, keys.head, keys.tail: _*)
     (if (sortCols.nonEmpty) w.sortBy(sortCols.head, sortCols.tail: _*)
      else w).saveAsTable(name)
+  }
+
+  /** `df` pre-shuffled onto its buckets for a bucketed write of
+    * `buckets` buckets on `keys` ([[writeBucketed]]'s `filesPerBucket`
+    * rule). Without this every write task emits a file per bucket it
+    * sees (tasks × buckets small files — the classic bucketing file
+    * explosion); with it each per-bucket sort runs once, in parallel,
+    * and the file count is bucket-aligned (≤ buckets × filesPerBucket).
+    * Shared by [[writeBucketed]] and the snapshot tables' bucketed
+    * layout commit. */
+  private[graft] def preShuffled(df: DataFrame, buckets: Int,
+      keys: Seq[String], filesPerBucket: Int): DataFrame = {
+    require(buckets >= 1, s"buckets must be >= 1, got $buckets")
+    require(filesPerBucket >= 0,
+      s"filesPerBucket must be >= 1, or 0 for auto; got $filesPerBucket")
+    require(keys.nonEmpty, "bucketing needs at least one key column")
+    val perBucketFiles =
+      if (filesPerBucket > 0) filesPerBucket
+      else autoFilesPerBucket(df, buckets)
+    if (perBucketFiles == 1) df.repartition(buckets, keys.map(df.col): _*)
+    else {
+      // Spark's bucket id is pmod(murmur3(keys), buckets) and hash()
+      // IS that murmur3 (seed 42), so the derived split key never
+      // crosses a bucket boundary
+      val bucketId = pmod(hash(keys.map(df.col): _*), lit(buckets))
+      val saltCols = df.schema.fields
+        .filterNot(_.dataType.isInstanceOf[MapType]) // hash() rejects maps
+        .map(f => df.col(f.name)).toSeq
+      val salt = pmod(hash((lit("graft-split") +: saltCols): _*),
+        lit(perBucketFiles))
+      df.repartition(buckets * perBucketFiles,
+        bucketId * lit(perBucketFiles) + salt)
+    }
   }
 
   /** The auto derivation behind `filesPerBucket = 0`: per-bucket plan

@@ -8,6 +8,8 @@ import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, Cast, EqualTo, Expression, GreaterThan, GreaterThanOrEqual, In, IsNotNull, IsNull, LessThan, LessThanOrEqual, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.plans.logical.Filter
 import org.apache.spark.sql.GraftSql
+import org.apache.spark.sql.catalyst.catalog.{BucketSpec => CatalogBucketSpec}
+import org.apache.spark.sql.graft.GraftSparkBridge
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -679,8 +681,9 @@ object Snapshots {
     // proven-empty for ONE atom; every null/unknown path defaults to
     // false (cannot disprove). mn/mx are BOUNDS, not necessarily
     // attained values (string stats are prefix-truncated — see
-    // collectStats), and every test below is bound-sound: it only ever
-    // prunes when the bound interval excludes the literal.
+    // StatsTracker and truncMinStat), and every test below is
+    // bound-sound: it only ever prunes when the bound interval excludes
+    // the literal.
     def atomNot(conj: Conj): Column = {
       val c = conj.colName
       val has = col(s"__has_$c")
@@ -770,7 +773,7 @@ object Snapshots {
     * refuse rather than approximate; the caller falls back to a scan.
     * Per-file minima/maxima are attained values for every accepted
     * type, and their string rendering round-trips exactly through
-    * Spark's own cast (see [[collectStats]]), so the fold below equals
+    * Spark's own cast (see [[StatsTracker]]), so the fold below equals
     * the scan aggregate bit-for-bit.
     *
     * Result: one row — `n_rows` plus `n_<col>`, `min_<col>`,
@@ -2799,37 +2802,29 @@ object Snapshots {
     val out =
       if (renamed.isEmpty) df
       else df.select(df.columns.toSeq.map(c => col(c).as(phys.getOrElse(c, c))): _*)
-    val commitId = java.util.UUID.randomUUID.toString
-    val rel = s"$DataDir/$commitId"
-    val dir = new HPath(root, rel)
-    out.write.parquet(dir.toString)
     val logical = StructType(df.schema.fields.map { f =>
       val p = phys.getOrElse(f.name, f.name)
       if (p == f.name) stripPhysical(f) else withPhysical(stripPhysical(f), p)
     })
-    finalizeStaged(df.sparkSession, fs, root, rel, logical, bloomCfg,
-      declared, phys)
+    writeStaged(out, fs, root, s"$DataDir/${java.util.UUID.randomUUID}",
+      logical, bloomCfg, declared, phys)
   }
 
-  /** Turn an already-written commit dir into a [[Staged]]: list its
-    * parquet files, record commit-time sizes (what [[audit]] verifies
-    * against — silent truncation/corruption of an immutable data file
-    * is detectable forever after), collect stats, build bloom
-    * sidecars. Shared by [[stage]] and writers with their own write
-    * path (the bucketed layout writer). */
-  private def finalizeStaged(spark: SparkSession, fs: FileSystem,
-      root: HPath, rel: String, logical: StructType,
-      bloomCfg: Option[BloomConfig], declared: (Seq[String], Seq[String]),
-      phys: Map[String, String] = Map.empty): Staged = {
+  /** Write `out` (already in its physical column names) as the new
+    * commit dir `rel` and turn it into a [[Staged]]: the write job
+    * itself collects each file's `#stats` ([[StatsTracker]]) — no
+    * read-back; then list the parquet files, record commit-time sizes
+    * (what [[audit]] verifies against — silent truncation/corruption of
+    * an immutable data file is detectable forever after), build bloom
+    * sidecars. `bucket` writes Spark's bucketed layout. Shared by
+    * [[stage]] and [[optimizeBucketed]]. */
+  private def writeStaged(out: DataFrame, fs: FileSystem, root: HPath,
+      rel: String, logical: StructType, bloomCfg: Option[BloomConfig],
+      declared: (Seq[String], Seq[String]),
+      phys: Map[String, String] = Map.empty,
+      bucket: Option[CatalogBucketSpec] = None): Staged = {
+    val spark = out.sparkSession
     val dir = new HPath(root, rel)
-    val listed = fs.listStatus(dir)
-      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
-      .sortBy(_.getPath.getName)
-    val files = listed.map(st => s"$rel/${st.getPath.getName}").toSeq
-    val sizes = listed.map(st =>
-      s"#size\t$rel/${st.getPath.getName}\t${st.getLen}").toSeq
-    val bloomLines = bloomCfg.map(
-      buildBlooms(spark, fs, root, rel, files, _)).getOrElse(Nil)
     // declared stats overrides: `stats.columns` / `cluster.columns`
     // carry LOGICAL names — translate through this frame's column
     // mapping to the staged files' physical spelling; bloom cols are
@@ -2845,71 +2840,58 @@ object Snapshots {
     val only = declOnly.map(toPhys)
     val include = (declCluster.map(toPhys) ++
       bloomCfg.map(_.cols).getOrElse(Nil)).distinct
-    // The staged files' physical schema is KNOWN (it is the frame that
-    // was just written): stat-column selection and the fallback
-    // aggregate read run against it directly — no footer schema
-    // inference pass per commit.
+    // The staged files' physical schema is KNOWN (it is the frame being
+    // written): stat-column selection runs against it directly.
     val physSchema = StructType(logical.fields.map(f =>
       StructField(physOf(f), f.dataType, nullable = true)))
     val cols = statColumns(physSchema, only, include)
-    Staged(files,
-      sizes ++ stagedStats(spark, fs, root, rel, dir, files, cols) ++
-        bloomLines,
-      logical)
+    val tracker = new StatsTracker(out.schema, cols.map(_.name),
+      StatsMaxStringLen + 2, spark.sessionState.conf.sessionLocalTimeZone)
+    GraftSparkBridge.writeParquet(out, fs.makeQualified(dir).toString,
+      bucket, Seq(tracker))
+    val listed = fs.listStatus(dir)
+      .filter(st => st.isFile && st.getPath.getName.endsWith(".parquet"))
+      .sortBy(_.getPath.getName)
+    val files = listed.map(st => s"$rel/${st.getPath.getName}").toSeq
+    val sizes = listed.map(st =>
+      s"#size\t$rel/${st.getPath.getName}\t${st.getLen}").toSeq
+    val byName = tracker.files.map(s => s.name -> s).toMap
+    val statLines = listed.toSeq.flatMap { st =>
+      val name = st.getPath.getName
+      fileStatLines(s"$rel/$name", cols, byName.getOrElse(name,
+        throw new IllegalStateException(
+          s"the write of $dir reported no stats for its file $name")))
+    }
+    val bloomLines = bloomCfg.map(
+      buildBlooms(spark, fs, root, rel, files, _)).getOrElse(Nil)
+    Staged(files, sizes ++ statLines ++ bloomLines, logical)
   }
 
-  /** Stat-eligible types whose parquet FOOTER statistics are exact by
-    * format AND whose rendering ([[footerMinMax]]) is byte-identical
-    * to the Spark-cast-to-string form [[collectStats]] writes:
-    * integral types render via toString, float/double via
-    * java.lang.{Float,Double}.toString (Spark's cast uses the same),
-    * boolean as true/false, DATE via LocalDate.toString. Strings
-    * (bounded-prefix truncation), decimals (footers store unscaled
-    * binary), and timestamps (Spark's cast trims trailing fractional
-    * zeros; the footer path renders a fixed .SSSSSS — value-equal but
-    * not byte-equal) stay on the aggregate path. */
-  private def footerExactStatType(t: DataType): Boolean = t match {
-    case ByteType | ShortType | IntegerType | LongType | FloatType |
-         DoubleType | BooleanType | DateType => true
-    case _ => false
-  }
-
-  /** Per-file `#stats` lines for a freshly staged commit. Columns of
-    * footer-exact type ([[footerExactStatType]]) are read from the
-    * parquet FOOTERS the write just produced — a metadata-only pass
-    * (driver-side for small commits, distributed past
-    * [[FooterDriverMax]] files) replacing the per-commit read-back
-    * aggregate job, which measured as ~55% of a whole append at
-    * fixture scale (0.30 s of a 0.53 s append).
-    * Everything else — and any column whose footer failed to yield an
-    * exact stat for EVERY staged file (NaN bounds, missing stats) —
-    * falls back to the original aggregate, so the emitted lines are
-    * exactly what the old single-pass aggregate produced
-    * (StagedStatsSpec asserts line-level parity). */
-  private def stagedStats(spark: SparkSession, fs: FileSystem,
-      root: HPath, rel: String, dir: HPath, files: Seq[String],
-      cols: Seq[StructField]): Seq[String] = {
-    if (cols.isEmpty || files.isEmpty) return Nil
-    val sessionTz = spark.sessionState.conf.sessionLocalTimeZone
-    val (footerCols, restCols) =
-      cols.partition(f => footerExactStatType(f.dataType))
-    val rootStr = fs.makeQualified(root).toString.stripSuffix("/")
-    val footerLines: Seq[String] =
-      if (footerCols.isEmpty) Nil
-      else footerStatLines(spark, rootStr, files, footerCols,
-        sessionTz)._1
-    // a column counts as footer-covered only when EVERY staged file
-    // yielded a line; partial coverage falls back wholesale so the
-    // manifest carries exactly what the aggregate path would have
-    def colOf(l: String): String = dec(l.split('\t')(3))
-    val byCol = footerLines.groupBy(colOf)
-    val (covered, uncovered) = footerCols.partition(f =>
-      byCol.get(f.name).exists(_.size == files.size))
-    val keptNames = covered.map(_.name).toSet
-    val keptLines = footerLines.filter(l => keptNames(colOf(l)))
-    val aggCols = restCols ++ uncovered
-    keptLines ++ collectStats(spark, dir.toString, rel, files, aggCols)
-  }
+  /** One staged file's `#stats` lines, one per stat column:
+    * {{{#stats\t<relfile>\t<rows>\t<col>\t<nulls>\t<min>\t<max>}}}
+    * (tab-separated, URL-encoded fields), min/max either `v:<encoded>`
+    * or `null` (no non-null value; a zero-row file records rows=0 and
+    * both `null`, so pruning can always skip it). Values are Spark's
+    * own cast-to-string of the file's min/max, whose string form
+    * round-trips exactly for every stat-eligible type, so prune-time
+    * comparisons reuse Spark cast semantics instead of a hand-rolled
+    * type matrix. String values are the exception: they are truncated
+    * to BOUNDS ([[truncMinStat]]/[[truncMaxStat]]) so a long text
+    * column cannot bloat manifests or driver memory — the tracker
+    * itself ships at most [[StatsMaxStringLen]]+2 code points, so full
+    * document bodies never reach the driver at all (the +2 slack lets
+    * the truncation detect "was longer than the cap"). */
+  private def fileStatLines(file: String, cols: Seq[StructField],
+      s: FileStats): Seq[String] =
+    cols.zip(s.cols).map { case (f, (nonNull, mn, mx)) =>
+      val isStr = f.dataType == StringType
+      val mnV = mn.map(v => if (isStr) truncMinStat(v) else v)
+      val mxV = mx.flatMap(v => if (isStr) truncMaxStat(v) else Some(v))
+      def opt(o: Option[String]): String =
+        o.map("v:" + enc(_)).getOrElse("null")
+      s"#stats\t$file\t${s.rows}\t${enc(f.name)}\t" +
+        s"${s.rows - nonNull}\t${opt(mnV)}\t${opt(mxV)}"
+    }
 
   /** Stats cover the first [[StatsMaxCols]] atomic-typed top-level
     * columns (the Delta convention) — numeric, string, date,
@@ -3005,75 +2987,6 @@ object Snapshots {
       if (i < 0) None
       else Some(p.substring(0, i) + (p.charAt(i) + 1).toChar)
     }
-
-  /** One min/max/null-count aggregate over the freshly staged files,
-    * keyed by file — the source of the `#stats` manifest lines. The
-    * pass is incremental (this commit's files only, never history) and
-    * distributed; values are rendered through Spark's own
-    * cast-to-string, whose string form round-trips exactly for every
-    * stat-eligible type under the pinned UTC session, so prune-time
-    * comparisons reuse Spark cast semantics instead of a hand-rolled
-    * type matrix. String values are the exception: they are truncated
-    * to BOUNDS ([[truncMinStat]]/[[truncMaxStat]]) so a long text
-    * column cannot bloat manifests or driver memory — the aggregate
-    * itself also caps what it ships ([[StatsMaxStringLen]]+2 code
-    * points), so full document bodies never reach the driver at all.
-    * Line shape (tab-separated, URL-encoded fields):
-    * {{{#stats\t<relfile>\t<rows>\t<col>\t<nulls>\t<min>\t<max>}}}
-    * with min/max either `v:<encoded>` or `null` (no non-null values).
-    */
-  private def collectStats(spark: SparkSession, dir: String,
-      rel: String, staged: Seq[String],
-      cols: Seq[StructField]): Seq[String] = {
-    if (cols.isEmpty) return Nil
-    // explicit schema of exactly the stat columns: no footer schema
-    // inference, and the scan reads only what the aggregate consumes
-    val data = spark.read
-      .schema(StructType(cols.map(f =>
-        StructField(f.name, f.dataType, nullable = true))))
-      .parquet(dir)
-    val aggs = count(lit(1L)).as("__rows") +: cols.flatMap { f =>
-      // string min/max: ship only a bounded prefix to the driver (the
-      // +2 slack lets the driver-side truncation detect "was longer
-      // than the cap" without ever seeing the full value)
-      def bounded(c: Column): Column = f.dataType match {
-        case StringType => substring(c, 1, StatsMaxStringLen + 2)
-        case _ => c.cast(StringType)
-      }
-      Seq(bounded(min(col(f.name))).as(s"__mn"),
-        bounded(max(col(f.name))).as(s"__mx"),
-        count(col(f.name)).as(s"__nn"))
-    }
-    val withRows = data.groupBy(input_file_name().as("__f"))
-      .agg(aggs.head, aggs.tail: _*)
-      .collect() // bounded: one row per staged file, values prefix-capped
-      .flatMap { r =>
-        val fname = r.getString(0).split('/').last
-        val nrows = r.getLong(1)
-        cols.zipWithIndex.map { case (f, i) =>
-          def raw(j: Int): Option[String] =
-            if (r.isNullAt(j)) None else Some(r.getString(j))
-          val isStr = f.dataType == StringType
-          val mnV = raw(2 + 3 * i).map(v => if (isStr) truncMinStat(v) else v)
-          val mxV = raw(3 + 3 * i).flatMap(v =>
-            if (isStr) truncMaxStat(v) else Some(v))
-          def opt(o: Option[String]): String =
-            o.map("v:" + enc(_)).getOrElse("null")
-          val nonNull = r.getLong(4 + 3 * i)
-          s"#stats\t$rel/$fname\t$nrows\t${enc(f.name)}\t" +
-            s"${nrows - nonNull}\t${opt(mnV)}\t${opt(mxV)}"
-        }
-      }.toSeq
-    // EMPTY staged files (a write with empty partitions emits zero-row
-    // part files) have no aggregate row — record them as explicit
-    // rows=0 lines so (a) pruning can always skip them and (b) the
-    // metadata-only aggregate keeps its every-file-proven contract
-    val covered = withRows.map(_.split('\t')(1)).toSet
-    val zeroLines = staged.filterNot(covered).flatMap { f =>
-      cols.map(c => s"#stats\t$f\t0\t${enc(c.name)}\t0\tnull\tnull")
-    }
-    withRows ++ zeroLines
-  }
 
   /** One file's manifest stats for one column ([[Chain.stats]]). */
   private case class ColStats(min: Option[String], max: Option[String],
@@ -3811,7 +3724,7 @@ object Snapshots {
   }
 
   /** Rewrite the current version bucketed on `keys` (Spark's native
-    * bucketed layout — [[Bucketing.writeBucketed]] machinery) and
+    * bucketed layout, pre-shuffled by [[Bucketing.preShuffled]]) and
     * commit it as a new content-identical version carrying a
     * `#bucketspec` header. Same OCC discipline as [[optimize]]. The
     * table must not use column mapping (bucket files must carry the
@@ -3828,19 +3741,13 @@ object Snapshots {
           "— restart the lineage (overwrite) before bucketing")
       keys.foreach(k => require(table.columns.contains(k),
         s"bucket key '$k' is not a column: ${table.columns.toSeq}"))
-      val commitId = java.util.UUID.randomUUID.toString
-      val rel = s"$DataDir/$commitId"
-      val tmpName = "graft_snap_bkt_" + commitId.replace("-", "_")
-      try {
-        Bucketing.writeBucketed(table, tmpName, new HPath(root, rel).toString,
-          buckets, keys, sortCols, filesPerBucket)
-      } finally {
-        // the catalog entry is write scaffolding; the manifest owns the
-        // files, and bucketedTable registers its own entry at read time
-        spark.sql(s"DROP TABLE IF EXISTS $tmpName")
-      }
-      val staged = finalizeStaged(spark, fs, root, rel, at.schema,
-        at.meta.bloom, declaredOf(at.meta.props))
+      sortCols.foreach(k => require(table.columns.contains(k),
+        s"bucket sort column '$k' is not a column: ${table.columns.toSeq}"))
+      val rel = s"$DataDir/${java.util.UUID.randomUUID}"
+      val staged = writeStaged(
+        Bucketing.preShuffled(table, buckets, keys, filesPerBucket),
+        fs, root, rel, at.schema, at.meta.bloom, declaredOf(at.meta.props),
+        bucket = Some(CatalogBucketSpec(buckets, keys, sortCols)))
       maybeReanalyze(spark, dir, commitOn(at, "optimize-bucketed", at.meta,
         Some(staged), removed = None,
         extra = bucketSpecHeader(BucketSpec(buckets, keys, sortCols, rel))))
@@ -6879,7 +6786,7 @@ object Snapshots {
 
   /** One partition column's exact per-file stat line: the decoded
     * path value cast to the inferred type, rendered in the same
-    * Spark-cast-string form [[collectStats]] writes (so the prune
+    * Spark-cast-string form [[StatsTracker]] writes (so the prune
     * layer's cast-back replays it identically); strings follow the
     * same truncation discipline. A value the type cast cannot read
     * (unreachable for inference-derived types) records all-NULL —
@@ -6910,18 +6817,18 @@ object Snapshots {
     }
   }
 
-  /** Per-file `#stats` lines from parquet FOOTERS — the convert-time
-    * metadata pass: O(files) footer reads distributed over executors,
-    * no row data touched. Returns the lines and the exact total row
-    * count. Emits a line only when it is EXACT (see [[convert]]);
-    * anything uncertain is simply absent — absent stats never prune
-    * and never feed a stats-decided aggregate. */
   /** Footer sweeps up to this many files run as a plain driver loop —
     * a handful of local metadata opens costs less than one job's
-    * scheduling. Bigger sweeps (a large staging, a whole convert)
-    * distribute over executors. */
+    * scheduling. Bigger sweeps (a whole convert) distribute over
+    * executors. */
   private val FooterDriverMax = 32
 
+  /** Per-file `#stats` lines from parquet FOOTERS — the convert-time
+    * metadata pass for files graft did not write: O(files) footer
+    * reads, no row data touched. Returns the lines and the exact total
+    * row count. Emits a line only when it is EXACT (see [[convert]]);
+    * anything uncertain is simply absent — absent stats never prune
+    * and never feed a stats-decided aggregate. */
   private def footerStatLines(spark: SparkSession, rootStr: String,
       rels: Seq[String], fields: Seq[StructField],
       sessionTz: String): (Seq[String], Long, Map[String, Long]) = {
@@ -7092,7 +6999,7 @@ object Snapshots {
             // TimestampType strings cast back under the READER
             // session's timezone at prune time — render under the
             // convert session's zone (the same convention
-            // collectStats follows via Spark's own cast); NTZ is a
+            // StatsTracker follows via Spark's own cast); NTZ is a
             // wall clock, zone-independent by construction
             val zone = dt match {
               case TimestampNTZType => java.time.ZoneOffset.UTC

@@ -42,9 +42,11 @@ object MicroBatch {
       .option("checkpointLocation", checkpoint)
       .trigger(trigger)
       .foreachBatch { (batch: DataFrame, _: Long) =>
-        // probe the RAW batch (already materialized by the source —
-        // cheap); probing transform(batch) would run the per-batch
-        // aggregation twice, once for isEmpty and once for the merge
+        // probe the RAW batch: isEmpty runs the batch's plan as its own
+        // Spark job (the source scan and any watermark dedup run again
+        // in the merge), but probing transform(batch) would also run
+        // the per-batch aggregation twice, once for isEmpty and once
+        // for the merge
         if (!batch.isEmpty) Upsert.upsertParquet(transform(batch), path,
           keys, version)
       }

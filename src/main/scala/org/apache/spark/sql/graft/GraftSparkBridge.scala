@@ -3,13 +3,19 @@ package org.apache.spark.sql.graft
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.classic
+import org.apache.spark.sql.execution.SQLExecution
+import org.apache.spark.sql.execution.datasources.{BasicWriteJobStatsTracker, FileFormatWriter, WriteJobStatsTracker}
+import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+import org.apache.spark.util.SerializableConfiguration
 
 /** The one deliberate `org.apache.spark.sql` residency in this
-  * library: three Spark-internal helpers (`private[sql]` in their
-  * Scala signatures, stable across the 4.x line) that the graft SQL
-  * layer needs and that have no public equivalent. Everything here is
-  * a one-line forwarder — no behavior lives in this package. */
+  * library: Spark-internal helpers (`private[sql]` in their Scala
+  * signatures, or taking the classic session, stable across the 4.x
+  * line) that graft needs and that have no public equivalent.
+  * Everything here forwards to Spark's own machinery — no graft
+  * behavior lives in this package. */
 object GraftSparkBridge {
 
   /** Wrap a resolved Catalyst expression as a user-facing Column
@@ -113,5 +119,37 @@ object GraftSparkBridge {
       spark, className = format, options = options)
     org.apache.spark.sql.execution.streaming.runtime.StreamingRelation(
       ds, format, output)
+  }
+
+  /** Write `df` as parquet files under `path` the way
+    * `DataFrameWriter.parquet` does (the session's commit protocol,
+    * the same file names and `_SUCCESS` marker, Spark's basic write
+    * metrics), with `trackers` observing every file and row the write
+    * job produces: `FileFormatWriter.write`'s `statsTrackers` seam,
+    * which `DataFrameWriter` does not expose, and whose `write` takes
+    * the classic session. `bucketSpec` writes Spark's bucketed layout
+    * (bucket ids in the file names, rows sorted within each task), as
+    * a bucketed `saveAsTable` does. The write runs as its own SQL
+    * execution, as Delta's `TransactionalWrite` does, so the session's
+    * SQL confs reach the tasks. */
+  def writeParquet(df: DataFrame, path: String,
+      bucketSpec: Option[org.apache.spark.sql.catalyst.catalog.BucketSpec],
+      trackers: Seq[WriteJobStatsTracker]): Unit = {
+    val spark = df.sparkSession.asInstanceOf[classic.SparkSession]
+    val qe = df.asInstanceOf[classic.Dataset[_]].queryExecution
+    val hadoopConf = spark.sessionState.newHadoopConf()
+    val committer = FileCommitProtocol.instantiate(
+      spark.sessionState.conf.fileCommitProtocolClass,
+      jobId = java.util.UUID.randomUUID.toString, outputPath = path)
+    val basic = new BasicWriteJobStatsTracker(
+      new SerializableConfiguration(hadoopConf),
+      BasicWriteJobStatsTracker.metrics)
+    SQLExecution.withNewExecutionId(qe, Some("writeParquet")) {
+      val plan = qe.executedPlan
+      FileFormatWriter.write(spark, plan, new ParquetFileFormat, committer,
+        FileFormatWriter.OutputSpec(path, Map.empty, plan.output),
+        hadoopConf, partitionColumns = Nil, bucketSpec, basic +: trackers,
+        options = Map.empty)
+    }
   }
 }

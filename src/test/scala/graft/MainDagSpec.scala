@@ -1,10 +1,6 @@
 package graft
 
 import java.nio.file.Files
-import java.util.concurrent.{CountDownLatch, TimeUnit}
-import java.util.concurrent.atomic.AtomicInteger
-
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 
 import graft.pipelines.{FundingStats, MainDag}
 
@@ -19,35 +15,6 @@ class MainDagSpec extends SparkSpec {
     * stage writes and the upserts' reads, with no range-sort sampling
     * before a sink and no job to count a written table. */
   private val MaxJobsPerTick = 13
-
-  /** Runs `body` and returns its result with the number of Spark jobs it
-    * started (jobs tagged through a local property; a sentinel job
-    * after `body` drains the listener bus before the count is read). */
-  private def countingJobs[A](body: => A): (A, Int) = {
-    val sc = spark.sparkContext
-    val Phase = "graft.test.phase"
-    val jobs = new AtomicInteger
-    val drained = new CountDownLatch(1)
-    val listener = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        Option(j.properties).map(_.getProperty(Phase)) match {
-          case Some("counted") => jobs.incrementAndGet()
-          case Some("sentinel") => drained.countDown()
-          case _ =>
-        }
-    }
-    sc.addSparkListener(listener)
-    try {
-      sc.setLocalProperty(Phase, "counted")
-      val out = try body finally sc.setLocalProperty(Phase, "sentinel")
-      spark.range(1).count()
-      assert(drained.await(30, TimeUnit.SECONDS), "listener bus not drained")
-      (out, jobs.get())
-    } finally {
-      sc.setLocalProperty(Phase, null)
-      sc.removeSparkListener(listener)
-    }
-  }
 
   test("one tick lands all five tables; a second tick is idempotent") {
     val wh = Files.createTempDirectory("dag-wh").toFile.getAbsolutePath

@@ -17,11 +17,19 @@ metric's bound of the parent's: "yes" or "NO", or "unresolved" when the
 parent's interquartile range is wider than the bound times the parent's
 median, so run-to-run spread cannot tell the two apart (unless every
 change run is better than every parent run, when the verdict stands);
-then the failed-operation counts. Two paired statistics follow each
-metric: the median of the per-pair change/parent ratios, and the exact
-two-sided sign-test p-value of the pairs' wins against their losses
-(ties dropped), i.e. how likely a split at least that uneven is when
-the change makes no difference. --selftest checks both on fixed inputs.
+then the failed-operation counts. Paired statistics follow each
+metric: the median of the per-pair change/parent ratios with a
+distribution-free confidence interval on it (a pair of the ratios'
+order statistics, from the binomial distribution of how many ratios
+fall below the true median; its coverage is printed, since it moves in
+steps with the number of pairs), and the exact two-sided sign-test
+p-value of the pairs' wins against their losses (ties dropped), i.e.
+how likely a split at least that uneven is when the change makes no
+difference. The last column is the gain verdict, the rule a claimed
+gain must meet: the change wins at least 9 of every 10 pairs, and its
+median is better than the parent's by more than the parent's
+interquartile range. --selftest checks these statistics on fixed
+inputs.
 
 Build outputs go to per-side cache directories under the system temp
 directory, so nothing is written inside the repository; the exported
@@ -40,6 +48,9 @@ import tempfile
 
 RUN_TIMEOUT_S = 1200
 MIN_PAIRS = 10
+CI_LEVEL = 0.95
+# a gain needs wins in at least GAIN_WINS of every GAIN_OF pairs
+GAIN_WINS, GAIN_OF = 9, 10
 
 
 def git(root, *args):
@@ -89,6 +100,34 @@ def median_ratio(pairs):
     return statistics.median(rs) if rs else float("nan")
 
 
+def median_ci(xs, level=CI_LEVEL):
+    """Distribution-free confidence interval on the median of `xs`:
+    the order statistics (x(k), x(n+1-k)) for the largest k whose
+    coverage, 1 - 2 P(Binomial(n, 1/2) < k), is still at least `level`.
+    Returns (low, high, coverage), or None when even (min, max) covers
+    less than `level` (fewer than 6 values at 95%)."""
+    s, n = sorted(xs), len(xs)
+    best = None
+    for k in range(1, n // 2 + 1):
+        cov = 1 - 2 * sum(math.comb(n, i) for i in range(k)) / 2 ** n
+        if cov < level:
+            break
+        best = (s[k - 1], s[n - k], cov)
+    return best
+
+
+def is_gain(ps, cs, wins, lower):
+    """The claimed-gain rule on parent values `ps` and change values
+    `cs` of one metric: the change won at least GAIN_WINS of every
+    GAIN_OF pairs, and its median beats the parent's by more than the
+    parent's interquartile range."""
+    if not ps or not cs:
+        return False
+    pm, cm = statistics.median(ps), statistics.median(cs)
+    margin = pm - cm if lower else cm - pm
+    return wins * GAIN_OF >= GAIN_WINS * len(ps) and margin > iqr(ps)
+
+
 def sign_test_p(wins, losses):
     """Exact two-sided sign-test p-value of `wins` against `losses`: the
     probability, under a fair coin per pair, of a split at least as
@@ -110,12 +149,30 @@ def selftest():
     assert sign_test_p(5, 5) == 1.0
     assert sign_test_p(0, 0) == 1.0
     assert sign_test_p(3, 0) == 0.25
+    # n = 10: P(B <= 1) = 11/1024, P(B <= 2) = 56/1024 > 2.5%
+    assert median_ci(range(10, 0, -1)) == (2, 9, 1 - 22 / 1024)
+    # n = 6: only (min, max) reaches 95% (1 - 2/64)
+    assert median_ci([5, 1, 4, 2, 6, 3]) == (1, 6, 1 - 2 / 64)
+    assert median_ci([1, 2, 3, 4, 5]) is None
+    assert median_ci([0.5] * 10, level=0.99) == (0.5, 0.5, 1 - 2 / 1024)
+    parent = [100, 102, 98, 101, 99, 100, 103, 97, 100, 100]
+    assert iqr(parent) == 2.5
+    fast = [95] * 10
+    assert is_gain(parent, fast, 9, lower=True)
+    assert not is_gain(parent, fast, 8, lower=True)      # 8/10 wins
+    assert not is_gain(parent, [98.5] * 10, 10, lower=True)  # 1.5 <= IQR 2.5
+    assert not is_gain(parent, [105] * 10, 10, lower=True)   # worse
+    assert is_gain(parent, [105] * 10, 10, lower=False)
+    assert is_gain(parent[:5], fast[:5], 5, lower=True)
+    assert not is_gain(parent[:5], fast[:5], 4, lower=True)  # 4/5 < 9/10
+    assert not is_gain([], [], 0, lower=True)
     print("perfpairs selftest: ok")
 
 
 def report(bench, pairs):
     print(f"{'metric':<18}{'parent':>12}{'change':>12}{'parent IQR':>12}"
-          f"{'wins':>8}{'ratio':>8}{'sign p':>9}  within bound")
+          f"{'wins':>8}{'ratio':>8}{'ratio CI':>26}{'sign p':>9}"
+          f"  within bound{'':<16}gain")
     for m in bench["end_to_end"]:
         name, lower = m["name"], m["better"] == "lower"
         ps = [p["metrics"][name] for p, _ in pairs if name in p["metrics"]]
@@ -134,10 +191,15 @@ def report(bench, pairs):
         separated = max(cs) < min(ps) if lower else min(cs) > max(ps)
         if iqr(ps) > m["bound"] * pm and not separated:
             verdict = "unresolved"
+        ci = median_ci([c / p for p, c in both if p != 0])
+        ci_txt = (f"[{ci[0]:.3f}, {ci[1]:.3f}] {100 * ci[2]:.1f}%"
+                  if ci else "n/a")
+        bound_txt = f"{verdict} (bound {m['bound']})"
+        gain = "yes" if is_gain(ps, cs, wins, lower) else "no"
         print(f"{name:<18}{pm:>12.1f}{cm:>12.1f}{iqr(ps):>12.1f}"
               f"{wins:>5}/{len(pairs):<2}{median_ratio(both):>8.3f}"
-              f"{sign_test_p(wins, losses):>9.4f}  {verdict} "
-              f"(bound {m['bound']})")
+              f"{ci_txt:>26}{sign_test_p(wins, losses):>9.4f}  "
+              f"{bound_txt:<28}{gain}")
     for side, k in (("parent", 0), ("change", 1)):
         att = sum(p[k]["attempted"] for p in pairs)
         bad = sum(p[k]["failed"] for p in pairs)
