@@ -14,6 +14,13 @@ import org.apache.spark.sql.DataFrame
   * granularity, so a parked copy always means the same thing to
   * recovery.
   *
+  * A replacement has two halves. [[stage]] heals, clears the staging
+  * dir and writes it; the [[Staged]] it returns publishes by
+  * [[swapInto]]. The sinks' one-call forms publish at once; a caller
+  * that writes several tables (`MainDag`) stages them all first, then
+  * publishes each in its own order, so a table whose stage failed
+  * never lands and its previous copy stays in place.
+  *
   * Concurrent-reader contract (asserted by SwapReaderSpec): a reader
   * whose file listing predates a swap either serves the old snapshot or
   * fails with a clean, retryable missing-file error — never a silently
@@ -74,16 +81,24 @@ private[ops] object AtomicDir {
     if (hadPrev) fs.delete(old, true)
   }
 
-  /** Stage-and-swap replacement of `path` with `df` (heals interrupted
-    * swaps first). The write targets the staging dir, so the table stays
-    * readable until the final rename pair. */
-  def replaceWith(df: DataFrame, path: String)(
-      write: (DataFrame, String) => Unit): Unit = {
+  /** The stage half of a replacement of `path`: heal an interrupted
+    * swap, clear the staging dir, and run `write` with the staging
+    * dir's path. `write` runs after recovery, so a probe of the target
+    * inside it sees the table as the last landed swap left it. The
+    * table stays untouched and readable until [[Staged.publish]], which
+    * is [[swapInto]]; a stage that is never published leaves only its
+    * staging dir, which the next stage of the same table clears. */
+  def stage(df: DataFrame, path: String)(write: String => Unit): Staged = {
     val (fs, target) = fsFor(df, path)
     recoverInterruptedSwap(fs, target)
     val staging = stagingFor(target)
     if (fs.exists(staging)) fs.delete(staging, true)
-    write(df, staging.toString)
-    swapInto(fs, staging, target)
+    write(staging.toString)
+    Staged(staging.toString, () => swapInto(fs, staging, target))
   }
 }
+
+/** A whole-table rewrite written beside its table and not yet visible
+  * (the result of [[AtomicDir.stage]]): `dir` is the staging directory,
+  * and `publish()` swaps it into place. */
+final case class Staged(dir: String, publish: () => Unit)

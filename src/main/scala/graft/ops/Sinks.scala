@@ -13,15 +13,23 @@ import org.apache.spark.sql.{Column, DataFrame, SparkSession}
   * the job commits, so [[overwriteParquet]] goes through the shared
   * stage-and-swap ([[AtomicDir]]): the previous table stays readable
   * until the final rename pair, and a crash at any point is healed on
-  * the next call. [[rowCount]] reports a written table's size from its
-  * parquet footers, without a Spark job.
+  * the next call. [[stageOverwrite]] is its stage half, for a caller
+  * that publishes later ([[graft.pipelines.MainDag]]). [[rowCount]]
+  * reports a written table's size from its parquet footers, without a
+  * Spark job.
   */
 object Sinks {
 
-  /** S8/S9: crash-safe truncate-and-reload / drop-recreate-from-frame. */
+  /** S8/S9: crash-safe truncate-and-reload / drop-recreate-from-frame:
+    * [[stageOverwrite]], then publish at once. */
   def overwriteParquet(df: DataFrame, path: String): Unit =
-    AtomicDir.replaceWith(df, path)(
-      (d, staging) => d.write.mode("overwrite").parquet(staging))
+    stageOverwrite(df, path).publish()
+
+  /** The stage half of [[overwriteParquet]]: `df` written to the staging
+    * dir beside `path`; the table changes only when the result is
+    * published. */
+  def stageOverwrite(df: DataFrame, path: String): Staged =
+    AtomicDir.stage(df, path)(df.write.mode("overwrite").parquet(_))
 
   /** Rows of the parquet table at `path`: the sum of the footer row
     * counts of the files `spark.read.parquet(path)` lists — recursively,

@@ -10,7 +10,9 @@ import org.apache.spark.sql.functions._
   * read-existing ∪ new → keep the newest row per key → overwrite.
   *
   * `merge` is the pure dataframe combinator (unit-testable, oracle-
-  * checkable); `upsertParquet` is the sink wrapper. In streaming the same
+  * checkable); `upsertParquet` is the sink wrapper, and `stageUpsert`
+  * its stage half for a caller that publishes later (the swap is
+  * [[AtomicDir]]'s stage/publish split). In streaming the same
   * combinator runs inside `foreachBatch` (see graft.streaming.MicroBatch).
   *
   * Scale notes: the winner-per-key pick is max_by over a struct — a hash
@@ -47,38 +49,43 @@ object Upsert {
   }
 
   /** Idempotent batch upsert into a parquet path (read ∪ merge ∪ atomic
-    * overwrite). Applying the same batch twice ≡ once. */
+    * overwrite): [[stageUpsert]], then publish at once. Applying the
+    * same batch twice ≡ once. */
   def upsertParquet(updates: DataFrame, path: String, keys: Seq[String],
-      version: String): Unit = {
-    val spark = updates.sparkSession
-    val (fs, target) = AtomicDir.fsFor(updates, path)
-    AtomicDir.recoverInterruptedSwap(fs, target)
-    // a hive-partitioned target is written back under the partition
-    // columns its read discovered, keeping its `k=v` directories
-    val (merged, partCols) =
-      if (fs.exists(target)) {
-        val table = spark.read.parquet(path)
-        val discovered = table.queryExecution.analyzed
-          .collectFirst { case lr: LogicalRelation => lr.relation }
-          .collect { case r: HadoopFsRelation => r.partitionSchema.fieldNames }
-          .getOrElse(Array.empty[String])
-        val existing = table.select(updates.columns.map(col).toIndexedSeq: _*)
-        (merge(existing, updates, keys, version),
-          discovered.filter(updates.columns.contains).toSeq)
-      } else
-        // first write still merges (against nothing): a first batch with
-        // in-batch duplicate keys must land deduplicated like every later
-        // one, or the one-row-per-key invariant starts out violated
-        (merge(updates.limit(0), updates, keys, version), Nil)
+      version: String): Unit =
+    stageUpsert(updates, path, keys, version).publish()
+
+  /** The stage half of [[upsertParquet]]: the merged table written to
+    * the staging dir beside `path`; the table changes only when the
+    * result is published. */
+  def stageUpsert(updates: DataFrame, path: String, keys: Seq[String],
+      version: String): Staged =
     // Stage beside the table, then swap: the lazy read of the current
     // files happens while writing the staging dir, and the previous
     // table survives a failure at any point. (The earlier cache()-as-
     // barrier variant could silently re-read the half-overwritten target
     // if an executor was lost after the cached blocks were evicted.)
-    val staging = AtomicDir.stagingFor(target)
-    if (fs.exists(staging)) fs.delete(staging, true)
-    merged.write.mode("overwrite").partitionBy(partCols: _*)
-      .parquet(staging.toString)
-    AtomicDir.swapInto(fs, staging, target)
-  }
+    AtomicDir.stage(updates, path) { staging =>
+      val spark = updates.sparkSession
+      val (fs, target) = AtomicDir.fsFor(updates, path)
+      // a hive-partitioned target is written back under the partition
+      // columns its read discovered, keeping its `k=v` directories
+      val (merged, partCols) =
+        if (fs.exists(target)) {
+          val table = spark.read.parquet(path)
+          val discovered = table.queryExecution.analyzed
+            .collectFirst { case lr: LogicalRelation => lr.relation }
+            .collect { case r: HadoopFsRelation => r.partitionSchema.fieldNames }
+            .getOrElse(Array.empty[String])
+          val existing = table.select(updates.columns.map(col).toIndexedSeq: _*)
+          (merge(existing, updates, keys, version),
+            discovered.filter(updates.columns.contains).toSeq)
+        } else
+          // first write still merges (against nothing): a first batch with
+          // in-batch duplicate keys must land deduplicated like every later
+          // one, or the one-row-per-key invariant starts out violated
+          (merge(updates.limit(0), updates, keys, version), Nil)
+      merged.write.mode("overwrite").partitionBy(partCols: _*)
+        .parquet(staging)
+    }
 }

@@ -152,4 +152,15 @@ object GraftSparkBridge {
         options = Map.empty)
     }
   }
+
+  /** Run `body` on `exec` under the caller's active session and a copy
+    * of its local properties (job group, scheduler pool, any property a
+    * listener keys on): `SQLExecution.withThreadLocalCaptured`, which
+    * takes the classic session. The future fails with `body`'s
+    * exception wrapped in a `CompletionException`. */
+  def withCallerContext[T](spark: SparkSession,
+      exec: java.util.concurrent.ExecutorService)(body: => T)
+      : java.util.concurrent.CompletableFuture[T] =
+    SQLExecution.withThreadLocalCaptured(
+      spark.asInstanceOf[classic.SparkSession], exec)(body)
 }
