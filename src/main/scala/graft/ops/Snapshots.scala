@@ -1384,44 +1384,72 @@ object Snapshots {
     atOpt(spark, dir, version).map(_.meta.props).getOrElse(Map.empty)
   }
 
-  /** `stats.columns` / `cluster.columns` must name existing,
+  /** The table property that picks how [[deleteWhere]], [[updateWhere]]
+    * and [[merge]] commit, as Iceberg's `write.{delete,update,merge}.mode`
+    * does: `copy-on-write` (the default when the key is absent)
+    * rewrites the touched files; `merge-on-read` records the matched
+    * rows as deletion vectors and appends the new row images. Only
+    * those three verbs read it; the key-frame executors
+    * ([[deleteMatching]], [[updateMatching]]), [[mergeMixed]] and
+    * [[replaceWhere]] always rewrite. A vector commit makes
+    * [[changesSince]] and the snapshot stream source fail on drift,
+    * which is why the choice lives on the table, where every writer
+    * and reader sees the same one. */
+  val DmlModeKey = "dml.mode"
+  private val DmlModes = Seq("copy-on-write", "merge-on-read")
+
+  /** Refuses a [[DmlModeKey]] value other than the two mode names. */
+  private[graft] def requireDmlMode(value: String, table: String): Unit =
+    require(DmlModes.contains(value),
+      s"$DmlModeKey on $table must be ${DmlModes.mkString(" or ")}, " +
+        s"got '$value'")
+
+  /** Whether `at` commits its DML by deletion vector ([[DmlModeKey]]). */
+  private def mergeOnRead(at: At): Boolean =
+    at.meta.props.get(DmlModeKey).contains("merge-on-read")
+
+  /** The checked table properties: [[DmlModeKey]] must name a mode, and
+    * `stats.columns` / `cluster.columns` must name existing,
     * stat-eligible (atomic-typed) top-level columns — a declared key
     * that can carry no min/max stats would silently defeat every
     * stats consumer (prune, countWhere, stats-decided aggregates,
     * drop-whole DML splits), so the declaration refuses loudly. */
-  private def validateDeclaredStatCols(key: String, value: String,
+  private def validateProperty(key: String, value: String,
       schema: StructType, dir: String): Unit =
-    value.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
-      val f = schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
-        throw new IllegalArgumentException(
-          s"$key on $dir: no column '$n' in " +
-            schema.fieldNames.toSeq.mkString("[", ", ", "]")))
-      val ok = f.dataType match {
-        case _: NumericType | StringType | DateType | TimestampType |
-             TimestampNTZType | BooleanType => true
-        case _ => false
+    if (key == DmlModeKey) requireDmlMode(value, dir)
+    else if (key == "stats.columns" || key == "cluster.columns")
+      value.split(",").map(_.trim).filter(_.nonEmpty).foreach { n =>
+        val f = schema.fields.find(_.name.equalsIgnoreCase(n)).getOrElse(
+          throw new IllegalArgumentException(
+            s"$key on $dir: no column '$n' in " +
+              schema.fieldNames.toSeq.mkString("[", ", ", "]")))
+        val ok = f.dataType match {
+          case _: NumericType | StringType | DateType | TimestampType |
+               TimestampNTZType | BooleanType => true
+          case _ => false
+        }
+        require(ok,
+          s"$key on $dir: column '$n' (${f.dataType.sql}) is not " +
+            "stat-eligible — only atomic numeric/string/date/timestamp/" +
+            "boolean columns carry min/max stats")
       }
-      require(ok,
-        s"$key on $dir: column '$n' (${f.dataType.sql}) is not " +
-          "stat-eligible — only atomic numeric/string/date/timestamp/" +
-          "boolean columns carry min/max stats")
-    }
 
-  /** SET a table property — a metadata-only commit. */
+  /** SET a table property — a metadata-only commit. A checked property
+    * ([[validateProperty]]) with a bad value refuses and commits
+    * nothing. */
   def setProperty(spark: SparkSession, dir: String, key: String,
       value: String): Int = {
     require(key.nonEmpty && !key.contains("\t") && !value.contains("\t"),
       s"bad property '$key'")
     alterMeta(spark, dir, "set-property") { at =>
-      if (key == "stats.columns" || key == "cluster.columns")
-        validateDeclaredStatCols(key, value, at.schema, dir)
+      validateProperty(key, value, at.schema, dir)
       at.meta.withProps(Map(key -> value))
     }
   }
 
-  /** UNSET a table property — a metadata-only commit (no-op version
-    * still commits if the key was absent? No: absent key refuses, the
-    * SQL layer's IF EXISTS handles tolerance). */
+  /** UNSET a table property — a metadata-only commit. An absent key
+    * refuses and commits nothing; SQL `UNSET TBLPROPERTIES IF EXISTS`
+    * tolerates it by not calling this. */
   def unsetProperty(spark: SparkSession, dir: String, key: String): Int =
     alterMeta(spark, dir, "unset-property") { at =>
       val ps = at.meta.props
@@ -1876,46 +1904,6 @@ object Snapshots {
       }
     }
   }
-
-  /** What a [[mergeLight]] did: files that gained a deletion vector
-    * (their matched rows retired), files dropped whole, the appended
-    * source files, and the count of replaced table rows. */
-  final case class LightMergeResult(version: Int, dvFiles: Int,
-    droppedFiles: Int, insertedFiles: Int, rowsReplaced: Long)
-
-  /** MERGE by deletion vector — same semantics as [[merge]] (matched
-    * keys replaced by the source row, unmatched source rows inserted,
-    * everything else untouched), with the REPLACE half done by
-    * recording the matched rows' positions instead of rewriting their
-    * files: commit cost is O(source rows + matched positions), zero
-    * table files rewritten. This is the modern lakehouse MERGE shape —
-    * a CDC trickle of single-key upserts against a 100 TB table
-    * commits kilobytes per epoch where copy-on-write rewrote a file
-    * per touched key. The source must be key-unique and carry exactly
-    * the table's columns; CHECK constraints validate the source;
-    * refuses beyond `maxPositions` matched rows (the bulk path is the
-    * copy-on-write [[merge]]). Same honesty guards as
-    * [[deleteWhereLight]] — the vector commit trips the changesSince /
-    * streaming-source drift detection and metadata-aggregate refusal.
-    * Unpinned races retry; an `expectedVersion` token fails fast. */
-  def mergeLight(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String], expectedVersion: Int = -1,
-      maxPositions: Int = 1000000): LightMergeResult =
-    dml(spark, dir, expectedVersion, "mergeLight") {
-      case None => // empty table: the plain first append
-        val r = merge(spark, dir, source, keys)
-        LightMergeResult(r.version, 0, 0, r.rewrittenFiles, 0L)
-      case Some(at) => classifyMerge(at, source, keys, "mergeLight",
-          evolvable = false) { m =>
-        // matched LIVE rows, named by (qualified file path, row index)
-        val d = applyDv(at, "mergeLight", maxPositions, m.mayMatch,
-          "merge-light", dmlKeysHeader(keys), m.idDelta)(
-          _.join(m.mutKeys.na.drop(m.keys).distinct(), m.keys, "left_semi"))(
-          _ => Some(m.src))
-        LightMergeResult(d.version, d.dvFiles, d.dropped, d.staged,
-          d.positions)
-      }
-    }
 
   /** Early, readable refusal of name resurrection — the same rules
     * [[evolveSchema]] enforces at commit time, checked before any file
@@ -2424,17 +2412,17 @@ object Snapshots {
   //
   // The write-amplification escape hatch for NARROW deletes: a
   // copy-on-write [[deleteWhere]] of 1k rows scattered over 1k files
-  // rewrites 1k files; [[deleteWhereLight]] instead records the
-  // deleted ROW POSITIONS per file in a small sidecar (`#dv` manifest
-  // line — file, sidecar path, count) and readers anti-join them out
-  // by `_metadata.row_index`. The data files stay immutable (time
-  // travel to pre-delete versions needs them verbatim); a file's
-  // CURRENT vector is the newest `#dv` line along the delta chain,
-  // and any rewrite of the file (merge/delete/compact/optimize)
-  // retires the vector with it. This is the lakehouse deletion-vector
-  // design reduced to its sound core: positions are original file row
-  // indices (stable forever), a bounded sorted-long sidecar, loaded in
-  // EXECUTORS at read time.
+  // rewrites 1k files; on a `merge-on-read` table ([[DmlModeKey]]) it
+  // instead records the deleted ROW POSITIONS per file in a small
+  // sidecar (`#dv` manifest line — file, sidecar path, count) and
+  // readers anti-join them out by `_metadata.row_index`. The data
+  // files stay immutable (time travel to pre-delete versions needs
+  // them verbatim); a file's CURRENT vector is the newest `#dv` line
+  // along the delta chain, and any rewrite of the file
+  // (merge/delete/compact/optimize) retires the vector with it. This
+  // is the lakehouse deletion-vector design reduced to its sound core:
+  // positions are original file row indices (stable forever), a
+  // bounded sorted-long sidecar, loaded in EXECUTORS at read time.
 
   private val DvPrefix = "#dv\t"
 
@@ -2494,10 +2482,10 @@ object Snapshots {
 
   /** Fold freshly matched row positions — `hits` rows of (qualified
     * file path, original row index) from [[scanWithMeta]] over
-    * `mayMatch` — into version `base`'s vectors, the shared core of
-    * the light DML verbs. Per file the new positions union with its
-    * current vector; a file whose every ORIGINAL row (as recorded at
-    * stage time) is now deleted drops whole, the rest get a fresh
+    * `mayMatch` — into version `base`'s vectors, the core of every
+    * vector commit ([[applyDv]]). Per file the new positions union
+    * with its current vector; a file whose every ORIGINAL row (as
+    * recorded at stage time) is now deleted drops whole, the rest get a fresh
     * sidecar under `sideDir`. Sidecar names are index-prefixed:
     * basenames may legitimately repeat across a converted layout's
     * partition dirs, and the name only needs uniqueness within the
@@ -2608,9 +2596,9 @@ object Snapshots {
 
   /** [[At.scan]] with two helper columns kept: the file's
     * fully-qualified physical path ([[GfCol]]) and original row index
-    * ([[GposCol]]) — [[deleteWhereLight]] needs them to NAME the rows
-    * it deletes. The path (not the basename) keys every positional
-    * join here, so converted hive layouts that repeat basenames
+    * ([[GposCol]]) — a vector commit ([[applyDv]]) needs them to NAME
+    * the rows it retires. The path (not the basename) keys every
+    * positional join here, so converted hive layouts that repeat basenames
     * across partition directories work like any other manifest. */
   private def scanWithMeta(at: At, files: Seq[String],
       dvV: Int): DataFrame = {
@@ -2702,83 +2690,6 @@ object Snapshots {
       case None => attach(spark.read.parquet(paths: _*))
     }
   }
-
-  /** What a [[deleteWhereLight]] did: files that gained/updated a
-    * deletion vector, files dropped whole (every original row now
-    * deleted), files untouched, and the number of NEW positions. */
-  final case class LightDeleteResult(version: Int, dvFiles: Int,
-    droppedFiles: Int, untouchedFiles: Int, positionsDeleted: Long)
-
-  /** DELETE by deletion vector — rows matching `pred` are removed from
-    * the CURRENT version by recording their file row positions, with
-    * NO data file read-and-rewritten: commit cost is O(matching rows),
-    * not O(touched files' bytes). Identical result semantics to
-    * [[deleteWhere]] (NULL-predicate rows kept); file-level pruning
-    * still carries disproven files untouched; a file whose every
-    * original row is now deleted leaves the manifest whole. Refuses
-    * beyond `maxPositions` matches — the BULK path is the
-    * copy-on-write [[deleteWhere]]; vectors are for the narrow,
-    * scattered deletes (GDPR keys, bad-record surgeries) where CoW
-    * write amplification is the problem. Vectors retire when
-    * [[compact]]/[[optimize]]/[[merge]] rewrite their file;
-    * [[aggregateFromManifest]] on DV'd tables keeps `count(*)` exact
-    * (vector cardinalities are exact) but refuses per-column stats
-    * (no longer attained); [[changesSince]]/the streaming source fail
-    * loudly on DV drift (file identity no longer implies content
-    * identity); [[diff]] handles it row-level. Unpinned races retry
-    * like [[deleteWhere]]. */
-  def deleteWhereLight(spark: SparkSession, dir: String, pred: Column,
-      expectedVersion: Int = -1,
-      maxPositions: Int = 1000000): LightDeleteResult =
-    dmlOn(spark, dir, expectedVersion, "delete") { at =>
-      val (mayMatch, untouched) = pruneAt(at, pred)
-      val d = applyDv(at, "deleteWhereLight", maxPositions, mayMatch,
-        "delete-light")(_.filter(isTrue(pred)))(_ => None)
-      LightDeleteResult(d.version, d.dvFiles, d.dropped,
-        untouched.size + (if (d.version > at.v) 0 else mayMatch.size),
-        d.positions)
-    }
-
-  final case class LightUpdateResult(version: Int, dvFiles: Int,
-    droppedFiles: Int, untouchedFiles: Int, updatedRows: Long)
-
-  /** UPDATE by deletion vector — the merge-on-read twin of
-    * [[updateWhere]], completing the light DML trio next to
-    * [[deleteWhereLight]] and [[mergeLight]]: matched rows retire from
-    * their files by POSITION (no rewrite of the untouched neighbors),
-    * and the updated row images append as new files. Commit cost is
-    * O(matching rows), not O(touched files' bytes) — the
-    * narrow-update-on-wide-files shape (a GDPR field redaction, a
-    * mispriced-tick correction) where copy-on-write amplification is
-    * the problem. Same semantics as [[updateWhere]] (IS-TRUE
-    * predicate, declared-type casts, CHECK constraints enforced on the
-    * updated rows); same `maxPositions` bulk-refusal and vector
-    * lifecycle as [[deleteWhereLight]] (vectors retire when a rewrite
-    * touches their file; the usual honesty guards treat the commit as
-    * content-changing). Updated rows relocate to the commit's new
-    * files — row order within a snapshot table is not part of any
-    * read contract. */
-  def updateWhereLight(spark: SparkSession, dir: String, pred: Column,
-      assignments: Seq[(String, Column)], expectedVersion: Int = -1,
-      maxPositions: Int = 1000000): LightUpdateResult =
-    dmlOn(spark, dir, expectedVersion, "update") { at =>
-      val cols = at.table.schema
-      val assigned = assignedOf(dir, cols, assignments)
-      val (mayMatch, untouched) = pruneAt(at, pred)
-      // the matched rows feed TWO consumers — the position collect and
-      // the updated-image staging — so they are pinned once
-      val d = applyDv(at, "updateWhereLight", maxPositions, mayMatch,
-          "update-light", persist = true)(_.filter(isTrue(pred))) {
-        _.map { matched =>
-          val updated = assign(cols, assigned, lit(true))(matched)
-          enforceConstraints(at, updated)
-          updated
-        }
-      }
-      LightUpdateResult(d.version, d.dvFiles, d.dropped,
-        untouched.size + (if (d.version > at.v) 0 else mayMatch.size),
-        d.positions)
-    }
 
   /** A staged-but-uncommitted commit: the data files' root-relative
     * paths plus their encoded per-file column-stats manifest lines and
@@ -3152,7 +3063,7 @@ object Snapshots {
     CommitCoordinators.clear(scheme)
 
   /** The ingest commit ([[ingest]], [[overwrite]], the empty-table
-    * branch of [[mergeCow]]): `staged` lands on base `from` (0: nothing
+    * branch of [[mergeFamily]]): `staged` lands on base `from` (0: nothing
     * committed) through the one CAS loop, [[commitWithRebase]], whose
     * rebase rule here is "the tip still admits the batch". A `fresh`
     * commit (overwrite) is a full manifest of the staged files — a new
@@ -3276,8 +3187,7 @@ object Snapshots {
     require(schema.fields.nonEmpty, s"CREATE/REPLACE TABLE $dir needs columns")
     checkConstraints.keys.foreach(n => require(n.matches("[A-Za-z0-9._-]+"),
       s"constraint name must be [A-Za-z0-9._-]+, got '$n'"))
-    Seq("stats.columns", "cluster.columns").foreach(k =>
-      properties.get(k).foreach(validateDeclaredStatCols(k, _, schema, dir)))
+    properties.foreach { case (k, v) => validateProperty(k, v, schema, dir) }
     requireConstraintsResolve(spark, schema, checkConstraints,
       s"CREATE/REPLACE TABLE $dir")
     val (fs, root) = fsFor(spark, dir)
@@ -3800,22 +3710,26 @@ object Snapshots {
         removed = None)
     }
 
-  /** File counts of a [[merge]]: how many data files the source's key
-    * footprint forced into the rewrite vs how many carried over
-    * untouched — the observability that makes the copy-on-write cost
-    * model auditable (untouched should dominate on a key-clustered
-    * table; see [[optimize]]). */
+  /** File counts of a [[merge]]: how many data files the commit staged
+    * (copy-on-write: the rewritten rows of the files the source's key
+    * footprint touched, plus the source; by vector: the source only) vs
+    * how many carried over untouched — the observability that makes the
+    * cost model auditable (untouched should dominate on a key-clustered
+    * table; see [[optimize]]). A vector commit also counts the files
+    * that gained a vector or dropped whole and the table rows it
+    * replaced; copy-on-write leaves those 0. */
   final case class MergeResult(version: Int, rewrittenFiles: Int,
-    untouchedFiles: Int)
+    untouchedFiles: Int, droppedFiles: Int = 0, dvFiles: Int = 0,
+    rowsReplaced: Long = 0L)
 
   /** Single-key merge sources up to this many distinct keys prune with
     * an exact IN-set; beyond it (or with composite keys) pruning falls
     * back to per-column [min, max] ranges — still sound, just coarser. */
   private val MergeInSetLimit = 1024
 
-  /** MERGE INTO (upsert) — the copy-on-write row update for snapshot
-    * tables: table rows whose `keys` tuple matches a source row are
-    * replaced by that source row; unmatched source rows are inserted;
+  /** MERGE INTO (upsert) — the row update for snapshot tables: table
+    * rows whose `keys` tuple matches a source row are replaced by that
+    * source row; unmatched source rows are inserted;
     * everything else is untouched. Equivalent to the ANSI
     * `MERGE ... WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN
     * INSERT *`, committed as ONE new version.
@@ -3846,10 +3760,21 @@ object Snapshots {
     * of the racing commit is exactly serializing after it — nothing of
     * either writer is dropped. A content-identical rewrite cannot say
     * the same, which is why [[compact]]/[[optimize]] always throw.
-    * Merging into an empty table is the plain first append. */
+    * Merging into an empty table is the plain first append.
+    *
+    * On a `merge-on-read` table ([[DmlModeKey]]) the REPLACE half
+    * records the matched rows' positions as deletion vectors instead of
+    * rewriting their files (op `merge-light`): commit cost is
+    * O(source rows + matched positions), zero table files rewritten —
+    * a CDC trickle of single-key upserts against a 100 TB table
+    * commits kilobytes per epoch. A lost race there re-runs the merge
+    * (unpinned) or throws (pinned), never rebases. Past
+    * [[MaxDvPositions]] matched rows, or when the source evolves the
+    * schema, the merge commits copy-on-write. */
   def merge(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], expectedVersion: Int = -1): MergeResult =
-    mergeCow(spark, dir, source, keys, expectedVersion, "merge")
+    mergeFamily(spark, dir, source, keys, expectedVersion, "merge",
+      byMode = true)
 
   /** [[merge]] + [[deleteMatching]] as ONE atomic commit — the general
     * SQL MERGE's executor: table rows whose `keys` tuple appears in
@@ -3865,7 +3790,7 @@ object Snapshots {
   def mergeMixed(spark: SparkSession, dir: String, source: DataFrame,
       keys: Seq[String], tombstones: DataFrame,
       expectedVersion: Int = -1): MergeResult =
-    mergeCow(spark, dir, source, keys, expectedVersion, "mergeMixed",
+    mergeFamily(spark, dir, source, keys, expectedVersion, "mergeMixed",
       tombstones = Some(tombstones))
 
   /** APPLY CHANGES INTO — net a CDC batch to its latest state per key
@@ -3990,7 +3915,7 @@ object Snapshots {
         .select(dataCols.map(col): _*)
       val tombstones = latest.filter(col(opCol) === "delete")
         .select(keys.map(col): _*)
-      mergeCow(spark, dir, upserts, keys, expectedVersion, "applyChanges",
+      mergeFamily(spark, dir, upserts, keys, expectedVersion, "applyChanges",
         tombstones = Some(tombstones), propsDelta = propsDelta,
         keysProvedUnique = true)
     } finally live.unpersist()
@@ -4440,8 +4365,9 @@ object Snapshots {
   //     [[classifyKeys]] for key frames, [[classifyMerge]] for merges;
   //   - [[applyCow]] commits a staged rewrite ([[stageAt]]) with
   //     rebase, [[applyDv]] records the matched rows' positions as
-  //     deletion vectors. A copy-on-write verb and its `*Light` twin
-  //     share everything but the apply.
+  //     deletion vectors. [[deleteWhere]], [[updateWhere]] and [[merge]]
+  //     pick the apply from the table's [[DmlModeKey]]; both modes
+  //     share everything before it.
 
   /** One call's base: version `v` of `dir`, its chain resolved through
     * the call's [[Chains]]. `unpinned` when the caller gave no
@@ -4611,53 +4537,58 @@ object Snapshots {
 
   /** What [[applyDv]] did: the version after it (the base when nothing
     * committed), positions newly deleted, files dropped whole, files
-    * given a vector, and files staged. */
+    * given a vector, files staged, and files left as they were. */
   private final case class DvApplied(version: Int, positions: Long,
-    dropped: Int, dvFiles: Int, staged: Int)
+    dropped: Int, dvFiles: Int, staged: Int, untouched: Int)
 
-  /** Deletion-vector apply, shared by the light verbs: scan `mayMatch`
+  /** The most matched rows one vector commit records. Every position
+    * reaches the driver as a (file path, row index) row, so the bound
+    * caps one commit's driver memory; past it the verb rewrites
+    * instead, which a change that wide amortizes anyway. */
+  private val MaxDvPositions = 100000
+
+  /** Deletion-vector apply of the `merge-on-read` verbs: scan `mayMatch`
     * with row positions, keep the matched rows (`matchedIn`) and collect
-    * their positions under the `maxPositions` bulk guard. Then, when a
-    * row matched or `images` has rows to land regardless, stage the
-    * images, fold the positions into the base's vectors
-    * ([[foldPositions]] — the sidecars ride in the staged commit's dir)
-    * and CAS; a lost race raises the usual
+    * their positions. More than [[MaxDvPositions]] of them return None,
+    * with nothing staged or committed: the verb commits copy-on-write.
+    * Otherwise, when a row matched or `images` has rows to land
+    * regardless, stage the images, fold the positions into the base's
+    * vectors ([[foldPositions]] — the sidecars ride in the staged
+    * commit's dir) and CAS under `op`; a lost race raises the usual
     * ConcurrentModificationException. `images` sees the matched rows
     * only when some matched; `persist` pins them when it re-reads
     * them. */
-  private def applyDv(at: At, what: String, maxPositions: Int,
-      mayMatch: Seq[String], op: String, header: Seq[String] = Nil,
+  private def applyDv(at: At, mayMatch: Seq[String], untouched: Seq[String],
+      op: String, header: Seq[String] = Nil,
       delta: Map[String, String] = Map.empty, persist: Boolean = false)(
       matchedIn: DataFrame => DataFrame)(
-      images: Option[DataFrame] => Option[DataFrame]): DvApplied = {
+      images: Option[DataFrame] => Option[DataFrame]): Option[DvApplied] = {
     import at.{dir, v}
-    require(maxPositions >= 0,
-      s"$what: maxPositions must be >= 0, got $maxPositions")
     val matched = if (mayMatch.isEmpty) None else Some {
       val m = matchedIn(scanWithMeta(at, mayMatch, v))
       if (persist) m.persist() else m
     }
     try {
-      // one row past the cap proves a refusal; past Int.MaxValue there
-      // is no such row to ask for
+      // one row past the bound proves the fallback
       val hits = matched.fold(Array.empty[Row])(_
-        .select(col(GfCol), col(GposCol))
-        .limit(maxPositions + (if (maxPositions < Int.MaxValue) 1 else 0))
+        .select(col(GfCol), col(GposCol)).limit(MaxDvPositions + 1)
         .collect())
-      require(hits.length <= maxPositions,
-        s"$what on $dir matches more than $maxPositions table rows — use " +
-          s"${what.stripSuffix("Light")} (copy-on-write) for bulk changes")
-      val staged = images(matched.filter(_ => hits.nonEmpty))
-        .map(stageAt(at, _))
-      if (hits.isEmpty && staged.isEmpty) DvApplied(v, 0L, 0, 0, 0)
-      else {
-        val (dropped, newDv) = foldPositions(at, s"$what on $dir",
-          hits, mayMatch, staged.flatMap(_.files.headOption)
-            .fold(s"$DataDir/${java.util.UUID.randomUUID}")(f =>
-              f.take(f.lastIndexOf('/'))))
-        DvApplied(commitOn(at, op, at.meta.withProps(delta), staged,
-          Some(dropped), newDv, header), hits.length.toLong, dropped.size,
-          newDv.size, staged.fold(0)(_.files.length))
+      if (hits.length > MaxDvPositions) None
+      else Some {
+        val staged = images(matched.filter(_ => hits.nonEmpty))
+          .map(stageAt(at, _))
+        if (hits.isEmpty && staged.isEmpty)
+          DvApplied(v, 0L, 0, 0, 0, untouched.size + mayMatch.size)
+        else {
+          val (dropped, newDv) = foldPositions(at, s"$op on $dir",
+            hits, mayMatch, staged.flatMap(_.files.headOption)
+              .fold(s"$DataDir/${java.util.UUID.randomUUID}")(f =>
+                f.take(f.lastIndexOf('/'))))
+          DvApplied(commitOn(at, op, at.meta.withProps(delta), staged,
+            Some(dropped), newDv, header), hits.length.toLong, dropped.size,
+            newDv.size, staged.fold(0)(_.files.length),
+            untouched.size + mayMatch.size - dropped.size - newDv.size)
+        }
       }
     } finally if (persist) matched.foreach(_.unpersist(blocking = false))
   }
@@ -4686,7 +4617,7 @@ object Snapshots {
     evolve: Boolean = false)
 
   /** Keyed-merge classify, shared by [[merge]], [[mergeMixed]],
-    * [[mergeLight]], [[idempotentMerge]] and [[applyChanges]]: align
+    * [[idempotentMerge]] and [[applyChanges]]: align
     * the source to the table, pin it, prove it (identity, key-unique,
     * CHECK constraints — the table rows a merge keeps are already
     * valid, only the source needs proof), and prune by the footprint
@@ -4810,14 +4741,18 @@ object Snapshots {
     } finally pinned.unpersist()
   }
 
-  /** The copy-on-write merge family's executor: [[classifyMerge]],
-    * then the touched files' rows minus every named key, plus the
-    * source, staged and committed with rebase. */
-  private def mergeCow(spark: SparkSession, dir: String, source: DataFrame,
-      keys: Seq[String], expectedVersion: Int, verb: String,
-      header: Seq[String] = Nil, tombstones: Option[DataFrame] = None,
+  /** The merge family's executor: [[classifyMerge]], then the touched
+    * files' rows minus every named key, plus the source, staged and
+    * committed with rebase. `byMode` ([[merge]] only) lets a
+    * `merge-on-read` table retire the matched rows by vector instead,
+    * unless the source evolves the schema or matches more than
+    * [[MaxDvPositions]] rows. */
+  private def mergeFamily(spark: SparkSession, dir: String,
+      source: DataFrame, keys: Seq[String], expectedVersion: Int,
+      verb: String, header: Seq[String] = Nil,
+      tombstones: Option[DataFrame] = None,
       propsDelta: Map[String, String] = Map.empty,
-      keysProvedUnique: Boolean = false,
+      keysProvedUnique: Boolean = false, byMode: Boolean = false,
       guard: Option[Int] => Unit = _ => ()): MergeResult = {
     require(keys.nonEmpty, "merge needs at least one key column")
     dml(spark, dir, expectedVersion, verb) { base =>
@@ -4836,30 +4771,40 @@ object Snapshots {
             rewrittenFiles = 0, untouchedFiles = 0)
         case Some(at) => classifyMerge(at, source, keys, "merge",
             evolvable = true, tombstones, keysProvedUnique) { m =>
-          // evolving merges append the NEW columns after the table's
-          // (rewritten table rows read NULL there, like pre-evolution
-          // files do) — exactly evolveSchema's shape
-          val staged = stageAt(at,
-            (if (m.mayMatch.isEmpty) at.table.limit(0) else at.scan(m.mayMatch))
+          val evolves = m.src.columns.length > at.table.columns.length
+          val byVector =
+            if (!byMode || evolves || !mergeOnRead(at)) None
+            else applyDv(at, m.mayMatch, m.untouched, "merge-light",
+              dmlKeysHeader(keys), m.idDelta)(_.join(
+                m.mutKeys.na.drop(m.keys).distinct(), m.keys, "left_semi"))(
+              _ => Some(m.src))
+          byVector.map(d => MergeResult(d.version, d.staged, d.untouched,
+            d.dropped, d.dvFiles, d.positions)).getOrElse {
+            // evolving merges append the NEW columns after the table's
+            // (rewritten table rows read NULL there, like pre-evolution
+            // files do) — exactly evolveSchema's shape
+            val staged = stageAt(at, (if (m.mayMatch.isEmpty)
+                at.table.limit(0) else at.scan(m.mayMatch))
               .join(m.mutKeys, m.keys, "left_anti")
               .unionByName(m.src, allowMissingColumns = m.evolve))
-          // schema + data land as ONE commit: the staged frame's schema
-          // evolves the base's pinned schema additively
-          val evolved = if (!m.evolve) None else Some(evolveSchema(
-            at.schema, staged.schema, dir, at.meta.dropped))
-          val (v, carried) = applyCow(at,
-            if (tombstones.isDefined) "merge-mixed" else "merge", m.footprint,
-            m.mayMatch, m.untouched, staged, evolved, m.idDelta ++ propsDelta,
-            dmlKeysHeader(keys) ++ header, guard)
-          MergeResult(v, rewrittenFiles = staged.files.length,
-            untouchedFiles = carried)
+            // schema + data land as ONE commit: the staged frame's schema
+            // evolves the base's pinned schema additively
+            val evolved = if (!m.evolve) None else Some(evolveSchema(
+              at.schema, staged.schema, dir, at.meta.dropped))
+            val (v, carried) = applyCow(at,
+              if (tombstones.isDefined) "merge-mixed" else "merge",
+              m.footprint, m.mayMatch, m.untouched, staged, evolved,
+              m.idDelta ++ propsDelta, dmlKeysHeader(keys) ++ header, guard)
+            MergeResult(v, rewrittenFiles = staged.files.length,
+              untouchedFiles = carried)
+          }
         }
       }
     }
   }
 
-  /** Predicate-delete classify of the copy-on-write verbs
-    * ([[deleteWhere]], [[replaceWhere]]): may-match vs untouched files
+  /** Predicate-delete classify of [[deleteWhere]] and
+    * [[replaceWhere]]: may-match vs untouched files
     * with the `!pred` survivor set from ONE stats pass; of the
     * may-match files, those where NO row can survive drop whole
     * (interval disproof of `!pred` plus the null-free guard —
@@ -4878,9 +4823,14 @@ object Snapshots {
   /** File counts of a [[deleteWhere]]: `rewrittenFiles` had surviving
     * rows next to deleted ones, `droppedFiles` were deleted whole
     * without being read (every row provably matched — only when stats
-    * prove the COMPLEMENT empty), `untouchedFiles` carried by name. */
+    * prove the COMPLEMENT empty), `untouchedFiles` carried by name. A
+    * vector commit rewrites nothing: `dvFiles` gained or updated a
+    * vector, `positionsDeleted` counts the rows it newly deleted, and
+    * `droppedFiles` lost their last live row. Copy-on-write leaves
+    * `dvFiles` and `positionsDeleted` 0. */
   final case class DeleteResult(version: Int, rewrittenFiles: Int,
-    droppedFiles: Int, untouchedFiles: Int)
+    droppedFiles: Int, untouchedFiles: Int, dvFiles: Int = 0,
+    positionsDeleted: Long = 0L)
 
   /** CDC tombstone application — delete every table row whose `keys`
     * tuple appears in `tombstones`: the `MERGE ... WHEN MATCHED THEN
@@ -4955,9 +4905,9 @@ object Snapshots {
     pinned
   }
 
-  /** Copy-on-write DELETE — rows satisfying `pred` are removed as ONE
-    * new version; with [[merge]] and the append/overwrite pair this
-    * completes the DML surface. Same file-level machinery as
+  /** DELETE — rows satisfying `pred` are removed as ONE new version;
+    * with [[merge]] and the append/overwrite pair this completes the
+    * DML surface. Same file-level machinery as
     * [[readWhere]], pointed both ways:
     *
     *   - files whose stats DISPROVE `pred` carry into the new manifest
@@ -4978,18 +4928,40 @@ object Snapshots {
     * with an `expectedVersion` OCC token a lost race throws; unpinned
     * (the default) it retries against the new current version — the
     * delete is a function of (table, pred), so re-running serializes
-    * after the racing commit. */
+    * after the racing commit.
+    *
+    * On a `merge-on-read` table ([[DmlModeKey]]) the matched rows are
+    * recorded as deletion vectors instead (op `delete-light`): no data
+    * file is read-and-rewritten, commit cost is O(matching rows) — the
+    * narrow, scattered deletes (GDPR keys, bad-record surgeries) where
+    * copy-on-write amplification is the problem. A file whose every
+    * original row is then deleted leaves the manifest whole, and a
+    * predicate nothing matches commits nothing. Vectors retire when a
+    * rewrite ([[compact]], [[optimize]], a copy-on-write verb) touches
+    * their file; [[aggregateFromManifest]] keeps `count(*)` exact but
+    * refuses per-column stats; [[changesSince]] and the streaming
+    * source fail loudly on vector drift; [[diff]] handles it row-level.
+    * A lost race there re-runs the delete (unpinned) or throws
+    * (pinned). Past [[MaxDvPositions]] matches the delete commits
+    * copy-on-write. */
   def deleteWhere(spark: SparkSession, dir: String, pred: Column,
       expectedVersion: Int = -1): DeleteResult =
     dmlOn(spark, dir, expectedVersion, "delete") { at =>
       val (mayMatch, untouched, dropWhole, survivors) =
         classifyDelete(at, pred)
-      val staged = stageAt(at,
-        survivors.getOrElse(at.table.limit(0)))
-      val (v, carried) = applyCow(at, "delete", Some(pred), mayMatch,
-        untouched, staged)
-      DeleteResult(v, rewrittenFiles = staged.files.length,
-        droppedFiles = dropWhole.length, untouchedFiles = carried)
+      val byVector =
+        if (!mergeOnRead(at)) None
+        else applyDv(at, mayMatch, untouched, "delete-light")(
+          _.filter(isTrue(pred)))(_ => None)
+      byVector.map(d => DeleteResult(d.version, 0, d.dropped, d.untouched,
+        d.dvFiles, d.positions)).getOrElse {
+        val staged = stageAt(at,
+          survivors.getOrElse(at.table.limit(0)))
+        val (v, carried) = applyCow(at, "delete", Some(pred), mayMatch,
+          untouched, staged)
+        DeleteResult(v, rewrittenFiles = staged.files.length,
+          droppedFiles = dropWhole.length, untouchedFiles = carried)
+      }
     }
 
   /** Of `mayMatch` files, those provably holding NO surviving row
@@ -5126,11 +5098,17 @@ object Snapshots {
         droppedFiles = dropWhole.length, untouchedFiles = carried)
     }
 
+  /** File counts of an update: files the commit staged (copy-on-write:
+    * the touched files, rewritten whole; by vector: the updated row
+    * images) and files carried by name. A vector commit also counts the
+    * files that gained a vector or dropped whole and the rows it
+    * updated; copy-on-write leaves those 0. */
   final case class UpdateResult(version: Int, rewrittenFiles: Int,
-    untouchedFiles: Int)
+    untouchedFiles: Int, droppedFiles: Int = 0, dvFiles: Int = 0,
+    updatedRows: Long = 0L)
 
-  /** Copy-on-write UPDATE — rows satisfying `pred` get `assignments`
-    * applied (each value cast to the column's declared type, SQL
+  /** UPDATE — rows satisfying `pred` get `assignments` applied
+    * (each value cast to the column's declared type, SQL
     * UPDATE semantics), as ONE new version. File-level pruning is the
     * same as [[deleteWhere]]'s may-match split: files whose stats
     * disprove `pred` carry into the new manifest untouched (at 100 TB
@@ -5142,7 +5120,18 @@ object Snapshots {
     * constraints are enforced on the rewritten rows before anything
     * commits. A predicate no file can match commits nothing and
     * returns the current version. Assignment targets must be existing
-    * top-level columns — UPDATE never evolves schema. */
+    * top-level columns — UPDATE never evolves schema.
+    *
+    * On a `merge-on-read` table ([[DmlModeKey]]) matched rows retire
+    * from their files by POSITION (no rewrite of their untouched
+    * neighbors) and the updated row images append as new files (op
+    * `update-light`): commit cost is O(matching rows), not O(touched
+    * files' bytes) — the narrow-update-on-wide-files shape (a GDPR
+    * field redaction, a mispriced-tick correction). Same semantics and
+    * CHECK enforcement; the updated rows relocate to the commit's new
+    * files (row order within a snapshot table is not part of any read
+    * contract). Vector lifecycle, races and the [[MaxDvPositions]]
+    * fallback are [[deleteWhere]]'s. */
   def updateWhere(spark: SparkSession, dir: String, pred: Column,
       assignments: Seq[(String, Column)],
       expectedVersion: Int = -1): UpdateResult =
@@ -5150,8 +5139,21 @@ object Snapshots {
       val cols = at.table.schema
       val assigned = assignedOf(dir, cols, assignments)
       val (mayMatch, untouched) = pruneAt(at, pred)
+      // the matched rows feed TWO consumers — the position collect and
+      // the updated-image staging — so they are pinned once
+      val byVector =
+        if (mayMatch.isEmpty || !mergeOnRead(at)) None
+        else applyDv(at, mayMatch, untouched, "update-light",
+            persist = true)(_.filter(isTrue(pred))) {
+          _.map { matched =>
+            val updated = assign(cols, assigned, lit(true))(matched)
+            enforceConstraints(at, updated)
+            updated
+          }
+        }
       if (mayMatch.isEmpty) UpdateResult(at.v, 0, untouched.length)
-      else {
+      else byVector.map(d => UpdateResult(d.version, d.staged, d.untouched,
+        d.dropped, d.dvFiles, d.positions)).getOrElse {
         val rows = assign(cols, assigned, isTrue(pred))(at.scan(mayMatch))
         // updated values are NEW data: they must prove the table's CHECK
         // constraints before the commit, exactly like an append's rows
@@ -5226,7 +5228,7 @@ object Snapshots {
       keys: Seq[String], writerId: String,
       batchId: Long): Option[MergeResult] =
     exactlyOnce(spark, dir, writerId, batchId) { (tag, guard) =>
-      mergeCow(spark, dir, source, keys, -1, "idempotentMerge", header = tag,
+      mergeFamily(spark, dir, source, keys, -1, "idempotentMerge", header = tag,
         guard = guard)
     }
 
@@ -5367,9 +5369,9 @@ object Snapshots {
       if (drifted.nonEmpty)
         throw new IllegalStateException(
           s"changesSince($fromVersion -> $to) on $dir: deletion vectors " +
-            s"changed on ${drifted.size} base file(s) (deleteWhereLight " +
-            "landed in between) — appended files no longer describe the " +
-            "change; re-sync from a full read")
+            s"changed on ${drifted.size} base file(s) (a deletion-vector " +
+            "commit landed in between) — appended files no longer " +
+            "describe the change; re-sync from a full read")
     }
     (fromF, toF)
   }

@@ -912,13 +912,13 @@ object SinkQueries {
         |FROM orders JOIN customer ON o_custkey = c_custkey
         |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin),
 
-    // S36: deletion-vector DELETE — Snapshots.deleteWhereLight. The
-    // scattered-narrow-delete shape (every 1000th key) that makes
-    // copy-on-write rewrite nearly every file; the vector path commits
-    // O(matching rows) of sidecar positions and rewrites NOTHING
-    // (DeletionVectorSpec asserts the zero-rewrite property; this
-    // oracle asserts the semantics: the read equals the predicate
-    // complement exactly, through the anti-join read path).
+    // S36: deletion-vector DELETE — Snapshots.deleteWhere on a
+    // `merge-on-read` table. The scattered-narrow-delete shape (every
+    // 1000th key) that makes copy-on-write rewrite nearly every file;
+    // the vector path commits O(matching rows) of sidecar positions and
+    // rewrites NOTHING (DeletionVectorSpec asserts the zero-rewrite
+    // property; this oracle asserts the semantics: the read equals the
+    // predicate complement exactly, through the anti-join read path).
     QueryDef("s36_deletion_vector",
       (s, dir) => {
         import graft.ops.Snapshots
@@ -929,7 +929,8 @@ object SinkQueries {
           .select("o_orderkey", "o_totalprice", "o_orderpriority")
         (0 to 1).foreach(i => Snapshots.append(
           orders.filter(pmod(col("o_orderkey"), lit(2)) === i), root))
-        Snapshots.deleteWhereLight(s, root,
+        Snapshots.setProperty(s, root, Snapshots.DmlModeKey, "merge-on-read")
+        Snapshots.deleteWhere(s, root,
           pmod(col("o_orderkey"), lit(1000)) === 7L)
         Snapshots.read(s, root)
           .groupBy("o_orderpriority")
@@ -943,11 +944,12 @@ object SinkQueries {
         |FROM orders WHERE o_orderkey % 1000 <> 7
         |GROUP BY o_orderpriority ORDER BY o_orderpriority""".stripMargin),
 
-    // S37: deletion-vector MERGE — Snapshots.mergeLight. The s28 upsert
-    // replayed through the O(source + matched-positions) path: matched
-    // table rows retire by vector, the source appends, nothing
-    // rewrites — the CDC-trickle MERGE shape at 100 TB. Oracle is
-    // s28's: both MERGE paths must produce the identical table.
+    // S37: deletion-vector MERGE — Snapshots.merge on a `merge-on-read`
+    // table. The s28 upsert replayed through the O(source +
+    // matched-positions) path: matched table rows retire by vector,
+    // the source appends, nothing rewrites — the CDC-trickle MERGE
+    // shape at 100 TB. Oracle is s28's: both MERGE paths must produce
+    // the identical table.
     QueryDef("s37_merge_light",
       (s, dir) => {
         import graft.ops.Snapshots
@@ -966,7 +968,8 @@ object SinkQueries {
         val inserts = base
           .filter(pmod(col("o_orderkey"), lit(97)) === 1)
           .withColumn("o_orderkey", col("o_orderkey") + lit(10000000L))
-        Snapshots.mergeLight(s, root, updates.unionByName(inserts),
+        Snapshots.setProperty(s, root, Snapshots.DmlModeKey, "merge-on-read")
+        Snapshots.merge(s, root, updates.unionByName(inserts),
           Seq("o_orderkey"))
         Snapshots.read(s, root).orderBy("o_orderkey")
       },
@@ -1388,15 +1391,10 @@ object SinkQueries {
           SELECT * FROM s44_base WHERE o_orderkey % 2 = 0""")
         s.sql("""INSERT INTO g44.default.t1 SELECT * FROM s44_base
           WHERE o_orderkey % 2 = 1 AND o_custkey % 3 = 0""")
-        s.sql("""CREATE TABLE g44.default.t2 AS
+        s.sql("""CREATE TABLE g44.default.t2
+          TBLPROPERTIES ('dml.mode' = 'merge-on-read') AS
           SELECT * FROM s44_base WHERE o_orderkey % 5 < 3""")
-        val prev = s.conf.getOption("spark.graft.sql.deletionVectors")
-        s.conf.set("spark.graft.sql.deletionVectors", "true")
-        try s.sql("DELETE FROM g44.default.t2 WHERE o_custkey % 7 = 3")
-        finally prev match {
-          case Some(v) => s.conf.set("spark.graft.sql.deletionVectors", v)
-          case None => s.conf.unset("spark.graft.sql.deletionVectors")
-        }
+        s.sql("DELETE FROM g44.default.t2 WHERE o_custkey % 7 = 3")
         val a = s.sql("""SELECT count(*) AS t1_n,
           count(o_custkey) AS t1_nc, min(o_totalprice) AS t1_min_price,
           max(o_orderkey) AS t1_max_key FROM g44.default.t1""")
@@ -1456,17 +1454,12 @@ object SinkQueries {
         Tables.orders(s, dir)
           .select("o_orderkey", "o_custkey", "o_totalprice")
           .createOrReplaceTempView("s45_base")
-        s.sql("""CREATE TABLE g45.default.t AS
+        s.sql("""CREATE TABLE g45.default.t
+          TBLPROPERTIES ('dml.mode' = 'merge-on-read') AS
           SELECT * FROM s45_base WHERE o_orderkey % 2 = 0""") // v1
         s.sql("""INSERT INTO g45.default.t SELECT * FROM s45_base
           WHERE o_orderkey % 2 = 1 AND o_custkey % 5 = 0""") // v2
-        val prev = s.conf.getOption("spark.graft.sql.deletionVectors")
-        s.conf.set("spark.graft.sql.deletionVectors", "true")
-        try s.sql("DELETE FROM g45.default.t WHERE o_custkey % 11 = 4") // v3
-        finally prev match {
-          case Some(v) => s.conf.set("spark.graft.sql.deletionVectors", v)
-          case None => s.conf.unset("spark.graft.sql.deletionVectors")
-        }
+        s.sql("DELETE FROM g45.default.t WHERE o_custkey % 11 = 4") // v3
         s.sql("""SELECT _change_type, _commit_version,
             o_orderkey, o_custkey, o_totalprice
           FROM table_changes('g45.default.t', 1)
@@ -2074,7 +2067,8 @@ object SinkQueries {
         require(r.version == 1 && r.rows > 0,
           s"convert fixture drift: $r")
         // positional (deletion-vector) delete, no prior OPTIMIZE
-        Snapshots.deleteWhereLight(s, raw, col("o_orderkey") % 11 === 0)
+        Snapshots.setProperty(s, raw, Snapshots.DmlModeKey, "merge-on-read")
+        Snapshots.deleteWhere(s, raw, col("o_orderkey") % 11 === 0)
         Snapshots.read(s, raw)
           .groupBy(col("tz"))
           .agg(count(lit(1)).cast("long").as("n_orders"),

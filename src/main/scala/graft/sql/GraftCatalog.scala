@@ -402,6 +402,13 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
   override def alterTable(ident: Identifier, changes: TableChange*): Table = {
     if (!tableExists(ident)) throw new NoSuchTableException(ident)
     val dir = dirFor(ident)
+    // each change commits on its own: a bad DML mode refuses before
+    // any change of the statement lands
+    changes.foreach {
+      case s: TableChange.SetProperty if s.property == Snapshots.DmlModeKey =>
+        Snapshots.requireDmlMode(s.value, fullName(ident))
+      case _ =>
+    }
     changes.foreach {
       case a: TableChange.AddColumn =>
         require(a.fieldNames.length == 1,

@@ -112,12 +112,6 @@ private[sql] object GraftDml {
       In(vals.head, rows.toSeq.map(r => Literal.create(r.get(0), dt)))
   }
 
-  /** Whether the session opted into deletion-vector (merge-on-read)
-    * DML instead of copy-on-write rewrites. */
-  def useDv(spark: SparkSession): Boolean =
-    spark.conf.getOption("spark.graft.sql.deletionVectors")
-      .exists(_.equalsIgnoreCase("true"))
-
   /** The conjuncts of `e`, left to right. */
   def splitConj(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConj(l) ++ splitConj(r)
@@ -382,29 +376,26 @@ private[sql] object GraftDml {
 
 /** `DELETE FROM graft.db.t WHERE p` → [[GraftDml.runWhere]] with
   * [[Snapshots.deleteMatching]] as the key-frame executor and
-  * [[Snapshots.deleteWhere]] (or the deletion-vector
-  * [[Snapshots.deleteWhereLight]] when
-  * `spark.graft.sql.deletionVectors=true`) as the predicate executor.
-  * Returns no rows, as Spark's DELETE does. */
+  * [[Snapshots.deleteWhere]] as the predicate executor (copy-on-write,
+  * or by deletion vector on a table whose [[Snapshots.DmlModeKey]] is
+  * `merge-on-read`). Returns no rows, as Spark's DELETE does. */
 final case class GraftDeleteCommand(dir: String, tableName: String,
     shieldedCond: ShieldedExpr) extends LeafRunnableCommand {
   override def run(spark: SparkSession): Seq[Row] = {
     GraftDml.runWhere(spark, dir, tableName, "DELETE FROM",
       Some(shieldedCond.e),
       Snapshots.deleteMatching(spark, dir, _, _, _),
-      pred =>
-        if (GraftDml.useDv(spark)) Snapshots.deleteWhereLight(spark, dir, pred)
-        else Snapshots.deleteWhere(spark, dir, pred))
+      Snapshots.deleteWhere(spark, dir, _))
     Seq.empty
   }
 }
 
 /** `UPDATE graft.db.t SET c = e, ... WHERE p` → [[GraftDml.runWhere]]
   * with [[Snapshots.updateMatching]] as the key-frame executor and
-  * [[Snapshots.updateWhere]] (copy-on-write, file-level pruned), or
-  * the deletion-vector [[Snapshots.updateWhereLight]] when
-  * `spark.graft.sql.deletionVectors=true`, as the predicate executor.
-  * The SET values' own uncorrelated subqueries evaluate first. */
+  * [[Snapshots.updateWhere]] (file-level pruned; copy-on-write, or by
+  * deletion vector on a `merge-on-read` table) as the predicate
+  * executor. The SET values' own uncorrelated subqueries evaluate
+  * first. */
 final case class GraftUpdateCommand(dir: String, tableName: String,
     assignments: Seq[(String, ShieldedExpr)],
     cond: Option[ShieldedExpr]) extends LeafRunnableCommand {
@@ -415,10 +406,7 @@ final case class GraftUpdateCommand(dir: String, tableName: String,
     }
     GraftDml.runWhere(spark, dir, tableName, "UPDATE", cond.map(_.e),
       Snapshots.updateMatching(spark, dir, _, _, assigns, _),
-      pred =>
-        if (GraftDml.useDv(spark))
-          Snapshots.updateWhereLight(spark, dir, pred, assigns)
-        else Snapshots.updateWhere(spark, dir, pred, assigns))
+      Snapshots.updateWhere(spark, dir, _, assigns))
     Seq.empty
   }
 }
@@ -493,11 +481,10 @@ private[sql] final case class GraftMergeIns(
   * Source rows matching NO clause (and matched rows failing every
   * guard) are untouched, per SQL MERGE. Duplicate source keys fail
   * [[Snapshots.merge]]'s uniqueness check, as in every merge path.
-  * `spark.graft.sql.deletionVectors` does not change this path: a
-  * mixed merge always commits copy-on-write (the DV variants cover
-  * the pure-upsert and pure-delete shapes; a mixed mutation's
-  * rewrite-vs-vector split would be per-file anyway, and atomicity
-  * comes first). */
+  * The table's [[Snapshots.DmlModeKey]] reaches only the upsert-only
+  * shape, through [[Snapshots.merge]]: a mixed or delete-only merge
+  * always commits copy-on-write (a mixed mutation's rewrite-vs-vector
+  * split would be per-file anyway, and atomicity comes first). */
 final case class GraftMergeActionsCommand(dir: String, tableName: String,
     source: LogicalPlan, keys: Seq[(String, String)],
     matched: Seq[(Option[ShieldedExpr], GraftMergeAct)],
@@ -725,9 +712,9 @@ final case class GraftMergeActionsCommand(dir: String, tableName: String,
   * reference's ON CONFLICT DO UPDATE shape
   * (`scripts/funding_rates_etl.py:100-111`). The source plan is
   * carried analyzed and re-rooted as a DataFrame at run time; its
-  * columns are aligned to target names via the ON equalities.
-  * `spark.graft.sql.deletionVectors=true` routes to
-  * [[Snapshots.mergeLight]] (matched rows retire by vector). */
+  * columns are aligned to target names via the ON equalities. On a
+  * `merge-on-read` table ([[Snapshots.DmlModeKey]]) the matched rows
+  * retire by deletion vector. */
 final case class GraftMergeCommand(dir: String, tableName: String,
     source: LogicalPlan, colMap: Seq[(String, String)], keys: Seq[String])
     extends LeafRunnableCommand {
@@ -739,9 +726,7 @@ final case class GraftMergeCommand(dir: String, tableName: String,
     val shaped = src0.select(colMap.map { case (tCol, sCol) =>
       src0.col(sCol).as(tCol)
     }: _*)
-    if (GraftDml.useDv(spark))
-      Snapshots.mergeLight(spark, dir, shaped, keys)
-    else Snapshots.merge(spark, dir, shaped, keys)
+    Snapshots.merge(spark, dir, shaped, keys)
     Seq.empty
   }
 }

@@ -26,8 +26,8 @@ import graft.ops.Snapshots
   *     loaded it) — the version the relation's schema came from.
   *   - `DELETE FROM` / `UPDATE` / `MERGE INTO` over a [[GraftTable]]
   *     become runnable commands over the existing Snapshots DML
-  *     machinery (copy-on-write by default; deletion vectors when
-  *     `spark.graft.sql.deletionVectors=true`).
+  *     machinery (copy-on-write by default; deletion vectors on a
+  *     table whose `dml.mode` property is `merge-on-read`).
   *
   * Write targets (`INSERT`) are deliberately NOT rewritten — they
   * flow through the table's V1 write bridge (see

@@ -255,7 +255,8 @@ class AnalyzeSpec extends SparkSpec {
       "past the drift bound the unscalable stats must drop")
     assert(c2("k").ndv <= 2200L)
     // deletes drift DOWN too (DV cardinalities subtract exactly)
-    Snapshots.deleteWhereLight(spark, t, col("k") < 200L)
+    dmlMode(t)
+    Snapshots.deleteWhere(spark, t, col("k") < 200L)
     val (rc3, _) = Snapshots.analyzedStats(spark, t).get
     assert(rc3 == 2000L, s"DV'd rows must leave the live count: $rc3")
     // the CBO prices plans off the DRIFTED count, not the frozen one

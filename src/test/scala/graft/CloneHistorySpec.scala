@@ -58,7 +58,8 @@ class CloneHistorySpec extends SparkSpec {
     val src = freshRoot(); val dst = freshRoot()
     Snapshots.append(Seq((1L, 2.0), (2L, 3.0)).toDF("id", "v"), src)
     // a narrow delete gives the clone a foreign DV sidecar too
-    Snapshots.deleteWhereLight(spark, src, col("id") === 2L)
+    dmlMode(src)
+    Snapshots.deleteWhere(spark, src, col("id") === 2L)
     Snapshots.shallowClone(spark, src, dst)
     // physically move the source (what ALTER TABLE RENAME does) and
     // leave the forwarding marker
@@ -215,10 +216,11 @@ class CloneHistorySpec extends SparkSpec {
     val root = freshRoot()
     Snapshots.append((1L to 20L).map(i => (i, i * 2.0)).toDF("id", "v"),
       root)
-    // a light delete stages ONLY a _dv sidecar — its commit dir holds
+    // a vector delete stages ONLY a _dv sidecar — its commit dir holds
     // zero parquet, which is exactly the shape cleanOrphans used to
     // mistake for crash residue and reclaim wholesale
-    Snapshots.deleteWhereLight(spark, root, col("id") <= 5L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") <= 5L)
     assert(Snapshots.cleanOrphans(spark, root, olderThanMs = -60000) == 0)
     // the table must still read, with the vector applied
     assert(Snapshots.read(spark, root).count() == 15)

@@ -9,7 +9,8 @@ import graft.ops.Snapshots
 /** Randomized endurance for the round-14 risk surface: a CONVERTED
   * hive-partitioned table (repeated part-file basenames, path-borne
   * partition column) takes an interleaved fixed-seed sequence of
-  * row-level (deletion-vector) verbs, copy-on-write DML, appends and
+  * row-level (deletion-vector) verbs, copy-on-write DML (the DML mode
+  * flipped before each verb), appends and
   * maintenance rewrites — and must equal the driver-side model after
   * every step. A DV masking the wrong file (the basename-ambiguity
   * class the path keying removes), a mis-decoded partition value, or
@@ -50,18 +51,21 @@ class ConvertDvModelSpec extends SparkSpec {
       rng.nextInt(7) match {
         case 0 => // DV delete of a scattered id set
           val targets = rng.shuffle(liveIds).take(1 + rng.nextInt(8))
-          Snapshots.deleteWhereLight(spark, dir,
+          dmlMode(dir)
+          Snapshots.deleteWhere(spark, dir,
             col("id").isin(targets: _*))
           targets.foreach(model.remove)
         case 1 => // DV update: retag a few rows (id keys stay)
           val targets = rng.shuffle(liveIds).take(1 + rng.nextInt(5))
-          Snapshots.updateWhereLight(spark, dir,
+          dmlMode(dir)
+          Snapshots.updateWhere(spark, dir,
             col("id").isin(targets: _*),
             Seq("v" -> concat(lit(s"u$step-"), col("id"))))
           targets.foreach(i =>
             model(i) = (model(i)._1, s"u$step-$i"))
         case 2 => // CoW range delete
           val lo = 1L + rng.nextInt(400)
+          dmlMode(dir, mor = false)
           Snapshots.deleteWhere(spark, dir,
             col("id").between(lo, lo + 20))
           (lo to lo + 20).foreach(model.remove)
@@ -75,6 +79,7 @@ class ConvertDvModelSpec extends SparkSpec {
             .map(i => (i, s"m$step-$i", model(i)._1))
           val ins = rows(nextId until nextId + 5L, s"m$step")
           nextId += 5L
+          dmlMode(dir, mor = false)
           Snapshots.merge(spark, dir,
             (upd ++ ins).toDF("id", "v", "p"), Seq("id"))
           (upd ++ ins).foreach { case (i, v, p) => model(i) = (p, v) }
@@ -86,7 +91,8 @@ class ConvertDvModelSpec extends SparkSpec {
           val targets = liveIds.filter(i => model(i)._1 == part)
             .take(1 + rng.nextInt(4))
           if (targets.nonEmpty) {
-            Snapshots.deleteWhereLight(spark, dir,
+            dmlMode(dir)
+            Snapshots.deleteWhere(spark, dir,
               col("p") === part && col("id").isin(targets: _*))
             targets.foreach(model.remove)
           }

@@ -163,7 +163,8 @@ class ConvertSpec extends SparkSpec {
     // partitionBy repeats part-file basenames across partition dirs —
     // vectors key by qualified PATH, so the positional delete is
     // unambiguous: exactly id=5 goes, its basename-twins untouched
-    val r = Snapshots.deleteWhereLight(spark, hp, col("id") === 5L)
+    dmlMode(hp)
+    val r = Snapshots.deleteWhere(spark, hp, col("id") === 5L)
     assert(r.positionsDeleted == 1L, r.toString)
     val after = Snapshots.read(spark, hp)
     assert(after.count() == 59L)
@@ -172,8 +173,8 @@ class ConvertSpec extends SparkSpec {
     assert(after.groupBy("p").count().collect()
       .map(x => x.getInt(0) -> x.getLong(1)).toMap ==
       Map(0 -> 20L, 1 -> 20L, 2 -> 19L))
-    // updateWhereLight on the same converted layout
-    val u = Snapshots.updateWhereLight(spark, hp,
+    // a vector update on the same converted layout
+    val u = Snapshots.updateWhere(spark, hp,
       col("id") === 7L, Seq("id" -> lit(707L)))
     assert(u.updatedRows == 1L, u.toString)
     val ids = Snapshots.read(spark, hp).select("id")
@@ -181,6 +182,7 @@ class ConvertSpec extends SparkSpec {
     assert(ids.contains(707L) && !ids.contains(7L))
     // copy-on-write DML coexists, rewritten rows materialize the
     // partition column physically
+    dmlMode(hp, mor = false)
     Snapshots.deleteWhere(spark, hp, col("id") > 50L && col("id") < 700L)
     val got = Snapshots.read(spark, hp)
     assert(got.count() == 49L)
@@ -194,12 +196,13 @@ class ConvertSpec extends SparkSpec {
     (1L to 30L).map(i => (i, (i % 2).toInt)).toDF("id", "p")
       .write.partitionBy("p").parquet(hp)
     Snapshots.convert(spark, hp)
-    Snapshots.deleteWhereLight(spark, hp, col("id").isin(3L, 4L))
+    dmlMode(hp)
+    Snapshots.deleteWhere(spark, hp, col("id").isin(3L, 4L))
     val feed = Snapshots.changeFeed(spark, hp, 0)
     val byKind = feed.groupBy("_change_type", "_commit_version").count()
       .collect().map(x => (x.getString(0), x.getInt(1)) -> x.getLong(2))
       .toMap
-    assert(byKind == Map(("insert", 1) -> 30L, ("delete", 2) -> 2L),
+    assert(byKind == Map(("insert", 1) -> 30L, ("delete", 3) -> 2L),
       byKind.toString)
     // the deleted rows surface with their PATH-BORNE partition values
     assert(feed.filter(col("_change_type") === "delete")
@@ -349,7 +352,8 @@ class ConvertSpec extends SparkSpec {
       s"'+' partition value must prune: kept=${kept.size} " +
         s"skipped=${skipped.size}")
     // row-level DML on the '+' partition round-trips the value
-    Snapshots.deleteWhereLight(spark, hp,
+    dmlMode(hp)
+    Snapshots.deleteWhere(spark, hp,
       col("tz") === "UTC+2" && col("id") === 3L)
     assert(Snapshots.read(spark, hp).filter(col("tz") === "UTC+2")
       .count() == (1L to 30L).count(_ % 3 == 0) - 1)
@@ -384,7 +388,8 @@ class ConvertSpec extends SparkSpec {
     assert(kept.nonEmpty && skipped.nonEmpty,
       s"pre-encoded-looking value must prune: kept=${kept.size}")
     // and the positional verbs address rows in any escaped partition
-    Snapshots.deleteWhereLight(spark, hp, col("tag") === "a%2Bb")
+    dmlMode(hp)
+    Snapshots.deleteWhere(spark, hp, col("tag") === "a%2Bb")
     assert(Snapshots.read(spark, hp).count() ==
       (specials.size * 3 - 3).toLong)
   }

@@ -71,7 +71,8 @@ class CountWhereSpec extends SparkSpec {
 
   test("deletion vectors: all-match files contribute live rows only") {
     val root = rangeTable()
-    val d = Snapshots.deleteWhereLight(spark, root, $"id".isin(22, 25, 27))
+    dmlMode(root)
+    val d = Snapshots.deleteWhere(spark, root, $"id".isin(22, 25, 27))
     assert(d.dvFiles == 1, d)
     val r = Snapshots.countWhere(spark, root, $"id" >= 15 && $"id" < 30)
     assert(r.count == 12, r) // 15 matching rows − 3 DV'd
@@ -100,7 +101,8 @@ class CountWhereSpec extends SparkSpec {
 
   test("aggregateWhereFrame: DV'd all-match files demote, stay exact") {
     val root = rangeTable()
-    assert(Snapshots.deleteWhereLight(spark, root,
+    dmlMode(root)
+    assert(Snapshots.deleteWhere(spark, root,
       $"id".isin(22, 25)).dvFiles == 1)
     val p = $"id" >= 15 && $"id" < 30
     val got = Snapshots.aggregateWhereFrame(spark, root, p, Seq("v"))

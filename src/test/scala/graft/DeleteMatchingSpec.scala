@@ -73,7 +73,8 @@ class DeleteMatchingSpec extends SparkSpec {
   test("respects deletion vectors already on rewritten files") {
     val root = freshRoot()
     Snapshots.append((1L to 10L).map(i => (i, 0.0)).toDF("id", "v"), root)
-    Snapshots.deleteWhereLight(spark, root, col("id") === 1L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") === 1L)
     Snapshots.deleteMatching(spark, root, Seq(2L).toDF("id"), Seq("id"))
     assert(Snapshots.read(spark, root).select("id").as[Long]
       .collect().sorted.toSeq == (3L to 10L))

@@ -6,8 +6,9 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Snapshots
 
-/** Deletion-vector DELETE: identical result semantics to the copy-on-write
-  * path with commit cost O(matching rows) — no data file rewritten; vectors
+/** Deletion-vector DML (a `merge-on-read` table's [[Snapshots.DmlModeKey]]):
+  * identical result semantics to the copy-on-write path with commit cost
+  * O(matching rows) — no data file rewritten; vectors
   * accrete, retire on rewrite, drop a fully-covered file whole, survive
   * clones, and every consumer that assumed file-identity = content-identity
   * (changesSince, metadata aggregates) fails loudly instead of lying. */
@@ -27,8 +28,9 @@ class DeletionVectorSpec extends SparkSpec {
       root)
     Snapshots.append((100L until 200L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
+    dmlMode(root)
     val filesBefore = manifestFiles(root)
-    val r = Snapshots.deleteWhereLight(spark, root,
+    val r = Snapshots.deleteWhere(spark, root,
       col("k") % 10L === 3L && col("k") < 150L)
     assert(r.dvFiles > 0 && r.droppedFiles == 0)
     assert(r.positionsDeleted == 15L)
@@ -49,7 +51,8 @@ class DeletionVectorSpec extends SparkSpec {
     val root = freshRoot()
     Snapshots.append(Seq[(java.lang.Long, java.lang.Double)](
       (1L, 1.0), (2L, null), (3L, 3.0)).toDF("k", "v"), root)
-    Snapshots.deleteWhereLight(spark, root, col("v") > 2.0)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("v") > 2.0)
     assert(Snapshots.read(spark, root).count() == 2) // null-v row kept
   }
 
@@ -59,10 +62,11 @@ class DeletionVectorSpec extends SparkSpec {
       .coalesce(1), root)
     Snapshots.append((10L until 20L).map(i => (i, i * 1.0)).toDF("k", "v")
       .coalesce(1), root)
-    val r1 = Snapshots.deleteWhereLight(spark, root, col("k") < 4L)
+    dmlMode(root)
+    val r1 = Snapshots.deleteWhere(spark, root, col("k") < 4L)
     assert(r1.dvFiles == 1 && r1.droppedFiles == 0)
     assert(Snapshots.read(spark, root).count() == 16)
-    val r2 = Snapshots.deleteWhereLight(spark, root, col("k") < 10L)
+    val r2 = Snapshots.deleteWhere(spark, root, col("k") < 10L)
     // the second delete completes the first file's cover: dropped whole
     assert(r2.droppedFiles == 1)
     assert(Snapshots.read(spark, root).count() == 10)
@@ -74,7 +78,8 @@ class DeletionVectorSpec extends SparkSpec {
     Snapshots.append((0L until 20L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
     val v1 = Snapshots.currentVersion(spark, root).get
-    val v2 = Snapshots.deleteWhereLight(spark, root, col("k") < 5L).version
+    dmlMode(root)
+    val v2 = Snapshots.deleteWhere(spark, root, col("k") < 5L).version
     assert(Snapshots.read(spark, root, v1).count() == 20)
     assert(Snapshots.read(spark, root, v2).count() == 15)
     val v3 = Snapshots.restore(spark, root, v1)
@@ -89,7 +94,8 @@ class DeletionVectorSpec extends SparkSpec {
     Snapshots.append((0L until 30L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
     assert(Snapshots.aggregateFromManifest(spark, root, Seq("k")).nonEmpty)
-    Snapshots.deleteWhereLight(spark, root, col("k") === 7L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("k") === 7L)
     // stats are no longer attained values: exact-or-refuse refuses
     assert(Snapshots.aggregateFromManifest(spark, root, Seq("k")).isEmpty)
     Snapshots.compact(spark, root, numFiles = 1)
@@ -106,7 +112,8 @@ class DeletionVectorSpec extends SparkSpec {
     Snapshots.append((10L until 20L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
     val v2 = Snapshots.currentVersion(spark, root).get
-    val v3 = Snapshots.deleteWhereLight(spark, root, col("k") === 3L).version
+    dmlMode(root)
+    val v3 = Snapshots.deleteWhere(spark, root, col("k") === 3L).version
     // incremental consumption across the DV commit must refuse
     val e = intercept[IllegalStateException] {
       Snapshots.changesSince(spark, root, v1, v3)
@@ -124,8 +131,10 @@ class DeletionVectorSpec extends SparkSpec {
     val root = freshRoot()
     Snapshots.append((0L until 10L).map(i => (i, i * 1.0)).toDF("k", "v")
       .coalesce(1), root)
-    Snapshots.deleteWhereLight(spark, root, col("k") === 2L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("k") === 2L)
     // upsert touches the DV'd file: it rewrites from LIVE rows only
+    dmlMode(root, mor = false)
     Snapshots.merge(spark, root, Seq((5L, 99.0), (42L, 42.0)).toDF("k", "v"),
       Seq("k"))
     val got = Snapshots.read(spark, root).as[(Long, Double)].collect().toSet
@@ -138,11 +147,12 @@ class DeletionVectorSpec extends SparkSpec {
     val root = freshRoot(); val dst = freshRoot()
     Snapshots.append((0L until 10L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
-    Snapshots.deleteWhereLight(spark, root, col("k") === 1L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("k") === 1L)
     Snapshots.shallowClone(spark, root, dst)
     assert(Snapshots.read(spark, dst).count() == 9)
     // supersede the vector, then retire history: the old sidecar dies
-    Snapshots.deleteWhereLight(spark, root, col("k") === 2L)
+    Snapshots.deleteWhere(spark, root, col("k") === 2L)
     Snapshots.compact(spark, root, numFiles = 1)
     Snapshots.vacuum(spark, root, keepVersions = 1)
     val fs = new org.apache.hadoop.fs.Path(root).getFileSystem(
@@ -162,16 +172,17 @@ class DeletionVectorSpec extends SparkSpec {
       .exists(_.getString(1) == "missing"))
   }
 
-  test("mergeLight equals CoW merge semantics with zero rewrites") {
+  test("vector merge equals CoW semantics with zero rewrites") {
     val root = freshRoot()
     Snapshots.append((0L until 50L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
     Snapshots.append((50L until 100L).map(i => (i, i * 1.0)).toDF("k", "v"),
       root)
+    dmlMode(root)
     val filesBefore = manifestFiles(root)
     val src = Seq((7L, 700.0), (63L, 630.0), (500L, 5.0)).toDF("k", "v")
-    val r = Snapshots.mergeLight(spark, root, src, Seq("k"))
-    assert(r.rowsReplaced == 2L && r.insertedFiles > 0)
+    val r = Snapshots.merge(spark, root, src, Seq("k"))
+    assert(r.rowsReplaced == 2L && r.rewrittenFiles > 0)
     // old files all still present; only source files were added
     assert(filesBefore.subsetOf(manifestFiles(root)))
     val got = Snapshots.read(spark, root).as[(Long, Double)]
@@ -182,16 +193,17 @@ class DeletionVectorSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("mergeLight composes with prior vectors and accretes correctly") {
+  test("vector merge composes with prior vectors and accretes") {
     val root = freshRoot()
     Snapshots.append((0L until 20L).map(i => (i, i * 1.0)).toDF("k", "v")
       .coalesce(1), root)
-    Snapshots.deleteWhereLight(spark, root, col("k") === 3L)
-    Snapshots.mergeLight(spark, root, Seq((4L, 44.0)).toDF("k", "v"),
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("k") === 3L)
+    Snapshots.merge(spark, root, Seq((4L, 44.0)).toDF("k", "v"),
       Seq("k"))
     // a second upsert of the SAME key must replace the first upsert's
     // row (which lives in an appended file), not resurrect anything
-    Snapshots.mergeLight(spark, root, Seq((4L, 444.0)).toDF("k", "v"),
+    Snapshots.merge(spark, root, Seq((4L, 444.0)).toDF("k", "v"),
       Seq("k"))
     val got = Snapshots.read(spark, root).as[(Long, Double)]
       .collect().toSet
@@ -201,9 +213,9 @@ class DeletionVectorSpec extends SparkSpec {
   }
 
   test("metadata-only commits past the checkpoint keep deletion vectors") {
-    // v1 append, v2 vector, v3..v11 metadata-only: v10 is the forced
-    // full checkpoint, which must carry the vector of every file it
-    // keeps — else the deleted rows come back there
+    // v1 append, v2 the DML mode, v3 vector, v4..v12 metadata-only: v10
+    // is the forced full checkpoint, which must carry the vector of
+    // every file it keeps — else the deleted rows come back there
     val metaCommits: Seq[(String, (String, Int) => Int)] = Seq(
       ("setProperty", (root: String, i: Int) =>
         Snapshots.setProperty(spark, root, "note", s"n$i")),
@@ -216,7 +228,8 @@ class DeletionVectorSpec extends SparkSpec {
       val root = freshRoot()
       Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v"),
         root)
-      Snapshots.deleteWhereLight(spark, root, col("k") < 10L)
+      dmlMode(root)
+      Snapshots.deleteWhere(spark, root, col("k") < 10L)
       assert(Snapshots.read(spark, root).count() == 90L, verb)
       (1 to 9).foreach { i =>
         commit(root, i)
@@ -229,14 +242,17 @@ class DeletionVectorSpec extends SparkSpec {
     }
   }
 
-  test("bulk guard: beyond maxPositions the light path refuses") {
+  test("past the bound a vector delete commits copy-on-write") {
+    // 120k rows, 108k matches: past the bound of positions one vector
+    // commit records, so the delete rewrites instead of refusing
     val root = freshRoot()
-    Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v"),
-      root)
-    intercept[IllegalArgumentException] {
-      Snapshots.deleteWhereLight(spark, root, col("k") >= 0L,
-        maxPositions = 10)
-    }
-    assert(Snapshots.read(spark, root).count() == 100) // nothing committed
+    Snapshots.append(spark.range(0L, 120000L).toDF("k").coalesce(1), root)
+    dmlMode(root)
+    val r = Snapshots.deleteWhere(spark, root, col("k") % 10L =!= 0L)
+    assert(r.dvFiles == 0 && r.positionsDeleted == 0L && r.rewrittenFiles > 0,
+      r.toString)
+    assert(Snapshots.history(spark, root).head().getString(2) == "delete")
+    assert(Snapshots.read(spark, root).as[Long].collect().sorted.toSeq ==
+      (0L until 120000L by 10L))
   }
 }

@@ -113,6 +113,9 @@ class DeltaManifestSpec extends SparkSpec {
   test("every base+1 verb reads exactly on both sides of the checkpoint") {
     type Rows = Seq[(Long, Double)]
     def rows(xs: (Long, Double)*) = xs.toDF("k", "v")
+    // the copy-on-write DML verbs run on a copy-on-write template, the
+    // rest on a merge-on-read one (the three verbs commit by vector)
+    val cowVerbs = Set("merge", "deleteWhere", "updateWhere")
     val verbs: Seq[(String, String => Any, Rows => Rows)] = Seq(
       ("append", r => Snapshots.append(rows((1000L, 1.0)), r),
         _ :+ ((1000L, 1.0))),
@@ -130,13 +133,13 @@ class DeltaManifestSpec extends SparkSpec {
       ("deleteMatching", r => Snapshots.deleteMatching(spark, r,
           Seq(7L, 8L).toDF("k"), Seq("k")),
         _.filterNot(x => x._1 == 7L || x._1 == 8L)),
-      ("deleteWhereLight",
-        r => Snapshots.deleteWhereLight(spark, r, $"k" === 30L),
+      ("deleteWhere by vector",
+        r => Snapshots.deleteWhere(spark, r, $"k" === 30L),
         _.filterNot(_._1 == 30L)),
-      ("updateWhereLight", r => Snapshots.updateWhereLight(spark, r,
+      ("updateWhere by vector", r => Snapshots.updateWhere(spark, r,
           $"k" === 40L, Seq("v" -> lit(-4.0))),
         _.map { case (k, v) => (k, if (k == 40L) -4.0 else v) }),
-      ("mergeLight", r => Snapshots.mergeLight(spark, r,
+      ("merge by vector", r => Snapshots.merge(spark, r,
           rows((50L, 5.0), (3000L, 3.0)), Seq("k")),
         b => b.filterNot(_._1 == 50L) ++ Seq((50L, 5.0), (3000L, 3.0))),
       ("setProperty", r => Snapshots.setProperty(spark, r, "x", "y"),
@@ -160,24 +163,32 @@ class DeltaManifestSpec extends SparkSpec {
       ("optimizeIncremental", r => Snapshots.optimizeIncremental(spark, r,
           Seq("k"), numFiles = 1),
         identity))
-    // two templates: v2 (delta depth 1) and v9 (depth 8, so the next
-    // commit is the checkpoint); both carry a vector from v2
-    def template(depth: Int): String = {
+    // two templates per mode: delta depth 1 (2 for copy-on-write, whose
+    // v3 sets the mode back) and depth 8, so the next commit is the
+    // checkpoint. v1 is created merge-on-read in one commit with the
+    // data; every template carries a vector from v2
+    def template(depth: Int, mor: Boolean): String = {
       val root = freshRoot()
-      Snapshots.append((0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v")
-        .repartitionByRange(4, $"k"), root)
-      Snapshots.deleteWhereLight(spark, root, $"k" === 1L)
-      (2 to depth).foreach(i =>
+      val data = (0L until 100L).map(i => (i, i * 1.0)).toDF("k", "v")
+        .repartitionByRange(4, $"k")
+      val props = Map(Snapshots.DmlModeKey -> "merge-on-read")
+      Snapshots.commitReplaceTable(spark, root, data.schema, props,
+        Map.empty, Seq(Snapshots.stageReplaceData(data, root, props)),
+        mustNotExist = true)
+      Snapshots.deleteWhere(spark, root, $"k" === 1L)
+      if (!mor) dmlMode(root, mor = false)
+      ((if (mor) 2 else 3) to depth).foreach(i =>
         Snapshots.setProperty(spark, root, "pad", i.toString))
       root
     }
     val dvAtV2 = (root: String) => manifestBody(root, 2)
       .filter(_.startsWith("#dv\t")).map(_.split('\t')(1))
     Seq(1 -> false, 8 -> true).foreach { case (depth, checkpoint) =>
-      val tmpl = template(depth)
+      val morTmpl = template(depth, mor = true)
+      val cowTmpl = template(depth max 2, mor = false)
       verbs.foreach { case (verb, run, applied) =>
         val root = freshRoot()
-        val (fs, src) = fsOf(tmpl)
+        val (fs, src) = fsOf(if (cowVerbs(verb)) cowTmpl else morTmpl)
         org.apache.hadoop.fs.FileUtil.copy(fs, src, fs, new HPath(root),
           false, spark.sparkContext.hadoopConfiguration)
         val base = Snapshots.currentVersion(spark, root).get
@@ -185,7 +196,7 @@ class DeltaManifestSpec extends SparkSpec {
           .collect().toSeq
         run(root)
         val v = Snapshots.currentVersion(spark, root).get
-        val what = s"$verb at depth ${depth + 1}"
+        val what = s"$verb at depth $base"
         assert(v == base + 1, what)
         assert(isDelta(root, v) == !checkpoint, what)
         assert(Snapshots.read(spark, root, v).as[(Long, Double)].collect()

@@ -61,9 +61,10 @@ class FeatureGateSpec extends SparkSpec {
     Snapshots.append(Seq((41L, "d")).toDF("id", "s"), t)
     assert(manifest(t, 2).contains("#requires\tdelta"),
       s"delta manifest must stamp its feature: ${manifest(t, 2)}")
-    // a DV-carrying commit (one row of a 40-row file replaced — the
-    // light path marks it in a vector, not a rewrite) → stamped dv
-    Snapshots.mergeLight(spark, t,
+    // a DV-carrying commit (one row of a 40-row file replaced — a
+    // merge-on-read table marks it in a vector, not a rewrite) → dv
+    dmlMode(t)
+    Snapshots.merge(spark, t,
       Seq((2L, "b2")).toDF("id", "s"), Seq("id"))
     val dvV = Snapshots.currentVersion(spark, t).get
     assert(manifest(t, dvV).exists(_.startsWith("#dv\t")),

@@ -638,23 +638,71 @@ class GraftSqlSpec extends SparkSpec {
     warehouse
     spark.sql("CREATE TABLE gs.default.dvm (id BIGINT)")
     spark.sql("INSERT INTO gs.default.dvm SELECT id FROM range(50)")
-    spark.conf.set("spark.graft.sql.deletionVectors", "true")
-    try {
-      spark.sql("DELETE FROM gs.default.dvm WHERE id = 13")
-      assert(Snapshots.history(spark, dirOf("default", "dvm"))
-        .head().getString(2) == "delete-light")
-      assert(spark.sql("SELECT count(*) FROM gs.default.dvm")
-        .head().getLong(0) == 49)
-      // UPDATE routes to the vector path too
-      spark.sql("UPDATE gs.default.dvm SET id = id + 1000 WHERE id = 17")
-      assert(Snapshots.history(spark, dirOf("default", "dvm"))
-        .head().getString(2) == "update-light")
-      assert(spark.sql(
-        "SELECT count(*) FROM gs.default.dvm WHERE id = 1017")
-        .head().getLong(0) == 1)
-      assert(spark.sql("SELECT count(*) FROM gs.default.dvm")
-        .head().getLong(0) == 49)
-    } finally spark.conf.unset("spark.graft.sql.deletionVectors")
+    spark.sql("ALTER TABLE gs.default.dvm " +
+      "SET TBLPROPERTIES ('dml.mode' = 'merge-on-read')")
+    spark.sql("DELETE FROM gs.default.dvm WHERE id = 13")
+    assert(Snapshots.history(spark, dirOf("default", "dvm"))
+      .head().getString(2) == "delete-light")
+    assert(spark.sql("SELECT count(*) FROM gs.default.dvm")
+      .head().getLong(0) == 49)
+    // UPDATE routes to the vector path too
+    spark.sql("UPDATE gs.default.dvm SET id = id + 1000 WHERE id = 17")
+    assert(Snapshots.history(spark, dirOf("default", "dvm"))
+      .head().getString(2) == "update-light")
+    assert(spark.sql(
+      "SELECT count(*) FROM gs.default.dvm WHERE id = 1017")
+      .head().getLong(0) == 1)
+    assert(spark.sql("SELECT count(*) FROM gs.default.dvm")
+      .head().getLong(0) == 49)
+  }
+
+  test("the table's dml.mode picks the SQL DML path in any session") {
+    warehouse
+    def files(t: String): Set[String] =
+      Snapshots.read(spark, dirOf("default", t)).inputFiles.toSet
+    def lastOp(t: String): String =
+      Snapshots.history(spark, dirOf("default", t)).head().getString(2)
+    Seq("mor" -> true, "cow" -> false).foreach { case (t, mor) =>
+      spark.sql(s"DROP TABLE IF EXISTS gs.default.$t")
+      spark.sql(s"CREATE TABLE gs.default.$t (id BIGINT, v DOUBLE)" +
+        (if (mor) " TBLPROPERTIES ('dml.mode' = 'merge-on-read')" else ""))
+      spark.sql(s"INSERT INTO gs.default.$t " +
+        "SELECT id, id * 1.0 FROM range(40)")
+    }
+    // a fresh session: its own conf, holding nothing but the catalog
+    val s2 = spark.newSession()
+    s2.conf.set("spark.sql.catalog.gs", "graft.sql.GraftCatalog")
+    s2.conf.set("spark.sql.catalog.gs.warehouse", warehouse)
+    s2.range(5).select(col("id").plus(100L).as("id"),
+      col("id").cast("double").as("v")).union(
+      s2.range(5).select(col("id"), lit(-1.0).as("v")))
+      .createOrReplaceTempView("dml_mode_src")
+    val stmts = Seq(
+      "delete" -> "DELETE FROM gs.default.%s WHERE id = 13",
+      "update" -> "UPDATE gs.default.%s SET v = -v WHERE id = 17",
+      "merge" -> ("MERGE INTO gs.default.%s t USING " +
+        "dml_mode_src s ON t.id = s.id " +
+        "WHEN MATCHED THEN UPDATE SET * WHEN NOT MATCHED THEN INSERT *"))
+    Seq("mor" -> true, "cow" -> false).foreach { case (t, mor) =>
+      stmts.foreach { case (op, sql) =>
+        val before = files(t)
+        s2.sql(sql.format(t))
+        val after = files(t)
+        if (mor) {
+          assert(lastOp(t) == s"$op-light", s"$t $op")
+          assert(before.subsetOf(after), s"$t $op rewrote a data file")
+        } else {
+          assert(lastOp(t) == op, s"$t $op")
+          assert(!before.subsetOf(after), s"$t $op rewrote nothing")
+        }
+      }
+      // both paths land the same rows
+      assert(spark.sql(s"SELECT id, v FROM gs.default.$t ORDER BY id")
+        .as[(Long, Double)].collect().toSeq ==
+        ((0L until 40L).filterNot(_ == 13L).map(i =>
+          (i, if (i < 5L) -1.0 else if (i == 17L) -17.0 else i * 1.0)) ++
+          (100L until 105L).map(i => (i, (i - 100L).toDouble))), t)
+    }
   }
 
   test("DML refuses a VERSION AS OF pinned target") {

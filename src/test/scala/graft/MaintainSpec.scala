@@ -23,8 +23,9 @@ class MaintainSpec extends SparkSpec {
     Snapshots.append(spark.range(50, 100).toDF("id").coalesce(1), root)
     // trickle deletes: heavy debt on file 1 (20/50 = 40%), light debt
     // on file 2 (1/50 = 2%)
-    Snapshots.deleteWhereLight(spark, root, col("id") < 20)
-    Snapshots.deleteWhereLight(spark, root, col("id") === 99L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") < 20)
+    Snapshots.deleteWhere(spark, root, col("id") === 99L)
     val before = Snapshots.read(spark, root)
       .as[Long].collect().sorted.toSeq
     val filesBefore = Snapshots.read(spark, root).inputFiles.toSet

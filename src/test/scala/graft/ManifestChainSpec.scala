@@ -96,14 +96,16 @@ class ManifestChainSpec extends SparkSpec {
     Seq.tabulate(20)(j => (i * 100L + j, (i * 100L + j) % 10, s"b$i"))
       .toDF("id", "v", "tag").repartition(1)
 
-  /** v1 full, v2 bloom config, v3-v8 appends, v9 a deletion vector
-    * (depth 8), v10 the checkpoint, v11-v18 appends (depth 8 again). */
+  /** v1 full, v2 bloom config, v3 the DML mode, v4-v8 appends, v9 a
+    * deletion vector (depth 8), v10 the checkpoint, v11-v18 appends
+    * (depth 8 again). */
   private def deepTable(): String = {
     val root = freshRoot()
     Snapshots.append(batch(1), root)
     Snapshots.setBloomColumns(spark, root, Seq("id"))
-    (3 to 8).foreach(i => Snapshots.append(batch(i), root))
-    Snapshots.deleteWhereLight(spark, root, $"id" === 301L)
+    dmlMode(root)
+    (4 to 8).foreach(i => Snapshots.append(batch(i), root))
+    Snapshots.deleteWhere(spark, root, $"id" === 401L)
     (10 to 18).foreach(i => Snapshots.append(batch(i), root))
     assert(Snapshots.currentVersion(spark, root).contains(18))
     root
@@ -169,6 +171,20 @@ class ManifestChainSpec extends SparkSpec {
       assert(got.collect().map(_.toString).sorted.toSeq ==
         expected.collect().map(_.toString).sorted.toSeq, what)
     }
+  }
+
+  test("a deleteWhere on a merge-on-read table lists _manifests once") {
+    val root = freshRoot()
+    Snapshots.append(batch(1), root)
+    dmlMode(root)
+    CountingFileSystem.reset()
+    val r = Snapshots.deleteWhere(spark, root, $"id" === 105L)
+    assert(CountingFileSystem.listings.get() == 1,
+      s"listed ${CountingFileSystem.listings.get()} times")
+    assert(r.dvFiles == 1 && r.positionsDeleted == 1L, r.toString)
+    assert(Snapshots.history(spark, root).head().getString(2) ==
+      "delete-light")
+    assert(ids(root) == (100L until 120L).toSet - 105L)
   }
 
   // ---- the ingest commit under a forced race ------------------------

@@ -110,10 +110,11 @@ class MetaAggSpec extends SparkSpec {
   test("deletion vectors: count(*) stays exact, per-column refuses") {
     val root = freshRoot()
     Snapshots.append((1L to 50L).map(i => (i, i * 1.0)).toDF("id", "v"), root)
-    Snapshots.deleteWhereLight(spark, root,
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root,
       org.apache.spark.sql.functions.col("id") % 7 === 0)
     // overlapping second trickle on the same file's positions
-    Snapshots.deleteWhereLight(spark, root,
+    Snapshots.deleteWhere(spark, root,
       org.apache.spark.sql.functions.col("id") % 14 === 0 ||
         org.apache.spark.sql.functions.col("id") === 1L)
     val scanned = Snapshots.read(spark, root).count()

@@ -159,7 +159,8 @@ class ReplaceWhereSpec extends SparkSpec {
     Snapshots.append((1L to 10L).map(i => (i, s"s$i")).toDF("id", "tag"),
       root)
     // a DV-deleted row inside the file the replace must rewrite
-    Snapshots.deleteWhereLight(spark, root, col("id") === 4L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") === 4L)
     Snapshots.replaceWhere(spark, root, col("id") <= 2L,
       Seq((1L, "A"), (2L, "B")).toDF("id", "tag"))
     val got = Snapshots.read(spark, root).orderBy("id")

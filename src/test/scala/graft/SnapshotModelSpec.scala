@@ -9,8 +9,9 @@ import org.apache.spark.sql.functions._
 import graft.ops.Snapshots
 
 /** Model-based randomized testing of the snapshot DML surface: a fixed-seed
-  * random sequence of append / overwrite / merge(±light) /
-  * deleteWhere(±light) / updateWhere / deleteMatching / compact /
+  * random sequence of append / overwrite / merge / deleteWhere /
+  * updateWhere (each under a randomly flipped `dml.mode`: copy-on-write
+  * or deletion vectors) / deleteMatching / compact /
   * optimize / restore / clone runs against both the real table and a
   * driver-side model (a Map keyed like the table); after EVERY op the real
   * read must equal the model, and at the end every recorded historical
@@ -46,6 +47,8 @@ class SnapshotModelSpec extends SparkSpec {
         model = readBack(root).map(r => r._1 -> r).toMap // seed from real
         history += v -> model
     }
+    // the DML mode flip is a metadata commit: a version of the model too
+    def mode(mor: Boolean): Unit = history += dmlMode(root, mor) -> model
     (1 to 34).foreach { step =>
       val op = rnd.nextInt(14)
       op match {
@@ -58,11 +61,8 @@ class SnapshotModelSpec extends SparkSpec {
         case 3 | 4 => // merge: update-or-insert on id — randomly
           // copy-on-write or deletion-vector; identical semantics
           val src = batch(5)
-          val ver =
-            if (rnd.nextBoolean())
-              Snapshots.merge(spark, root, toDf(src), Seq("id")).version
-            else Snapshots.mergeLight(spark, root, toDf(src), Seq("id"))
-              .version
+          mode(mor = !rnd.nextBoolean())
+          val ver = Snapshots.merge(spark, root, toDf(src), Seq("id")).version
           model = model ++ src.map(x => x._1 -> x)
           history += ver -> model
         case 5 | 6 => // delete a key range — randomly copy-on-write or
@@ -70,10 +70,8 @@ class SnapshotModelSpec extends SparkSpec {
           val lo = rnd.nextInt(40).toLong
           val hi = lo + rnd.nextInt(10)
           val pred = col("id") >= lo && col("id") <= hi
-          val ver =
-            if (rnd.nextBoolean()) Snapshots.deleteWhere(spark, root, pred)
-              .version
-            else Snapshots.deleteWhereLight(spark, root, pred).version
+          mode(mor = !rnd.nextBoolean())
+          val ver = Snapshots.deleteWhere(spark, root, pred).version
           model = model.filterNot { case (k, _) => k >= lo && k <= hi }
           history += ver -> model
         case 7 => // content-identical maintenance
@@ -99,14 +97,12 @@ class SnapshotModelSpec extends SparkSpec {
           val bump = rnd.nextInt(100) * 1.0
           val pred = col("id") >= lo && col("id") <= hi
           val assigns = Seq("v" -> (col("v") + bump))
+          val mor = !rnd.nextBoolean()
+          mode(mor)
+          val r = Snapshots.updateWhere(spark, root, pred, assigns)
           val (ver, changed) =
-            if (rnd.nextBoolean()) {
-              val r = Snapshots.updateWhere(spark, root, pred, assigns)
-              (r.version, r.rewrittenFiles > 0)
-            } else {
-              val r = Snapshots.updateWhereLight(spark, root, pred, assigns)
-              (r.version, r.updatedRows > 0 || r.droppedFiles > 0)
-            }
+            if (!mor) (r.version, r.rewrittenFiles > 0)
+            else (r.version, r.updatedRows > 0 || r.droppedFiles > 0)
           model = model.map { case (k, (id, v)) =>
             if (k >= lo && k <= hi) k -> (id, v + bump) else k -> (id, v)
           }
@@ -202,23 +198,21 @@ class SnapshotModelSpec extends SparkSpec {
           }
         case 4 =>
           val src = batch(5)
-          if (rnd.nextBoolean())
-            Snapshots.merge(spark, root, toDf(src), Seq("id"))
-          else Snapshots.mergeLight(spark, root, toDf(src), Seq("id"))
+          dmlMode(root, mor = !rnd.nextBoolean())
+          Snapshots.merge(spark, root, toDf(src), Seq("id"))
           model ++= src.map(x => x._1 -> x)
         case 5 =>
           val lo = rnd.nextInt(40).toLong
           val pred = col("id") >= lo && col("id") <= lo + 4
-          if (rnd.nextBoolean()) Snapshots.deleteWhere(spark, root, pred)
-          else Snapshots.deleteWhereLight(spark, root, pred)
+          dmlMode(root, mor = !rnd.nextBoolean())
+          Snapshots.deleteWhere(spark, root, pred)
           model = model.filterNot { case (k, _) => k >= lo && k <= lo + 4 }
         case 6 =>
           val lo = rnd.nextInt(40).toLong
           val pred = col("id") >= lo && col("id") <= lo + 6
           val assigns = Seq("v" -> (col("v") * 2.0))
-          if (rnd.nextBoolean()) Snapshots.updateWhere(spark, root, pred,
-            assigns)
-          else Snapshots.updateWhereLight(spark, root, pred, assigns)
+          dmlMode(root, mor = !rnd.nextBoolean())
+          Snapshots.updateWhere(spark, root, pred, assigns)
           model = model.map { case (k, (id, v)) =>
             k -> (if (k >= lo && k <= lo + 6) (id, v * 2.0) else (id, v))
           }
@@ -268,8 +262,12 @@ class SnapshotModelSpec extends SparkSpec {
         case 3 =>
           val lo = rnd.nextInt(40).toLong
           val pred = col("id") >= lo && col("id") <= lo + 5
-          if (rnd.nextBoolean()) Snapshots.deleteWhere(spark, src, pred)
-          else Snapshots.deleteWhereLight(spark, src, pred)
+          // a vector delete flips the mode on and back off: the
+          // merges and updates of this run stay copy-on-write
+          val mor = !rnd.nextBoolean()
+          if (mor) dmlMode(src)
+          Snapshots.deleteWhere(spark, src, pred)
+          if (mor) dmlMode(src, mor = false)
         case 4 =>
           val lo = rnd.nextInt(40).toLong
           Snapshots.updateWhere(spark, src,

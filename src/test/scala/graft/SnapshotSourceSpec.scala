@@ -323,7 +323,8 @@ class SnapshotSourceSpec extends SparkSpec {
     q1.processAllAvailable(); q1.stop()
     // commits while the consumer is DOWN — including deletion-vector
     // drift — arrive exactly once on restart
-    Snapshots.updateWhereLight(spark, table, col("k") === 3L,
+    dmlMode(table)
+    Snapshots.updateWhere(spark, table, col("k") === 3L,
       Seq("v" -> (col("v") + 1)))
     val q2 = start()
     q2.processAllAvailable()
@@ -332,7 +333,7 @@ class SnapshotSourceSpec extends SparkSpec {
     Snapshots.compact(spark, table, numFiles = 1)
     q2.processAllAvailable(); q2.stop()
     assert(events.synchronized(events.size) == before)
-    // the update-light commit while the consumer was down arrived as
+    // the vector update while the consumer was down arrived as
     // a paired update
     assert(events.synchronized(events.toSet)
       .contains(("update_preimage", 3L, 30.0)))
@@ -538,7 +539,8 @@ class SnapshotSourceSpec extends SparkSpec {
     Snapshots.append(spark.range(50, 60).toDF(), table)
     // a vector delete changes base-file CONTENT without changing the
     // file list — an append-only consumer can no longer be correct
-    Snapshots.deleteWhereLight(spark, table,
+    dmlMode(table)
+    Snapshots.deleteWhere(spark, table,
       org.apache.spark.sql.functions.col("id") === 3L)
     val ex = intercept[StreamingQueryException] {
       q.processAllAvailable()

@@ -1047,9 +1047,10 @@ class SnapshotsSpec extends SparkSpec {
       .toDF("id", "v").coalesce(1), root)
     Snapshots.append((10L until 20L).map(i => (i, i * 1.0))
       .toDF("id", "v").coalesce(1), root)
-    Snapshots.deleteWhereLight(spark, root, col("id") === 5L) // v3
-    Snapshots.updateWhereLight(spark, root, col("id") === 12L,
-      Seq("v" -> lit(999.0))) // v4: drift + appended image file
+    dmlMode(root) // v3
+    Snapshots.deleteWhere(spark, root, col("id") === 5L) // v4
+    Snapshots.updateWhere(spark, root, col("id") === 12L,
+      Seq("v" -> lit(999.0))) // v5: drift + appended image file
     val feed = Snapshots.changeFeed(spark, root, 2)
     val got = feed.select("_change_type", "id", "v", "_commit_version")
       .as[(String, Long, Double, Int)].collect().toSet
@@ -1057,10 +1058,10 @@ class SnapshotsSpec extends SparkSpec {
     // preimage, its appended image the postimage; the delete-light
     // commit stays a plain delete
     assert(got == Set(
-      ("delete", 5L, 5.0, 3),
-      ("update_preimage", 12L, 12.0, 4),
-      ("update_postimage", 12L, 999.0, 4)))
-    // plan shape: v3 = one positional scan of the drifted file; v4 =
+      ("delete", 5L, 5.0, 4),
+      ("update_preimage", 12L, 12.0, 5),
+      ("update_postimage", 12L, 999.0, 5)))
+    // plan shape: v4 = one positional scan of the drifted file; v5 =
     // one appended-image scan + one positional scan — 3 parquet
     // scans total, where the diff path pays two-sided exceptAll legs
     val scans = feed.queryExecution.optimizedPlan.collect {
@@ -1099,7 +1100,8 @@ class SnapshotsSpec extends SparkSpec {
     val verbs: Seq[(String, (String, Seq[String]) => Any)] = Seq(
       "merge" -> ((r, k) => Snapshots.merge(spark, r, src, k)),
       "mergeMixed" -> ((r, k) => Snapshots.mergeMixed(spark, r, src, k, ks)),
-      "mergeLight" -> ((r, k) => Snapshots.mergeLight(spark, r, src, k)),
+      "merge by vector" -> ((r, k) => { dmlMode(r)
+        Snapshots.merge(spark, r, src, k) }),
       "deleteMatching" -> ((r, k) => Snapshots.deleteMatching(spark, r, ks,
         k)),
       "updateMatching" -> ((r, k) => Snapshots.updateMatching(spark, r, ks,
@@ -1113,8 +1115,7 @@ class SnapshotsSpec extends SparkSpec {
     }
   }
 
-  test("light verbs at maxPositions = Int.MaxValue commit like their " +
-      "copy-on-write twins") {
+  test("merge-on-read verbs commit like copy-on-write ones") {
     def table(): String = {
       val root = freshRoot()
       Snapshots.append((0L until 20L).map(i => (i, i * 1.0)).toDF("id", "v"),
@@ -1123,24 +1124,21 @@ class SnapshotsSpec extends SparkSpec {
     }
     def content(root: String): Set[(Long, Double)] =
       Snapshots.read(spark, root).as[(Long, Double)].collect().toSet
-    val max = Int.MaxValue
     val pred = col("id") >= 5L && col("id") < 9L
     val assigns = Seq("v" -> (col("v") * 3.0))
     val src = Seq((1L, 10.0), (77L, 7.0)).toDF("id", "v")
-    val pairs: Seq[(String, String => Any, String => Any)] = Seq(
-      ("delete", r => Snapshots.deleteWhere(spark, r, pred),
-        r => Snapshots.deleteWhereLight(spark, r, pred, maxPositions = max)),
-      ("update", r => Snapshots.updateWhere(spark, r, pred, assigns),
-        r => Snapshots.updateWhereLight(spark, r, pred, assigns,
-          maxPositions = max)),
-      ("merge", r => Snapshots.merge(spark, r, src, Seq("id")),
-        r => Snapshots.mergeLight(spark, r, src, Seq("id"),
-          maxPositions = max)))
-    pairs.foreach { case (name, cow, light) =>
+    val verbs: Seq[(String, String => Any)] = Seq(
+      ("delete", r => Snapshots.deleteWhere(spark, r, pred)),
+      ("update", r => Snapshots.updateWhere(spark, r, pred, assigns)),
+      ("merge", r => Snapshots.merge(spark, r, src, Seq("id"))))
+    verbs.foreach { case (name, run) =>
       val a = table(); val b = table()
-      cow(a)
-      light(b)
-      assert(Snapshots.currentVersion(spark, b) == Some(2), name)
+      run(a)
+      dmlMode(b)
+      run(b)
+      assert(Snapshots.currentVersion(spark, b) == Some(3), name)
+      assert(Snapshots.history(spark, b).head().getString(2) ==
+        s"$name-light", name)
       assert(content(b) == content(a), s"$name light vs copy-on-write")
     }
   }

@@ -27,6 +27,14 @@ object TestSession {
 abstract class SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = TestSession.spark
 
+  /** Sets the snapshot table at `root` to commit [[graft.ops.Snapshots]]'
+    * deleteWhere, updateWhere and merge by deletion vector (`mor`) or by
+    * rewrite; returns the property commit's version. */
+  def dmlMode(root: String, mor: Boolean = true): Int =
+    graft.ops.Snapshots.setProperty(spark, root,
+      graft.ops.Snapshots.DmlModeKey,
+      if (mor) "merge-on-read" else "copy-on-write")
+
   /** Runs `body` and returns its result with the number of Spark jobs it
     * started (jobs tagged through a local property; a sentinel job
     * after `body` drains the listener bus before the count is read). */

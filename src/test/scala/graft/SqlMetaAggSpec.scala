@@ -96,7 +96,8 @@ class SqlMetaAggSpec extends SparkSpec {
     // (a per-row file would be dropped whole — no DV, stats exact)
     Snapshots.append(Seq((1L, 10.5, "a"), (2L, -3.25, "b"), (3L, 99.0, "c"),
       (4L, 0.0, "d"), (5L, 7.75, "e")).toDF("id", "v", "s").coalesce(1), dir)
-    val res = Snapshots.deleteWhereLight(spark, dir, $"id" === 2)
+    dmlMode(dir)
+    val res = Snapshots.deleteWhere(spark, dir, $"id" === 2)
     assert(res.dvFiles == 1 && res.droppedFiles == 0, res.toString)
     val cnt = spark.sql("SELECT count(*) AS n FROM gm.default.m4")
     assert(!scansData(cnt), cnt.queryExecution.executedPlan.toString)

@@ -24,12 +24,11 @@ class SqlTableChangesSpec extends SparkSpec {
   private def mk(name: String): String = {
     warehouse
     spark.sql(s"DROP TABLE IF EXISTS gtc.default.$name")
-    spark.sql(s"CREATE TABLE gtc.default.$name (id BIGINT, v DOUBLE)")
+    spark.sql(s"CREATE TABLE gtc.default.$name (id BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('dml.mode' = 'merge-on-read')")
     spark.sql(s"INSERT INTO gtc.default.$name VALUES (1, 1.0), (2, 2.0)")
     spark.sql(s"INSERT INTO gtc.default.$name VALUES (3, 3.0)")
-    spark.conf.set("spark.graft.sql.deletionVectors", "true")
-    try spark.sql(s"DELETE FROM gtc.default.$name WHERE id = 2")
-    finally spark.conf.unset("spark.graft.sql.deletionVectors")
+    spark.sql(s"DELETE FROM gtc.default.$name WHERE id = 2")
     s"$warehouse/default/$name"
   }
 

@@ -42,11 +42,17 @@ class TablePropertiesSpec extends SparkSpec {
     Snapshots.append(Seq((100L, 1.0)).toDF("id", "v"), root); check("append")
     Snapshots.merge(spark, root, Seq((1L, 9.0)).toDF("id", "v"), Seq("id"))
     check("merge")
-    Snapshots.mergeLight(spark, root, Seq((2L, 9.0)).toDF("id", "v"),
-      Seq("id")); check("mergeLight")
+    dmlMode(root); check("set-mode")
+    Snapshots.merge(spark, root, Seq((2L, 9.0)).toDF("id", "v"),
+      Seq("id")); check("merge-light")
+    dmlMode(root, mor = false)
     Snapshots.deleteWhere(spark, root, col("id") === 3L); check("delete")
-    Snapshots.deleteWhereLight(spark, root, col("id") === 4L)
-    check("deleteLight")
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") === 4L)
+    check("delete-light")
+    assert(Snapshots.tableProperties(spark, root).get(Snapshots.DmlModeKey)
+      .contains("merge-on-read"), "the mode itself carries forward")
+    dmlMode(root, mor = false)
     Snapshots.updateWhere(spark, root, col("id") === 5L,
       Seq("v" -> lit(0.0))); check("update")
     Snapshots.deleteMatching(spark, root, Seq(6L).toDF("id"), Seq("id"))
@@ -64,6 +70,45 @@ class TablePropertiesSpec extends SparkSpec {
     // an overwrite starts a FRESH lineage: properties reset by design
     Snapshots.overwrite(Seq((9L, 9.0)).toDF("id", "val"), root)
     assert(Snapshots.tableProperties(spark, root).isEmpty)
+  }
+
+  test("dml.mode refuses a value other than its two modes") {
+    val root = freshRoot()
+    Snapshots.append(Seq((1L, 2.0)).toDF("id", "v"), root)
+    // the refusal names both modes (SQL wraps it: read the cause chain)
+    def namesBoth(e: Throwable): Unit = {
+      val msg = Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+        .map(_.getMessage).mkString(" / ")
+      assert(msg.contains("copy-on-write") && msg.contains("merge-on-read"),
+        msg)
+    }
+    def refused(set: => Any): Unit = {
+      namesBoth(intercept[IllegalArgumentException](set))
+      assert(Snapshots.currentVersion(spark, root).contains(1),
+        "a refused mode committed")
+    }
+    refused(Snapshots.setProperty(spark, root, Snapshots.DmlModeKey,
+      "delete-vectors"))
+    // through SQL, also when a valid change precedes it in the statement
+    val wh = Files.createTempDirectory("graft_props_wh").toFile.toString
+    spark.conf.set("spark.sql.catalog.gprops", "graft.sql.GraftCatalog")
+    spark.conf.set("spark.sql.catalog.gprops.warehouse", wh)
+    spark.sql("CREATE TABLE gprops.default.m (id BIGINT)")
+    namesBoth(intercept[Exception](spark.sql(
+      "ALTER TABLE gprops.default.m SET TBLPROPERTIES " +
+        "('team' = 'x', 'dml.mode' = 'MERGE-ON-READ')")))
+    assert(Snapshots.currentVersion(spark, s"$wh/default/m").contains(1))
+    assert(Snapshots.tableProperties(spark, s"$wh/default/m").isEmpty)
+    // and at create time
+    namesBoth(intercept[Exception](spark.sql(
+      "CREATE TABLE gprops.default.c (id BIGINT) " +
+        "TBLPROPERTIES ('dml.mode' = 'cow')")))
+    assert(Snapshots.currentVersion(spark, s"$wh/default/c").isEmpty)
+    // the two names pass
+    Seq("merge-on-read", "copy-on-write").foreach(m =>
+      Snapshots.setProperty(spark, root, Snapshots.DmlModeKey, m))
+    assert(Snapshots.tableProperties(spark, root)(Snapshots.DmlModeKey) ==
+      "copy-on-write")
   }
 
   test("clone carries the source's properties") {

@@ -6,9 +6,10 @@ import org.apache.spark.sql.functions._
 
 import graft.ops.Snapshots
 
-/** Copy-on-write UPDATE contract: file-level pruning, SQL NULL
-  * semantics, declared-type casts, constraint enforcement, and the
-  * no-match no-commit short-circuit. */
+/** UPDATE contract: file-level pruning, SQL NULL semantics,
+  * declared-type casts, constraint enforcement, and the no-match
+  * no-commit short-circuit — copy-on-write, and by deletion vector on a
+  * `merge-on-read` table. */
 class UpdateWhereSpec extends SparkSpec {
   import spark.implicits._
 
@@ -96,7 +97,9 @@ class UpdateWhereSpec extends SparkSpec {
   test("updates respect deletion vectors on rewritten files") {
     val root = freshRoot()
     Snapshots.append((1L to 10L).map(i => (i, 0.0)).toDF("id", "v"), root)
-    Snapshots.deleteWhereLight(spark, root, col("id") <= 2L)
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id") <= 2L)
+    dmlMode(root, mor = false)
     Snapshots.updateWhere(spark, root, col("id") <= 5L,
       Seq("v" -> lit(1.0)))
     val got = Snapshots.read(spark, root)
@@ -104,12 +107,13 @@ class UpdateWhereSpec extends SparkSpec {
     assert(got.filter(col("v") === 1.0).count() == 3) // ids 3,4,5
   }
 
-  test("updateWhereLight: same content as CoW, vectors not rewrites") {
+  test("vector update: same content as CoW, vectors not rewrites") {
     val root = freshRoot(); val twin = freshRoot()
     val base = (1L to 50L).map(i => (i, i * 1.0, s"s$i"))
     Snapshots.append(base.toDF("id", "v", "tag"), root)
     Snapshots.append(base.toDF("id", "v", "tag"), twin)
-    val r = Snapshots.updateWhereLight(spark, root, col("id") % 10 === 3L,
+    dmlMode(root)
+    val r = Snapshots.updateWhere(spark, root, col("id") % 10 === 3L,
       Seq("v" -> (col("v") * -1), "tag" -> lit("hit")))
     Snapshots.updateWhere(spark, twin, col("id") % 10 === 3L,
       Seq("v" -> (col("v") * -1), "tag" -> lit("hit")))
@@ -120,13 +124,14 @@ class UpdateWhereSpec extends SparkSpec {
       == "update-light")
   }
 
-  test("updateWhereLight composes with prior vectors and retires whole files") {
+  test("vector update composes with prior vectors; drops whole files") {
     val root = freshRoot()
     Snapshots.append((1L to 10L).map(i => (i, 0.0)).toDF("id", "v"), root)
     Snapshots.append((11L to 20L).map(i => (i, 0.0)).toDF("id", "v"), root)
-    Snapshots.deleteWhereLight(spark, root, col("id").isin(1L, 2L))
+    dmlMode(root)
+    Snapshots.deleteWhere(spark, root, col("id").isin(1L, 2L))
     // update EVERY surviving row of file 1: its originals fully retire
-    val r = Snapshots.updateWhereLight(spark, root, col("id") <= 10L,
+    val r = Snapshots.updateWhere(spark, root, col("id") <= 10L,
       Seq("v" -> lit(7.0)))
     assert(r.updatedRows == 8)
     // every first-append file had all surviving rows updated: originals
@@ -138,22 +143,33 @@ class UpdateWhereSpec extends SparkSpec {
     assert(got.filter(col("v") === 7.0).count() == 8)
   }
 
-  test("updateWhereLight refuses bulk beyond maxPositions") {
+  test("past the bound a vector update commits copy-on-write") {
+    // 120k rows, 108k matches: past the bound of positions one vector
+    // commit records, so the update rewrites instead of refusing
     val root = freshRoot()
-    Snapshots.append((1L to 100L).map(i => (i, 0.0)).toDF("id", "v"), root)
-    intercept[IllegalArgumentException] {
-      Snapshots.updateWhereLight(spark, root, lit(true),
-        Seq("v" -> lit(1.0)), maxPositions = 10)
-    }
-    assert(Snapshots.versions(spark, root) == Seq(1)) // nothing committed
+    Snapshots.append(spark.range(0L, 120000L).toDF("id")
+      .withColumn("v", lit(0.0)).coalesce(1), root)
+    dmlMode(root)
+    val r = Snapshots.updateWhere(spark, root, col("id") % 10L =!= 0L,
+      Seq("v" -> lit(1.0)))
+    assert(r.dvFiles == 0 && r.updatedRows == 0L && r.rewrittenFiles > 0,
+      r.toString)
+    assert(Snapshots.versions(spark, root) == Seq(1, 2, 3))
+    assert(Snapshots.history(spark, root).head().getString(2) == "update")
+    val got = Snapshots.read(spark, root)
+    assert(got.count() == 120000L)
+    assert(got.filter(col("v") === 1.0).count() == 108000L)
+    assert(got.filter(col("v") === 0.0).select("id").as[Long].collect()
+      .sorted.toSeq == (0L until 120000L by 10L))
   }
 
-  test("updateWhereLight enforces CHECK constraints") {
+  test("vector update enforces CHECK constraints") {
     val root = freshRoot()
     Snapshots.append(Seq((1L, 2.0)).toDF("id", "v"), root)
     Snapshots.setConstraint(spark, root, "v_pos", "v > 0")
+    dmlMode(root)
     intercept[IllegalArgumentException] {
-      Snapshots.updateWhereLight(spark, root, col("id") === 1L,
+      Snapshots.updateWhere(spark, root, col("id") === 1L,
         Seq("v" -> lit(-1.0)))
     }
     assert(Snapshots.read(spark, root).head().getDouble(1) == 2.0)
